@@ -396,19 +396,20 @@ object Advanced {
     * accuracy 10000 bounds the rank error at n/10000 — indistinguishable
     * from the exact median at any group size that matters, and the
     * sketch is mergeable so the pass stays one shuffle at 100 TB. */
-  private val segMedianCache =
-    scala.collection.concurrent.TrieMap.empty[String, Seq[(String, Double)]]
   private[graft] def segmentMedians(spark: SparkSession,
       sfDir: String): Seq[(String, Double)] =
-    segMedianCache.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir, {
-        val o = Tables(spark, sfDir, "orders")
-        val cust = Tables(spark, sfDir, "customer")
-        o.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
-          .groupBy("c_mktsegment")
-          .agg(expr("approx_percentile(o_totalprice, 0.5, 10000)").as("med"))
-          .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
-      })
+    memo(spark, sfDir, "segmentMedians") {
+      val o = Tables(spark, sfDir, "orders")
+      val cust = Tables(spark, sfDir, "customer")
+      o.join(broadcast(cust), col("o_custkey") === col("c_custkey"))
+        .groupBy("c_mktsegment")
+        .agg(expr("approx_percentile(o_totalprice, 0.5, 10000)").as("med"))
+        .collect().map(r => (r.getString(0), r.getDouble(1))).toSeq
+    }
+
+  /** The stats artifacts this module computes once per (session, sfDir) —
+    * see [[graft.util.SessionMemo]]. */
+  private val memo = new graft.util.SessionMemo
 
   /** Single-scan MEDIAN+MAD twin (VERDICT r11 #5 — agg_median_mad was
     * the last two-fact-scan operator without one; the histogram pair is

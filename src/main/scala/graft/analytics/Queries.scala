@@ -151,10 +151,8 @@ object Queries {
     * DROP never touches the read-only testdata. The name tag is a sha-256
     * prefix of the corpus dir (not hashCode — collision-safe across
     * tiers). */
-  private val starStatsCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def starStatsTag(spark: SparkSession, sfDir: String): String =
-    starStatsCache.getOrElseUpdate(spark.sparkContext.applicationId + "|" + sfDir, {
+    memo(spark, sfDir, "starStatsTag") {
       Seq("lineitem", "orders", "customer", "part").foreach { t =>
         val name = Tables.externalTable(spark, sfDir, t, "star")
         // row counts + per-column NDV/min/max — what the cost model's
@@ -162,7 +160,11 @@ object Queries {
         spark.sql(s"ANALYZE TABLE $name COMPUTE STATISTICS FOR ALL COLUMNS")
       }
       Scratch.pathTag(sfDir)
-    })
+    }
+
+  /** The catalog tables, statistics and views this module registers once
+    * per (session, sfDir) — see [[graft.util.SessionMemo]]. */
+  private val memo = new graft.util.SessionMemo
 
   /** The Spectrum lake⋈DW star behind the sales dashboard
     * (README.md:92-94,99-102), planned by the COST MODEL instead of by
@@ -449,25 +451,22 @@ object Queries {
     * every pushdown/pruning win without knowing the physical layout).
     * View + tables are created once per (session, corpus); the oracle
     * replays the expanded SQL over the raw tables. */
-  private val viewCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   val sqlViewSalesByCategory: QFn = (spark, sfDir) => {
-    val view = viewCache.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir, {
-        val li = Tables.externalTable(spark, sfDir, "lineitem", "vw")
-        val part = Tables.externalTable(spark, sfDir, "part", "vw")
-        val ord = Tables.externalTable(spark, sfDir, "orders", "vw")
-        val v = s"sales_by_category_${Scratch.pathTag(sfDir)}"
-        spark.sql(
-          s"""CREATE OR REPLACE VIEW $v AS
-             |SELECT p.p_type, CAST(year(o.o_orderdate) AS INT) AS o_year,
-             |       count(*) AS sold_cnt
-             |FROM $li l
-             |JOIN $part p ON l.l_partkey = p.p_partkey
-             |JOIN $ord o ON l.l_orderkey = o.o_orderkey
-             |GROUP BY p.p_type, year(o.o_orderdate)""".stripMargin)
-        v
-      })
+    val view = memo(spark, sfDir, "salesByCategoryView") {
+      val li = Tables.externalTable(spark, sfDir, "lineitem", "vw")
+      val part = Tables.externalTable(spark, sfDir, "part", "vw")
+      val ord = Tables.externalTable(spark, sfDir, "orders", "vw")
+      val v = s"sales_by_category_${Scratch.pathTag(sfDir)}"
+      spark.sql(
+        s"""CREATE OR REPLACE VIEW $v AS
+           |SELECT p.p_type, CAST(year(o.o_orderdate) AS INT) AS o_year,
+           |       count(*) AS sold_cnt
+           |FROM $li l
+           |JOIN $part p ON l.l_partkey = p.p_partkey
+           |JOIN $ord o ON l.l_orderkey = o.o_orderkey
+           |GROUP BY p.p_type, year(o.o_orderdate)""".stripMargin)
+      v
+    }
     val s2 = spark.newSession()
     s2.conf.set("spark.sql.shuffle.partitions",
       spark.conf.get("spark.sql.shuffle.partitions"))

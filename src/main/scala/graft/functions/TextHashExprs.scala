@@ -283,9 +283,11 @@ case class NfcNormalize(child: org.apache.spark.sql.catalyst.expressions.Express
   *
   * CONTRACT: both arrays ascending-sorted with distinct elements (what
   * `sort_array(collect_set(..))` produces). Violations fail LOUDLY — the
-  * walk checks monotonicity as it advances (cache-hot reads, ~zero cost)
-  * instead of silently returning a wrong count. TextHashSpec pins count
-  * equality with size(array_intersect) on the real corpus. */
+  * walk checks strict ascent on every pointer advance and over the
+  * unwalked tails, so every adjacent pair of both arrays is checked once
+  * (cache-hot reads, ~zero cost) instead of silently returning a wrong
+  * count. TextHashSpec pins count equality with size(array_intersect) on
+  * the real corpus, and the loud failure on duplicates and disorder. */
 case class SortedIntersectCount(left: Expression, right: Expression)
     extends BinaryExpression with ImplicitCastInputTypes with CodegenFallback {
 
@@ -302,26 +304,38 @@ case class SortedIntersectCount(left: Expression, right: Expression)
     var i = 0
     var j = 0
     var c = 0L
+    // va/vb hold a(i)/b(j); each element is read once, when its pointer
+    // lands on it, and checked against the one the pointer left
+    var va = if (na > 0) a.getLong(0) else 0L
+    var vb = if (nb > 0) b.getLong(0) else 0L
     while (i < na && j < nb) {
-      val va = a.getLong(i)
-      val vb = b.getLong(j)
       if (va < vb) {
         i += 1
-        if (i < na && a.getLong(i) <= va)
-          throw new IllegalArgumentException(
-            s"sorted_intersect_count: left array not strictly ascending at $i")
+        if (i < na) va = ascending(a, i, va, "left")
       } else if (va > vb) {
         j += 1
-        if (j < nb && b.getLong(j) <= vb)
-          throw new IllegalArgumentException(
-            s"sorted_intersect_count: right array not strictly ascending at $j")
+        if (j < nb) vb = ascending(b, j, vb, "right")
       } else {
         c += 1
         i += 1
+        if (i < na) va = ascending(a, i, va, "left")
         j += 1
+        if (j < nb) vb = ascending(b, j, vb, "right")
       }
     }
+    // the walk stops at one side's end: check the other side's unwalked tail
+    while (i + 1 < na) { i += 1; va = ascending(a, i, va, "left") }
+    while (j + 1 < nb) { j += 1; vb = ascending(b, j, vb, "right") }
     c
+  }
+
+  /** arr(k), which must be strictly above its predecessor `prev`. */
+  private def ascending(arr: ArrayData, k: Int, prev: Long, side: String): Long = {
+    val v = arr.getLong(k)
+    if (v <= prev)
+      throw new IllegalArgumentException(
+        s"sorted_intersect_count: $side array not strictly ascending at $k")
+    v
   }
 
   override protected def withNewChildrenInternal(

@@ -30,21 +30,10 @@ object DedupOps {
   private val Bands = 4
   private val R = 4
 
-  /** Shingles + minhash signature per doc, computed ONCE per (session,
-    * sfDir) and persisted: the banded self-join and the exact-Jaccard
-    * verification would otherwise each re-derive the whole signature
-    * subtree (Spark self-joins recompute, they don't share). At 100 TB this
-    * is the materialized signature index every LSH system builds before
-    * pair generation — one linear pass, then all candidate work reads it. */
-  private val sigIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Cache key unique per SparkContext lifetime (applicationId) — an
-    * identity hash could be reused after GC and hand a new session a
-    * DataFrame bound to a stopped context. Entries live until the harness
-    * exits or [[clearCaches]] releases them. */
-  private def cacheKey(spark: SparkSession, sfDir: String): String =
-    spark.sparkContext.applicationId + "|" + sfDir
+  /** Every index, count and stored-table name this module builds once per
+    * (session, sfDir) — see [[graft.util.SessionMemo]]. Entries live until
+    * the harness exits or [[clearCaches]] releases them. */
+  private val memo = new graft.util.SessionMemo
 
   /** File-bucket count for every materialized index table (gram / sig /
     * sim / emb / span). Bucketed scans do not split within a bucket, so
@@ -76,46 +65,9 @@ object DedupOps {
     graft.util.EnvKnobs.positiveInt(
       s"SPARK_GRAFT_INDEX_BUCKETS_$family", indexBuckets)
 
-  /** Every frame this module persists, INCLUDING intermediates that are not
-    * themselves cache values (simIndex's bitsums barrier) — so a long-lived
-    * session embedding these operators can release executor storage instead
-    * of leaking it until shutdown. */
-  private val persistedFrames =
-    scala.collection.mutable.ArrayBuffer.empty[DataFrame]
-
-  private def tracked(df: DataFrame): DataFrame =
-    persistedFrames.synchronized { persistedFrames += df; df }
-
   /** Unpersist every index frame and forget the per-session caches. Safe to
     * call between corpora; the next operator call rebuilds lazily. */
-  def clearCaches(): Unit = persistedFrames.synchronized {
-    persistedFrames.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
-    persistedFrames.clear()
-    sigIndexCache.clear()
-    candidatesCache.clear()
-    verifiedPairsCache.clear()
-    simIndexCache.clear()
-    embIndexCache.clear()
-    embCountCache.clear()
-    docCountCache.clear()
-    deltaPairCountCache.clear()
-    gramIndexCache.clear()
-    gramSetsCache.clear()
-    rareGroupsCache.clear()
-    spanGroupsCache.clear()
-    bloomCache.clear()
-    gramTableCache.clear()
-    gramAppendCache.clear()
-    embTableCache.clear()
-    embAppendCache.clear()
-    sigTableCache.clear()
-    sigAppendCache.clear()
-    simTableCache.clear()
-    spanTableCache.clear()
-    baseClusterCache.clear()
-  }
+  def clearCaches(): Unit = memo.clear()
 
   /** Release the executor-memory BUILDER persists but KEEP the stored
     * tables (names + files) — the post-index-build state of a real
@@ -129,23 +81,7 @@ object DedupOps {
     * 3.3 s alone vs 19.6-32.5 s beside the persists). In-memory frame
     * caches are cleared with their persists so a later in-memory
     * consumer rebuilds instead of silently recomputing per use. */
-  def releaseBuilderPersists(): Unit = persistedFrames.synchronized {
-    persistedFrames.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
-    persistedFrames.clear()
-    sigIndexCache.clear()
-    candidatesCache.clear()
-    verifiedPairsCache.clear()
-    simIndexCache.clear()
-    embIndexCache.clear()
-    gramIndexCache.clear()
-    gramSetsCache.clear()
-    rareGroupsCache.clear()
-    spanGroupsCache.clear()
-    bloomCache.clear()
-    baseClusterCache.clear()
-  }
+  def releaseBuilderPersists(): Unit = memo.releasePersists()
 
   /** Raw signature plan (doc_id, hsh, sig) — the linear pass behind both
     * the executor-memory [[sigIndex]] persist AND (round 19) the stored
@@ -171,11 +107,14 @@ object DedupOps {
       .select(col("doc_id"), expr("ngram_hashes(t, 5)").as("hsh"))
       .withColumn("sig", expr(s"minhash_sig(hsh, $K)"))
 
+  /** Shingles + minhash signature per doc, computed ONCE per (session,
+    * sfDir) and persisted: the banded self-join and the exact-Jaccard
+    * verification would otherwise each re-derive the whole signature
+    * subtree (Spark self-joins recompute, they don't share). At 100 TB this
+    * is the materialized signature index every LSH system builds before
+    * pair generation — one linear pass, then all candidate work reads it. */
   private[graft] def sigIndex(spark: SparkSession, sfDir: String): DataFrame =
-    sigIndexCache.getOrElseUpdate(cacheKey(spark, sfDir), {
-      tracked(sigPlan(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    memo(spark, sfDir, "sigIndex")(memo.persist(sigPlan(spark, sfDir)))
 
   /** Build-side source selection (round 19): the table builders read the
     * in-memory persist when an in-memory consumer already materialized it
@@ -185,7 +124,7 @@ object DedupOps {
     * write it out once; the r18 curve showed exactly that persist
     * co-resident with later builds inflating them 3-9×). */
   private def sigSource(spark: SparkSession, sfDir: String): DataFrame =
-    sigIndexCache.getOrElse(cacheKey(spark, sfDir), sigPlan(spark, sfDir))
+    memo.peek[DataFrame](spark, sfDir, "sigIndex").getOrElse(sigPlan(spark, sfDir))
 
   /** Banding projection over any signature source. */
   private[graft] def banded(src: DataFrame): DataFrame =
@@ -206,23 +145,19 @@ object DedupOps {
     * small (collisions only) but the self-join producing it is the most
     * expensive dedup stage, and three operators (minhash, ngram-jaccard,
     * cluster) consume it. */
-  private val candidatesCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[graft] def minhashCandidates(spark: SparkSession, sfDir: String): DataFrame =
-    candidatesCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "minhashCandidates") {
       val idx = bandedIndex(spark, sfDir)
       val a = idx.withColumnsRenamed(Map("doc_id" -> "doc_a", "sig" -> "sig_a"))
       val b = idx.withColumnsRenamed(Map("doc_id" -> "doc_b", "sig" -> "sig_b"))
-      tracked(a.join(b, Seq("band", "bhash"))
+      memo.persist(a.join(b, Seq("band", "bhash"))
         .filter(col("doc_a") < col("doc_b"))
         .withColumn("est",
           expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m))") / lit(K.toDouble))
         .groupBy("doc_a", "doc_b")
         .agg(count(lit(1)).as("n_shared_bands"),
-          round(first(col("est")), 4).as("est_jaccard"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+          round(first(col("est")), 4).as("est_jaccard")))
+    }
 
   /** Exact dedup: group by normalized-text hash, keep the lowest doc_id
     * (sha2-256 collision-free at any realistic corpus size). */
@@ -268,14 +203,11 @@ object DedupOps {
     * HASHED shingles: intersect long arrays (cheap) and derive
     * |union| = |A| + |B| - |A∩B| arithmetically — no string-array
     * concat/distinct per pair. The distinct-shingle sets make |A|,|B| exact. */
-  private val verifiedPairsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[graft] def verifiedPairs(spark: SparkSession, sfDir: String): DataFrame =
-    verifiedPairsCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "verifiedPairs") {
       val sh = sigIndex(spark, sfDir)
         .select(col("doc_id"), col("hsh"), size(col("hsh")).as("n_sh"))
-      tracked(minhashCandidates(spark, sfDir)
+      memo.persist(minhashCandidates(spark, sfDir)
         .select("doc_a", "doc_b")
         .join(sh.withColumnsRenamed(Map("doc_id" -> "doc_a", "hsh" -> "h_a", "n_sh" -> "n_a")), Seq("doc_a"))
         .join(sh.withColumnsRenamed(Map("doc_id" -> "doc_b", "hsh" -> "h_b", "n_sh" -> "n_b")), Seq("doc_b"))
@@ -283,9 +215,8 @@ object DedupOps {
         .withColumn("jaccard", round(
           col("i").cast("double") / (col("n_a") + col("n_b") - col("i")), 4))
         .filter(col("jaccard") >= VerifyBounds.JaccardThreshold)
-        .select("doc_a", "doc_b", "jaccard")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+        .select("doc_a", "doc_b", "jaccard"))
+    }
 
   /** Exact n-gram Jaccard verification over the LSH candidate set — the
     * scalable exact-similarity join: candidates come from banding, exact
@@ -425,11 +356,8 @@ object DedupOps {
     * keeps BETWEEN daily runs lives on disk by definition. The consumer
     * reads the files (labels are 2 longs/doc — a cheap columnar scan);
     * zero storage residue after the build. */
-  private val baseClusterCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[graft] def baseClusters(spark: SparkSession, sfDir: String): DataFrame =
-    baseClusterCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "baseClusters") {
       val basePairs = verifiedPairs(spark, sfDir)
         .filter(pmod(col("doc_a"), lit(2)) === 0 && pmod(col("doc_b"), lit(2)) === 0)
         .select("doc_a", "doc_b")
@@ -442,7 +370,7 @@ object DedupOps {
         basePairs)
         .write.mode("overwrite").parquet(s"$dir/labels")
       spark.read.parquet(s"$dir/labels")
-    })
+    }
 
   /** Incremental near-dup cluster maintenance (round 19, VERDICT r18 #7
     * stretch — the consumer-side continuation of generation-append): fold
@@ -504,13 +432,12 @@ object DedupOps {
   /** Delta pair count, one cheap count over the persisted verified-pair
     * frame per (session, sfDir) — the actual-broadcast-side bound the
     * hints gate on (the docCount precedent; ADVICE r20). */
-  private val deltaPairCountCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
   private def deltaPairCount(spark: SparkSession, sfDir: String): Long =
-    deltaPairCountCache.getOrElseUpdate(cacheKey(spark, sfDir),
+    memo(spark, sfDir, "deltaPairCount") {
       verifiedPairs(spark, sfDir)
         .filter(pmod(col("doc_a"), lit(2)) === 1 || pmod(col("doc_b"), lit(2)) === 1)
-        .count())
+        .count()
+    }
 
   /** Whether this corpus admits the broadcast hints: the corpus-docCount
     * proxy (expansion joins' stored-label side stays scan-only) AND the
@@ -642,30 +569,6 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  /** 128-bit SimHash over word tokens (sign of per-bit +-1 sums), banded
-    * into 8 x 16-bit chunks for candidate generation; exact Hamming
-    * distance via bit_count(xor) over both halves. Top pairs by Hamming
-    * distance. 128 bits (not 64): the candidate join's pigeonhole geometry
-    * is chunk-width-fixed, so the only way to grow the bucket space with
-    * the corpus is more chunks — 8 x 16-bit chunks halve the per-chunk
-    * random-collision rate AND double the bucket count vs the round-5
-    * 4 x 16 layout, pushing the per-band saturation bound from ~65536·4 to
-    * ~65536·8 colliding docs with a strictly stronger Hamming<=7 retention
-    * guarantee. */
-  private val simIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** 128-bit SimHash per doc as two 64-bit halves, persisted: (a) the
-    * persist is a hard barrier, so the 128-way bit fold reads the
-    * materialized bitsums column instead of CollapseProject re-inlining the
-    * token aggregate into every bit (64× blowup measured at 276 s vs 3 s on
-    * sf0.1); (b) the chunked self-join reuses it instead of recomputing
-    * both sides. The two halves come from decorrelated token hashes —
-    * xxhash64(t) and xxhash64(t, 1L) (Spark chains the second arg into the
-    * hash state, so the streams are independent); each token's pair is
-    * computed ONCE via the struct transform, not once per bit. The
-    * intermediate bitsums frame is tracked too, so clearCaches can
-    * actually release it. */
   /** Raw per-doc bitsums plan — the token-aggregate pass of the SimHash
     * build. MUST be materialized (persist) before the 128-way fold reads
     * it: the persist is a hard barrier, without which CollapseProject
@@ -696,13 +599,32 @@ object DedupOps {
       col("n_tok"))
   }
 
+  /** 128-bit SimHash over word tokens (sign of per-bit +-1 sums), banded
+    * into 8 x 16-bit chunks for candidate generation; exact Hamming
+    * distance via bit_count(xor) over both halves. Top pairs by Hamming
+    * distance. 128 bits (not 64): the candidate join's pigeonhole geometry
+    * is chunk-width-fixed, so the only way to grow the bucket space with
+    * the corpus is more chunks — 8 x 16-bit chunks halve the per-chunk
+    * random-collision rate AND double the bucket count vs the round-5
+    * 4 x 16 layout, pushing the per-band saturation bound from ~65536·4 to
+    * ~65536·8 colliding docs with a strictly stronger Hamming<=7 retention
+    * guarantee.
+    *
+    * The index: 128-bit SimHash per doc as two 64-bit halves, persisted: (a) the
+    * persist is a hard barrier, so the 128-way bit fold reads the
+    * materialized bitsums column instead of CollapseProject re-inlining the
+    * token aggregate into every bit (64× blowup measured at 276 s vs 3 s on
+    * sf0.1); (b) the chunked self-join reuses it instead of recomputing
+    * both sides. The two halves come from decorrelated token hashes —
+    * xxhash64(t) and xxhash64(t, 1L) (Spark chains the second arg into the
+    * hash state, so the streams are independent); each token's pair is
+    * computed ONCE via the struct transform, not once per bit. The
+    * intermediate bitsums frame is persisted through the memo too, so
+    * clearCaches can actually release it. */
   private[graft] def simIndex(spark: SparkSession, sfDir: String): DataFrame =
-    simIndexCache.getOrElseUpdate(cacheKey(spark, sfDir), {
-      val bitsums = tracked(bitsumsPlan(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-      tracked(simFoldPlan(bitsums)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    memo(spark, sfDir, "simIndex") {
+      memo.persist(simFoldPlan(memo.persist(bitsumsPlan(spark, sfDir))))
+    }
 
   /** Candidate generation joins on (chunk, cval, length band): the chunk
     * split over the 128-bit fingerprint ([[simChunkGeom]]: 8×16-bit below
@@ -726,10 +648,8 @@ object DedupOps {
   /** Documents-corpus row count — the n the simhash chunk geometry derives
     * from. One Spark count job per (session, sfDir), then cached (Catalyst
     * may collapse it to parquet footer stats, but that is not guaranteed). */
-  private val docCountCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private[graft] def docCount(spark: SparkSession, sfDir: String): Long =
-    docCountCache.getOrElseUpdate(cacheKey(spark, sfDir),
-      Tables(spark, sfDir, "documents").count())
+    memo(spark, sfDir, "docCount")(Tables(spark, sfDir, "documents").count())
 
   /** Chunk geometry of the candidate join, DERIVED from corpus size the
     * way projBitsFor derives RP width: (chunks, bits per chunk). Below
@@ -818,10 +738,8 @@ object DedupOps {
 
   /** Corpus row count — the n every adaptive index width derives from. One
     * parquet metadata count per (session, sfDir), then cached. */
-  private val embCountCache = scala.collection.concurrent.TrieMap.empty[String, Long]
   private[graft] def embCount(spark: SparkSession, sfDir: String): Long =
-    embCountCache.getOrElseUpdate(cacheKey(spark, sfDir),
-      Tables(spark, sfDir, "embeddings").count())
+    memo(spark, sfDir, "embCount")(Tables(spark, sfDir, "embeddings").count())
   private[graft] def embBits(spark: SparkSession, sfDir: String): Int =
     projBitsFor(embCount(spark, sfDir))
 
@@ -888,14 +806,6 @@ object DedupOps {
   private[graft] def dotExpr(a: String, b: String): Column =
     expr(s"vector_dot($a, $b)")
 
-  /** Embedding index, computed ONCE per (session, sfDir) and persisted:
-    * double-cast vector, L2 norm, and RP bucket. Every similarity/near-dup
-    * op reads this instead of re-deriving the 384-term bucket expression
-    * and per-side norms inside self-joins. At 100 TB this is the vector
-    * index build pass every ANN system runs before querying. */
-  private val embIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   /** Raw embedding-index plan — see [[sigPlan]] for the build-side split. */
   private[graft] def embPlan(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "embeddings")
@@ -905,15 +815,17 @@ object DedupOps {
       .withColumn("norm", sqrt(expr("vector_dot(emb, emb)")))
       .withColumn("bucket", llmRpBucket(col("emb"), embBits(spark, sfDir)))
 
+  /** Embedding index, computed ONCE per (session, sfDir) and persisted:
+    * double-cast vector, L2 norm, and RP bucket. Every similarity/near-dup
+    * op reads this instead of re-deriving the 384-term bucket expression
+    * and per-side norms inside self-joins. At 100 TB this is the vector
+    * index build pass every ANN system runs before querying. */
   private[graft] def embIndex(spark: SparkSession, sfDir: String): DataFrame =
-    embIndexCache.getOrElseUpdate(cacheKey(spark, sfDir), {
-      tracked(embPlan(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    memo(spark, sfDir, "embIndex")(memo.persist(embPlan(spark, sfDir)))
 
   /** Persist-if-hot / raw-if-cold build source (see [[sigSource]]). */
   private def embSource(spark: SparkSession, sfDir: String): DataFrame =
-    embIndexCache.getOrElse(cacheKey(spark, sfDir), embPlan(spark, sfDir))
+    memo.peek[DataFrame](spark, sfDir, "embIndex").getOrElse(embPlan(spark, sfDir))
 
   /** Embedding-cosine near-dup candidates: top-100 most similar pairs among
     * RP-bucket collisions (testdata has no >= 0.95 pairs, so ranking — not
@@ -997,11 +909,8 @@ object DedupOps {
     * the join; the bucketed table ships the partitioning with the files).
     * 16 file buckets carry the RP bucket column (2^bits values) — files
     * arrive pre-hashed on the join key. */
-  private val embTableCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def embTable(spark: SparkSession, sfDir: String): String =
-    embTableCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "embTable") {
       val suffix = graft.util.Scratch.pathTag(sfDir)
       val tbl = s"emb_bkt_$suffix"
       val dir = graft.util.Scratch.dir(s"emb_index_$suffix")
@@ -1011,7 +920,7 @@ object DedupOps {
         .bucketBy(indexBucketsFor("EMB"), "bucket").sortBy("bucket")
         .option("path", s"$dir/$tbl").saveAsTable(tbl)
       tbl
-    })
+    }
 
   /** Vector-index build + occupancy profile: bucket count, vector count,
     * and the max bucket size — the numbers that tell an operator whether
@@ -1044,18 +953,6 @@ object DedupOps {
       .limit(100)
   }
 
-  /** Two-generation embedding index (round 19, VERDICT r18 #3): the ANN
-    * serving family gets generation-append maintenance — the base half
-    * (even vec_ids) written as the bucketed table, the delta APPENDED
-    * under the identical (bucket)-hash spec, so every bucket-keyed
-    * consumer reads both generations co-located with zero exchanges.
-    * The RP bucket of a vector is generation-independent (seeded
-    * projections + width derived from the FULL corpus count), which is
-    * what makes append sound: a delta vector lands in the same bucket it
-    * would get in a full rebuild. */
-  private val embAppendCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Table property recording the RP width an emb index was bucketed
     * under — the append-soundness invariant made CHECKABLE (round 20,
     * VERDICT r19 #8): [[projBitsFor]] grows with corpus count, so a
@@ -1083,8 +980,17 @@ object DedupOps {
         "family's REBUILD trigger, not an append")
   }
 
+  /** Two-generation embedding index (round 19, VERDICT r18 #3): the ANN
+    * serving family gets generation-append maintenance — the base half
+    * (even vec_ids) written as the bucketed table, the delta APPENDED
+    * under the identical (bucket)-hash spec, so every bucket-keyed
+    * consumer reads both generations co-located with zero exchanges.
+    * The RP bucket of a vector is generation-independent (seeded
+    * projections + width derived from the FULL corpus count), which is
+    * what makes append sound: a delta vector lands in the same bucket it
+    * would get in a full rebuild. */
   private[graft] def embAppendTable(spark: SparkSession, sfDir: String): String =
-    embAppendCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "embAppendTable") {
       val suffix = graft.util.Scratch.pathTag(sfDir)
       val tbl = s"emb_app_$suffix"
       val dir = graft.util.Scratch.dir(s"emb_append_$suffix")
@@ -1103,7 +1009,7 @@ object DedupOps {
       embAppendLeg(spark, sfDir, tbl,
         e.filter(pmod(col("vec_id"), lit(2)) === 1))
       tbl
-    })
+    }
 
   /** THE append entry point of the emb family (round 21, ADVICE r20 #2):
     * re-derives the RP width from the CURRENT corpus and guards it
@@ -1150,11 +1056,8 @@ object DedupOps {
     * elimination requires the bucket columns to cover every join key
     * (requireAllClusterKeysForCoPartition) — a bhash-only layout would be
     * hash-equivalent in principle but the planner rightly refuses it. */
-  private val sigTableCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def sigTable(spark: SparkSession, sfDir: String): String =
-    sigTableCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "sigTable") {
       val suffix = graft.util.Scratch.pathTag(sfDir)
       val tbl = s"sig_bkt_$suffix"
       val dir = graft.util.Scratch.dir(s"sig_index_$suffix")
@@ -1164,7 +1067,7 @@ object DedupOps {
         .bucketBy(indexBucketsFor("SIG"), "band", "bhash").sortBy("band", "bhash")
         .option("path", s"$dir/$tbl").saveAsTable(tbl)
       tbl
-    })
+    }
 
   /** Signature-index build + band profile: per band, row count and
     * distinct band-hash count (≈ distinct buckets LSH can route to).
@@ -1190,10 +1093,8 @@ object DedupOps {
     * reads both generations bucketed with ZERO exchanges
     * (PlanSpec-asserted) — append cost is one delta-sized write, consume
     * cost is unchanged. */
-  private val sigAppendCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
   private[graft] def sigAppendTable(spark: SparkSession, sfDir: String): String =
-    sigAppendCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "sigAppendTable") {
       val suffix = graft.util.Scratch.pathTag(sfDir)
       val tbl = s"sig_app_$suffix"
       val dir = graft.util.Scratch.dir(s"sig_append_$suffix")
@@ -1210,7 +1111,7 @@ object DedupOps {
         .bucketBy(indexBucketsFor("SIG"), "band", "bhash").sortBy("band", "bhash")
         .saveAsTable(tbl)
       tbl
-    })
+    }
 
   /** Minhash near-dup pairs from the APPENDED two-generation index —
     * must be byte-identical to [[llmDedupMinhash]] (NearDupSpec): the
@@ -1261,11 +1162,8 @@ object DedupOps {
     * build time follows [[simChunkGeom]]; the stored rows carry the
     * fingerprint halves so consumers rank by full 128-bit Hamming without
     * touching the documents table. */
-  private val simTableCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def simTable(spark: SparkSession, sfDir: String): String =
-    simTableCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "simTable") {
       val suffix = graft.util.Scratch.pathTag(sfDir)
       val tbl = s"sim_bkt_$suffix"
       val dir = graft.util.Scratch.dir(s"sim_index_$suffix")
@@ -1278,7 +1176,7 @@ object DedupOps {
       // (the fold's semantic barrier — see bitsumsPlan) released the
       // moment the files are written, instead of living co-resident with
       // the next builder (the r18/r19 neighbor effect).
-      val (src, release) = simIndexCache.get(cacheKey(spark, sfDir)) match {
+      val (src, release) = memo.peek[DataFrame](spark, sfDir, "simIndex") match {
         case Some(df) => (df, () => ())
         case None =>
           val bs = bitsumsPlan(spark, sfDir)
@@ -1299,7 +1197,7 @@ object DedupOps {
           .option("path", s"$dir/$tbl").saveAsTable(tbl)
       } finally release()
       tbl
-    })
+    }
 
   /** SimHash-index build + chunk profile: per chunk position, row count
     * and distinct chunk values (how full the 2^w value space runs).
@@ -1364,24 +1262,6 @@ object DedupOps {
       .orderBy("doc_new", "doc_old")
   }
 
-  /** Train/eval decontamination — the benchmark-leakage check every
-    * training corpus runs: split the corpus (even doc_id = train, odd =
-    * eval), hash each doc's distinct 13-grams, and flag eval docs sharing
-    * any 13-gram with the train side. The collision test is a semi-join on
-    * the gram hash — shuffle scales with distinct grams, never pairs.
-    * Brute-force-verified in NearDupSpec. */
-  private val gramIndexCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
-  /** Exploded 13-gram-hash frame (doc_id, is_train, g), persisted: the
-    * decontamination plan consumes it TWICE (distinct train grams + the
-    * eval-side semi-join), and without materialization Spark recomputes the
-    * whole explode for each side — the gram pass is the expensive linear
-    * scan, everything after it shuffles only distinct grams. At 100 TB this
-    * is the once-per-corpus gram index every decontamination run starts
-    * from (materialized to storage instead of executor memory).
-    * The hoisted normalized-text alias keeps lower(trim(text)) evaluated
-    * once per doc before the native gram pass reads its bytes. */
   /** Per-doc full gram-hash sets — the exact-verification operand of the
     * containment family, persisted once per corpus (round 11: rebuilt per
     * call, this ObjectHashAggregate was the heaviest RECURRING stage in
@@ -1390,22 +1270,18 @@ object DedupOps {
     * warmup like verifiedPairs). The indexed containment twin deliberately
     * does NOT use it — its contract is deriving everything from the
     * bucketed stored table. */
-  private val gramSetsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[graft] def gramSets(spark: SparkSession, sfDir: String): DataFrame =
-    gramSetsCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "gramSets") {
       // gs is SORTED at build (round 22): the only consumer is the
       // containment verification, whose per-pair intersection then runs as
       // a native two-pointer merge (sorted_intersect_count) instead of
       // array_intersect's per-row hash set + materialized result array —
       // the measured ~60% of the containment rows' wall. Sorting ~hundreds
       // of longs per doc once per corpus is warmup-amortized here.
-      tracked(gramIndex(spark, sfDir)
+      memo.persist(gramIndex(spark, sfDir)
         .groupBy("doc_id")
-        .agg(sort_array(collect_set(col("g"))).as("gs"), count(lit(1)).as("n"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+        .agg(sort_array(collect_set(col("g"))).as("gs"), count(lit(1)).as("n")))
+    }
 
   /** Upper df bound of rare-key blocking: only keys (gram hashes / winnow
     * fps) present in 2..RareDfCap docs generate candidate pairs, so the
@@ -1453,14 +1329,10 @@ object DedupOps {
     * persisted once per corpus (round 18; successor of the round-11
     * rarePosting persist — the grouped form is smaller than the posting
     * rows and the timed op starts directly at the pair explode). */
-  private val rareGroupsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[graft] def rareGramGroups(spark: SparkSession, sfDir: String): DataFrame =
-    rareGroupsCache.getOrElseUpdate(cacheKey(spark, sfDir), {
-      tracked(rareGroups(gramIndex(spark, sfDir).select("doc_id", "g"), "g")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    memo(spark, sfDir, "rareGramGroups") {
+      memo.persist(rareGroups(gramIndex(spark, sfDir).select("doc_id", "g"), "g"))
+    }
 
   /** Raw gram plan — shared by the [[gramIndex]] persist and (round 19)
     * the stored-table builds when that persist is cold; see [[sigPlan]]
@@ -1475,16 +1347,28 @@ object DedupOps {
       .select(col("doc_id"), (pmod(col("doc_id"), lit(2)) === 0).as("is_train"),
         explode(expr("ngram_hashes(t, 13)")).as("g"))
 
+  /** Exploded 13-gram-hash frame (doc_id, is_train, g), persisted: the
+    * decontamination plan consumes it TWICE (distinct train grams + the
+    * eval-side semi-join), and without materialization Spark recomputes the
+    * whole explode for each side — the gram pass is the expensive linear
+    * scan, everything after it shuffles only distinct grams. At 100 TB this
+    * is the once-per-corpus gram index every decontamination run starts
+    * from (materialized to storage instead of executor memory).
+    * The hoisted normalized-text alias keeps lower(trim(text)) evaluated
+    * once per doc before the native gram pass reads its bytes. */
   private[graft] def gramIndex(spark: SparkSession, sfDir: String): DataFrame =
-    gramIndexCache.getOrElseUpdate(cacheKey(spark, sfDir), {
-      tracked(gramPlan(spark, sfDir)
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    memo(spark, sfDir, "gramIndex")(memo.persist(gramPlan(spark, sfDir)))
 
   /** Persist-if-hot / raw-if-cold build source (see [[sigSource]]). */
   private def gramSource(spark: SparkSession, sfDir: String): DataFrame =
-    gramIndexCache.getOrElse(cacheKey(spark, sfDir), gramPlan(spark, sfDir))
+    memo.peek[DataFrame](spark, sfDir, "gramIndex").getOrElse(gramPlan(spark, sfDir))
 
+  /** Train/eval decontamination — the benchmark-leakage check every
+    * training corpus runs: split the corpus (even doc_id = train, odd =
+    * eval), hash each doc's distinct 13-grams, and flag eval docs sharing
+    * any 13-gram with the train side. The collision test is a semi-join on
+    * the gram hash — shuffle scales with distinct grams, never pairs.
+    * Brute-force-verified in NearDupSpec. */
   val llmDecontaminate: QFn = (spark, sfDir) => {
     val grams = gramIndex(spark, sfDir)
     val trainGrams = grams.filter(col("is_train")).select("g").distinct()
@@ -1529,16 +1413,12 @@ object DedupOps {
     * by every probe (Warmup builds it untimed next to the other
     * indexes, so the op's bench row measures the probe+confirm, which
     * is its steady state once the list is shipped). */
-  private val bloomCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
-  private[graft] def trainBloom(spark: SparkSession, sfDir: String): org.apache.spark.sql.DataFrame =
-    bloomCache.getOrElseUpdate(cacheKey(spark, sfDir), {
-      tracked(gramIndex(spark, sfDir)
+  private[graft] def trainBloom(spark: SparkSession, sfDir: String): DataFrame =
+    memo(spark, sfDir, "trainBloom") {
+      memo.persist(gramIndex(spark, sfDir)
         .filter(col("is_train")).select("g").distinct()
-        .agg(expr("bloom_filter_agg(g)").as("b"))
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+        .agg(expr("bloom_filter_agg(g)").as("b")))
+    }
 
   /** The gram index MATERIALIZED to disk as a parquet table hash-bucketed
     * on the gram hash — the durable form of [[gramIndex]]'s executor-memory
@@ -1553,11 +1433,8 @@ object DedupOps {
     * before the bucketed write = one file per bucket, not cores×N
     * fragments; N = [[indexBucketsFor]]("GRAM") — SPARK_GRAFT_INDEX_BUCKETS
     * with an optional per-family override (round 18). */
-  private val gramTableCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def gramTable(spark: SparkSession, sfDir: String): String =
-    gramTableCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "gramTable") {
       val suffix = graft.util.Scratch.pathTag(sfDir)
       val tbl = s"grams_bkt_$suffix"
       val dir = graft.util.Scratch.dir(s"gram_index_$suffix")
@@ -1567,7 +1444,7 @@ object DedupOps {
         .bucketBy(indexBucketsFor("GRAM"), "g").sortBy("g")
         .option("path", s"$dir/$tbl").saveAsTable(tbl)
       tbl
-    })
+    }
 
   /** Index build + profile: write the bucketed gram table (no-op if this
     * session already built it) and report the per-split row/distinct-gram
@@ -1595,11 +1472,8 @@ object DedupOps {
     * one delta-sized gram pass + write instead of rebuilding the
     * biggest table on the board (the ×128 build decomposition that
     * motivated this is in BASELINE.md round 19). */
-  private val gramAppendCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   private[graft] def gramAppendTable(spark: SparkSession, sfDir: String): String =
-    gramAppendCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "gramAppendTable") {
       val suffix = graft.util.Scratch.pathTag(sfDir)
       val tbl = s"grams_app_$suffix"
       val dir = graft.util.Scratch.dir(s"gram_append_$suffix")
@@ -1616,7 +1490,7 @@ object DedupOps {
         .bucketBy(indexBucketsFor("GRAM"), "g").sortBy("g")
         .saveAsTable(tbl)
       tbl
-    })
+    }
 
   /** Decontamination served from the APPENDED two-generation gram index —
     * the maintenance pattern's proof of consumption: the eval generation
@@ -1861,15 +1735,11 @@ object DedupOps {
     * [[rareGroups]] aggregate run once at warmup, and the timed op
     * starts directly at the pair explode — replacing the posting
     * self-join that shuffled the persisted posting twice per call. */
-  private val spanGroupsCache =
-    scala.collection.concurrent.TrieMap.empty[String, DataFrame]
-
   private[graft] def spanGroups(spark: SparkSession, sfDir: String): DataFrame =
-    spanGroupsCache.getOrElseUpdate(cacheKey(spark, sfDir), {
-      tracked(rareGroups(spanFps(
-        Tables(spark, sfDir, "documents").select("doc_id", "text")), "fp")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+    memo(spark, sfDir, "spanGroups") {
+      memo.persist(rareGroups(spanFps(
+        Tables(spark, sfDir, "documents").select("doc_id", "text")), "fp"))
+    }
 
   /** (doc_id, fp) winnow-fingerprint rows of a (doc_id, text) frame —
     * the linear scan both the in-memory persist and the bucketed
@@ -1896,15 +1766,12 @@ object DedupOps {
   private[graft] def spanPairs(docs: DataFrame): DataFrame =
     spanPairsFromGroups(rareGroups(spanFps(docs), "fp"))
 
-  private val spanTableCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
-
   /** Materialized winnow-fp posting table, bucketed on fp — the span
     * family's build-once artifact (companion to gramTable/sigTable): the
     * winnow pass runs once at index-build time; every consumer join on fp
     * is then exchange-free. */
   private[graft] def spanTable(spark: SparkSession, sfDir: String): String =
-    spanTableCache.getOrElseUpdate(cacheKey(spark, sfDir), {
+    memo(spark, sfDir, "spanTable") {
       val suffix = graft.util.Scratch.pathTag(sfDir)
       val tbl = s"span_bkt_$suffix"
       val dir = graft.util.Scratch.dir(s"span_index_$suffix")
@@ -1914,7 +1781,7 @@ object DedupOps {
         .bucketBy(indexBucketsFor("SPAN"), "fp").sortBy("fp")
         .option("path", s"$dir/$tbl").saveAsTable(tbl)
       tbl
-    })
+    }
 
   /** Span-index build + profile: posting rows and distinct fingerprints —
     * the density numbers a pipeline records per build (fps/doc ≈ 12% of

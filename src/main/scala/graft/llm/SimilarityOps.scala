@@ -104,17 +104,6 @@ object SimilarityOps {
       .limit(20)
   }
 
-  /** IVF cell assignments, computed once per (session, sfDir): k-means
-    * (MLlib, seeded) as the coarse quantizer fit on a BOUNDED SAMPLE (a
-    * coarse quantizer needs cluster shape, not every point — at 100 TB the
-    * fit must never see the full corpus), then every vector assigned to its
-    * nearest centroid cell in one linear pass — the inverted-file index
-    * structure. Returns (assignments, centroid table); the centroid table
-    * is nlist rows, tiny by construction. */
-  private val ivfCache =
-    scala.collection.concurrent.TrieMap.empty[String,
-      (org.apache.spark.sql.DataFrame, org.apache.spark.sql.DataFrame)]
-
   /** Cap on rows fed to the k-means fit — fixed regardless of corpus size. */
   private val FitSampleRows = 20000L
 
@@ -153,40 +142,34 @@ object SimilarityOps {
   // cumulative-occupancy prefix is bounded by construction.
   private[graft] val IvfScanBudget = 0.40
 
-  private val persistedFrames =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-
-  private def tracked(df: org.apache.spark.sql.DataFrame): org.apache.spark.sql.DataFrame =
-    persistedFrames.synchronized { persistedFrames += df; df }
+  /** The IVF index, its metadata and the verify-pass scalars this module
+    * builds once per (session, sfDir) — see [[graft.util.SessionMemo]]. */
+  private val memo = new graft.util.SessionMemo
 
   /** Release the persisted IVF assignments and forget the cache (companion
     * to [[DedupOps.clearCaches]] for long-lived sessions). */
-  def clearCaches(): Unit = persistedFrames.synchronized {
-    persistedFrames.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
-    persistedFrames.clear()
-    ivfCache.clear()
-    cellRowsCache.clear()
-  }
+  def clearCaches(): Unit = memo.clear()
 
   /** Per-cell occupancy of the IVF index — static index METADATA (nlist
     * rows), computed once per (session, sfDir) and persisted: the probe
     * prefix consumes it per query, and recomputing it would be a full
     * corpus pass per call (review finding, round 9). */
-  private val cellRowsCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
   private[graft] def ivfCellRows(spark: org.apache.spark.sql.SparkSession,
                                  sfDir: String): org.apache.spark.sql.DataFrame =
-    cellRowsCache.getOrElseUpdate(spark.sparkContext.applicationId + "|" + sfDir, {
+    memo(spark, sfDir, "ivfCellRows") {
       val (assigned, _) = ivfIndex(spark, sfDir)
-      tracked(assigned.groupBy("cell").count()
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
-    })
+      memo.persist(assigned.groupBy("cell").count())
+    }
 
+  /** IVF cell assignments, computed once per (session, sfDir): k-means
+    * (MLlib, seeded) as the coarse quantizer fit on a BOUNDED SAMPLE (a
+    * coarse quantizer needs cluster shape, not every point — at 100 TB the
+    * fit must never see the full corpus), then every vector assigned to its
+    * nearest centroid cell in one linear pass — the inverted-file index
+    * structure. Returns (assignments, centroid table); the centroid table
+    * is nlist rows, tiny by construction. */
   private[graft] def ivfIndex(spark: org.apache.spark.sql.SparkSession, sfDir: String) =
-    ivfCache.getOrElseUpdate(spark.sparkContext.applicationId + "|" + sfDir, {
+    memo(spark, sfDir, "ivfIndex") {
       import org.apache.spark.ml.clustering.KMeans
       import org.apache.spark.ml.functions.array_to_vector
       val e = DedupOps.embIndex(spark, sfDir)
@@ -197,15 +180,14 @@ object SimilarityOps {
       val model = new KMeans().setK(nlist).setSeed(42).setMaxIter(10)
         .setFeaturesCol("fv").setPredictionCol("cell")
         .fit(e.sample(frac, 42))
-      val assigned = tracked(model.transform(e)
-        .select("vec_id", "label", "emb", "norm", "cell")
-        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK))
+      val assigned = memo.persist(model.transform(e)
+        .select("vec_id", "label", "emb", "norm", "cell"))
       val centers = spark.createDataFrame(
         model.clusterCenters.zipWithIndex.toIndexedSeq
           .map { case (c, i) => (i, c.toArray) })
         .toDF("cell", "centroid")
       (assigned, centers)
-    })
+    }
 
   /** IVF ANN top-20: probe the cosine-ranked cells within the 40%
     * row-budget prefix (128 cells at the 500-row tiers → recall@20 ≈ 0.90
@@ -512,15 +494,13 @@ object SimilarityOps {
   /** IVF-recall scalar (|IVF top-20 ∩ exact top-20|), computed once per
     * (session, sfDir) — shared by the verify frame and approxDeltas so
     * the exact scan + probe never run twice in one Verify pass. */
-  private val ivfFoundCache =
-    scala.collection.concurrent.TrieMap.empty[String, Long]
   private def ivfFoundOf20(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Long =
-    ivfFoundCache.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir,
+    memo(spark, sfDir, "ivfFoundOf20") {
       llmSimilarityTopk(spark, sfDir)
         .join(llmSimilarityIvf(spark, sfDir).select("vec_id"),
-          Seq("vec_id"), "left_semi").count())
+          Seq("vec_id"), "left_semi").count()
+    }
 
   /** IVF verification frame: single row with k and the 20th exact cosine
     * (both DuckDB-replayed via the llm_similarity_topk machinery) plus a
@@ -540,23 +520,20 @@ object SimilarityOps {
     * 4-iteration Lloyd loop is the expensive part and is NOT otherwise
     * cached, so the verify frame and approxDeltas share this instead of
     * each re-running it (review, round 15). */
-  private val kmeansStatsCache = scala.collection.concurrent.TrieMap
-    .empty[String, (Long, Long, Double, Double)]
   private def kmeansStats(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): (Long, Long, Double, Double) =
-    kmeansStatsCache.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir, {
-        val cells = llmClusterKmeans(spark, sfDir).collect() // <= k rows
-        val n = cells.map(_.getAs[Long]("n_vecs")).sum
-        val inertia = cells
-          .map(r => r.getAs[Long]("n_vecs") * r.getAs[Double]("avg_dist2")).sum
-        val dims = DedupOps.embIndex(spark, sfDir)
-          .select(posexplode(col("emb")).as(Seq("dim", "v")))
-        val mu = dims.groupBy("dim").agg(avg(col("v")).as("mu"))
-        val gi = dims.join(broadcast(mu), Seq("dim"))
-          .agg(sum(pow(col("v") - col("mu"), 2))).head.getDouble(0)
-        (n, cells.length.toLong, inertia, gi)
-      })
+    memo(spark, sfDir, "kmeansStats") {
+      val cells = llmClusterKmeans(spark, sfDir).collect() // <= k rows
+      val n = cells.map(_.getAs[Long]("n_vecs")).sum
+      val inertia = cells
+        .map(r => r.getAs[Long]("n_vecs") * r.getAs[Double]("avg_dist2")).sum
+      val dims = DedupOps.embIndex(spark, sfDir)
+        .select(posexplode(col("emb")).as(Seq("dim", "v")))
+      val mu = dims.groupBy("dim").agg(avg(col("v")).as("mu"))
+      val gi = dims.join(broadcast(mu), Seq("dim"))
+        .agg(sum(pow(col("v") - col("mu"), 2))).head.getDouble(0)
+      (n, cells.length.toLong, inertia, gi)
+    }
 
   /** K-means verification frame: total assigned vectors hash-match the
     * corpus count (coverage — every vector lands in exactly one cell),

@@ -16,6 +16,14 @@ object TextOps {
 
   private val tokens: Column = split(lower(trim(col("text"))), "\\s+")
 
+  /** The language models, scores and BPE model this module builds once per
+    * (session, sfDir) — see [[graft.util.SessionMemo]]. */
+  private val memo = new graft.util.SessionMemo
+
+  /** Release the persisted models (same contract as
+    * DedupOps.clearCaches — safe between corpora, rebuilt lazily). */
+  def clearCaches(): Unit = memo.clear()
+
   /** Persisted unigram model (token → count), one per (session, sfDir) —
     * the DedupOps index pattern: the LM is consulted twice inside the
     * logprob query (corpus total + per-token NLL join) and Spark would
@@ -23,36 +31,13 @@ object TextOps {
     * (self-referencing plans recompute, they don't share). At 100 TB this
     * is the vocabulary table every perplexity filter materializes once —
     * one linear corpus pass, then all scoring reads it. */
-  private val unigramCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
-  private val persistedFrames =
-    scala.collection.mutable.ArrayBuffer.empty[org.apache.spark.sql.DataFrame]
-
-  /** Release the persisted unigram models (same contract as
-    * DedupOps.clearCaches — safe between corpora, rebuilt lazily). */
-  def clearCaches(): Unit = persistedFrames.synchronized {
-    persistedFrames.foreach { df =>
-      try df.unpersist() catch { case _: Throwable => () }
-    }
-    persistedFrames.clear()
-    unigramCache.clear()
-    bigramCache.clear()
-    perplexityScoredCache.clear()
-    bpeCache.clear()
-  }
-
   private[graft] def unigramModel(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): org.apache.spark.sql.DataFrame =
-    unigramCache.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir, {
-        val m = Tables(spark, sfDir, "documents")
-          .select(explode(tokens).as("token"))
-          .groupBy("token").agg(count(lit(1)).as("cnt"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persistedFrames.synchronized { persistedFrames += m }
-        m
-      })
+    memo(spark, sfDir, "unigramModel") {
+      memo.persist(Tables(spark, sfDir, "documents")
+        .select(explode(tokens).as("token"))
+        .groupBy("token").agg(count(lit(1)).as("cnt")))
+    }
 
   /** Shared en/de/es/fr marker-word lists: the SAME lists build both the
     * Spark plan and the DuckDB oracle SQL, so they cannot drift. */
@@ -194,12 +179,9 @@ object TextOps {
     * [[llmBpeTrain]] (emits the merge table) and [[llmBpeApply]]
     * (broadcasts the word-cost dictionary), same share-the-model
     * pattern as unigramModel/bigramModel. */
-  private val bpeCache =
-    scala.collection.concurrent.TrieMap.empty[String, BpeModel]
   private[graft] def bpeModel(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): BpeModel =
-    bpeCache.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir, trainBpe(spark, sfDir))
+    memo(spark, sfDir, "bpeModel")(trainBpe(spark, sfDir))
   private[graft] def bpeMerges(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): Seq[(Int, String, String, Long)] =
     bpeModel(spark, sfDir).merges
@@ -734,21 +716,15 @@ object TextOps {
   /** Persisted bigram model ((prev, cur) → count), one per (session,
     * sfDir) — companion to [[unigramModel]]: one explode + hash aggregate,
     * map-side combine, shuffle carries distinct pairs only. */
-  private val bigramCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
   private[graft] def bigramModel(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): org.apache.spark.sql.DataFrame =
-    bigramCache.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir, {
-        val m = Tables(spark, sfDir, "documents")
-          .withColumn("toks", tokens)
-          .select(explode(bigramPairs).as("pair"))
-          .select(col("pair.prev").as("prev"), col("pair.cur").as("cur"))
-          .groupBy("prev", "cur").agg(count(lit(1)).as("cnt_bi"))
-          .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-        persistedFrames.synchronized { persistedFrames += m }
-        m
-      })
+    memo(spark, sfDir, "bigramModel") {
+      memo.persist(Tables(spark, sfDir, "documents")
+        .withColumn("toks", tokens)
+        .select(explode(bigramPairs).as("pair"))
+        .select(col("pair.prev").as("prev"), col("pair.cur").as("cur"))
+        .groupBy("prev", "cur").agg(count(lit(1)).as("cnt_bi")))
+    }
 
   /** Bigram-LM perplexity scoring — the full CCNet shape that
     * [[llmUnigramLogprob]] reduces: every position i ≥ 1 is scored by the
@@ -781,13 +757,9 @@ object TextOps {
     * join per REFERENCE — the buckets op touched it twice per call (cut
     * aggregate + bucket join), the round-11 bench's wandering
     * perplexity_buckets row. */
-  private val perplexityScoredCache =
-    scala.collection.concurrent.TrieMap.empty[String, org.apache.spark.sql.DataFrame]
-
   private[graft] def perplexityScored(spark: org.apache.spark.sql.SparkSession,
       sfDir: String): org.apache.spark.sql.DataFrame =
-    perplexityScoredCache.getOrElseUpdate(
-      spark.sparkContext.applicationId + "|" + sfDir, {
+    memo(spark, sfDir, "perplexityScored") {
     val docs = Tables(spark, sfDir, "documents").withColumn("toks", tokens)
     val uni = unigramModel(spark, sfDir)
     val total = uni.agg(sum(col("cnt")).as("total_tokens"))
@@ -811,16 +783,13 @@ object TextOps {
       .select(col("doc_id"),
         floor(log(col("total_tokens").cast("double") / col("cnt")) * 1e6 + 0.5)
           .cast("long").as("first_q"))
-    val m = firstNll.join(body, Seq("doc_id"), "left")
+    memo.persist(firstNll.join(body, Seq("doc_id"), "left")
       .select(col("doc_id"),
         (coalesce(col("n_pairs"), lit(0L)) + 1L).as("n_scored"),
         (coalesce(col("pair_micro"), lit(0L)) + col("first_q")).as("nll_micro"))
       .withColumn("avg_nll",
-        round(col("nll_micro").cast("double") / col("n_scored") / 1e6, 4))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    persistedFrames.synchronized { persistedFrames += m }
-    m
-  })
+        round(col("nll_micro").cast("double") / col("n_scored") / 1e6, 4)))
+  }
 
   /** CCNet-style head/middle/tail corpus split by LM perplexity — the
     * standard pretraining-data quality partition: documents bucket by

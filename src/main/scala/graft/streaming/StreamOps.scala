@@ -48,38 +48,28 @@ object StreamOps {
   // via [[stageFixtures]] in warmup; Verify and the specs stage lazily on
   // first use (they are untimed).
   // -------------------------------------------------------------------------
-  private val fixtureCache =
-    scala.collection.concurrent.TrieMap.empty[String, String]
+  private val fixtures = new graft.util.SessionMemo
 
   /** Memoized fixture dir: `stage` runs once per (session, sfDir, name)
-    * into a fresh dir; later calls return the staged path. The cached dir
-    * is RE-VALIDATED on every hit (ADVICE r21): other tools issue
-    * mid-session scratch wipes (ScaleCheck's sink loop wipes everything
-    * except spark_local/derby/corpus), and a stale cache entry pointing at
-    * a deleted dir would make later stream ops read empty input — restage
-    * if the staged files are gone. */
+    * into a fresh dir; later calls return the staged path. The staged dir
+    * is RE-VALIDATED on every hit, under the key's lock (ADVICE r21):
+    * other tools issue mid-session scratch wipes (ScaleCheck's sink loop
+    * wipes everything except spark_local/derby/corpus), and a stale entry
+    * pointing at a deleted dir would make later stream ops read empty
+    * input — so a wiped fixture is restaged, and no second stager of the
+    * same fixture can delete a restage still in flight. */
   private def stagedFixture(spark: SparkSession, sfDir: String, name: String)(
       stage: String => Unit): String = {
-    val key = spark.sparkContext.applicationId + "|" + sfDir + "|" + name
-    def staged(): String = {
-      val dir = Scratch.dir(s"stream_fix_${name}_${Scratch.pathTag(sfDir)}")
-      stage(dir)
-      dir
-    }
     // recursive: fileUpsertFix stages into SUBDIRS (hist/, incoming/), so a
     // top-level dataFiles() probe would read a healthy fixture as wiped
     def hasDataFile(f: java.io.File): Boolean =
       if (f.isDirectory)
         Option(f.listFiles()).getOrElse(Array.empty).exists(hasDataFile)
       else f.isFile && !f.getName.startsWith("_") && !f.getName.startsWith(".")
-    val dir = fixtureCache.getOrElseUpdate(key, staged())
-    if (hasDataFile(new java.io.File(dir))) dir
-    else {
-      // wiped under us: drop the stale entry and restage (drop-then-update
-      // keeps the TrieMap idiom race-safe — a concurrent caller at worst
-      // restages the same deterministic content into the same dir)
-      fixtureCache.remove(key)
-      fixtureCache.getOrElseUpdate(key, staged())
+    fixtures.validated(spark, sfDir, name)((dir: String) => hasDataFile(new java.io.File(dir))) {
+      val dir = Scratch.dir(s"stream_fix_${name}_${Scratch.pathTag(sfDir)}")
+      stage(dir)
+      dir
     }
   }
 
@@ -153,23 +143,10 @@ object StreamOps {
   private[graft] val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
 
-  private[graft] val HdfsProvider =
-    "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider"
-
   /** Test hook: StreamingSpec sets this to pin a run to a specific
-    * provider (e.g. the HDFS twin) — None means RocksDB. */
+    * provider (e.g. the HDFS twin) — None means RocksDB, the winner of
+    * the provider A/Bs (BASELINE.md rounds 9 and 17). */
   @volatile private[graft] var providerOverride: Option[String] = None
-
-  /** Provider resolution: the in-process override wins (StreamingSpec),
-    * then SPARK_GRAFT_STATE_PROVIDER=hdfs|rocksdb (the bench A/B knob —
-    * lets a Bench invocation pin the provider without a code edit), then
-    * the RocksDB default. */
-  private def provider: String =
-    providerOverride.getOrElse(sys.env.get("SPARK_GRAFT_STATE_PROVIDER") match {
-      case Some("hdfs") => HdfsProvider
-      case Some("rocksdb") | None => RocksProvider
-      case Some(other) => other // explicit provider class passes through
-    })
 
   /** Dedicated child session for a stateful stream, with a shuffle-partition
     * count sized to the stream. The partition count of a stateful query is a
@@ -186,50 +163,18 @@ object StreamOps {
     val ss = spark.newSession()
     StreamMetrics.ensure(ss) // commit/work attribution (VERDICT r9 #6)
     ss.conf.set("spark.sql.shuffle.partitions", n.toString)
-    val p = provider
+    val p = providerOverride.getOrElse(RocksProvider)
     ss.conf.set("spark.sql.streaming.stateStore.providerClass", p)
-    // round 18 (VERDICT r17 #7): checkpoint RETENTION is commit-path
-    // cleanup work — every batch N prunes offsets/commits/state versions
-    // older than N − minBatchesToRetain (Spark default 100). The knob
-    // exists for the bounded A/B in BASELINE r18; default deliberately
-    // untouched so recovery semantics (StateRecoverSpec/StreamRecoverSpec
-    // resume from the LAST committed batch, which any retention ≥ 2
-    // preserves) cannot drift without a recorded decision.
-    // Parsed + floor-checked up front (ADVICE r18): a non-integer would
-    // otherwise fail deep inside Spark's conf machinery, and a value of 1
-    // would silently void the "any retention >= 2 preserves recovery"
-    // invariant the paragraph above states.
-    sys.env.get("SPARK_GRAFT_MIN_BATCHES_RETAIN").foreach { _ =>
-      val v = graft.util.EnvKnobs.positiveInt("SPARK_GRAFT_MIN_BATCHES_RETAIN", 2)
-      require(v >= 2,
-        s"SPARK_GRAFT_MIN_BATCHES_RETAIN must be >= 2 (resume-from-last-commit needs the previous batch retained), got $v")
-      ss.conf.set("spark.sql.streaming.minBatchesToRetain", v.toString)
-    }
-    // round 19 (VERDICT r18 #5): the next two bounded commit-floor
-    // experiments after retention — background state-store maintenance
-    // cadence and the changelog→snapshot consolidation threshold. Both
-    // opt-in env for the A/B (BASELINE r19), defaults untouched: neither
-    // affects recovery correctness (maintenance is a background
-    // optimization; snapshots only shorten changelog replay), so the
-    // recovery specs gate adoption, not semantics.
-    sys.env.get("SPARK_GRAFT_STATE_MAINTENANCE_SEC").foreach { _ =>
-      val v = graft.util.EnvKnobs.positiveInt("SPARK_GRAFT_STATE_MAINTENANCE_SEC", 60)
-      ss.conf.set("spark.sql.streaming.stateStore.maintenanceInterval", s"${v}s")
-    }
-    sys.env.get("SPARK_GRAFT_MIN_DELTAS_SNAPSHOT").foreach { _ =>
-      val v = graft.util.EnvKnobs.positiveInt("SPARK_GRAFT_MIN_DELTAS_SNAPSHOT", 10)
-      ss.conf.set("spark.sql.streaming.stateStore.minDeltasForSnapshot", v.toString)
-    }
-    if (p == RocksProvider)
+    // Checkpoint retention, maintenance cadence and the snapshot threshold
+    // stay at Spark's defaults: their A/Bs (BASELINE rounds 18 and 19)
+    // moved nothing measurable.
+    if (p == RocksProvider) {
       // changelog checkpointing: upload per-batch CHANGELOGS instead of
       // SST snapshots — attacks exactly the per-batch commit floor the
       // round-9 A/B priced at ~1.3× vs HDFS (snapshots still happen, in
-      // the background every N batches). Env knob for the A/B; default
-      // from the measured comparison (BASELINE.md round 9).
+      // the background every N batches; BASELINE.md round 9).
       ss.conf.set(
-        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled",
-        sys.env.getOrElse("SPARK_GRAFT_ROCKSDB_CHANGELOG", "true"))
-    if (p == RocksProvider) {
+        "spark.sql.streaming.stateStore.rocksdb.changelogCheckpointing.enabled", "true")
       // Store unification for stream-stream joins (VERDICT r10 #7): the
       // classic symmetric hash join keeps FOUR stores per partition
       // (keyToNumValues + keyWithIndexToValue per side), so every
@@ -237,11 +182,10 @@ object StreamOps {
       // 61% commit share of stream_stream_join's trigger time. Format
       // version 3 (RocksDB-only) folds them into ONE store per partition
       // with virtual column families: same join semantics, quarter the
-      // commit instances. Env knob for the A/B (BASELINE.md round 11);
-      // the version is baked into a checkpoint at first start, which is
-      // safe here because every op stages a fresh checkpoint per run.
-      ss.conf.set("spark.sql.streaming.join.stateFormatVersion",
-        sys.env.getOrElse("SPARK_GRAFT_JOIN_STATE_VERSION", "3"))
+      // commit instances (BASELINE.md round 11). The version is baked into
+      // a checkpoint at first start, which is safe here because every op
+      // stages a fresh checkpoint per run.
+      ss.conf.set("spark.sql.streaming.join.stateFormatVersion", "3")
       // put-path read-before-write: with row tracking on, every put does
       // a get to maintain the store's row count metric — pure overhead
       // for the join/dedup stores whose sizing signal is byte-based.

@@ -44,11 +44,16 @@ object Tables {
   //
   // Still plans only, never data or results. The adjacent `registered`
   // map stays weak-keyed and safe because its value is a String.
+  //
+  // Layer 1 builds once per key (SessionMemo): two concurrent first loads
+  // of `events` run ONE schema resolution and one conf-flag dance, since
+  // two interleaved dances can restore each other's flags wrongly and
+  // leak them into the session (ADVICE r22). Layer 2 keeps its own LRU:
+  // its lifetime is per session, not per key.
   private case class ResolvedTable(schema: org.apache.spark.sql.types.StructType,
                                    tsNanosAsLong: Boolean)
 
-  private val resolved =
-    scala.collection.concurrent.TrieMap.empty[(String, String), ResolvedTable]
+  private val resolved = new graft.util.SessionMemo
 
   /** Upper bound on sessions whose resolved DataFrames stay memoized. */
   private[graft] val MaxCachedSessions = 4
@@ -84,7 +89,7 @@ object Tables {
   /** Cheap per-session relation build over the cached schema — no footer
     * read, no inference, no flag dance. */
   private def build(spark: SparkSession, sfDir: String, name: String): DataFrame = {
-    val r = resolved.getOrElseUpdate((sfDir, name), resolve(spark, sfDir, name))
+    val r = resolved.once(s"$sfDir|$name")(resolve(spark, sfDir, name))
     val df = spark.read.schema(r.schema).parquet(s"$sfDir/$name.parquet")
     if (r.tsNanosAsLong)
       // generation (a): ts stored as TIMESTAMP(NANOS), read as raw long
@@ -131,10 +136,10 @@ object Tables {
       // reads behave for the rest of the session.
       // synchronized: the set/restore races if two threads resolve reads on
       // the same session concurrently (conf is session-global mutable
-      // state) — any concurrent read.parquet on this session during the
-      // window also sees NTZ inference off; no concurrent loads exist in
-      // this repo (Verify/Bench load sequentially; specs share the fixture
-      // session serially), and the window is schema-resolution-short.
+      // state). The memo already runs one resolution per (sfDir, name);
+      // this lock also serializes the events dances of DIFFERENT corpus
+      // dirs. Any other read.parquet on this session during the window
+      // also sees NTZ inference off; the window is schema-resolution-short.
       this.synchronized {
         val flags = Seq(
           "spark.sql.legacy.parquet.nanosAsLong" -> "true",

@@ -4,9 +4,11 @@ import java.nio.file.{Files, Path, Paths}
 
 /** Scratch space for operators that exercise real sinks/sources (CSV lake
   * round-trips, partitioned parquet writes, streaming file drops). Lives
-  * under the repo's target/ so nothing outside /root/repo is touched. */
+  * under `target/scratch` of the working directory, so a run from a copy
+  * of the tree reads and writes only inside that copy. */
 object Scratch {
-  private val root = "/root/repo/target/scratch"
+  private val root: String =
+    Paths.get(System.getProperty("user.dir"), "target", "scratch").toString
 
   /** The scratch root, for callers that walk it (ScaleCheck's sink-audit
     * snapshot) — one spelling, here (review r15: a hardcoded copy going

@@ -9,7 +9,7 @@ class CompactionSpec extends AnyFunSuite {
 
   test("compaction rewrites 64 small files to the byte-targeted count") {
     graft.etl.Ingest.sinkCompactSmallFiles(spark, sfDir).collect()
-    val base = "/root/repo/target/scratch/sink_compact_small_files"
+    val base = s"${graft.util.Scratch.rootDir}/sink_compact_small_files"
     val nSmall = graft.util.Scratch.dataFiles(s"$base/small").length
     val nCompact = graft.util.Scratch.dataFiles(s"$base/compacted").length
     assert(nSmall == 64, s"fragmented input expected 64 files, got $nSmall")

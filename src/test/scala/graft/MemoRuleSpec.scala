@@ -1,0 +1,35 @@
+package graft
+
+import java.nio.file.{Files, Path, Paths}
+
+import scala.jdk.CollectionConverters._
+
+import org.scalatest.funsuite.AnyFunSuite
+
+/** One memo type: the operator modules keep their session-resident state
+  * in a [[graft.util.SessionMemo]], never in a hand-rolled TrieMap memo
+  * with its own spelling of the session key. The one-off probe mains
+  * under tools/ are exempt. */
+class MemoRuleSpec extends AnyFunSuite {
+  private val moduleDirs = Seq("llm", "analytics", "etl", "streaming")
+    .map(d => Paths.get("src/main/scala/graft", d))
+
+  private def sources(dir: Path): Seq[Path] = {
+    val walk = Files.walk(dir)
+    try walk.iterator().asScala.filter(_.toString.endsWith(".scala")).toList
+    finally walk.close()
+  }
+
+  test("operator modules hold no hand-rolled session memo") {
+    moduleDirs.foreach(d => assert(Files.isDirectory(d), s"missing module dir $d"))
+    val files = moduleDirs.flatMap(sources)
+    assert(files.nonEmpty)
+    val offenders = for {
+      f <- files
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      if line.contains("TrieMap") || line.contains("applicationId + \"|\"")
+    } yield s"$f:${i + 1}: ${line.trim}"
+    assert(offenders.isEmpty,
+      "keep session-resident state in a graft.util.SessionMemo:\n" + offenders.mkString("\n"))
+  }
+}

@@ -173,5 +173,17 @@ class TextHashSpec extends AnyFunSuite {
         .collect()
     }
     assert(ex.getMessage != null)
+    // the holes the walk used to leave: duplicates advanced past by the
+    // equal branch, disorder right after a match, and an unwalked tail
+    Seq("array(1L,1L,2L), array(1L,1L,3L)",
+        "array(2L,1L), array(1L,2L)",
+        "array(1L,5L,3L), array(1L,3L)").foreach { args =>
+      val e = intercept[Exception] {
+        spark.sql(s"SELECT sorted_intersect_count($args)").collect()
+      }
+      val chain = Iterator.iterate[Throwable](e)(_.getCause).takeWhile(_ != null)
+      assert(chain.exists(t => String.valueOf(t.getMessage).contains("not strictly ascending")),
+        s"sorted_intersect_count($args) must fail loudly, got $e")
+    }
   }
 }
