@@ -608,8 +608,8 @@ object ScaleCheck {
       // it; BASELINE r18). Table-name caches survive the release, so the
       // timed consumers read the files they would in production.
       // Round 19: the builders stream from RAW plans when the in-memory
-      // persists are cold (this path — DedupOps gramSource/sigSource/
-      // embSource), so these builds leave no executor-storage residue by
+      // persists are cold (this path — DedupOps.buildSource), so these
+      // builds leave no executor-storage residue by
       // construction; releaseBuilderPersists below is belt-and-braces.
       // Build TIMES here are io-window-dominated and the corpus was just
       // replicated — sync+settle first, or the first build measures the

@@ -48,22 +48,68 @@ object DedupOps {
   private[graft] val indexBuckets: Int =
     graft.util.EnvKnobs.positiveInt("SPARK_GRAFT_INDEX_BUCKETS", 16)
 
-  /** Per-family bucket override (round 18, VERDICT r17 #4):
-    * SPARK_GRAFT_INDEX_BUCKETS_<FAM> for FAM ∈ {GRAM, SIG, SIM, EMB,
-    * SPAN}, falling back to [[indexBuckets]]. Exists because the right
-    * bucket count follows the family's CONSUMER-SIDE data, not the
-    * corpus alone: posting-sized families (gram/span) want buckets ∝
-    * corpus, but the signature family's consume join probes a
-    * collision-sized frame — the r17 ×32 A/B showed minhash_indexed
-    * REGRESSING 3.65 → 4.36 s when its buckets followed the corpus
-    * 16 → 64 (more tasks than probe rows warrant). Sizing rule recorded
-    * in BASELINE.md round 18: scale a family's buckets with the corpus
-    * only when its consumer scans posting-sized data; keep probe-sided
-    * families (SIG) at the fixture default until the probe side itself
-    * grows past ~buckets × a task's worth of rows. */
-  private[graft] def indexBucketsFor(family: String): Int =
-    graft.util.EnvKnobs.positiveInt(
-      s"SPARK_GRAFT_INDEX_BUCKETS_$family", indexBuckets)
+  /** THE index-table layout: `df` hash-bucketed on `keys` into
+    * [[indexBuckets]] files and sorted on the same keys. repartition(N,
+    * keys) before the bucketed write = one file per bucket, not cores×N
+    * fragments. Spark validates the spec on append, so every generation
+    * written through here shares one hash layout. */
+  private def bucketedWriter(df: DataFrame, keys: Seq[String]) =
+    df.repartition(indexBuckets, keys.map(col): _*)
+      .write.format("parquet")
+      .bucketBy(indexBuckets, keys.head, keys.tail: _*)
+      .sortBy(keys.head, keys.tail: _*)
+
+  /** Writes `df` as the bucketed catalog table `<table>_<tag>` under the
+    * fresh scratch dir `<dir>_<tag>` (tag = Scratch.pathTag(sfDir)),
+    * replacing any previous build; returns the table name. */
+  private def writeIndex(df: DataFrame, sfDir: String, table: String, dir: String,
+      keys: Seq[String]): String = {
+    val tag = graft.util.Scratch.pathTag(sfDir)
+    val tbl = s"${table}_$tag"
+    val path = s"${graft.util.Scratch.dir(s"${dir}_$tag")}/$tbl"
+    bucketedWriter(df, keys).mode("overwrite").option("path", path).saveAsTable(tbl)
+    tbl
+  }
+
+  /** Appends `delta` to the index table `tbl` under the same layout. */
+  private def appendIndex(delta: DataFrame, tbl: String, keys: Seq[String]): Unit =
+    bucketedWriter(delta, keys).mode("append").saveAsTable(tbl)
+
+  /** Two-generation index (round 19, VERDICT r18 #3) — the index-
+    * MAINTENANCE pattern a daily pipeline needs: a 100 TB index is never
+    * rebuilt for a 0.1% delta, it grows one bucketed file set per
+    * generation. "Yesterday's" generation (even `id`) is written as the
+    * bucketed table, "today's" delta (odd `id`) goes to `append`, which
+    * lands it under the identical bucket spec — so every key-bucketed
+    * consumer still reads both generations co-located with ZERO exchanges
+    * (PlanSpec pins it per family): append cost is one delta-sized write,
+    * consume cost is unchanged, and the generation split is a layout
+    * event, invisible to results (NearDupSpec). */
+  private def twoGenIndex(src: DataFrame, sfDir: String, table: String, dir: String,
+      id: String, keys: Seq[String])(append: (DataFrame, String) => Unit): String = {
+    val parity = pmod(col(id), lit(2))
+    val tbl = writeIndex(src.filter(parity === 0), sfDir, table, dir, keys)
+    append(src.filter(parity === 1), tbl)
+    tbl
+  }
+
+  /** A stored index table as a join input: the merge hint keeps a
+    * test-scale side from broadcasting — at corpus scale both sides of
+    * every index self-join are the full table, and the co-located
+    * sort-merge join over bucketed scans is the real plan. */
+  private def stored(spark: SparkSession, tbl: String): DataFrame =
+    spark.table(tbl).hint("merge")
+
+  /** Build-side source selection (round 19): the table builders read the
+    * in-memory persist `name` when an in-memory consumer already
+    * materialized it (the bench session — one signature pass serves both
+    * families), and the RAW plan when it is cold (the offline-build
+    * pipeline — where persisting would stage the whole corpus in executor
+    * storage just to write it out once; the r18 curve showed exactly that
+    * persist co-resident with later builds inflating them 3-9×). */
+  private def buildSource(spark: SparkSession, sfDir: String, name: String)(
+      plan: => DataFrame): DataFrame =
+    memo.peek[DataFrame](spark, sfDir, name).getOrElse(plan)
 
   /** Unpersist every index frame and forget the per-session caches. Safe to
     * call between corpora; the next operator call rebuilds lazily. */
@@ -116,16 +162,6 @@ object DedupOps {
   private[graft] def sigIndex(spark: SparkSession, sfDir: String): DataFrame =
     memo(spark, sfDir, "sigIndex")(memo.persist(sigPlan(spark, sfDir)))
 
-  /** Build-side source selection (round 19): the table builders read the
-    * in-memory persist when an in-memory consumer already materialized it
-    * (the bench session — one signature pass serves both families), and
-    * the RAW plan when it is cold (the offline-build pipeline — where
-    * persisting would stage the whole corpus in executor storage just to
-    * write it out once; the r18 curve showed exactly that persist
-    * co-resident with later builds inflating them 3-9×). */
-  private def sigSource(spark: SparkSession, sfDir: String): DataFrame =
-    memo.peek[DataFrame](spark, sfDir, "sigIndex").getOrElse(sigPlan(spark, sfDir))
-
   /** Banding projection over any signature source. */
   private[graft] def banded(src: DataFrame): DataFrame =
     src.select(col("doc_id"), col("sig"),
@@ -139,28 +175,30 @@ object DedupOps {
   private[graft] def bandedIndex(spark: SparkSession, sfDir: String): DataFrame =
     banded(sigIndex(spark, sfDir))
 
-  /** Candidate pairs (a < b) sharing >= 1 LSH band, with the signature-
-    * estimated Jaccard. The join key is (band, bhash) — a plain shuffle
-    * hash join that scales with data, not with n². Cached: the pair frame is
-    * small (collisions only) but the self-join producing it is the most
-    * expensive dedup stage, and three operators (minhash, ngram-jaccard,
-    * cluster) consume it. */
-  private[graft] def minhashCandidates(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "minhashCandidates") {
-      val idx = bandedIndex(spark, sfDir)
-      val a = idx.withColumnsRenamed(Map("doc_id" -> "doc_a", "sig" -> "sig_a"))
-      val b = idx.withColumnsRenamed(Map("doc_id" -> "doc_b", "sig" -> "sig_b"))
-      memo.persist(a.join(b, Seq("band", "bhash"))
-        .filter(col("doc_a") < col("doc_b"))
-        .withColumn("est",
-          expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m))") / lit(K.toDouble))
-        .groupBy("doc_a", "doc_b")
-        .agg(count(lit(1)).as("n_shared_bands"),
-          round(first(col("est")), 4).as("est_jaccard")))
-    }
+  /** Candidate pairs (a < b) of a banded index sharing >= 1 LSH band, with
+    * the signature-estimated Jaccard. The join key is (band, bhash) — an
+    * equi-join that scales with data, not with n². `idx` is the in-memory
+    * [[bandedIndex]] or a (band, bhash)-bucketed stored table, whose
+    * co-located scans leave no exchange on the band hash. */
+  private def minhashPairs(idx: DataFrame): DataFrame = {
+    val a = idx.withColumnsRenamed(Map("doc_id" -> "doc_a", "sig" -> "sig_a"))
+    val b = idx.withColumnsRenamed(Map("doc_id" -> "doc_b", "sig" -> "sig_b"))
+    a.join(b, Seq("band", "bhash"))
+      .filter(col("doc_a") < col("doc_b"))
+      .withColumn("est",
+        expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m))") / lit(K.toDouble))
+      .groupBy("doc_a", "doc_b")
+      .agg(count(lit(1)).as("n_shared_bands"),
+        round(first(col("est")), 4).as("est_jaccard"))
+  }
 
-  /** Exact dedup: group by normalized-text hash, keep the lowest doc_id
-    * (sha2-256 collision-free at any realistic corpus size). */
+  /** [[minhashPairs]] over the in-memory banded index, cached: the pair
+    * frame is small (collisions only) but the self-join producing it is
+    * the most expensive dedup stage, and three operators (minhash,
+    * ngram-jaccard, cluster) consume it. */
+  private[graft] def minhashCandidates(spark: SparkSession, sfDir: String): DataFrame =
+    memo(spark, sfDir, "minhashCandidates")(memo.persist(minhashPairs(bandedIndex(spark, sfDir))))
+
   /** Exact dedup keyed on the CANONICALIZED text (TextOps.normalizedText
     * — NFC + lowercase + control-strip + whitespace collapse, one shared
     * definition so the key cannot drift from llm_text_normalize): the
@@ -177,6 +215,8 @@ object DedupOps {
       .select("keep_doc_id", "n_copies")
       .orderBy("keep_doc_id")
 
+  /** Exact dedup: group by normalized-text hash, keep the lowest doc_id
+    * (sha2-256 collision-free at any realistic corpus size). */
   val llmDedupExact: QFn = (spark, sfDir) =>
     Tables(spark, sfDir, "documents")
       .withColumn("h", sha2(lower(trim(col("text"))), 256))
@@ -188,12 +228,18 @@ object DedupOps {
   /** MinHash+LSH near-dup pairs: signature-estimated Jaccard >= 0.5
     * (captures the planted >= 0.9 near-dups; background ~0.25 pairs are
     * rejected). xxhash64-based — no DuckDB oracle; NearDupSpec asserts the
-    * planted pairs are found. */
-  val llmDedupMinhash: QFn = (spark, sfDir) =>
-    minhashCandidates(spark, sfDir)
+    * planted pairs are found. One cut over any [[minhashPairs]] frame: the
+    * in-memory op reads the cached candidates, its stored-index twins
+    * ([[llmDedupMinhashIndexed]], [[llmSigIndexAppend]]) the bucketed
+    * tables. */
+  private def minhashNearDups(pairs: DataFrame): DataFrame =
+    pairs
       .filter(col("est_jaccard") >= VerifyBounds.JaccardThreshold)
       .select("doc_a", "doc_b", "n_shared_bands", "est_jaccard")
       .orderBy("doc_a", "doc_b")
+
+  val llmDedupMinhash: QFn = (spark, sfDir) =>
+    minhashNearDups(minhashCandidates(spark, sfDir))
 
   /** LSH candidates verified by exact hashed-shingle Jaccard >= 0.5 — the
     * verification stage shared by ngram_jaccard (which reports it) and
@@ -205,24 +251,36 @@ object DedupOps {
     * concat/distinct per pair. The distinct-shingle sets make |A|,|B| exact. */
   private[graft] def verifiedPairs(spark: SparkSession, sfDir: String): DataFrame =
     memo(spark, sfDir, "verifiedPairs") {
-      val sh = sigIndex(spark, sfDir)
-        .select(col("doc_id"), col("hsh"), size(col("hsh")).as("n_sh"))
-      memo.persist(minhashCandidates(spark, sfDir)
-        .select("doc_a", "doc_b")
-        .join(sh.withColumnsRenamed(Map("doc_id" -> "doc_a", "hsh" -> "h_a", "n_sh" -> "n_a")), Seq("doc_a"))
-        .join(sh.withColumnsRenamed(Map("doc_id" -> "doc_b", "hsh" -> "h_b", "n_sh" -> "n_b")), Seq("doc_b"))
-        .withColumn("i", size(array_intersect(col("h_a"), col("h_b"))))
-        .withColumn("jaccard", round(
-          col("i").cast("double") / (col("n_a") + col("n_b") - col("i")), 4))
-        .filter(col("jaccard") >= VerifyBounds.JaccardThreshold)
-        .select("doc_a", "doc_b", "jaccard"))
+      memo.persist(jaccardVerified(spark, sfDir,
+        minhashCandidates(spark, sfDir).select("doc_a", "doc_b"), "doc_a", "doc_b"))
     }
+
+  /** Candidate pairs (columns `a`, `b`) kept where their exact hashed-
+    * shingle Jaccard (from [[sigIndex]]) is >= 0.5, as (a, b, jaccard). */
+  private def jaccardVerified(spark: SparkSession, sfDir: String, cands: DataFrame,
+      a: String, b: String): DataFrame = {
+    val sh = sigIndex(spark, sfDir)
+      .select(col("doc_id"), col("hsh"), size(col("hsh")).as("n_sh"))
+    cands
+      .join(sh.withColumnsRenamed(Map("doc_id" -> a, "hsh" -> "h_a", "n_sh" -> "n_a")), Seq(a))
+      .join(sh.withColumnsRenamed(Map("doc_id" -> b, "hsh" -> "h_b", "n_sh" -> "n_b")), Seq(b))
+      .withColumn("i", size(array_intersect(col("h_a"), col("h_b"))))
+      .withColumn("jaccard", round(
+        col("i").cast("double") / (col("n_a") + col("n_b") - col("i")), 4))
+      .filter(col("jaccard") >= VerifyBounds.JaccardThreshold)
+      .select(a, b, "jaccard")
+  }
 
   /** Exact n-gram Jaccard verification over the LSH candidate set — the
     * scalable exact-similarity join: candidates come from banding, exact
     * set overlap is computed only for them. */
   val llmDedupNgramJaccard: QFn = (spark, sfDir) =>
     verifiedPairs(spark, sfDir).orderBy("doc_a", "doc_b")
+
+  /** Rounds the last llmDedupCluster invocation ran to convergence —
+    * ScaleCheck records it against the ⌈log2⌉ pointer-doubling bound. */
+  private[graft] val lastClusterRounds =
+    new java.util.concurrent.atomic.AtomicInteger(-1)
 
   /** Near-dup cluster resolution — connected components over the
     * exact-verified near-dup pair graph (LSH candidates → exact Jaccard
@@ -242,11 +300,6 @@ object DedupOps {
     * union-find ground truth. Output: one row per doc with its cluster id;
     * `is_canonical` marks the cluster representative (min doc_id) a dedup
     * pass would keep. */
-  /** Rounds the last llmDedupCluster invocation ran to convergence —
-    * ScaleCheck records it against the ⌈log2⌉ pointer-doubling bound. */
-  private[graft] val lastClusterRounds =
-    new java.util.concurrent.atomic.AtomicInteger(-1)
-
   val llmDedupCluster: QFn = (spark, sfDir) =>
     connectedComponents(
       sigIndex(spark, sfDir).select(col("doc_id"), col("doc_id").as("label")),
@@ -372,46 +425,6 @@ object DedupOps {
       spark.read.parquet(s"$dir/labels")
     }
 
-  /** Incremental near-dup cluster maintenance (round 19, VERDICT r18 #7
-    * stretch — the consumer-side continuation of generation-append): fold
-    * a DELTA BATCH (odd doc_ids) into the STORED cluster state
-    * ([[baseClusters]]) without re-running connected components over the
-    * whole corpus. The algorithm is graph contraction — the standard
-    * incremental-CC move: every new pair's endpoints map through the
-    * stored labels (base docs collapse to their component representative;
-    * delta docs map to themselves), CC runs on the CONTRACTED graph whose
-    * nodes are the TOUCHED endpoints of the contracted edges (round 20 —
-    * delta-EDGE-sized, strictly smaller than r19's base-reps+delta-docs
-    * seed, which was corpus-sized because most components are singletons)
-    * — and base docs take their representative's new label.
-    * Min-label composition is associative (min over a merged component =
-    * min(min of each part)), so the result is BYTE-IDENTICAL to
-    * [[llmDedupCluster]] run from scratch on the full corpus — the
-    * NearDupSpec pin and the shared recursive-CTE DuckDB oracle both
-    * enforce exactly that. At 100 TB: the from-scratch loop is O(log d)
-    * rounds of corpus-sized shuffles every day; this runs the same loop
-    * over delta-edge-sized frames. Measured crossover vs from-scratch:
-    * BASELINE.md round-20 close (tools/MaintainProbe) — which also
-    * exposed that "broadcastable" was an unenforced adjective: the
-    * contraction joins are LEFT-outer with the delta on the LEFT, so the
-    * planner cannot broadcast the delta side, and the corpus-sized label
-    * table shuffled TWICE (doc_a, then doc_b) plus once more in the
-    * expansion. Round-20 restructure: the stored labels are first
-    * restricted by a broadcast semi-join to the TOUCHED endpoints (a
-    * delta-edge-bounded set), so both contraction joins are delta×delta;
-    * the expansion joins broadcast the delta-sized `reduced` labels as
-    * their BUILD side. Net: the corpus-sized label table is SCANNED
-    * (twice: restriction + expansion), never shuffled. Identical results
-    * by construction — the semi-join only drops base rows matching no
-    * pair endpoint, which contributed nothing to the left joins anyway
-    * (NearDupSpec pins byte-equality on both gate sides). Two size gates
-    * pick the shape: below [[ClusterRestrictFloor]] docs the flat plan
-    * stays (the scale shape's extra stages are pure overhead on a tiny
-    * label table — measured 2-3× on the bench fixture), and above
-    * [[ContainBroadcastDocCap]] docs the broadcast hints drop so AQE
-    * converts from actual exchange sizes, degrading to keyed shuffles
-    * instead of dying. Both proxies read the cached docCount — zero
-    * extra jobs. */
   /** Test hook (the containBroadcastDocCapOverride precedent): NearDupSpec
     * forces the shuffle-fallback side at fixture scale and pins
     * byte-identity there too. */
@@ -511,6 +524,46 @@ object DedupOps {
       .filter(col("doc_a") =!= col("doc_b"))
   }
 
+  /** Incremental near-dup cluster maintenance (round 19, VERDICT r18 #7
+    * stretch — the consumer-side continuation of generation-append): fold
+    * a DELTA BATCH (odd doc_ids) into the STORED cluster state
+    * ([[baseClusters]]) without re-running connected components over the
+    * whole corpus. The algorithm is graph contraction — the standard
+    * incremental-CC move: every new pair's endpoints map through the
+    * stored labels (base docs collapse to their component representative;
+    * delta docs map to themselves), CC runs on the CONTRACTED graph whose
+    * nodes are the TOUCHED endpoints of the contracted edges (round 20 —
+    * delta-EDGE-sized, strictly smaller than r19's base-reps+delta-docs
+    * seed, which was corpus-sized because most components are singletons)
+    * — and base docs take their representative's new label.
+    * Min-label composition is associative (min over a merged component =
+    * min(min of each part)), so the result is BYTE-IDENTICAL to
+    * [[llmDedupCluster]] run from scratch on the full corpus — the
+    * NearDupSpec pin and the shared recursive-CTE DuckDB oracle both
+    * enforce exactly that. At 100 TB: the from-scratch loop is O(log d)
+    * rounds of corpus-sized shuffles every day; this runs the same loop
+    * over delta-edge-sized frames. Measured crossover vs from-scratch:
+    * BASELINE.md round-20 close (tools/MaintainProbe) — which also
+    * exposed that "broadcastable" was an unenforced adjective: the
+    * contraction joins are LEFT-outer with the delta on the LEFT, so the
+    * planner cannot broadcast the delta side, and the corpus-sized label
+    * table shuffled TWICE (doc_a, then doc_b) plus once more in the
+    * expansion. Round-20 restructure: the stored labels are first
+    * restricted by a broadcast semi-join to the TOUCHED endpoints (a
+    * delta-edge-bounded set), so both contraction joins are delta×delta;
+    * the expansion joins broadcast the delta-sized `reduced` labels as
+    * their BUILD side. Net: the corpus-sized label table is SCANNED
+    * (twice: restriction + expansion), never shuffled. Identical results
+    * by construction — the semi-join only drops base rows matching no
+    * pair endpoint, which contributed nothing to the left joins anyway
+    * (NearDupSpec pins byte-equality on both gate sides). Two size gates
+    * pick the shape: below [[ClusterRestrictFloor]] docs the flat plan
+    * stays (the scale shape's extra stages are pure overhead on a tiny
+    * label table — measured 2-3× on the bench fixture), and above
+    * [[ContainBroadcastDocCap]] docs the broadcast hints drop so AQE
+    * converts from actual exchange sizes, degrading to keyed shuffles
+    * instead of dying. Both proxies read the cached docCount — zero
+    * extra jobs. */
   val llmDedupClusterIncremental: QFn = (spark, sfDir) => {
     val base = baseClusters(spark, sfDir)
     // expansion hints ride the same two gates as the contraction: below
@@ -626,25 +679,6 @@ object DedupOps {
       memo.persist(simFoldPlan(memo.persist(bitsumsPlan(spark, sfDir))))
     }
 
-  /** Candidate generation joins on (chunk, cval, length band): the chunk
-    * split over the 128-bit fingerprint ([[simChunkGeom]]: 8×16-bit below
-    * 1M docs, 4×32-bit above) guarantees any pair within the pigeonhole
-    * radius (Hamming<=7 / <=3 respectively) collides on >=1 chunk, and
-    * the SECOND band key bounds the random-collision
-    * growth the fixed 65536-value chunk space alone cannot. The band is
-    * bitlen(n_tok) — one full octave, exact integer arithmetic, no float
-    * log2 — and the probe side emits band±1, so retention is GUARANTEED
-    * for every pair with token-count ratio <= 2 (ratio < 2 implies bitlen
-    * differs by at most 1; ratio exactly 2 shifts bitlen by exactly 1 —
-    * both inside the ±1 probe; this includes a doc vs its own 2×
-    * repetition, whose simhash is identical). Worst-case retained ratio is
-    * just under 4 (bitlen diff 1 spans at most min 2^(b-1) vs max
-    * 2^(b+1)-1); every ratio >= 4 pair is dropped — far beyond any
-    * near-dup. Within-band chunk collisions are O(n_band²·8/65536);
-    * corpora grow mostly by adding docs across the length spectrum, so
-    * bands multiply the constant the way more buckets do for the RP
-    * index, while the 8-chunk geometry halves the per-chunk collision
-    * rate vs 4×16/64-bit. */
   /** Documents-corpus row count — the n the simhash chunk geometry derives
     * from. One Spark count job per (session, sfDir), then cached (Catalyst
     * may collapse it to parquet footer stats, but that is not guaranteed). */
@@ -674,24 +708,56 @@ object DedupOps {
     * corpus so the >1M-doc branch is exercised, not just derived. */
   @volatile private[graft] var simGeomOverride: Option[(Int, Int)] = None
 
-  /** The raw (chunk, cval, band)-collision pair stream, pre-dedup — split
-    * out so ScaleCheck can count candidate work directly. `useBand=false`
-    * drops the length-band key so ScaleCheck can measure what the 128-bit
-    * chunk geometry alone holds. */
-  private[graft] def simhashCandidates(spark: SparkSession, sfDir: String,
-                                       useBand: Boolean = true): DataFrame = {
-    val (nChunks, w) =
-      simGeomOverride.getOrElse(simChunkGeom(docCount(spark, sfDir)))
+  private def simGeom(spark: SparkSession, sfDir: String): (Int, Int) =
+    simGeomOverride.getOrElse(simChunkGeom(docCount(spark, sfDir)))
+
+  /** The length band of a fingerprint row: length(bin(x)) is the exact
+    * integer bit length of the token count = floor(log2)+1. */
+  private val lengthBand: Column = length(bin(col("n_tok").cast("long")))
+
+  /** One row per (doc, chunk) of a fingerprint frame carrying `lb`: the
+    * `geom` = (chunks, bits) split of the two 64-bit halves — the chunk
+    * projection the in-memory candidate join and [[simTable]] share. */
+  private def simChunks(sim: DataFrame, geom: (Int, Int)): DataFrame = {
+    val (nChunks, w) = geom
     val perHalf = nChunks / 2
     val mask = (1L << w) - 1
-    val sim = simIndex(spark, sfDir)
-      // length(bin(x)) is the exact integer bit length = floor(log2)+1
-      .withColumn("lb", if (useBand) length(bin(col("n_tok").cast("long"))) else lit(0))
-    val chunked = sim.select(col("doc_id"), col("simhash"), col("simhash2"), col("lb"),
+    sim.select(col("doc_id"), col("simhash"), col("simhash2"), col("lb"),
       posexplode(expr(
         s"transform(sequence(0, ${nChunks - 1}), " +
           s"c -> shiftright(IF(c < $perHalf, simhash, simhash2), $w * (c % $perHalf)) & $mask)"))
         .as(Seq("chunk", "cval")))
+  }
+
+  /** Candidate generation joins on (chunk, cval, length band): the chunk
+    * split over the 128-bit fingerprint ([[simChunkGeom]]: 8×16-bit below
+    * 1M docs, 4×32-bit above) guarantees any pair within the pigeonhole
+    * radius (Hamming<=7 / <=3 respectively) collides on >=1 chunk, and
+    * the SECOND band key bounds the random-collision
+    * growth the fixed 65536-value chunk space alone cannot. The band is
+    * bitlen(n_tok) — one full octave, exact integer arithmetic, no float
+    * log2 — and the probe side emits band±1, so retention is GUARANTEED
+    * for every pair with token-count ratio <= 2 (ratio < 2 implies bitlen
+    * differs by at most 1; ratio exactly 2 shifts bitlen by exactly 1 —
+    * both inside the ±1 probe; this includes a doc vs its own 2×
+    * repetition, whose simhash is identical). Worst-case retained ratio is
+    * just under 4 (bitlen diff 1 spans at most min 2^(b-1) vs max
+    * 2^(b+1)-1); every ratio >= 4 pair is dropped — far beyond any
+    * near-dup. Within-band chunk collisions are O(n_band²·8/65536);
+    * corpora grow mostly by adding docs across the length spectrum, so
+    * bands multiply the constant the way more buckets do for the RP
+    * index, while the 8-chunk geometry halves the per-chunk collision
+    * rate vs 4×16/64-bit.
+    *
+    * This is the raw (chunk, cval, band)-collision pair stream, pre-dedup —
+    * split out so ScaleCheck can count candidate work directly.
+    * `useBand=false` drops the length-band key so ScaleCheck can measure
+    * what the 128-bit chunk geometry alone holds. */
+  private[graft] def simhashCandidates(spark: SparkSession, sfDir: String,
+                                       useBand: Boolean = true): DataFrame = {
+    val geom = simGeom(spark, sfDir)
+    val chunked = simChunks(simIndex(spark, sfDir)
+      .withColumn("lb", if (useBand) lengthBand else lit(0)), geom)
     val a = chunked.withColumnsRenamed(Map(
       "doc_id" -> "doc_a", "simhash" -> "sim_a", "simhash2" -> "sim_a2"))
     val b = chunked.withColumnsRenamed(Map(
@@ -703,12 +769,17 @@ object DedupOps {
       .filter(col("doc_a") < col("doc_b"))
   }
 
-  val llmDedupSimhash: QFn = (spark, sfDir) =>
-    simhashCandidates(spark, sfDir)
+  /** Top pairs by full 128-bit Hamming distance over any chunk-collision
+    * pair stream — the ranking both SimHash twins share. */
+  private def simhashRanked(pairs: DataFrame): DataFrame =
+    pairs
       .groupBy("doc_a", "doc_b")
       .agg(first(expr("bit_count(sim_a ^ sim_b) + bit_count(sim_a2 ^ sim_b2)")).as("hamming"))
       .orderBy(col("hamming"), col("doc_a"), col("doc_b"))
       .limit(VerifyBounds.SimhashPairCap)
+
+  val llmDedupSimhash: QFn = (spark, sfDir) =>
+    simhashRanked(simhashCandidates(spark, sfDir))
 
   // ---- Embedding near-dup: random-hyperplane sign bits -> 2^bits buckets;
   // exact cosine only within buckets. Projections are seeded (42) so the
@@ -823,15 +894,12 @@ object DedupOps {
   private[graft] def embIndex(spark: SparkSession, sfDir: String): DataFrame =
     memo(spark, sfDir, "embIndex")(memo.persist(embPlan(spark, sfDir)))
 
-  /** Persist-if-hot / raw-if-cold build source (see [[sigSource]]). */
-  private def embSource(spark: SparkSession, sfDir: String): DataFrame =
-    memo.peek[DataFrame](spark, sfDir, "embIndex").getOrElse(embPlan(spark, sfDir))
-
   /** Embedding-cosine near-dup candidates: top-100 most similar pairs among
     * RP-bucket collisions (testdata has no >= 0.95 pairs, so ranking — not
-    * thresholding — is the meaningful output). */
-  val llmDedupEmbedding: QFn = (spark, sfDir) => {
-    val e = embIndex(spark, sfDir)
+    * thresholding — is the meaningful output). `e` is the in-memory
+    * [[embIndex]] or a bucket-bucketed stored index, whose scans join
+    * bucket i against bucket i with zero exchanges below the ranking. */
+  private def embPairs(e: DataFrame): DataFrame = {
     val a = e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"),
       col("norm").as("norm_a"), col("bucket"))
     val b = e.select(col("vec_id").as("vec_b"), col("emb").as("emb_b"),
@@ -844,6 +912,8 @@ object DedupOps {
       .orderBy(col("cosine").desc, col("vec_a"), col("vec_b"))
       .limit(100)
   }
+
+  val llmDedupEmbedding: QFn = (spark, sfDir) => embPairs(embIndex(spark, sfDir))
 
   /** Semantic-dedup demo threshold for the near-random fixture vectors
     * (within-bucket pair cosines top out near 0.49 across the test tiers);
@@ -911,16 +981,11 @@ object DedupOps {
     * arrive pre-hashed on the join key. */
   private[graft] def embTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "embTable") {
-      val suffix = graft.util.Scratch.pathTag(sfDir)
-      val tbl = s"emb_bkt_$suffix"
-      val dir = graft.util.Scratch.dir(s"emb_index_$suffix")
-      embSource(spark, sfDir)
-        .repartition(indexBucketsFor("EMB"), col("bucket"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(indexBucketsFor("EMB"), "bucket").sortBy("bucket")
-        .option("path", s"$dir/$tbl").saveAsTable(tbl)
-      tbl
+      writeIndex(buildSource(spark, sfDir, "embIndex")(embPlan(spark, sfDir)),
+        sfDir, "emb_bkt", "emb_index", EmbKeys)
     }
+
+  private val EmbKeys = Seq("bucket")
 
   /** Vector-index build + occupancy profile: bucket count, vector count,
     * and the max bucket size — the numbers that tell an operator whether
@@ -933,25 +998,8 @@ object DedupOps {
         sum(col("c")).cast("long").as("n_vectors"),
         max(col("c")).as("max_bucket"))
 
-  /** Embedding near-dup re-expressed over the MATERIALIZED index: same
-    * semantics and same oracle as [[llmDedupEmbedding]], but both join
-    * sides are bucketed scans — zero exchanges below the pair ranking
-    * (PlanSpec asserts). The merge hint keeps the test-scale side from
-    * broadcasting; at corpus scale both sides are the full index. */
-  val llmDedupEmbeddingIndexed: QFn = (spark, sfDir) => {
-    val e = spark.table(embTable(spark, sfDir))
-    val a = e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"),
-      col("norm").as("norm_a"), col("bucket"))
-    val b = e.select(col("vec_id").as("vec_b"), col("emb").as("emb_b"),
-      col("norm").as("norm_b"), col("bucket"))
-    a.hint("merge").join(b, Seq("bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(dotExpr("emb_a", "emb_b") / (col("norm_a") * col("norm_b")), 6)
-          .as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_a"), col("vec_b"))
-      .limit(100)
-  }
+  val llmDedupEmbeddingIndexed: QFn = (spark, sfDir) =>
+    embPairs(stored(spark, embTable(spark, sfDir)))
 
   /** Table property recording the RP width an emb index was bucketed
     * under — the append-soundness invariant made CHECKABLE (round 20,
@@ -980,35 +1028,23 @@ object DedupOps {
         "family's REBUILD trigger, not an append")
   }
 
-  /** Two-generation embedding index (round 19, VERDICT r18 #3): the ANN
-    * serving family gets generation-append maintenance — the base half
-    * (even vec_ids) written as the bucketed table, the delta APPENDED
-    * under the identical (bucket)-hash spec, so every bucket-keyed
-    * consumer reads both generations co-located with zero exchanges.
+  /** Two-generation embedding index ([[twoGenIndex]] over even/odd
+    * vec_ids): the ANN serving family's generation-append maintenance.
     * The RP bucket of a vector is generation-independent (seeded
     * projections + width derived from the FULL corpus count), which is
     * what makes append sound: a delta vector lands in the same bucket it
     * would get in a full rebuild. */
   private[graft] def embAppendTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "embAppendTable") {
-      val suffix = graft.util.Scratch.pathTag(sfDir)
-      val tbl = s"emb_app_$suffix"
-      val dir = graft.util.Scratch.dir(s"emb_append_$suffix")
-      val e = embSource(spark, sfDir)
       val bits = embBits(spark, sfDir)
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      e.filter(pmod(col("vec_id"), lit(2)) === 0)
-        .repartition(indexBucketsFor("EMB"), col("bucket"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(indexBucketsFor("EMB"), "bucket").sortBy("bucket")
-        .option("path", s"$dir/$tbl").saveAsTable(tbl)
-      // stamp the width the base generation was bucketed under; the
-      // append leg below re-derives and guards on ITS OWN path
-      spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES " +
-        s"('$EmbBitsProperty' = '$bits')")
-      embAppendLeg(spark, sfDir, tbl,
-        e.filter(pmod(col("vec_id"), lit(2)) === 1))
-      tbl
+      twoGenIndex(buildSource(spark, sfDir, "embIndex")(embPlan(spark, sfDir)),
+        sfDir, "emb_app", "emb_append", "vec_id", EmbKeys) { (delta, tbl) =>
+        // stamp the width the base generation was bucketed under; the
+        // append leg re-derives and guards on ITS OWN path
+        spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES " +
+          s"('$EmbBitsProperty' = '$bits')")
+        embAppendLeg(spark, sfDir, tbl, delta)
+      }
     }
 
   /** THE append entry point of the emb family (round 21, ADVICE r20 #2):
@@ -1021,31 +1057,11 @@ object DedupOps {
   private[graft] def embAppendLeg(spark: SparkSession, sfDir: String,
       tbl: String, delta: DataFrame): Unit = {
     embAppendGuard(spark, tbl, embBits(spark, sfDir))
-    delta
-      .repartition(indexBucketsFor("EMB"), col("bucket"))
-      .write.mode("append").format("parquet")
-      .bucketBy(indexBucketsFor("EMB"), "bucket").sortBy("bucket")
-      .saveAsTable(tbl)
+    appendIndex(delta, tbl, EmbKeys)
   }
 
-  /** Embedding near-dup served from the APPENDED two-generation index —
-    * byte-identical to [[llmDedupEmbeddingIndexed]] (NearDupSpec asserts)
-    * and sharing [[llmDedupEmbedding]]'s full DuckDB oracle verbatim: the
-    * generation split is a layout event, invisible to results. */
-  val llmEmbIndexAppend: QFn = (spark, sfDir) => {
-    val e = spark.table(embAppendTable(spark, sfDir))
-    val a = e.select(col("vec_id").as("vec_a"), col("emb").as("emb_a"),
-      col("norm").as("norm_a"), col("bucket"))
-    val b = e.select(col("vec_id").as("vec_b"), col("emb").as("emb_b"),
-      col("norm").as("norm_b"), col("bucket"))
-    a.hint("merge").join(b, Seq("bucket"))
-      .filter(col("vec_a") < col("vec_b"))
-      .select(col("vec_a"), col("vec_b"),
-        round(dotExpr("emb_a", "emb_b") / (col("norm_a") * col("norm_b")), 6)
-          .as("cosine"))
-      .orderBy(col("cosine").desc, col("vec_a"), col("vec_b"))
-      .limit(100)
-  }
+  val llmEmbIndexAppend: QFn = (spark, sfDir) =>
+    embPairs(stored(spark, embAppendTable(spark, sfDir)))
 
   /** The banded MinHash signature index MATERIALIZED as a parquet table
     * bucketed on the LSH band hash (the join key of candidate generation).
@@ -1058,16 +1074,11 @@ object DedupOps {
     * hash-equivalent in principle but the planner rightly refuses it. */
   private[graft] def sigTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "sigTable") {
-      val suffix = graft.util.Scratch.pathTag(sfDir)
-      val tbl = s"sig_bkt_$suffix"
-      val dir = graft.util.Scratch.dir(s"sig_index_$suffix")
-      banded(sigSource(spark, sfDir))
-        .repartition(indexBucketsFor("SIG"), col("band"), col("bhash"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(indexBucketsFor("SIG"), "band", "bhash").sortBy("band", "bhash")
-        .option("path", s"$dir/$tbl").saveAsTable(tbl)
-      tbl
+      writeIndex(banded(buildSource(spark, sfDir, "sigIndex")(sigPlan(spark, sfDir))),
+        sfDir, "sig_bkt", "sig_index", SigKeys)
     }
+
+  private val SigKeys = Seq("band", "bhash")
 
   /** Signature-index build + band profile: per band, row count and
     * distinct band-hash count (≈ distinct buckets LSH can route to).
@@ -1079,75 +1090,24 @@ object DedupOps {
       .agg(count(lit(1)).as("n_rows"), countDistinct(col("bhash")).as("n_buckets"))
       .orderBy("band")
 
-  /** MinHash near-dup pairs over the MATERIALIZED signature index —
-    * byte-identical results to [[llmDedupMinhash]] (NearDupSpec asserts),
-    * with both sides of the candidate join reading the bucketed table:
-    * no signature recompute, no exchange on the band hash. */
-  /** Two-generation signature index: "yesterday's" half of the corpus
-    * written as the bucketed table, "today's" delta APPENDED with the
-    * identical bucket spec — the index-MAINTENANCE pattern a daily
-    * pipeline needs (a 100 TB index is never rebuilt for a 0.1% delta;
-    * it grows one bucketed file set per generation). Spark validates the
-    * bucket spec on append, so every generation's files carry the same
-    * (band, bhash) hash layout and the banded self-join below still
-    * reads both generations bucketed with ZERO exchanges
-    * (PlanSpec-asserted) — append cost is one delta-sized write, consume
-    * cost is unchanged. */
+  /** Two-generation signature index ([[twoGenIndex]] over even/odd
+    * doc_ids). */
   private[graft] def sigAppendTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "sigAppendTable") {
-      val suffix = graft.util.Scratch.pathTag(sfDir)
-      val tbl = s"sig_app_$suffix"
-      val dir = graft.util.Scratch.dir(s"sig_append_$suffix")
-      val sig = banded(sigSource(spark, sfDir))
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      sig.filter(pmod(col("doc_id"), lit(2)) === 0)
-        .repartition(indexBucketsFor("SIG"), col("band"), col("bhash"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(indexBucketsFor("SIG"), "band", "bhash").sortBy("band", "bhash")
-        .option("path", s"$dir/$tbl").saveAsTable(tbl)
-      sig.filter(pmod(col("doc_id"), lit(2)) === 1)
-        .repartition(indexBucketsFor("SIG"), col("band"), col("bhash"))
-        .write.mode("append").format("parquet")
-        .bucketBy(indexBucketsFor("SIG"), "band", "bhash").sortBy("band", "bhash")
-        .saveAsTable(tbl)
-      tbl
+      twoGenIndex(banded(buildSource(spark, sfDir, "sigIndex")(sigPlan(spark, sfDir))),
+        sfDir, "sig_app", "sig_append", "doc_id", SigKeys)(appendIndex(_, _, SigKeys))
     }
 
-  /** Minhash near-dup pairs from the APPENDED two-generation index —
-    * must be byte-identical to [[llmDedupMinhash]] (NearDupSpec): the
-    * generation split is a LAYOUT event, invisible to results. no_oracle
-    * (xxhash64 signatures), same waiver as the other sig-index ops. */
-  val llmSigIndexAppend: QFn = (spark, sfDir) => {
-    val idx = spark.table(sigAppendTable(spark, sfDir))
-    val a = idx.withColumnsRenamed(Map("doc_id" -> "doc_a", "sig" -> "sig_a"))
-    val b = idx.withColumnsRenamed(Map("doc_id" -> "doc_b", "sig" -> "sig_b"))
-    a.hint("merge").join(b, Seq("band", "bhash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("est",
-        expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m))") / lit(K.toDouble))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_shared_bands"),
-        round(first(col("est")), 4).as("est_jaccard"))
-      .filter(col("est_jaccard") >= VerifyBounds.JaccardThreshold)
-      .select("doc_a", "doc_b", "n_shared_bands", "est_jaccard")
-      .orderBy("doc_a", "doc_b")
-  }
+  /** MinHash near-dup pairs over the MATERIALIZED signature index, with
+    * both sides of the candidate join reading the bucketed table: no
+    * signature recompute, no exchange on the band hash. */
+  val llmDedupMinhashIndexed: QFn = (spark, sfDir) =>
+    minhashNearDups(minhashPairs(stored(spark, sigTable(spark, sfDir))))
 
-  val llmDedupMinhashIndexed: QFn = (spark, sfDir) => {
-    val idx = spark.table(sigTable(spark, sfDir))
-    val a = idx.withColumnsRenamed(Map("doc_id" -> "doc_a", "sig" -> "sig_a"))
-    val b = idx.withColumnsRenamed(Map("doc_id" -> "doc_b", "sig" -> "sig_b"))
-    a.hint("merge").join(b, Seq("band", "bhash"))
-      .filter(col("doc_a") < col("doc_b"))
-      .withColumn("est",
-        expr(s"size(filter(zip_with(sig_a, sig_b, (x, y) -> x = y), m -> m))") / lit(K.toDouble))
-      .groupBy("doc_a", "doc_b")
-      .agg(count(lit(1)).as("n_shared_bands"),
-        round(first(col("est")), 4).as("est_jaccard"))
-      .filter(col("est_jaccard") >= VerifyBounds.JaccardThreshold)
-      .select("doc_a", "doc_b", "n_shared_bands", "est_jaccard")
-      .orderBy("doc_a", "doc_b")
-  }
+  /** Minhash near-dup pairs from the APPENDED two-generation index. no_oracle
+    * (xxhash64 signatures), same waiver as the other sig-index ops. */
+  val llmSigIndexAppend: QFn = (spark, sfDir) =>
+    minhashNearDups(minhashPairs(stored(spark, sigAppendTable(spark, sfDir))))
 
   /** The chunked SimHash index MATERIALIZED as a parquet table bucketed on
     * (chunk, cval) — the candidate join's full key set, so both sides of
@@ -1164,13 +1124,7 @@ object DedupOps {
     * touching the documents table. */
   private[graft] def simTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "simTable") {
-      val suffix = graft.util.Scratch.pathTag(sfDir)
-      val tbl = s"sim_bkt_$suffix"
-      val dir = graft.util.Scratch.dir(s"sim_index_$suffix")
-      val (nChunks, w) =
-        simGeomOverride.getOrElse(simChunkGeom(docCount(spark, sfDir)))
-      val perHalf = nChunks / 2
-      val mask = (1L << w) - 1
+      val geom = simGeom(spark, sfDir)
       // Build source (round 19): the in-memory fingerprint persist when a
       // consumer already built it, else a BUILD-LOCAL bitsums persist
       // (the fold's semantic barrier — see bitsumsPlan) released the
@@ -1183,20 +1137,9 @@ object DedupOps {
             .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
           (simFoldPlan(bs), () => { bs.unpersist(); () })
       }
-      try {
-        src
-          .withColumn("lb", length(bin(col("n_tok").cast("long"))))
-          .select(col("doc_id"), col("simhash"), col("simhash2"), col("lb"),
-            posexplode(expr(
-              s"transform(sequence(0, ${nChunks - 1}), " +
-                s"c -> shiftright(IF(c < $perHalf, simhash, simhash2), $w * (c % $perHalf)) & $mask)"))
-              .as(Seq("chunk", "cval")))
-          .repartition(indexBucketsFor("SIM"), col("chunk"), col("cval"))
-          .write.mode("overwrite").format("parquet")
-          .bucketBy(indexBucketsFor("SIM"), "chunk", "cval").sortBy("chunk", "cval")
-          .option("path", s"$dir/$tbl").saveAsTable(tbl)
-      } finally release()
-      tbl
+      try writeIndex(simChunks(src.withColumn("lb", lengthBand), geom),
+        sfDir, "sim_bkt", "sim_index", Seq("chunk", "cval"))
+      finally release()
     }
 
   /** SimHash-index build + chunk profile: per chunk position, row count
@@ -1215,18 +1158,14 @@ object DedupOps {
     * table: no fingerprint recompute, no exchange on (chunk, cval); the
     * band check runs as a post-join filter. */
   val llmDedupSimhashIndexed: QFn = (spark, sfDir) => {
-    val idx = spark.table(simTable(spark, sfDir))
+    val idx = stored(spark, simTable(spark, sfDir))
     val a = idx.withColumnsRenamed(Map(
       "doc_id" -> "doc_a", "simhash" -> "sim_a", "simhash2" -> "sim_a2", "lb" -> "lb_a"))
     val b = idx.withColumnsRenamed(Map(
       "doc_id" -> "doc_b", "simhash" -> "sim_b", "simhash2" -> "sim_b2", "lb" -> "lb_b"))
-    a.hint("merge").join(b, Seq("chunk", "cval"))
+    simhashRanked(a.join(b, Seq("chunk", "cval"))
       .filter(col("doc_a") < col("doc_b") &&
-        abs(col("lb_a") - col("lb_b")) <= 1)
-      .groupBy("doc_a", "doc_b")
-      .agg(first(expr("bit_count(sim_a ^ sim_b) + bit_count(sim_a2 ^ sim_b2)")).as("hamming"))
-      .orderBy(col("hamming"), col("doc_a"), col("doc_b"))
-      .limit(VerifyBounds.SimhashPairCap)
+        abs(col("lb_a") - col("lb_b")) <= 1))
   }
 
   /** Incremental dedup — the production ingest shape: a DELTA BATCH (odd
@@ -1242,23 +1181,14 @@ object DedupOps {
     * regression that misses a true cross pair fails correctness, not just
     * a property spec. */
   val llmDedupIncrementalBatch: QFn = (spark, sfDir) => {
-    val idx = spark.table(sigTable(spark, sfDir))
+    val idx = stored(spark, sigTable(spark, sfDir))
     val newSide = idx.filter(pmod(col("doc_id"), lit(2)) === 1)
       .withColumnsRenamed(Map("doc_id" -> "doc_new", "sig" -> "sig_new"))
     val oldSide = idx.filter(pmod(col("doc_id"), lit(2)) === 0)
       .withColumnsRenamed(Map("doc_id" -> "doc_old", "sig" -> "sig_old"))
-    val cands = newSide.hint("merge").join(oldSide, Seq("band", "bhash"))
+    val cands = newSide.join(oldSide, Seq("band", "bhash"))
       .select("doc_new", "doc_old").distinct()
-    val sh = sigIndex(spark, sfDir)
-      .select(col("doc_id"), col("hsh"), size(col("hsh")).as("n_sh"))
-    cands
-      .join(sh.withColumnsRenamed(Map("doc_id" -> "doc_new", "hsh" -> "h_a", "n_sh" -> "n_a")), Seq("doc_new"))
-      .join(sh.withColumnsRenamed(Map("doc_id" -> "doc_old", "hsh" -> "h_b", "n_sh" -> "n_b")), Seq("doc_old"))
-      .withColumn("i", size(array_intersect(col("h_a"), col("h_b"))))
-      .withColumn("jaccard", round(
-        col("i").cast("double") / (col("n_a") + col("n_b") - col("i")), 4))
-      .filter(col("jaccard") >= VerifyBounds.JaccardThreshold)
-      .select("doc_new", "doc_old", "jaccard")
+    jaccardVerified(spark, sfDir, cands, "doc_new", "doc_old")
       .orderBy("doc_new", "doc_old")
   }
 
@@ -1359,18 +1289,17 @@ object DedupOps {
   private[graft] def gramIndex(spark: SparkSession, sfDir: String): DataFrame =
     memo(spark, sfDir, "gramIndex")(memo.persist(gramPlan(spark, sfDir)))
 
-  /** Persist-if-hot / raw-if-cold build source (see [[sigSource]]). */
-  private def gramSource(spark: SparkSession, sfDir: String): DataFrame =
-    memo.peek[DataFrame](spark, sfDir, "gramIndex").getOrElse(gramPlan(spark, sfDir))
-
   /** Train/eval decontamination — the benchmark-leakage check every
     * training corpus runs: split the corpus (even doc_id = train, odd =
     * eval), hash each doc's distinct 13-grams, and flag eval docs sharing
     * any 13-gram with the train side. The collision test is a semi-join on
     * the gram hash — shuffle scales with distinct grams, never pairs.
-    * Brute-force-verified in NearDupSpec. */
-  val llmDecontaminate: QFn = (spark, sfDir) => {
-    val grams = gramIndex(spark, sfDir)
+    * Brute-force-verified in NearDupSpec. `grams` is the in-memory
+    * [[gramIndex]] or a g-bucketed stored table, where both sides of the
+    * semi-join are bucketed scans with no exchange on g anywhere in the
+    * plan (PlanSpec asserts) — the only shuffle left is the final per-doc
+    * aggregate. */
+  private def decontam(grams: DataFrame): DataFrame = {
     val trainGrams = grams.filter(col("is_train")).select("g").distinct()
     grams.filter(!col("is_train"))
       .join(trainGrams, Seq("g"), "left_semi")
@@ -1378,6 +1307,8 @@ object DedupOps {
       .agg(count(lit(1)).as("n_shared_grams"))
       .orderBy("doc_id")
   }
+
+  val llmDecontaminate: QFn = (spark, sfDir) => decontam(gramIndex(spark, sfDir))
 
   /** Decontamination behind an EXPLICIT bloom prefilter — the engine-
     * native runtime filter (join_runtime_bloom) made into a reusable
@@ -1429,22 +1360,14 @@ object DedupOps {
     * scan already reports HashPartitioning(g, N), so gram-keyed distincts
     * and joins are co-located for free (the Bucketing.sinkBucketedColocated
     * pattern applied to an index instead of a fact table). Built once per
-    * (session, sfDir); consumers call this idempotently. repartition(N, g)
-    * before the bucketed write = one file per bucket, not cores×N
-    * fragments; N = [[indexBucketsFor]]("GRAM") — SPARK_GRAFT_INDEX_BUCKETS
-    * with an optional per-family override (round 18). */
+    * (session, sfDir); consumers call this idempotently. */
   private[graft] def gramTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "gramTable") {
-      val suffix = graft.util.Scratch.pathTag(sfDir)
-      val tbl = s"grams_bkt_$suffix"
-      val dir = graft.util.Scratch.dir(s"gram_index_$suffix")
-      gramSource(spark, sfDir)
-        .repartition(indexBucketsFor("GRAM"), col("g"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(indexBucketsFor("GRAM"), "g").sortBy("g")
-        .option("path", s"$dir/$tbl").saveAsTable(tbl)
-      tbl
+      writeIndex(buildSource(spark, sfDir, "gramIndex")(gramPlan(spark, sfDir)),
+        sfDir, "grams_bkt", "gram_index", GramKeys)
     }
+
+  private val GramKeys = Seq("g")
 
   /** Index build + profile: write the bucketed gram table (no-op if this
     * session already built it) and report the per-split row/distinct-gram
@@ -1460,75 +1383,28 @@ object DedupOps {
         countDistinct(col("g")).as("n_distinct_grams"))
       .orderBy("is_train")
 
-  /** Two-generation gram index (round 19, VERDICT r18 #3): the most-
-    * consumed index family (decontaminate / containment / passage all
-    * read it) gets the generation-append maintenance [[sigAppendTable]]
-    * proved for signatures — "yesterday's" generation (train docs, even
-    * doc_ids) written as the bucketed table, "today's" delta (eval docs)
-    * APPENDED under the IDENTICAL bucket spec. Spark validates the spec
-    * on append, so both generations' files carry the same g-hash layout
-    * and every gram-keyed consumer still reads bucketed with zero
-    * exchanges on g (PlanSpec pins it) — at 100 TB a 0.1% delta costs
-    * one delta-sized gram pass + write instead of rebuilding the
-    * biggest table on the board (the ×128 build decomposition that
-    * motivated this is in BASELINE.md round 19). */
+  /** Two-generation gram index ([[twoGenIndex]]): the most-consumed index
+    * family (decontaminate / containment / passage all read it) —
+    * "yesterday's" generation is the train docs (even doc_ids), "today's"
+    * delta the eval docs. At 100 TB a 0.1% delta costs one delta-sized
+    * gram pass + write instead of rebuilding the biggest table on the
+    * board (the ×128 build decomposition that motivated this is in
+    * BASELINE.md round 19). */
   private[graft] def gramAppendTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "gramAppendTable") {
-      val suffix = graft.util.Scratch.pathTag(sfDir)
-      val tbl = s"grams_app_$suffix"
-      val dir = graft.util.Scratch.dir(s"gram_append_$suffix")
-      val grams = gramSource(spark, sfDir)
-      spark.sql(s"DROP TABLE IF EXISTS $tbl")
-      grams.filter(col("is_train"))
-        .repartition(indexBucketsFor("GRAM"), col("g"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(indexBucketsFor("GRAM"), "g").sortBy("g")
-        .option("path", s"$dir/$tbl").saveAsTable(tbl)
-      grams.filter(!col("is_train"))
-        .repartition(indexBucketsFor("GRAM"), col("g"))
-        .write.mode("append").format("parquet")
-        .bucketBy(indexBucketsFor("GRAM"), "g").sortBy("g")
-        .saveAsTable(tbl)
-      tbl
+      twoGenIndex(buildSource(spark, sfDir, "gramIndex")(gramPlan(spark, sfDir)),
+        sfDir, "grams_app", "gram_append", "doc_id", GramKeys)(appendIndex(_, _, GramKeys))
     }
 
-  /** Decontamination served from the APPENDED two-generation gram index —
-    * the maintenance pattern's proof of consumption: the eval generation
-    * probes the train generation ACROSS the generation boundary, results
-    * byte-identical to [[llmDecontaminateIndexed]] (NearDupSpec asserts;
-    * the generation split is a LAYOUT event, invisible to results), and
-    * the oracle is [[llmDecontaminate]]'s full DuckDB replay verbatim.
-    * Plan shape matches the single-generation consumer: bucketed scans
-    * on both sides, no exchange on g. */
-  val llmGramIndexAppend: QFn = (spark, sfDir) => {
-    val grams = spark.table(gramAppendTable(spark, sfDir))
-    val trainGrams = grams.filter(col("is_train")).select("g").distinct()
-    grams.filter(!col("is_train"))
-      .hint("merge")
-      .join(trainGrams, Seq("g"), "left_semi")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shared_grams"))
-      .orderBy("doc_id")
-  }
+  /** Decontamination served from the APPENDED two-generation gram index:
+    * the eval generation probes the train generation ACROSS the
+    * generation boundary. */
+  val llmGramIndexAppend: QFn = (spark, sfDir) =>
+    decontam(stored(spark, gramAppendTable(spark, sfDir)))
 
-  /** Decontamination re-expressed over the MATERIALIZED index: identical
-    * semantics (and identical DuckDB oracle) to [[llmDecontaminate]], but
-    * both sides of the gram semi-join are bucketed scans of the stored
-    * table — no signature re-derivation, no exchange on g anywhere in the
-    * plan (PlanSpec asserts both); the only shuffle left is the final
-    * per-doc aggregate. The merge hint keeps the test-scale train side
-    * from broadcasting — at corpus scale both sides are huge and the
-    * co-located SMJ is the real plan. */
-  val llmDecontaminateIndexed: QFn = (spark, sfDir) => {
-    val grams = spark.table(gramTable(spark, sfDir))
-    val trainGrams = grams.filter(col("is_train")).select("g").distinct()
-    grams.filter(!col("is_train"))
-      .hint("merge")
-      .join(trainGrams, Seq("g"), "left_semi")
-      .groupBy("doc_id")
-      .agg(count(lit(1)).as("n_shared_grams"))
-      .orderBy("doc_id")
-  }
+  /** Decontamination re-expressed over the MATERIALIZED index. */
+  val llmDecontaminateIndexed: QFn = (spark, sfDir) =>
+    decontam(stored(spark, gramTable(spark, sfDir)))
 
   /** Repeated-passage profile — the WITHIN-corpus counterpart of
     * decontamination (the signal behind Lee et al.'s substring-level
@@ -1610,45 +1486,9 @@ object DedupOps {
         round(col("n_shared").cast("double") / col("n_b"), 4).as("cont_b"))
       .orderBy("doc_a", "doc_b")
 
-  /** Containment dedup over the MATERIALIZED gram index — the scale-path
-    * twin of [[llmDedupContainment]], same semantics and same full DuckDB
-    * oracle. Candidate generation is ONE exchange-free pass over the
-    * g-bucketed table (round 17, VERDICT r16 #6; unified into
-    * [[rareGroups]] round 18): `groupBy(g).collect_upto(doc_id, 6)` runs
-    * partial-per-bucket with no exchange on g, the rare filter keeps
-    * groups with df ∈ [2,5], and the ≤C(5,2)=10 ordered pairs per
-    * surviving gram explode out of the grouped row — replacing the
-    * previous df-aggregate + left_semi + posting-self-join shape that
-    * read the same bucketed files in THREE subtrees (profiled at 4.98 s
-    * warm vs 1.28 s for this plan, identical 254 rows at sf0.1;
-    * tools/ContainProfile, BASELINE.md round 17). The only shuffles left
-    * are the ones keyed on doc pairs (candidate distinct, per-doc set
-    * assembly), which any layout pays. This is the build-once/
-    * consume-many shape: at 100 TB the gram pass runs at index-build
-    * time and containment, decontamination, and passage profiling all
-    * ride the same files. The explode is bounded by the rare cap AND —
-    * since round 18's collect_upto — so is the aggregation state itself:
-    * a hot stopword-like gram holds at most 6 doc_ids in its buffer
-    * instead of its whole posting list (ADVICE r17).
-    *
-    * Verification sets are assembled for CANDIDATE DOCS ONLY (round 18,
-    * second re-plan — found by the corrected ×128 curve): the previous
-    * shape ran collect_set over the WHOLE table — a corpus-sized shuffle
-    * on doc_id (1.5B gram rows at ×128) feeding a join that discards
-    * every non-candidate group. The candidates' distinct doc_ids
-    * BROADCAST into a left_semi under the set aggregate, so grams of
-    * non-candidate docs die at the scan and the doc_id shuffle carries
-    * only verification work — set assembly scales with candidates, not
-    * corpus (×128: 130.3 → 100.8 s, BASELINE r18). The candidate
-    * subtree is referenced three times (pair join + both union branches
-    * of the doc restriction) but computed ONCE: it ends in the
-    * pair-distinct EXCHANGE, which Spark's exchange reuse shares across
-    * all consumers (PlanSpec pins the ReusedExchange) — cheaper than an
-    * eager localCheckpoint, whose extra materialization cost the
-    * fixture-scale row ~1.1 s in the bench session.
-    *
-    * The restriction is gated on corpus size (the simChunkGeom /
-    * projBitsFor precedent — a plan decision derived from n): below
+  /** Corpus floor of [[llmDedupContainmentIndexed]]'s candidate-doc
+    * restriction, a plan decision derived from n (the simChunkGeom /
+    * projBitsFor precedent): below
     * [[ContainRestrictFloor]] docs the full-corpus set aggregate is
     * trivially cheap and the restriction's extra stages (candidate
     * union/distinct, broadcast, semi-join) are pure orchestration
@@ -1684,6 +1524,42 @@ object DedupOps {
     * fixture scale (byte-identity + no-BroadcastExchange pin). */
   @volatile private[graft] var containBroadcastDocCapOverride: Option[Long] = None
 
+  /** Containment dedup over the MATERIALIZED gram index — the scale-path
+    * twin of [[llmDedupContainment]], same semantics and same full DuckDB
+    * oracle. Candidate generation is ONE exchange-free pass over the
+    * g-bucketed table (round 17, VERDICT r16 #6; unified into
+    * [[rareGroups]] round 18): `groupBy(g).collect_upto(doc_id, 6)` runs
+    * partial-per-bucket with no exchange on g, the rare filter keeps
+    * groups with df ∈ [2,5], and the ≤C(5,2)=10 ordered pairs per
+    * surviving gram explode out of the grouped row — replacing the
+    * previous df-aggregate + left_semi + posting-self-join shape that
+    * read the same bucketed files in THREE subtrees (profiled at 4.98 s
+    * warm vs 1.28 s for this plan, identical 254 rows at sf0.1;
+    * tools/ContainProfile, BASELINE.md round 17). The only shuffles left
+    * are the ones keyed on doc pairs (candidate distinct, per-doc set
+    * assembly), which any layout pays. This is the build-once/
+    * consume-many shape: at 100 TB the gram pass runs at index-build
+    * time and containment, decontamination, and passage profiling all
+    * ride the same files. The explode is bounded by the rare cap AND —
+    * since round 18's collect_upto — so is the aggregation state itself:
+    * a hot stopword-like gram holds at most 6 doc_ids in its buffer
+    * instead of its whole posting list (ADVICE r17).
+    *
+    * Verification sets are assembled for CANDIDATE DOCS ONLY (round 18,
+    * second re-plan — found by the corrected ×128 curve): the previous
+    * shape ran collect_set over the WHOLE table — a corpus-sized shuffle
+    * on doc_id (1.5B gram rows at ×128) feeding a join that discards
+    * every non-candidate group. The candidates' distinct doc_ids
+    * BROADCAST into a left_semi under the set aggregate, so grams of
+    * non-candidate docs die at the scan and the doc_id shuffle carries
+    * only verification work — set assembly scales with candidates, not
+    * corpus (×128: 130.3 → 100.8 s, BASELINE r18). The candidate
+    * subtree is referenced three times (pair join + both union branches
+    * of the doc restriction) but computed ONCE: it ends in the
+    * pair-distinct EXCHANGE, which Spark's exchange reuse shares across
+    * all consumers (PlanSpec pins the ReusedExchange) — cheaper than an
+    * eager localCheckpoint, whose extra materialization cost the
+    * fixture-scale row ~1.1 s in the bench session. */
   val llmDedupContainmentIndexed: QFn = (spark, sfDir) => {
     val grams = spark.table(gramTable(spark, sfDir)).select("doc_id", "g")
     val cand = rarePairs(rareGroups(grams, "g")).distinct()
@@ -1772,15 +1648,8 @@ object DedupOps {
     * is then exchange-free. */
   private[graft] def spanTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "spanTable") {
-      val suffix = graft.util.Scratch.pathTag(sfDir)
-      val tbl = s"span_bkt_$suffix"
-      val dir = graft.util.Scratch.dir(s"span_index_$suffix")
-      spanFps(Tables(spark, sfDir, "documents").select("doc_id", "text"))
-        .repartition(indexBucketsFor("SPAN"), col("fp"))
-        .write.mode("overwrite").format("parquet")
-        .bucketBy(indexBucketsFor("SPAN"), "fp").sortBy("fp")
-        .option("path", s"$dir/$tbl").saveAsTable(tbl)
-      tbl
+      writeIndex(spanFps(Tables(spark, sfDir, "documents").select("doc_id", "text")),
+        sfDir, "span_bkt", "span_index", Seq("fp"))
     }
 
   /** Span-index build + profile: posting rows and distinct fingerprints —
@@ -2059,7 +1928,7 @@ object DedupOps {
     * value; the floor holds 2× margin under the 31-word fixture's heavy
     * fingerprint correlation — measured min ratio 0.21 at sf0.1). */
   private val simIndexVerifyFrame: QFn = (spark, sfDir) => {
-    val (_, w) = simGeomOverride.getOrElse(simChunkGeom(docCount(spark, sfDir)))
+    val (_, w) = simGeom(spark, sfDir)
     val texts = Tables(spark, sfDir, "documents")
       .agg(countDistinct(lower(trim(col("text")))).as("n_texts"))
     llmSimIndexBuild(spark, sfDir).crossJoin(broadcast(texts))

@@ -128,7 +128,7 @@ object BuildScaleProbe {
       // bucket count (fixed layout — cval is width-masked, so buckets do
       // NOT scale with the corpus for this family)
       val nDocs = DedupOps.docCount(spark, dir)
-      val nbSim = DedupOps.indexBucketsFor("SIM")
+      val nbSim = DedupOps.indexBuckets
       var bs = DedupOps.bitsumsPlan(spark, dir).persist(StorageLevel.MEMORY_AND_DISK)
       val simBitsums = time(bs.count())
       val simWrite = time(writeTbl(simProj(DedupOps.simFoldPlan(bs), nDocs),

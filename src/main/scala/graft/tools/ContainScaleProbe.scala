@@ -110,7 +110,7 @@ object ContainScaleProbe {
         s"first diff=${a.zip(b).find(p => p._1 != p._2)}")
 
     println(s"""{"metric":"contain_scale_probe","scale":$scale,""" +
-      s""""buckets":${DedupOps.indexBucketsFor("GRAM")},""" +
+      s""""buckets":${DedupOps.indexBuckets},""" +
       s""""build_sec":${f2(tBuild)},"gram_rows":$gramRows,""" +
       s""""cand_pairs":$nPairs,"cand_docs":$nCandDocs,"cand_payload":$payload,""" +
       s""""cand_sec":${f2(candSec)},"sets_sec":${f2(setsSec)},""" +

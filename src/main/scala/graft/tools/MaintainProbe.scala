@@ -161,7 +161,7 @@ object MaintainProbe {
       // embAppendTable documents: a delta vector must land in the bucket
       // a full rebuild would give it)
       val bits = DedupOps.embBits(spark, embDir)
-      val nbEmb = DedupOps.indexBucketsFor("EMB")
+      val nbEmb = DedupOps.indexBuckets
       def embAll = spark.read.parquet(s"$embDir/embeddings.parquet")
       def embProj(e: DataFrame): DataFrame = e
         .repartition(spark.sparkContext.defaultParallelism)

@@ -32,4 +32,17 @@ class MemoRuleSpec extends AnyFunSuite {
     assert(offenders.isEmpty,
       "keep session-resident state in a graft.util.SessionMemo:\n" + offenders.mkString("\n"))
   }
+
+  test("index tables have one bucketed writer") {
+    val llm = Paths.get("src/main/scala/graft/llm")
+    val sites = for {
+      f <- sources(llm)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if code.contains("bucketBy(")
+    } yield s"$f:${i + 1}: $code"
+    assert(sites.size == 1,
+      "write every index table through DedupOps' one bucketed writer:\n" + sites.mkString("\n"))
+  }
 }

@@ -229,7 +229,9 @@ class NearDupSpec extends AnyFunSuite {
       .collect().map(_.toString)
     val idx = graft.llm.DedupOps.llmDedupEmbeddingIndexed(spark, sfDir)
       .collect().map(_.toString)
-    assert(app.toSeq == idx.toSeq && app.nonEmpty)
+    val mem = graft.llm.DedupOps.llmDedupEmbedding(spark, sfDir)
+      .collect().map(_.toString)
+    assert(app.toSeq == idx.toSeq && idx.toSeq == mem.toSeq && app.nonEmpty)
   }
 
   test("incremental cluster maintenance equals the from-scratch connected components") {
