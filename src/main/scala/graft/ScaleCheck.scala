@@ -18,20 +18,34 @@ import graft.tables.Tables
   * duplication of identical texts would force regardless of algorithm.
   *
   * Sections are selectable via SPARK_GRAFT_SECTIONS (comma list of
-  * dedup,sim,text,window,width; default all) so the ×32/×64 width counts
-  * can run without re-timing everything.
+  * [[Sections]]; default all) so the ×32/×64 width counts can run without
+  * re-timing everything.
   */
 object ScaleCheck {
-  // replica machinery lives in graft.util.Replicas since round 18, shared
-  // with the probe tools (same seeds → probes replicate IDENTICAL corpora)
+  // replica machinery lives in graft.util.Replicas since round 18
+
+  /** Every section name [[main]] knows. */
+  private[graft] val Sections: Seq[String] = Seq("dedup", "sim", "text",
+    "window", "width", "cluster", "recall", "containment", "span", "kmeans",
+    "pipeline64", "planscale", "sink")
+
+  /** The selected sections: unset means all. An unknown token fails here,
+    * naming it and the known names, so a typo cannot run nothing and exit
+    * 0 (same convention as EnvKnobs). */
+  private[graft] def parseSections(raw: Option[String]): Seq[String] =
+    raw.fold(Sections) { r =>
+      val toks = r.split(",").map(_.trim).filter(_.nonEmpty).toSeq
+      val unknown = toks.filterNot(Sections.contains)
+      require(toks.nonEmpty && unknown.isEmpty,
+        s"SPARK_GRAFT_SECTIONS must be a comma list of ${Sections.mkString(",")}, " +
+          s"got '$r' (unknown: ${unknown.mkString(",")})")
+      toks.distinct
+    }
 
   def main(args: Array[String]): Unit = {
     val base = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val sections = sys.env.getOrElse("SPARK_GRAFT_SECTIONS",
-      "dedup,sim,text,window,width,cluster,recall,containment,span,kmeans," +
-        "pipeline64,planscale,sink")
-      .split(",").toSet
+    val sections = parseSections(sys.env.get("SPARK_GRAFT_SECTIONS")).toSet
     // Per-section scale-tier overrides (round 9): the width/sim curves
     // extend one octave per round and re-running the recorded lower tiers
     // every time wastes the wall-clock budget — an override like
@@ -604,8 +618,8 @@ object ScaleCheck {
       // index build of a real pipeline ends with tables on disk and heap
       // returned, and measuring consumers beside a ×128 gram persist
       // (~30 GB co-resident in this 48g JVM) inflated the signature
-      // consumers 3-6× via storage/GC pressure (SigScaleProbe isolated
-      // it; BASELINE r18). Table-name caches survive the release, so the
+      // consumers 3-6× via storage/GC pressure (BASELINE r18, minhash
+      // ×128 residual). Table-name caches survive the release, so the
       // timed consumers read the files they would in production.
       // Round 19: the builders stream from RAW plans when the in-memory
       // persists are cold (this path — DedupOps.buildSource), so these
@@ -613,7 +627,7 @@ object ScaleCheck {
       // construction; releaseBuilderPersists below is belt-and-braces.
       // Build TIMES here are io-window-dominated and the corpus was just
       // replicated — sync+settle first, or the first build measures the
-      // replica flush (BuildScaleProbe runs A vs B/C, BASELINE r19:
+      // replica flush (BASELINE r19 build-side decomposition:
       // 109 s contaminated vs 25-75 s settled for the ×128 gram build).
       try { new ProcessBuilder("sync").start().waitFor() } catch { case _: Throwable => () }
       Thread.sleep(10000)

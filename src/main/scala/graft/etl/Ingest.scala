@@ -500,10 +500,10 @@ object Ingest {
     Tables(spark, sfDir, "orders")
       .select(col("o_orderkey"), col("o_orderstatus"), col("o_totalprice"),
         to_date(col("o_orderdate")).as("o_orderdate"))
-      // round 22 (guide §2.6; R22SinkProbe): the single-file parquet input
-      // yields ONE scan partition, so the XML serialization — the op's
-      // dominant cost — ran as ONE task (probe: 4 tasks, Σtask ≈ wall,
-      // zero parallelism). The writer's declared design is one file per
+      // round 22 (guide §2.6; BASELINE.md round 22, sink stage split):
+      // the single-file parquet input yields ONE scan partition, so the
+      // XML serialization — the op's dominant cost — ran as ONE task
+      // (4 tasks, Σtask ≈ wall, zero parallelism). The writer's declared design is one file per
       // partition with parallel serialization; spread it like the other
       // sink funnels (WriteSpread) so the fixture actually exercises that
       // shape. Results are the read-back AGGREGATE — file count invisible.
@@ -552,9 +552,9 @@ object Ingest {
         struct(col("user_id"), col("value")).as("meta"),
         array(col("user_id"), col("event_id")).as("ids"),
         date_format(col("ts"), "yyyy-MM-dd HH:mm:ss").as("ts_s"))
-      // round 22 (guide §2.6; R22SinkProbe): same one-task funnel as the
-      // XML sink — the single-file parquet scan hands the JSON serializer
-      // ONE partition; spread so "writers are per-partition parallel"
+      // round 22 (guide §2.6; BASELINE.md round 22, sink stage split):
+      // same one-task funnel as the XML sink — the single-file parquet
+      // scan hands the JSON serializer ONE partition; spread so "writers are per-partition parallel"
       // (this op's own scale note) is what the fixture measures. The
       // result is the read-back aggregate; file count is invisible to it.
       .repartition(WriteSpread.n)

@@ -274,11 +274,11 @@ case class NfcNormalize(child: org.apache.spark.sql.catalyst.expressions.Express
   *
   * Why native (round 22, VERDICT r21 #1): the containment twins' exact
   * verification intersects the full per-doc gram-hash sets per candidate
-  * pair — measured at ~60% of the ops' isolated wall (R22ContainAB's
-  * joins-only diagnostic: 0.67 s of 1.78 s is moving the arrays, the rest
-  * is intersecting them). `array_intersect` builds a hash set AND
-  * materializes the intersected ARRAY per row, only for `size` to throw it
-  * away. Over pre-sorted inputs the count is a two-pointer merge: no
+  * pair — measured at ~60% of the ops' isolated wall (the round-22
+  * joins-only diagnostic, OPTIMIZATION_r22.md §1: 0.67 s of 1.78 s is
+  * moving the arrays, the rest is intersecting them). `array_intersect`
+  * builds a hash set AND materializes the intersected ARRAY per row, only
+  * for `size` to throw it away. Over pre-sorted inputs the count is a two-pointer merge: no
   * hashing, no per-row allocation, one pass over each array.
   *
   * CONTRACT: both arrays ascending-sorted with distinct elements (what

@@ -45,7 +45,7 @@ object DedupOps {
     * 16 suits the sf0.1 fixture; a 100 TB build sets
     * SPARK_GRAFT_INDEX_BUCKETS to executor-count x cores. Read once per
     * JVM — the count is baked into each table at build time. */
-  private[graft] val indexBuckets: Int =
+  private val indexBuckets: Int =
     graft.util.EnvKnobs.positiveInt("SPARK_GRAFT_INDEX_BUCKETS", 16)
 
   /** THE index-table layout: `df` hash-bucketed on `keys` into
@@ -123,7 +123,7 @@ object DedupOps {
     * calls this between building the tables and timing the consumers —
     * a ×128 gram persist (~30 GB MEMORY_AND_DISK) co-resident in the
     * measuring JVM inflated the signature consumers 3-6× via storage/GC
-    * pressure (tools/SigScaleProbe isolated it: minhash ×128 consume
+    * pressure (BASELINE.md round 18, minhash ×128 residual: consume
     * 3.3 s alone vs 19.6-32.5 s beside the persists). In-memory frame
     * caches are cleared with their persists so a later in-memory
     * consumer rebuilds instead of silently recomputing per use. */
@@ -136,7 +136,7 @@ object DedupOps {
     * corpus-sized persist it will never read again (the ×128 build
     * decomposition, BASELINE r19 — co-resident builder persists were the
     * dominant superlinear term of the build curve). */
-  private[graft] def sigPlan(spark: SparkSession, sfDir: String): DataFrame =
+  private def sigPlan(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "documents")
       // single-parquet-file input = one split; spread the hash-heavy
       // signature compute across all cores before the linear pass (at
@@ -440,7 +440,7 @@ object DedupOps {
     * (doc_id, label) longs ≈ 190 MB framed — same comfort budget as
     * [[ContainBroadcastDocCap]]'s 200 MB. Above the cap the hints drop
     * and AQE converts from actual exchange sizes. */
-  private[graft] val ClusterBroadcastEdgeCap = 6000000L
+  private val ClusterBroadcastEdgeCap = 6000000L
 
   /** Delta pair count, one cheap count over the persisted verified-pair
     * frame per (session, sfDir) — the actual-broadcast-side bound the
@@ -543,7 +543,7 @@ object DedupOps {
     * enforce exactly that. At 100 TB: the from-scratch loop is O(log d)
     * rounds of corpus-sized shuffles every day; this runs the same loop
     * over delta-edge-sized frames. Measured crossover vs from-scratch:
-    * BASELINE.md round-20 close (tools/MaintainProbe) — which also
+    * BASELINE.md round 20, incremental-CC crossover — which also
     * exposed that "broadcastable" was an unenforced adjective: the
     * contraction joins are LEFT-outer with the delta on the LEFT, so the
     * planner cannot broadcast the delta side, and the corpus-sized label
@@ -627,7 +627,7 @@ object DedupOps {
     * it: the persist is a hard barrier, without which CollapseProject
     * re-inlines the token aggregate into every bit (64× blowup measured
     * at 276 s vs 3 s on sf0.1). */
-  private[graft] def bitsumsPlan(spark: SparkSession, sfDir: String): DataFrame =
+  private def bitsumsPlan(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "documents")
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"),
@@ -641,7 +641,7 @@ object DedupOps {
             "(a, b) -> a + b))").as("bitsums"))
 
   /** Fingerprint fold over a MATERIALIZED bitsums frame. */
-  private[graft] def simFoldPlan(bitsums: DataFrame): DataFrame = {
+  private def simFoldPlan(bitsums: DataFrame): DataFrame = {
     def fold(lo: Int): String =
       s"aggregate(sequence($lo, ${lo + 63}), cast(0 as bigint), (s, j) -> s + " +
         "CASE WHEN element_at(bitsums, j + 1) > 0 " +
@@ -682,7 +682,7 @@ object DedupOps {
   /** Documents-corpus row count — the n the simhash chunk geometry derives
     * from. One Spark count job per (session, sfDir), then cached (Catalyst
     * may collapse it to parquet footer stats, but that is not guaranteed). */
-  private[graft] def docCount(spark: SparkSession, sfDir: String): Long =
+  private def docCount(spark: SparkSession, sfDir: String): Long =
     memo(spark, sfDir, "docCount")(Tables(spark, sfDir, "documents").count())
 
   /** Chunk geometry of the candidate join, DERIVED from corpus size the
@@ -818,7 +818,7 @@ object DedupOps {
     * native codegen'd vector_dot against a literal array — `bits` tight
     * loops instead of a 384-term unrolled element_at expression (which
     * blows past JIT size limits and drops to interpreted evaluation). */
-  private[graft] def llmRpBucket(vec: Column, bits: Int): Column =
+  private def llmRpBucket(vec: Column, bits: Int): Column =
     projections.take(bits).zipWithIndex.map { case (p, i) =>
       val parr = array(p.toIndexedSeq.map(lit): _*)
       val dot = call_function("vector_dot", vec, parr)
@@ -1232,7 +1232,7 @@ object DedupOps {
     * (ADVICE r17 — plain collect_list held O(df) state per hot key);
     * capped groups read as size RareDfCap+1 and fail the BETWEEN, which
     * is exactly the old count-then-semi-join semantics in one scan. */
-  private[graft] def rareGroups(src: DataFrame, key: String): DataFrame = {
+  private def rareGroups(src: DataFrame, key: String): DataFrame = {
     // the collected value column is doc_id by contract (ADVICE r18: a
     // caller with a differently named id column would hit an opaque
     // AnalysisException — or silently collect a stray doc_id column)
@@ -1249,7 +1249,7 @@ object DedupOps {
     * out of the grouped row — one row per (key, pair) occurrence, so
     * callers `.distinct()` (containment) or count multiplicity per pair
     * (span's n_shared_fp). */
-  private[graft] def rarePairs(groups: DataFrame): DataFrame =
+  private def rarePairs(groups: DataFrame): DataFrame =
     groups
       .select(explode(col("ds")).as("doc_a"), col("ds"))
       .select(col("doc_a"), explode(col("ds")).as("doc_b"))
@@ -1267,7 +1267,7 @@ object DedupOps {
   /** Raw gram plan — shared by the [[gramIndex]] persist and (round 19)
     * the stored-table builds when that persist is cold; see [[sigPlan]]
     * for the build-side rationale. */
-  private[graft] def gramPlan(spark: SparkSession, sfDir: String): DataFrame =
+  private def gramPlan(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "documents")
       .repartition(spark.sparkContext.defaultParallelism)
       .select(col("doc_id"), lower(trim(col("text"))).as("t"))
@@ -1472,8 +1472,9 @@ object DedupOps {
         col("n").as("n_b")), Seq("doc_b"))
       // native two-pointer merge over the SORTED sets (round 22, VERDICT
       // r21 #1): same count as size(array_intersect(gs_a, gs_b)) — the
-      // R22ContainAB joins-only diagnostic put ~60% of this op's wall in
-      // the per-pair hash-set intersection, not the array-moving joins.
+      // joins-only diagnostic (OPTIMIZATION_r22.md §1) put ~60% of this
+      // op's wall in the per-pair hash-set intersection, not the
+      // array-moving joins.
       // Both set providers sort at build (gramSets / the indexed twin's
       // inline agg); the expression fails loudly on unsorted input.
       .withColumn("n_shared",
@@ -1494,7 +1495,7 @@ object DedupOps {
     * union/distinct, broadcast, semi-join) are pure orchestration
     * overhead (~+1 s in the bench session at 5k docs), so small corpora
     * keep the flat two-stage plan. */
-  private[graft] val ContainRestrictFloor = 50000L
+  private val ContainRestrictFloor = 50000L
 
   /** Test hook (the simGeomOverride precedent): PlanSpec forces the
     * restricted path at fixture scale to pin its plan shape. */
@@ -1535,9 +1536,9 @@ object DedupOps {
     * previous df-aggregate + left_semi + posting-self-join shape that
     * read the same bucketed files in THREE subtrees (profiled at 4.98 s
     * warm vs 1.28 s for this plan, identical 254 rows at sf0.1;
-    * tools/ContainProfile, BASELINE.md round 17). The only shuffles left
-    * are the ones keyed on doc pairs (candidate distinct, per-doc set
-    * assembly), which any layout pays. This is the build-once/
+    * BASELINE.md round 17). The only shuffles left are the ones keyed on
+    * doc pairs (candidate distinct, per-doc set assembly), which any
+    * layout pays. This is the build-once/
     * consume-many shape: at 100 TB the gram pass runs at index-build
     * time and containment, decontamination, and passage profiling all
     * ride the same files. The explode is bounded by the rare cap AND —

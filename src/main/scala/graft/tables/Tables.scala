@@ -24,7 +24,7 @@ object Tables {
   // strongly referenced the KEY and no entry was ever collectable: every
   // short-lived spec session and per-op cloned stream session stayed
   // pinned for the JVM's life, accumulating SessionStates. Redesigned in
-  // two measured layers (R22Micro, BASELINE.md round 22):
+  // two measured layers (BASELINE.md round 22, fixed-cost floor):
   //
   //  1. SESSION-INDEPENDENT schema cache per (sfDir, name): the expensive,
   //     immutable part of a load is parquet SCHEMA RESOLUTION — measured

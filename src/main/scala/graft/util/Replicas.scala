@@ -4,8 +4,8 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 
 /** Seeded-permutation corpus replication — the linear-growth model every
-  * scale check runs on (extracted from ScaleCheck round 18 so the probe
-  * tools replicate IDENTICAL corpora): replica r > 0 gets
+  * scale check runs on (extracted from ScaleCheck round 18; ScaleCheck
+  * is its only caller): replica r > 0 gets
   * doc_id + r·10⁷ and a per-replica seeded alphabet permutation
   * (translate), so cross-replica texts share no shingles — the corpus
   * grows like fresh content, not like naive duplication (which would
@@ -40,10 +40,10 @@ object Replicas {
     * historical id layout) — a fixed 10⁷ silently ALIASES ids across
     * replicas on a >10M-doc base, planting phantom exact dups that would
     * corrupt a scale curve while looking like algorithm behavior
-    * (ADVICE r18). One max() job per call; probe-tool-only code. An
+    * (ADVICE r18). One max() job per call; scale-check-only code. An
     * EMPTY base yields a null max (ADVICE r19 — .getLong on it is an
     * NPE): fall back to the 10⁷ floor stride, replicating emptiness
-    * harmlessly instead of crashing the probe. */
+    * harmlessly instead of crashing the scale check. */
   def replicate(docs: DataFrame, scale: Int, idCol: String): DataFrame = {
     val maxRow = docs.agg(max(col(idCol).cast("long"))).head
     val maxId = if (maxRow.isNullAt(0)) 0L else maxRow.getLong(0)

@@ -37,8 +37,8 @@ object Scratch {
     * later wipe because the live session owns it, but Spark only removes
     * its blockmgr-* and spark-* children via shutdown hook — a killed or
     * OOMed previous run leaves hundreds of MB there that every subsequent
-    * run would otherwise preserve forever, on the same device the io
-    * probes measure. Call strictly BEFORE the SparkContext exists. */
+    * run would otherwise preserve forever, on the same device Bench's io
+    * calibration measures. Call strictly BEFORE the SparkContext exists. */
   def resetKeep(name: String): String = {
     delete(Paths.get(root, name))
     keep(name)

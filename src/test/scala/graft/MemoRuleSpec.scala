@@ -8,11 +8,11 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** One memo type: the operator modules keep their session-resident state
   * in a [[graft.util.SessionMemo]], never in a hand-rolled TrieMap memo
-  * with its own spelling of the session key. The one-off probe mains
-  * under tools/ are exempt. */
+  * with its own spelling of the session key. */
 class MemoRuleSpec extends AnyFunSuite {
-  private val moduleDirs = Seq("llm", "analytics", "etl", "streaming")
-    .map(d => Paths.get("src/main/scala/graft", d))
+  private val mainRoot = Paths.get("src/main/scala/graft")
+  private val moduleDirs = Seq("llm", "analytics", "etl", "streaming", "tools")
+    .map(mainRoot.resolve)
 
   private def sources(dir: Path): Seq[Path] = {
     val walk = Files.walk(dir)
@@ -44,5 +44,28 @@ class MemoRuleSpec extends AnyFunSuite {
     } yield s"$f:${i + 1}: $code"
     assert(sites.size == 1,
       "write every index table through DedupOps' one bucketed writer:\n" + sites.mkString("\n"))
+  }
+
+  test("every main is a README entry point or forked by a spec") {
+    val entryPoints = Set("Bench", "Verify", "ScaleCheck", "util.PlanDump")
+    val testText = sources(Paths.get("src/test/scala"))
+      .map(f => new String(Files.readAllBytes(f), "UTF-8")).mkString("\n")
+    val ObjectDecl = """^\s*object\s+(\w+)""".r.unanchored
+    val mains = for {
+      f <- sources(mainRoot)
+      lines = Files.readAllLines(f).asScala
+      i <- lines.indices if lines(i).contains("def main(")
+      obj <- lines.take(i).reverse.collectFirst { case ObjectDecl(n) => n }
+    } yield {
+      val pkg = mainRoot.relativize(f.getParent).toString.replace('/', '.')
+      (if (pkg.isEmpty) obj else s"$pkg.$obj", s"$f:${i + 1}")
+    }
+    assert(mains.exists(_._1 == "Bench"), "scan found no mains: " + mains)
+    val orphans = mains.filterNot { case (name, _) =>
+      entryPoints(name) || testText.contains("\"graft." + name + "\"")
+    }
+    assert(orphans.isEmpty,
+      "a main must be a README entry point or be forked by a spec under src/test:\n" +
+        orphans.map { case (n, at) => s"$at: $n" }.mkString("\n"))
   }
 }

@@ -932,8 +932,9 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("incremental CC scans the stored labels, never shuffles them (round 20)") {
-    // The MaintainProbe measurement exposed the old shape: corpus-sized
-    // label frames shuffled twice in contraction and once in expansion.
+    // The round-20 crossover measurement (BASELINE.md) exposed the old
+    // shape: corpus-sized label frames shuffled twice in contraction and
+    // once in expansion.
     // The restructured op restricts the labels by a broadcast semi-join
     // on the touched endpoints and broadcasts the delta-sized sides, so
     // the only shuffles keyed on `label` or landing on the label scan
