@@ -46,6 +46,23 @@ class MemoRuleSpec extends AnyFunSuite {
       "write every index table through DedupOps' one bucketed writer:\n" + sites.mkString("\n"))
   }
 
+  test("streams run through StreamOps' one runner") {
+    def codeSites(token: String): Seq[String] = for {
+      f <- sources(mainRoot)
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if code.contains(token)
+    } yield s"$f:${i + 1}: $code"
+    val triggers = codeSites("Trigger.AvailableNow")
+    assert(triggers.size == 1,
+      "run every stream through StreamOps.drain:\n" + triggers.mkString("\n"))
+    val streaming = mainRoot.resolve("streaming").toString + "/"
+    val reads = codeSites("readStream").filterNot(_.startsWith(streaming))
+    assert(reads.isEmpty,
+      "define stream sources in graft/streaming:\n" + reads.mkString("\n"))
+  }
+
   test("every main is a README entry point or forked by a spec") {
     val entryPoints = Set("Bench", "Verify", "ScaleCheck", "util.PlanDump")
     val testText = sources(Paths.get("src/test/scala"))

@@ -4,15 +4,16 @@ import org.scalatest.funsuite.AnyFunSuite
 import scala.jdk.CollectionConverters._
 
 /** Streaming checkpoint recovery across a process restart (VERDICT r15
-  * queue #1): forks StreamRecover's crash and resume modes as two REAL
-  * child JVMs sharing only a checkpoint + sink directory. The first dies
-  * inside epoch 1's commit window (data written, marker absent) and
-  * poisons the orphaned output; the second must replay epoch 1 from the
-  * offset WAL, overwrite the poison, and land the sink exactly-once —
-  * checked against the batch aggregate computed directly over the parquet
-  * in THIS process. The in-JVM `stream_exactly_once_sink` op cannot cross
-  * this boundary; this spec is its Lambda-retry completion
-  * (reference README.md:74-76). */
+  * queue #1): forks tools/StreamRecover's sink mode (plain `crash` and
+  * `resume`) as two REAL child JVMs sharing only a checkpoint + sink
+  * directory. The first dies inside epoch 1's commit window (data
+  * written, marker absent) and poisons the orphaned output; the second
+  * must replay epoch 1 from the offset WAL, overwrite the poison, and land
+  * the sink exactly-once — checked against the batch aggregate computed
+  * directly over the parquet in THIS process. The in-JVM
+  * `stream_exactly_once_sink` op cannot cross this boundary; this spec is
+  * its Lambda-retry completion (reference README.md:74-76).
+  * StateRecoverSpec drives the same tool's three stateful modes. */
 class StreamRecoverSpec extends AnyFunSuite {
   import SparkFixture.{spark, sfDir}
 

@@ -255,6 +255,39 @@ class StreamingSpec extends AnyFunSuite {
     } finally feed.unpersist()
   }
 
+  test("every stream op keeps its micro-batch structure") {
+    // the oracle sees only the final state: stream_dedup_incremental run as
+    // one batch instead of two keeps the same keeper set. Pin the number of
+    // micro-batches each registered stream op reports to StreamMetrics.
+    val expected = Map(
+      "stream_dedup_incremental" -> 2,
+      "stream_enrich_dim" -> 1,
+      "stream_exactly_once_sink" -> 2,
+      "stream_file_source_upsert" -> 1,
+      "stream_hourly_window" -> 1,
+      "stream_session_state" -> 3,
+      "stream_session_window" -> 3,
+      "stream_sliding_window" -> 1,
+      "stream_stream_join" -> 2,
+      "stream_topk_windowed" -> 1,
+      "stream_watermark_late" -> 2)
+    assert(graft.streaming.StreamOps.queries.keySet == expected.keySet)
+    def batches(op: String): Int =
+      graft.streaming.StreamMetrics.snapshot.get(op).map(_.batches).getOrElse(0)
+    val got = expected.keys.toSeq.sorted.map { op =>
+      val before = batches(op)
+      graft.streaming.StreamOps.queries(op)(spark, sfDir)
+      // progress events reach the listener asynchronously: wait for the
+      // expected count, then give a late extra event time to land
+      val deadline = System.nanoTime() + 60L * 1000000000L
+      while (batches(op) - before < expected(op) && System.nanoTime() < deadline)
+        Thread.sleep(50)
+      Thread.sleep(500)
+      op -> (batches(op) - before)
+    }.toMap
+    assert(got == expected, s"micro-batches per op: ${got.toSeq.sorted.mkString(", ")}")
+  }
+
   test("watermark dedup restores exactly-once counts after duplicate drop") {
     val res = graft.streaming.StreamOps.streamWatermarkLate(spark, sfDir)
       .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
