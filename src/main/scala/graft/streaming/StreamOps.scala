@@ -646,9 +646,9 @@ object StreamOps {
       .select(col("v_user").as("user_id"), col("view_id"), col("purchase_id"))
   }
 
-  /** [[intervalJoinPlan]] over the staged shared event source (both join
-    * sides list and read the same directory, so file-count overhead is
-    * paid twice); ckpt per-run. */
+  /** [[intervalJoinPlan]] over the staged shared event source; both join
+    * sides read the one source, so each micro-batch lists the directory
+    * once; ckpt per-run. */
   val streamStreamJoin: QFn = (spark, sfDir) => {
     val ss = streamSession(spark)
     val plan = intervalJoinPlan(
