@@ -28,43 +28,61 @@ private[graft] object BenchParse {
     }.toMap
 }
 
+/** The benchmark main: one untimed warm stage, one timed row per selected
+  * operator, one report (four stdout JSON lines, the last one the total,
+  * plus the detail and per-query sidecars). */
 object Bench {
+  import graft.util.Driver.{quote, secs}
+  import graft.util.Scratch
+
+  // The recorded clean-regime medians of the three calibration probes
+  // (BASELINE.md rounds 2/4/10).
+  private val CalibNominal = 0.50
+  private val CalibShuffleNominal = 1.15
+  private val CalibIoNominal = 1.15
+
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.ui.enabled", "false")
-      // Stage Spark's working dirs (shuffle spill, RocksDB state-store
-      // working trees, broadcast scratch) on the repo scratch policy
-      // (VERDICT r14 #1a) instead of the /tmp default: one explicit,
-      // pre-created location the warmed-scratch wipe below knows to
-      // preserve, on the same device every sink op writes to — so the
-      // io calibration probes measure the regime the streams' state
-      // commits actually run under. resetKeep: stale children from a
-      // killed previous run are cleared now (before the context exists);
-      // the live session's fresh subdirs are preserved by every later
-      // wipe.
-      .config("spark.local.dir", graft.util.Scratch.resetKeep("spark_local"))
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    // Stage Spark's working dirs (shuffle spill, RocksDB state-store
+    // working trees, broadcast scratch) on the repo scratch policy
+    // (VERDICT r14 #1a) instead of the /tmp default: one explicit,
+    // pre-created location the warmed-scratch wipe knows to preserve, on
+    // the same device every sink op writes to — so the io calibration
+    // probes measure the regime the streams' state commits actually run
+    // under. resetKeep: stale children from a killed previous run are
+    // cleared now (before the context exists); the live session's fresh
+    // subdirs are preserved by every later wipe.
+    val spark = graft.util.Driver.session(cpus,
+      "spark.local.dir" -> Scratch.resetKeep("spark_local"))
     // Optional comma-separated subset for local iteration (default: all).
     val only = sys.env.get("SPARK_GRAFT_ONLY").map(_.split(",").toSet)
     val selected = only.fold(SparkEntry.queries)(s => SparkEntry.queries.filter(q => s(q._1)))
+    val (warmupSec, warmupSteps) = warm(spark, sfDir, selected.keySet)
+    only.foreach { s =>
+      val unknown = s -- SparkEntry.queries.keySet
+      if (unknown.nonEmpty)
+        System.err.println(s"[bench] WARNING: unknown query names in SPARK_GRAFT_ONLY: ${unknown.mkString(", ")}")
+    }
+    val rows = timedRows(spark, sfDir, cpus.toInt, selected)
+    report(sfDir, cpus, warmupSec, warmupSteps, rows)
+    spark.stop()
+  }
+
+  /** The untimed stage: JIT warmup, then (timed as `warmup_sec`) the
+    * scratch wipe, the page-cache sweep, every [[graft.llm.Warmup]] step
+    * the selection reads, and the resident-storage line. Returns the
+    * stage's seconds and each warmup step's seconds. */
+  private def warm(spark: SparkSession, sfDir: String,
+      selected: Set[String]): (Double, Seq[(String, Double)]) = {
     // JIT/codegen warmup outside the timed loop so the first measured query
     // isn't charged for one-time JVM work. Best-effort: a bad sfDir must
     // surface as per-query failures below, not kill the run here.
     try spark.read.parquet(s"$sfDir/region.parquet")
       .groupBy("r_name").count().count()
     catch { case _: Throwable => () }
-    // Shared-index warmup (untimed, duration reported separately below):
-    // the MinHash/SimHash/embedding/IVF indexes are built once per session
-    // and consumed by many llm_* queries — without this, whichever query
-    // runs first absorbs the whole build cost and per-query regressions
-    // aren't attributable. Skipped when no selected query touches them.
-    val warmupSec: Double = {
-      val w0 = System.nanoTime()
+    var steps = Seq.empty[(String, Double)]
+    val sec = secs {
       // Warmed-scratch staging (VERDICT r14 #1a): delete every stale
       // scratch child (previous bench/verify leftovers — multi-GB of
       // sink output, stream checkpoints, old index persists) BEFORE the
@@ -76,9 +94,9 @@ object Bench {
       // consume) — that bias is upward-only on the re-run samples, so
       // the adjudicated median errs conservative, never hides a spike.
       // spark_local survives: it is the live session's spark.local.dir,
-      // created at context start above. Index persists wiped here are
-      // rebuilt by the index warmup below, still untimed.
-      try graft.util.Scratch.wipeExcept(Set("spark_local"))
+      // created at context start. Index persists wiped here are rebuilt
+      // by the warmup steps below, still untimed.
+      try Scratch.wipeExcept(Set("spark_local"))
       catch { case e: Throwable =>
         System.err.println(s"[bench] scratch wipe failed: ${e.getMessage}")
       }
@@ -89,7 +107,7 @@ object Bench {
       // touching every byte untimed costs <1 s and removes the cold-read
       // path from all 200+ timed rows. Staging files the ops write
       // themselves are warm by construction (written immediately before
-      // their read-back); the repeat policy below covers the write path.
+      // their read-back); the repeat policy covers the write path.
       try {
         val buf = new Array[Byte](1 << 20)
         def sweep(f: java.io.File): Unit =
@@ -102,50 +120,7 @@ object Bench {
       } catch { case e: Throwable =>
         System.err.println(s"[bench] page-cache sweep failed: ${e.getMessage}")
       }
-      if (selected.keys.exists(_.startsWith("llm_")))
-        try graft.llm.Warmup.indexes(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] index warmup failed: ${e.getMessage}")
-        }
-      // Stream-source fixtures staged untimed (round 21 — the Warmup.indexes
-      // category applied to §2.9): each stream op's simulated S3 drops are
-      // deterministic corpus functions that every timed row was re-writing
-      // inside its own wall-clock (~12 s of the clean 28 s streaming block
-      // was staging, not stream work). Checkpoints/state/sinks stay
-      // per-run fresh inside the ops, so re-runs remain independent and
-      // every invocation still computes from files.
-      if (selected.keys.exists(_.startsWith("stream_")))
-        try graft.streaming.StreamOps.stageFixtures(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] stream fixture staging failed: ${e.getMessage}")
-        }
-      // star stats are a separate warmup so a star-only selection does not
-      // pay for llm_* index materializations it never touches
-      if (selected.contains("agg_sales_by_category_star") ||
-          selected.contains("agg_histogram_approx"))
-        try graft.llm.Warmup.starStats(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] star-stats warmup failed: ${e.getMessage}")
-        }
-      // per-segment median stats — the ANALYZE-category artifact the
-      // single-scan median+MAD twin broadcasts (same amortization story
-      // as starStats: computed once at load time, not per dashboard hit)
-      if (selected.contains("agg_median_mad_approx"))
-        try graft.analytics.Advanced.segmentMedians(spark, sfDir)
-        catch { case e: Throwable =>
-          System.err.println(s"[bench] segment-stats warmup failed: ${e.getMessage}")
-        }
-      // one-time Derby OLTP seed (test scaffolding — at scale the source
-      // database exists before the extract runs)
-      if (selected.contains("scan_jdbc_export"))
-        graft.etl.Ingest.derbyUrl(spark, sfDir)
-      // Catalog registration hoisted out of the timed loop (VERDICT r10 #2):
-      // the SQL-text operators call Tables.registerAll defensively, and
-      // before memoization whichever ran first absorbed ten parquet schema
-      // resolutions into its timed row (sql_athena_style 4.3× its band
-      // median in the round-10 capture). registerAll is memoized per
-      // (session, sfDir) so the in-query calls become no-ops after this.
-      graft.tables.Tables.registerAll(spark, sfDir)
+      steps = graft.llm.Warmup.run(spark, sfDir, selected)
       // Lifecycle audit (round 19, VERDICT r18 #6): the warmup persists
       // are the timed loop's co-tenants — report their resident footprint
       // so every capture records whether the ×128 neighbor effect (a
@@ -161,13 +136,29 @@ object Bench {
         System.err.println(f"[bench] resident storage after warmup: " +
           f"${infos.length} cached RDDs, $memMb%.1f MB memory, $diskMb%.1f MB disk")
       } catch { case _: Throwable => () }
-      (System.nanoTime() - w0) / 1e9
     }
-    only.foreach { s =>
-      val unknown = s -- SparkEntry.queries.keySet
-      if (unknown.nonEmpty)
-        System.err.println(s"[bench] WARNING: unknown query names in SPARK_GRAFT_ONLY: ${unknown.mkString(", ")}")
-    }
+    (sec, steps)
+  }
+
+  /** What the timed stage measured: each row's reported and first-sample
+    * seconds (-1 for a failure), the spike re-runs, the successful runs per
+    * stream op, and the calibration probes with the regime derived from
+    * them. */
+  private final case class Rows(
+      results: Seq[(String, Double)], firstSamples: Seq[Double],
+      reruns: Seq[(String, Seq[Double])], rerunFailed: Int,
+      streamRuns: Map[String, Int],
+      calibSec: Double, calibShuffleSec: Double, calibIoSec: Double,
+      calibIo2Sec: Double, hostFactor: Double, hostShuffleFactor: Double,
+      hostIoFactor: Double, hostIoFactor2: Double,
+      calibAbnormal: Boolean, abnormalFinal: Boolean,
+      regimeScaleStart: Double, regimeScale: Double)
+
+  /** The timed stage: three calibration probes, then every selected op in
+    * name order, with repeat-on-spike adjudication against its clean band
+    * and a mid-run io re-probe after the last sink row. */
+  private def timedRows(spark: SparkSession, sfDir: String, cpus: Int,
+      selected: Map[String, QFn]): Rows = {
     // Fixed-workload host calibration: a deterministic CPU-bound job whose
     // cost is independent of the query set and scale factor. Cross-round
     // totals can only be compared after normalizing by this — round 3
@@ -178,24 +169,20 @@ object Bench {
     // result prunes the whole computation to an empty Range loop. The fold
     // is bit_xor, not sum: summing 200M xxhash64 longs overflows and ANSI
     // mode turns that into an error.
-    val calibSec: Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 200000000L, 1, cpus.toInt)
+    val calibSec = secs {
+      spark.range(0, 200000000L, 1, cpus)
         .selectExpr("xxhash64(id) AS h")
         .selectExpr("bit_xor(h) AS x").collect()
-      (System.nanoTime() - t0) / 1e9
     }
     // Second calibration with a real shuffle: the round-3 host showed
     // episodes where pure-CPU throughput (calib above) stayed flat while
     // shuffle-heavy fixed workloads ran 4-5× slower — the two numbers
     // together tell a reader WHICH regime a given bench total ran under.
-    val calibShuffleSec: Double = {
-      val t0 = System.nanoTime()
-      spark.range(0, 5000000L, 1, cpus.toInt)
+    val calibShuffleSec = secs {
+      spark.range(0, 5000000L, 1, cpus)
         .selectExpr("pmod(xxhash64(id), 100000) AS k")
         .groupBy("k").count()
         .agg(org.apache.spark.sql.functions.sum("count")).collect()
-      (System.nanoTime() - t0) / 1e9
     }
     // Third calibration, I/O-bound (VERDICT r9 #1): a fixed parquet
     // write+read workload. The round-9 driver bench ran 55% over the
@@ -213,30 +200,26 @@ object Bench {
     // io regime shift visible in the artifact and folds it into the
     // repeat policy's thresholds for the rows still to come.
     def ioProbe(tag: String): Double = {
-      val dir = graft.util.Scratch.dir(s"calib_io_$tag")
-      val t0 = System.nanoTime()
-      spark.range(0, 8000000L, 1, 8)
-        .selectExpr("id", "xxhash64(id, 1) AS h1", "xxhash64(id, 2) AS h2",
-          "xxhash64(id, 3) AS h3")
-        .write.mode("overwrite").parquet(s"$dir/t")
-      spark.read.parquet(s"$dir/t")
-        .selectExpr("id ^ h1 ^ h2 ^ h3 AS v")
-        .selectExpr("bit_xor(v) AS x").collect()
-      (System.nanoTime() - t0) / 1e9
+      val dir = Scratch.dir(s"calib_io_$tag")
+      secs {
+        spark.range(0, 8000000L, 1, 8)
+          .selectExpr("id", "xxhash64(id, 1) AS h1", "xxhash64(id, 2) AS h2",
+            "xxhash64(id, 3) AS h3")
+          .write.mode("overwrite").parquet(s"$dir/t")
+        spark.read.parquet(s"$dir/t")
+          .selectExpr("id ^ h1 ^ h2 ^ h3 AS v")
+          .selectExpr("bit_xor(v) AS x").collect()
+      }
     }
-    val calibIoSec: Double = ioProbe("pre")
+    val calibIoSec = ioProbe("pre")
     // Host-regime factors derived from the three probes, computed BEFORE
     // the timed loop (ADVICE r12 #4): the repeat policy below must scale
     // its spike thresholds by the measured regime, or a uniformly slow
     // host trips the threshold on most rows and which rows get median-of-3
-    // becomes an iteration-order lottery. The nominals are the recorded
-    // clean-regime medians (BASELINE.md rounds 2/4/10).
-    val calibNominal = 0.50
-    val calibShuffleNominal = 1.15
-    val calibIoNominal = 1.15
-    val hostFactor = math.max(calibSec / calibNominal, 1e-9)
-    val hostShuffleFactor = math.max(calibShuffleSec / calibShuffleNominal, 1e-9)
-    val hostIoFactor = math.max(calibIoSec / calibIoNominal, 1e-9)
+    // becomes an iteration-order lottery.
+    val hostFactor = math.max(calibSec / CalibNominal, 1e-9)
+    val hostShuffleFactor = math.max(calibShuffleSec / CalibShuffleNominal, 1e-9)
+    val hostIoFactor = math.max(calibIoSec / CalibIoNominal, 1e-9)
     // ADVICE r6: normalization is only honest near the recorded regime —
     // a far-off calibration (host episode, or a future edit to the
     // calibration workload itself) must be FLAGGED, not silently divided
@@ -263,16 +246,7 @@ object Bench {
     // Regenerated from target/bands/ whenever the band is re-recorded; a
     // query with no entry (new op before its first band) never repeats —
     // fail-safe toward measuring, not re-running.
-    val bands: Map[String, Double] =
-      try {
-        val is = getClass.getResourceAsStream("/graft/bench_bands.json")
-        if (is == null) Map.empty
-        else {
-          val txt = try scala.io.Source.fromInputStream(is, "UTF-8").mkString
-                    finally is.close()
-          BenchParse.bands(txt)
-        }
-      } catch { case _: Throwable => Map.empty }
+    val bands = BenchParse.bands(resource("/graft/bench_bands.json"))
     // Startup visibility (ADVICE r12 #5): name every selected analytic row
     // with no band entry — those rows can never repeat, and a silent parse
     // regression in the resource would otherwise look identical to a
@@ -332,9 +306,8 @@ object Bench {
     val streamRuns = scala.collection.mutable.Map.empty[String, Int]
     val results = ordered.zipWithIndex.map { case ((name, fn), idx) =>
       def once(): Double = {
-        val t0 = System.nanoTime()
         val v =
-          try { fn(spark, sfDir).count(); (System.nanoTime() - t0) / 1e9 }
+          try secs(fn(spark, sfDir).count())
           catch { case e: Throwable =>
             System.err.println(s"[bench] $name FAILED: ${e.getMessage}"); -1.0
           }
@@ -402,7 +375,7 @@ object Bench {
             System.err.println(s"[bench] mid-run io probe failed: ${e.getMessage}"); -1.0
           }
         if (calibIo2Sec >= 0) {
-          hostIoFactor2 = math.max(calibIo2Sec / calibIoNominal, 1e-9)
+          hostIoFactor2 = math.max(calibIo2Sec / CalibIoNominal, 1e-9)
           regimeScaleCur = math.max(regimeScaleCur, hostIoFactor2)
           abnormalCur = abnormalCur ||
             hostIoFactor2 > 2.0 || hostIoFactor2 < 1.0 / 2.0
@@ -413,15 +386,27 @@ object Bench {
       }
       name -> v
     }
+    Rows(results, firstSamples.toSeq, rerunLog.toSeq, rerunFailed,
+      streamRuns.toMap, calibSec, calibShuffleSec, calibIoSec, calibIo2Sec,
+      hostFactor, hostShuffleFactor, hostIoFactor, hostIoFactor2,
+      calibAbnormal, abnormalCur, regimeScale, regimeScaleCur)
+  }
+
+  /** The report: the queries, queries_normalized and stream_commit lines,
+    * then the total as the FINAL stdout line; then the per-query sidecar
+    * (with each warmup step's seconds) and the full-detail sidecar. */
+  private def report(sfDir: String, cpus: String, warmupSec: Double,
+      warmupSteps: Seq[(String, Double)], r: Rows): Unit = {
     // Per-query detail on its OWN line, then a short machine-parseable
     // total as the FINAL line: the driver tail-captures stdout and a single
     // multi-KB line got its head (the metric/value prefix) truncated in
     // round 1 (BENCH_r01.json parsed:null).
     def f3(v: Double): String = "%.3f".formatLocal(java.util.Locale.ROOT, v)
-    val qs = results.map { case (k, v) => "\"" + k + "\":" + f3(v) }
-      .mkString("{", ",", "}")
-    val good = results.map(_._2).filter(_ >= 0)
-    val total = if (good.nonEmpty) good.sum else 0.0
+    def obj(kvs: Seq[(String, Double)]): String =
+      kvs.map { case (k, v) => quote(k) + ":" + f3(v) }.mkString("{", ",", "}")
+    val results = r.results
+    val qs = obj(results)
+    val total = results.map(_._2).filter(_ >= 0).sum
     val nFailed = results.count(_._2 < 0)
     // Raw first-touch total alongside the adjudicated one (ADVICE r12 #1):
     // the repeat policy is one-sided (only slow first runs are replaced by
@@ -430,21 +415,18 @@ object Bench {
     // keeps cross-round totals apples-to-apples — a reader compares
     // total_first_sample across rounds for code movement and reads `total`
     // as the episodic-noise-adjudicated number.
-    val totalFirstSample = firstSamples.filter(_ >= 0).sum
-    // (host factors + calibAbnormal are computed above the timed loop —
-    // the repeat policy needs them; normalization reuses the same values.
-    // Raw total stays the ground truth; total_normalized divides by the
+    val totalFirstSample = r.firstSamples.filter(_ >= 0).sum
+    // (Raw total stays the ground truth; total_normalized divides by the
     // CPU-probe ratio only and is only honest when !calib_abnormal.)
     // Family subtotals: ~18-20% of the total is the four streaming ops'
     // SF-invariant checkpoint/state-commit floor — splitting it out lets
     // cross-round reads track the analytic band directly.
-    def famSum(p: String => Boolean): Double =
-      results.collect { case (k, v) if p(k) && v >= 0 => v }.sum
-    val streamingSec = famSum(_.startsWith("stream_"))
+    val streamingSec =
+      results.collect { case (k, v) if k.startsWith("stream_") && v >= 0 => v }.sum
     val analyticSec = total - streamingSec
-    val qsNorm = results.map { case (k, v) =>
-      "\"" + k + "\":" + f3(if (v >= 0) v / hostFactor else v)
-    }.mkString("{", ",", "}")
+    val qsNorm = obj(results.map { case (k, v) =>
+      k -> (if (v >= 0) v / r.hostFactor else v)
+    })
     // Twin-comparison footnote (VERDICT r8 #6), emitted with the data so a
     // reader of BENCH_rN alone cannot misread the indexed-vs-in-memory
     // rows: the in-memory dedup twins consume frames PERSISTED during the
@@ -498,20 +480,11 @@ object Bench {
     // regime the io probes measure); neither -> "at_band"; no recorded
     // median -> "no_band" (new op before its first phase band —
     // fail-safe toward reporting, not guessing).
-    val phaseBands: Map[String, Map[String, Double]] =
-      try {
-        val is = getClass.getResourceAsStream("/graft/bench_stream_phases.json")
-        if (is == null) Map.empty
-        else {
-          val txt = try scala.io.Source.fromInputStream(is, "UTF-8").mkString
-                    finally is.close()
-          BenchParse.phases(txt)
-        }
-      } catch { case _: Throwable => Map.empty }
+    val phaseBands = BenchParse.phases(resource("/graft/bench_stream_phases.json"))
     def phaseElevated(v: Double, band: Double): Boolean =
       v > math.max(1.5 * band, band + 0.5)
     val ssJson = streamSplit.toSeq.sortBy(_._1).map { case (k, s) =>
-      val runs = math.max(1, streamRuns.getOrElse(k, 1))
+      val runs = math.max(1, r.streamRuns.getOrElse(k, 1))
       val workSec = s.workMs / 1000.0 / runs
       val ioSec = (s.walMs + s.stateMs) / 1000.0 / runs
       val verdictJson = phaseBands.get(k) match {
@@ -530,7 +503,7 @@ object Bench {
             ",\"phase_verdict\":\"" + verdict + "\""
         case _ => ",\"phase_verdict\":\"no_band\""
       }
-      "\"" + k + "\":{\"batches\":" + (s.batches / runs) +
+      quote(k) + ":{\"batches\":" + (s.batches / runs) +
         ",\"runs\":" + runs +
         ",\"trigger_sec\":" + f3(s.triggerMs / 1000.0 / runs) +
         ",\"commit_sec\":" + f3(s.commitMs / 1000.0 / runs) +
@@ -540,18 +513,6 @@ object Bench {
     }.mkString("{", ",", "}")
     val detailPath = sys.env.getOrElse("SPARK_GRAFT_DETAIL_FILE",
       "/root/repo/target/bench_detail.json")
-    // ADVICE r10: paths come from the environment and are interpolated into
-    // JSON — a quote/backslash/control char in SPARK_GRAFT_DETAIL_FILE or
-    // the sf dir would silently emit invalid JSON for every downstream
-    // parser. Escape per RFC 8259 before interpolation.
-    def jstr(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case c if c < ' ' => "\\u%04x".format(c.toInt)
-      case c => c.toString
-    }
-    val detailPathJ = jstr(detailPath)
-    val sfDirJ = jstr(sfDir)
     // Per-query seconds in a COMMITTED sidecar (round 22, VERDICT r21 #2):
     // the driver's PERF comparison was per-query-blind because the bench's
     // final stdout line carries only totals and target/ is scratch. The
@@ -564,33 +525,25 @@ object Bench {
     // names it in "per_query_file". The file is committed each round, so
     // PERF can diff per-query seconds across rounds and fill its scaling
     // block. Additions-only: every pre-existing stdout line and JSON field
-    // is unchanged.
+    // is unchanged; "warmup" itemizes the untimed warmup_sec by step.
     val perQueryPath = sys.env.getOrElse("SPARK_GRAFT_PERQUERY_FILE",
       s"/root/repo/bench_perquery_c$cpus.json")
     val perQueryJson =
-      s"""{"sf":"$sfDirJ","cpus":$cpus,"n_queries":${results.size},"failed":$nFailed,"queries":$qs,"first_samples":${
-        results.map(_._1).zip(firstSamples).map { case (k, v) =>
-          "\"" + k + "\":" + f3(v)
-        }.mkString("{", ",", "}")
-      }}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get(perQueryPath),
-      perQueryJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] per-query sidecar write to $perQueryPath failed: ${e.getMessage}")
-    }
-    val perQueryPathJ = jstr(perQueryPath)
+      s"""{"sf":${quote(sfDir)},"cpus":$cpus,"n_queries":${results.size},"failed":$nFailed,"queries":$qs,"first_samples":${
+        obj(results.map(_._1).zip(r.firstSamples))},"warmup":${obj(warmupSteps)}}"""
+    write(perQueryPath, perQueryJson, "per-query sidecar")
     // regime_scale is the FINAL folded value (pre-loop probes ∨ mid-run
     // probe) so a degradation that developed during the run is visible in
     // the one field cross-round readers already consume; the pre-loop
     // value stays available as regime_scale_start.
-    val totalLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","total_first_sample":${f3(totalFirstSample)},"n_queries":${results.size},"failed":$nFailed,"reruns":${rerunLog.size},"rerun_failed":$rerunFailed,"regime_scale":${f3(regimeScaleCur)},"regime_scale_start":${f3(regimeScale)},"streaming_sec":${f3(streamingSec)},"analytic_sec":${f3(analyticSec)},"warmup_sec":${f3(warmupSec)},"calib_sec":${f3(calibSec)},"calib_shuffle_sec":${f3(calibShuffleSec)},"calib_io_sec":${f3(calibIoSec)},"calib_io2_sec":${f3(calibIo2Sec)},"calib_nominal":${f3(calibNominal)},"calib_shuffle_nominal":${f3(calibShuffleNominal)},"calib_io_nominal":${f3(calibIoNominal)},"calib_abnormal":$calibAbnormal,"calib_abnormal_final":$abnormalCur,"total_normalized":${f3(total / hostFactor)},"host_factor":${f3(hostFactor)},"host_shuffle_factor":${f3(hostShuffleFactor)},"host_io_factor":${f3(hostIoFactor)},"host_io_factor2":${f3(hostIoFactor2)},"detail_file":"$detailPathJ","per_query_file":"$perQueryPathJ","sf":"$sfDirJ"}"""
+    val totalLine = s"""{"metric":"total","value":${f3(total)},"unit":"sec","total_first_sample":${f3(totalFirstSample)},"n_queries":${results.size},"failed":$nFailed,"reruns":${r.reruns.size},"rerun_failed":${r.rerunFailed},"regime_scale":${f3(r.regimeScale)},"regime_scale_start":${f3(r.regimeScaleStart)},"streaming_sec":${f3(streamingSec)},"analytic_sec":${f3(analyticSec)},"warmup_sec":${f3(warmupSec)},"calib_sec":${f3(r.calibSec)},"calib_shuffle_sec":${f3(r.calibShuffleSec)},"calib_io_sec":${f3(r.calibIoSec)},"calib_io2_sec":${f3(r.calibIo2Sec)},"calib_nominal":${f3(CalibNominal)},"calib_shuffle_nominal":${f3(CalibShuffleNominal)},"calib_io_nominal":${f3(CalibIoNominal)},"calib_abnormal":${r.calibAbnormal},"calib_abnormal_final":${r.abnormalFinal},"total_normalized":${f3(total / r.hostFactor)},"host_factor":${f3(r.hostFactor)},"host_shuffle_factor":${f3(r.hostShuffleFactor)},"host_io_factor":${f3(r.hostIoFactor)},"host_io_factor2":${f3(r.hostIoFactor2)},"detail_file":${quote(detailPath)},"per_query_file":${quote(perQueryPath)},"sf":${quote(sfDir)}}"""
     // stdout FIRST — it is the ground truth the driver tail-captures; a
     // bad SPARK_GRAFT_DETAIL_FILE must not cost the whole run's results
     // (review r10: the sidecar write used to run before any println and
     // an unwritable path threw away 100+ s of measurements).
-    println(s"""{"metric":"queries","sf":"$sfDirJ","twin_note":"$twinNote","detail":$qs}""")
-    println(s"""{"metric":"queries_normalized","sf":"$sfDirJ","host_factor":${f3(hostFactor)},"detail":$qsNorm}""")
-    println(s"""{"metric":"stream_commit","sf":"$sfDirJ","detail":$ssJson}""")
+    println(s"""{"metric":"queries","sf":${quote(sfDir)},"twin_note":"$twinNote","detail":$qs}""")
+    println(s"""{"metric":"queries_normalized","sf":${quote(sfDir)},"host_factor":${f3(r.hostFactor)},"detail":$qsNorm}""")
+    println(s"""{"metric":"stream_commit","sf":${quote(sfDir)},"detail":$ssJson}""")
     println(totalLine)
     // Full-detail sidecar (VERDICT r9 #3): the driver's stdout capture
     // keeps only the last ~2000 chars, which truncates the 157-entry
@@ -600,16 +553,29 @@ object Bench {
     // Re-run transparency: every spike-triggered repeat with all its
     // samples, so a reader can see which rows were episodic and what the
     // raw first-touch numbers were (the reported detail carries medians).
-    val rerunsJson = rerunLog.map { case (k, vs) =>
-      "\"" + k + "\":[" + vs.map(f3).mkString(",") + "]"
+    val rerunsJson = r.reruns.map { case (k, vs) =>
+      quote(k) + ":[" + vs.map(f3).mkString(",") + "]"
     }.mkString("{", ",", "}")
     val detailJson =
-      s"""{"sf":"$sfDirJ","n_queries":${results.size},"failed":$nFailed,"twin_note":"$twinNote","detail":$qs,"detail_normalized":$qsNorm,"reruns":$rerunsJson,"stream_commit":$ssJson,"total":$totalLine}"""
-    try java.nio.file.Files.write(java.nio.file.Paths.get(detailPath),
-      detailJson.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    catch { case e: Exception =>
-      System.err.println(s"[bench] sidecar write to $detailPath failed: ${e.getMessage}")
-    }
-    spark.stop()
+      s"""{"sf":${quote(sfDir)},"n_queries":${results.size},"failed":$nFailed,"twin_note":"$twinNote","detail":$qs,"detail_normalized":$qsNorm,"reruns":$rerunsJson,"stream_commit":$ssJson,"total":$totalLine}"""
+    write(detailPath, detailJson, "sidecar")
   }
+
+  /** A classpath resource's text, or "" when it is missing or unreadable
+    * (the parsers then return no entries, which Bench reports loudly). */
+  private def resource(path: String): String =
+    try {
+      val is = getClass.getResourceAsStream(path)
+      if (is == null) ""
+      else try scala.io.Source.fromInputStream(is, "UTF-8").mkString finally is.close()
+    } catch { case _: Throwable => "" }
+
+  /** Write `text` to `path`; a failure is reported, never thrown — the
+    * stdout lines already carry the run's results. */
+  private def write(path: String, text: String, what: String): Unit =
+    try java.nio.file.Files.write(java.nio.file.Paths.get(path),
+      text.getBytes(java.nio.charset.StandardCharsets.UTF_8))
+    catch { case e: Exception =>
+      System.err.println(s"[bench] $what write to $path failed: ${e.getMessage}")
+    }
 }

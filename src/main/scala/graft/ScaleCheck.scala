@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.util.Driver.secs
 import org.apache.spark.sql.functions._
 import graft.tables.Tables
 
@@ -70,16 +70,9 @@ object ScaleCheck {
     // comma must fail fast at startup, not after the corpus builds
     val shufflePartitions = graft.util.EnvKnobs
       .positiveInt("SPARK_GRAFT_SHUFFLE_PARTITIONS", cpus.toInt).toString
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", shufflePartitions)
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Driver.session(cpus,
+      "spark.sql.shuffle.partitions" -> shufflePartitions)
 
-    def time(f: => Unit): Double = {
-      val t0 = System.nanoTime(); f; (System.nanoTime() - t0) / 1e9
-    }
     def f2(v: Double) = "%.2f".formatLocal(java.util.Locale.ROOT, v)
 
     /** ×scale documents corpus (seeded-permutation replicas), written once
@@ -130,7 +123,7 @@ object ScaleCheck {
 
       dedupScales.foreach { scale =>
         val dir = docsDir(scale, "dedup")
-        val tIndex = time {
+        val tIndex = secs {
           graft.llm.DedupOps.sigIndex(spark, dir).count()
           graft.llm.DedupOps.minhashCandidates(spark, dir).count()
         }
@@ -138,7 +131,7 @@ object ScaleCheck {
         // loop executes eagerly when the query is constructed, not at
         // count()
         val timed = ops.map { case (name, fn) =>
-          name -> time(fn(spark, dir).count())
+          name -> secs(fn(spark, dir).count())
         }
         println(s"""{"metric":"scale_check","scale":$scale,"index_sec":${f2(tIndex)},""" +
           timed.map { case (n, t) => s""""${n}_sec":${f2(t)}""" }.mkString(",") + "}")
@@ -165,11 +158,11 @@ object ScaleCheck {
         val nDocs = spark.read.parquet(s"$dir/documents.parquet").count()
         // the one expensive shared index the funnel rides (stage 3
         // consumes the exact-verified near-dup pair set)
-        val tIndex = time {
+        val tIndex = secs {
           graft.llm.DedupOps.verifiedPairs(spark, dir).count()
         }
         var stages: Array[(Int, String, Long)] = null
-        val t = time {
+        val t = secs {
           stages = graft.llm.DedupOps.llmPipelineCleanCorpus(spark, dir)
             .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2)))
         }
@@ -216,7 +209,7 @@ object ScaleCheck {
           .select(col("doc_id"), col("doc_b")).distinct().count()
         val nRare = rare.count()
         var nPairs = 0L
-        val t = time {
+        val t = secs {
           nPairs = graft.llm.DedupOps.llmDedupContainment(spark, dir).count()
         }
         println(s"""{"metric":"scale_check_containment","scale":$scale,""" +
@@ -255,7 +248,7 @@ object ScaleCheck {
           .filter(col("doc_id") < col("doc_b"))
           .select(col("doc_id"), col("doc_b")).distinct().count()
         var nPairs = 0L
-        val t = time {
+        val t = secs {
           nPairs = graft.llm.DedupOps.llmDedupSpan(spark, dir).count()
         }
         println(s"""{"metric":"scale_check_span","scale":$scale,""" +
@@ -280,29 +273,29 @@ object ScaleCheck {
 
       simScales.foreach { scale =>
         val dir = embDir(scale, "emb")
-        val tIndex = time { graft.llm.DedupOps.embIndex(spark, dir).count() }
+        val tIndex = secs { graft.llm.DedupOps.embIndex(spark, dir).count() }
         val timed = Seq(
           "dedup_embedding" ->
-            time(graft.llm.DedupOps.llmDedupEmbedding(spark, dir).count()),
+            secs(graft.llm.DedupOps.llmDedupEmbedding(spark, dir).count()),
           "similarity_ann" ->
-            time(graft.llm.SimilarityOps.llmSimilarityAnn(spark, dir).count()),
+            secs(graft.llm.SimilarityOps.llmSimilarityAnn(spark, dir).count()),
           // ivf pays its k-means fit per corpus (bounded sample, but
           // nlist derives ~sqrt(32n): 512 cells at x1 → 2048 at x8) — the
           // one op whose index build must grow with the derived geometry
           "similarity_ivf" ->
-            time(graft.llm.SimilarityOps.llmSimilarityIvf(spark, dir).count()),
+            secs(graft.llm.SimilarityOps.llmSimilarityIvf(spark, dir).count()),
           "knn_join" ->
-            time(graft.llm.SimilarityOps.llmSimilarityKnnJoin(spark, dir).count()),
+            secs(graft.llm.SimilarityOps.llmSimilarityKnnJoin(spark, dir).count()),
           // round 7: the bucket-probed ANN form — its curve vs knn_join is
           // the candidate-cut evidence (the probe set is fixed per query
           // while the exact join's candidate set grows with the corpus)
           "knn_join_ann" ->
-            time(graft.llm.SimilarityOps.llmSimilarityKnnJoinAnn(spark, dir).count()),
+            secs(graft.llm.SimilarityOps.llmSimilarityKnnJoinAnn(spark, dir).count()),
           // round 7: SemDeDup — within-bucket pairwise at occupancy ~8
           // must track the index-build curve (linear), not pairwise n²;
           // its timing includes the embTable materialization for this dir
           "semdedup" ->
-            time(graft.llm.DedupOps.llmDedupSemantic(spark, dir).count()))
+            secs(graft.llm.DedupOps.llmDedupSemantic(spark, dir).count()))
         println(s"""{"metric":"scale_check_sim","scale":$scale,"index_sec":${f2(tIndex)},""" +
           timed.map { case (n, t) => s""""${n}_sec":${f2(t)}""" }.mkString(",") + "}")
         graft.llm.DedupOps.clearCaches()
@@ -340,7 +333,7 @@ object ScaleCheck {
       Seq(1, 2, 4, 8).foreach { scale =>
         val dir = docsDir(scale, "text")
         val timed = textOps.map { case (name, fn) =>
-          name -> time(fn(spark, dir).count())
+          name -> secs(fn(spark, dir).count())
         }
         println(s"""{"metric":"scale_check_text","scale":$scale,""" +
           timed.map { case (n, t) => s""""${n}_sec":${f2(t)}""" }.mkString(",") + "}")
@@ -398,7 +391,7 @@ object ScaleCheck {
             d
           }
         val timed = (winOpsEvents ++ winOpsOrders).map { case (name, fn) =>
-          name -> time(fn(spark, dir).count())
+          name -> secs(fn(spark, dir).count())
         }
         println(s"""{"metric":"scale_check_window","scale":$scale,""" +
           timed.map { case (n, t) => s""""${n}_sec":${f2(t)}""" }.mkString(",") + "}")
@@ -419,7 +412,7 @@ object ScaleCheck {
       Seq(8, 32).foreach { scale =>
         val dir = docsDir(scale, "cluster_docs")
         var res: org.apache.spark.sql.DataFrame = null
-        val t = time { res = graft.llm.DedupOps.llmDedupCluster(spark, dir) }
+        val t = secs { res = graft.llm.DedupOps.llmDedupCluster(spark, dir) }
         val rounds = graft.llm.DedupOps.lastClusterRounds.get
         val maxCluster = res.groupBy("cluster_id").count()
           .agg(max("count")).head.getLong(0)
@@ -448,7 +441,7 @@ object ScaleCheck {
         val n = spark.read.parquet(s"$dir/embeddings.parquet").count()
         var cells = 0L
         var maxShare = 0.0
-        val t = time {
+        val t = secs {
           val out = graft.llm.SimilarityOps.llmClusterKmeans(spark, dir)
             .collect()
           cells = out.length.toLong
@@ -505,7 +498,7 @@ object ScaleCheck {
         val exactPlanted = exact.count(_ >= plantedBase)
 
         var ann: Array[Long] = null
-        val annSec = time {
+        val annSec = secs {
           ann = graft.llm.SimilarityOps.llmSimilarityAnn(spark, d)
             .select("vec_id").collect().map(_.getLong(0))
         }
@@ -516,11 +509,11 @@ object ScaleCheck {
         val rpScanned =
           graft.llm.SimilarityOps.probedBuckets(bits, radius).toDouble / (1L << bits)
 
-        val ivfIndexSec = time {
+        val ivfIndexSec = secs {
           graft.llm.SimilarityOps.ivfIndex(spark, d)._1.count()
         }
         var ivf: Array[Long] = null
-        val ivfSec = time {
+        val ivfSec = secs {
           ivf = graft.llm.SimilarityOps.llmSimilarityIvf(spark, d)
             .select("vec_id").collect().map(_.getLong(0))
         }
@@ -632,10 +625,10 @@ object ScaleCheck {
       try { new ProcessBuilder("sync").start().waitFor() } catch { case _: Throwable => () }
       Thread.sleep(10000)
       println(s"""{"metric":"scale_check_planshape_build","scale":$planScale,""" +
-        s""""gram_sec":${f2(time(graft.llm.DedupOps.gramTable(spark, ddir)))},""" +
-        s""""sig_sec":${f2(time(graft.llm.DedupOps.sigTable(spark, ddir)))},""" +
-        s""""sim_sec":${f2(time(graft.llm.DedupOps.simTable(spark, ddir)))},""" +
-        s""""emb_sec":${f2(time(graft.llm.DedupOps.embTable(spark, edir)))}}""")
+        s""""gram_sec":${f2(secs(graft.llm.DedupOps.gramTable(spark, ddir)))},""" +
+        s""""sig_sec":${f2(secs(graft.llm.DedupOps.sigTable(spark, ddir)))},""" +
+        s""""sim_sec":${f2(secs(graft.llm.DedupOps.simTable(spark, ddir)))},""" +
+        s""""emb_sec":${f2(secs(graft.llm.DedupOps.embTable(spark, edir)))}}""")
       graft.llm.DedupOps.releaseBuilderPersists()
       // Repetitions per consumer (median reported, every rep recorded) —
       // two identical-config ×32 runs differed by 26% on the containment
@@ -650,7 +643,7 @@ object ScaleCheck {
         // fresh build re-executes the whole consumer against a warm page
         // cache, which is the steady-state cost the curve claims
         var df = mk()
-        val ts = (1 to planReps).map { _ => df = mk(); time(df.collect()) }
+        val ts = (1 to planReps).map { _ => df = mk(); secs(df.collect()) }
         val t = ts.sorted.apply(planReps / 2)
         val p = df.queryExecution.executedPlan.toString
         val bucketed = p.contains("Bucketed: true")
@@ -729,7 +722,7 @@ object ScaleCheck {
         graft.util.Scratch.wipeWhere(n =>
           !(n == "spark_local" || n.startsWith("derby") || n == corpusName))
         val (f0, b0) = snapshot()
-        val t = time(fn(spark, d).count())
+        val t = secs(fn(spark, d).count())
         val (f1, b1) = snapshot()
         val mb = (b1 - b0) / 1048576.0
         println(s"""{"metric":"scale_check_sink","op":"$name","scale":$sinkScale,""" +

@@ -1,19 +1,12 @@
 package graft
-import org.apache.spark.sql.SparkSession
 import java.nio.file.{Files, Paths}
+import graft.util.Driver.quote
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
   def main(args: Array[String]): Unit = {
     val Array(sfDir, outDir) = args
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = graft.util.Driver.session(sys.env.getOrElse("SPARK_GRAFT_CPUS", "4"))
     new java.io.File(outDir).mkdirs()
     // Optional comma-separated subset for local iteration (driver sets
     // nothing → full dump, same as Bench's SPARK_GRAFT_ONLY)
@@ -43,20 +36,8 @@ object Verify {
         System.err.println(s"[verify] $name failed: ${e.getMessage}")
       }
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s"${quote(k)}: ${quote(v)}" }.mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     // Manifest of every query that SHOULD have a dump (round-13 review):
     // the compare walks existing directories, so without this a query
@@ -65,7 +46,7 @@ object Verify {
     // FILTERED map (ADVICE r13 — the full key set here false-FAILed every
     // SPARK_GRAFT_ONLY subset run as "no dump written").
     Files.writeString(Paths.get(s"$outDir/queries.json"),
-      selected.keys.toSeq.sorted.map(q).mkString("[", ",", "]"))
+      selected.keys.toSeq.sorted.map(quote).mkString("[", ",", "]"))
     // Estimate-vs-exact deltas for the weak-oracle sketch rows (VERDICT
     // r14 queue #9) — machine-readable evidence next to the dumps. Only
     // for rows that RAN in this invocation (review r15: a subset run must
@@ -88,7 +69,7 @@ object Verify {
           val rel =
             if (exact == 0.0) (if (est == 0.0) 0.0 else Double.NaN)
             else math.abs(est - exact) / math.abs(exact)
-          s"""{"op": ${q(op)}, "group": ${q(group)}, "metric": ${q(metric)},""" +
+          s"""{"op": ${quote(op)}, "group": ${quote(group)}, "metric": ${quote(metric)},""" +
             s""" "estimate": ${jnum(est)}, "exact": ${jnum(exact)},""" +
             s""" "rel_delta": ${jnum(rel)}}"""
         }.mkString("[", ",\n ", "]")

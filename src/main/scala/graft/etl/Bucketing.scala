@@ -210,7 +210,7 @@ object Bucketing {
     // serialization point when a year holds terabytes. The pmod spreader
     // gives every partition directory up to WriteSpread.n parallel writers
     // (files per dir stay bounded at n, not one-per-shuffle-task); at
-    // 100 TB the n becomes executor-count-sized (SPARK_GRAFT_WRITE_SPREAD).
+    // 100 TB the n becomes executor-count-sized (see WriteSpread).
     Tables(spark, sfDir, "lineitem")
       .withColumn("l_year", year(col("l_shipdate")))
       .select("l_orderkey", "l_quantity", "l_extendedprice", "l_returnflag", "l_year")

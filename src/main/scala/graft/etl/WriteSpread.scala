@@ -9,15 +9,11 @@ package graft.etl
   * fixture table) is `repartition(partCol, pmod(key, N))`: each directory
   * gets up to N parallel writers with files/dir bounded at N.
   *
-  * N is a deployment decision — 8 suits the 32-core fixture (writers per
-  * dir × |partitions| stays near core count; BASELINE.md round 10 records
-  * the 1/8/32 sweep that confirmed it); a 1000-executor cluster sizes it
-  * executor-count-ish. Hence the env knob rather than a literal:
-  * `SPARK_GRAFT_WRITE_SPREAD=16` A/Bs the write shape without a code
-  * edit. A `def`, not an object-init `val`: a malformed knob then throws
-  * the clean IllegalArgumentException from EnvKnobs at the call site
-  * instead of an ExceptionInInitializerError + opaque NoClassDefFoundError
-  * cascade across every later query (review r10). */
+  * N = 8 suits the 32-core fixture (writers per dir × |partitions| stays
+  * near core count; BASELINE.md round 10 records the 1/8/32 sweep that
+  * settled it). A 1000-executor cluster sizes it executor-count-ish, so
+  * the call sites read it here, where it can later be derived from the
+  * cluster. */
 private[graft] object WriteSpread {
-  def n: Int = graft.util.EnvKnobs.positiveInt("SPARK_GRAFT_WRITE_SPREAD", 8)
+  def n: Int = 8
 }

@@ -88,9 +88,8 @@ object StreamOps {
         .write.mode("overwrite").parquet(d)
     }
 
-  /** Pre-stage every bench-visible stream fixture (called from Bench's
-    * untimed warmup; idempotent). Itemized to stderr like Warmup.indexes
-    * so the warmup-budget audit (VERDICT r20 #7) can attribute it.
+  /** Pre-stage every bench-visible stream fixture (Bench's untimed
+    * warmup step `streamFixtures`, which times it; idempotent).
     *
     * Round 22 (VERDICT r21 #5, guide §2.6 — overlap independent jobs):
     * the seven stagings are independent tiny write jobs, several of them
@@ -103,7 +102,6 @@ object StreamOps {
     * the shared table loads are resolved BEFORE the pool below — so no
     * staging thread races the events conf-dance inside Tables.load. */
   def stageFixtures(spark: SparkSession, sfDir: String): Unit = {
-    val t0 = System.nanoTime()
     // resolve shared inputs once, single-threaded: every staging thread
     // then hits the Tables memo instead of racing schema resolution
     Seq("events", "orders", "documents").foreach(Tables(spark, sfDir, _))
@@ -115,8 +113,6 @@ object StreamOps {
       "exactly_once" -> (() => exactlyOnceFix(spark, sfDir)),
       "sess_state" -> (() => sessionStateFix(spark, sfDir)),
       "sess_window" -> (() => sessionWindowFix(spark, sfDir))))
-    System.err.println(
-      f"[warmup] streamFixtures ${(System.nanoTime() - t0) / 1e9}%.2fs")
   }
 
   /** Run `stagings` on a 4-thread pool. `invokeAll` returns only after

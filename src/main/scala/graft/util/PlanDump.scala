@@ -1,18 +1,11 @@
 package graft.util
 
-import org.apache.spark.sql.SparkSession
-
 /** Dumps `.explain("formatted")` for the scale-critical queries (source
   * material for PLANS.md). Not part of the driver contract. */
 object PlanDump {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.01")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", 8)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
+    val spark = Driver.session("8")
     spark.sparkContext.setLogLevel("ERROR")
     val picks = Seq(
       "agg_sales_by_category_year", "incremental_upsert", "scan_parquet",

@@ -87,10 +87,20 @@ final class SessionMemo {
     val cell = cells.computeIfAbsent(key, _ => new Cell)
     cell.synchronized {
       cell.value.map(_.asInstanceOf[T]).filter(valid).getOrElse {
+        SessionMemo.built.incrementAndGet()
         val v = build
         cell.value = Some(v)
         v
       }
     }
   }
+}
+
+object SessionMemo {
+  private val built = new java.util.concurrent.atomic.AtomicLong()
+
+  /** Builds run so far by every memo of this JVM, a build that throws
+    * included. A call that hits leaves it unchanged, so a spec can check
+    * that a warmed operator builds nothing inside its timed row. */
+  def builds: Long = built.get
 }

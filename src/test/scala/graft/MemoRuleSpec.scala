@@ -63,6 +63,19 @@ class MemoRuleSpec extends AnyFunSuite {
       "define stream sources in graft/streaming:\n" + reads.mkString("\n"))
   }
 
+  test("Bench names no operator module; the warmup list says what each op reads") {
+    val Module = """\b(StreamOps|DedupOps|Advanced|Ingest|Queries|Tables)\b""".r
+    val bench = mainRoot.resolve("Bench.scala")
+    val refs = for {
+      (line, i) <- Files.readAllLines(bench).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      m <- Module.findAllIn(code)
+    } yield s"$bench:${i + 1}: $m"
+    assert(refs.isEmpty,
+      "name what an op needs built in graft.llm.Warmup's step list:\n" + refs.mkString("\n"))
+  }
+
   test("every main is a README entry point or forked by a spec") {
     val entryPoints = Set("Bench", "Verify", "ScaleCheck", "util.PlanDump")
     val testText = sources(Paths.get("src/test/scala"))
