@@ -2,7 +2,7 @@ package graft.util
 
 import org.apache.spark.sql.SparkSession
 
-/** What the driver mains ([[graft.Bench]], [[graft.Verify]]) share: one
+/** What the entry-point mains ([[graft.Bench]], [[graft.Verify]]) share: one
   * session config, one wall-clock timer and one JSON string quote. */
 object Driver {
   /** The local session both mains run under: `local[cpus]`, one shuffle

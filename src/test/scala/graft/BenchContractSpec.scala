@@ -9,7 +9,7 @@ import org.scalatest.funsuite.AnyFunSuite
 
 import graft.util.Scratch
 
-/** Bench's output contract, read from a real child JVM: the driver parses
+/** Bench's output contract, read from a real child JVM: its readers parse
   * the LAST stdout line as the total, and readers of the earlier lines and
   * of both sidecars depend on their shape. The child runs in its own
   * working directory, because Bench wipes the scratch root under its
