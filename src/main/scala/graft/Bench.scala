@@ -255,7 +255,7 @@ object Bench {
       // round-13 review: the worst parse regression (resource missing or
       // regex matching nothing) must be the LOUDEST, not silently
       // indistinguishable from a clean run with the policy disabled
-      System.err.println("[bench] WARNING: no band entries parsed — " +
+      System.err.println("[bench] WARNING: no band entries parsed - " +
         "repeat-on-spike policy is DISABLED for this run")
     else {
       // streams are no longer exempt (VERDICT r14 #1b) — a bandless
@@ -381,7 +381,7 @@ object Bench {
             hostIoFactor2 > 2.0 || hostIoFactor2 < 1.0 / 2.0
           System.err.println(f"[bench] mid-run io probe ${calibIo2Sec}%.3f s " +
             f"(factor ${hostIoFactor2}%.2f, regime scale now ${regimeScaleCur}%.2f" +
-            (if (abnormalCur && !calibAbnormal) ", ABNORMAL — re-runs off" else "") + ")")
+            (if (abnormalCur && !calibAbnormal) ", ABNORMAL - re-runs off" else "") + ")")
         }
       }
       name -> v

@@ -165,7 +165,10 @@ object Ingest {
     }
 
   /** Process ALL files in a bucket, parameterized by filename
-    * (README.md:90,168): glob read + input_file_name() dispatch. */
+    * (README.md:90,168): every *.csv under the bucket + input_file_name()
+    * dispatch. The read names the bucket dir itself, not a `*_files`
+    * glob: Spark stats a glob path for a streaming-sink metadata dir and
+    * logs a FileNotFoundException trace at WARN on every run. */
   val scanGlobDynamic: QFn = (spark, sfDir) => {
     val dir = Scratch.dir("scan_glob_dynamic")
     val ev = Tables(spark, sfDir, "events")
@@ -174,7 +177,8 @@ object Ingest {
         .write.mode("overwrite").option("header", true).csv(s"$dir/${t}_files")
     }
     spark.read.schema("event_id LONG, user_id LONG")
-      .option("header", true).csv(s"$dir/*_files")
+      .option("header", true).option("recursiveFileLookup", true)
+      .option("pathGlobFilter", "*.csv").csv(dir)
       .withColumn("src_type",
         regexp_extract(input_file_name(), "([a-z]+)_files", 1))
       .groupBy("src_type").agg(count(lit(1)).as("cnt"))

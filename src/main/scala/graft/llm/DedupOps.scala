@@ -1232,7 +1232,7 @@ object DedupOps {
     * (ADVICE r17 — plain collect_list held O(df) state per hot key);
     * capped groups read as size RareDfCap+1 and fail the BETWEEN, which
     * is exactly the old count-then-semi-join semantics in one scan. */
-  private def rareGroups(src: DataFrame, key: String): DataFrame = {
+  private[graft] def rareGroups(src: DataFrame, key: String): DataFrame = {
     // the collected value column is doc_id by contract (ADVICE r18: a
     // caller with a differently named id column would hit an opaque
     // AnalysisException — or silently collect a stray doc_id column)
@@ -1249,7 +1249,7 @@ object DedupOps {
     * out of the grouped row — one row per (key, pair) occurrence, so
     * callers `.distinct()` (containment) or count multiplicity per pair
     * (span's n_shared_fp). */
-  private def rarePairs(groups: DataFrame): DataFrame =
+  private[graft] def rarePairs(groups: DataFrame): DataFrame =
     groups
       .select(explode(col("ds")).as("doc_a"), col("ds"))
       .select(col("doc_a"), explode(col("ds")).as("doc_b"))

@@ -1,6 +1,5 @@
 package graft
 
-import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
 /** SURVEY.md §2.10 / round 6 — the ANN probe budget at scale: at ×8 the
@@ -25,34 +24,11 @@ class AnnScaleSpec extends AnyFunSuite {
   import SparkFixture.{spark, sfDir}
 
   /** ×8 planted corpus, built once per suite run (both the RP and the IVF
-    * test search the same corpus). */
-  private lazy val plantedX8Dir: String = {
-    val dir = graft.util.Scratch.dir("ann_scale_x8")
-    val emb = spark.read.parquet(s"$sfDir/embeddings.parquet")
-    // 8 rotated replicas (norm-preserving, direction-new — the ScaleCheck
-    // growth model); replica 0 keeps vec_id 0 as the query
-    val corpus = (0 until 8).map { r =>
-      val rot = r % 64
-      emb.withColumn("vec_id", col("vec_id") + lit(r * 10000000L))
-        .withColumn("embedding",
-          expr(s"concat(slice(embedding, $rot + 1, 64 - $rot), " +
-            s"slice(embedding, 1, $rot))"))
-    }.reduce(_ unionByName _)
-    // 25 planted near-neighbors of the query: per-dimension relative
-    // perturbation x·(1 + 0.4·u), u deterministic uniform(-0.5, 0.5) from
-    // xxhash64(plant id, dim) — cosine to the query ≈ 1 - 0.4²/24 ≈ 0.993,
-    // far above the ~0.4 background
-    val planted = emb.filter(col("vec_id") === 0)
-      .crossJoin(spark.range(25).select(col("id").as("pid")))
-      .select((lit(90000000L) + col("pid")).as("vec_id"),
-        expr("transform(embedding, (x, d) -> cast(x * (1.0 + 0.4 * " +
-          "(pmod(xxhash64(pid, d), 1000) / 1000.0 - 0.5)) as float))")
-          .as("embedding"),
-        lit(9).as("label"))
-    corpus.unionByName(planted)
-      .write.mode("overwrite").parquet(s"$dir/embeddings.parquet")
-    dir
-  }
+    * test search the same corpus): 8 rotated replicas, replica 0 keeping
+    * vec_id 0 as the query, plus 25 planted near-neighbors of it at ids
+    * 9·10⁷ + 0..24. */
+  private lazy val plantedX8Dir: String =
+    graft.util.Replicas.plantedEmb(spark, sfDir, 8, "ann_scale_x8", 90000000L)
 
   private def exactTop20(dir: String): Array[Long] = {
     val exact = graft.llm.SimilarityOps.llmSimilarityTopk(spark, dir)

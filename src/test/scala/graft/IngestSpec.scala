@@ -1,5 +1,7 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
 
@@ -77,5 +79,38 @@ class IngestSpec extends AnyFunSuite {
     assert(got(0) == "plain ascii 123!")
     assert(got(1) == "caf? ??")
     assert(got(2) == "tab?here")
+  }
+
+  test("scan_glob_dynamic reads every bucket file and logs no FileNotFoundException") {
+    import org.apache.logging.log4j.{Level, LogManager}
+    import org.apache.logging.log4j.core.{LogEvent, LoggerContext}
+    import org.apache.logging.log4j.core.appender.AbstractAppender
+    import org.apache.logging.log4j.core.config.Property
+    val logged = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val appender = new AbstractAppender("ingest-spec-capture", null, null, true,
+        Property.EMPTY_ARRAY) {
+      override def append(e: LogEvent): Unit = {
+        val thrown = Iterator.iterate(e.getThrown)(_.getCause).takeWhile(_ != null)
+        logged.add((e.getMessage.getFormattedMessage +: thrown.map(_.toString).toSeq)
+          .mkString(" | "))
+      }
+    }
+    appender.start()
+    val ctx = LogManager.getContext(false).asInstanceOf[LoggerContext]
+    val root = ctx.getConfiguration.getRootLogger
+    root.addAppender(appender, Level.WARN, null)
+    ctx.updateLoggers()
+    val got = try graft.etl.Ingest.scanGlobDynamic(spark, SparkFixture.sfDir).collect()
+    finally {
+      root.removeAppender(appender.getName)
+      ctx.updateLoggers()
+      appender.stop()
+    }
+    val fnf = logged.asScala.filter(_.contains("FileNotFoundException"))
+    assert(fnf.isEmpty, "logged:\n" + fnf.mkString("\n"))
+    val want = graft.tables.Tables(spark, SparkFixture.sfDir, "events")
+      .groupBy("event_type").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    assert(got.map(r => r.getString(0) -> r.getLong(1)).toMap == want)
   }
 }

@@ -98,4 +98,34 @@ class MemoRuleSpec extends AnyFunSuite {
       "a main must be a README entry point or be forked by a spec under src/test:\n" +
         orphans.map { case (n, at) => s"$at: $n" }.mkString("\n"))
   }
+
+  /** Whether a non-ASCII char sits inside a string literal of `line`:
+    * scanning left to right, an unescaped `"` opens or closes a literal
+    * and a `//` outside one ends the code. */
+  private def nonAsciiInLiteral(line: String): Boolean = {
+    var inLiteral = false
+    var i = 0
+    while (i < line.length && (inLiteral || !line.startsWith("//", i))) {
+      val c = line(i)
+      if (inLiteral && c > 127) return true
+      if (c == '"' && (i == 0 || line(i - 1) != '\\')) inLiteral = !inLiteral
+      i += 1
+    }
+    false
+  }
+
+  test("entry-point mains print ASCII: no string literal holds a non-ASCII char") {
+    // a non-UTF-8 default charset prints such a char as '?'
+    val mains = Seq("Bench.scala", "Verify.scala", "ScaleCheck.scala", "util/PlanDump.scala")
+      .map(mainRoot.resolve)
+    val offenders = for {
+      f <- mains
+      (line, i) <- Files.readAllLines(f).asScala.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if nonAsciiInLiteral(line)
+    } yield s"$f:${i + 1}: $code"
+    assert(offenders.isEmpty,
+      "keep the mains' output ASCII:\n" + offenders.mkString("\n"))
+  }
 }
