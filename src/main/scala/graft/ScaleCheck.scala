@@ -318,8 +318,7 @@ object ScaleCheck {
       clearAll()
       scalesOr(8, 32).foreach { scale =>
         val dir = docsDir(scale, "cluster_docs")
-        val (res, t) = timed(DedupOps.llmDedupCluster(spark, dir))
-        val rounds = DedupOps.lastClusterRounds.get
+        val ((res, rounds), t) = timed(DedupOps.clusters(spark, dir))
         val maxCluster = res.groupBy("cluster_id").count()
           .agg(max("count")).head.getLong(0)
         val bound = math.ceil(math.log(maxCluster.toDouble) / math.log(2)).toInt + 2
@@ -414,8 +413,9 @@ object ScaleCheck {
         val ddir = docsDir(scale, "width_docs")
         val nDocs = docCount(ddir)
         val mh = DedupOps.minhashCandidates(spark, ddir).count()
-        val sh = DedupOps.simhashCandidates(spark, ddir).count()
-        val shNb = DedupOps.simhashCandidates(spark, ddir, useBand = false).count()
+        val geom = DedupOps.simGeom(spark, ddir)
+        val sh = DedupOps.simhashCandidates(spark, ddir, geom).count()
+        val shNb = DedupOps.simhashCandidates(spark, ddir, geom, useBand = false).count()
         clearAll()
         val edir = embDir(scale, "width_emb")
         val nVecs = DedupOps.embCount(spark, edir)

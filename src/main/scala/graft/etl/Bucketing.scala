@@ -90,7 +90,9 @@ object Bucketing {
     val dir = Scratch.dir(s"sorted_runs_${graft.util.Scratch.pathTag(sfDir)}")
     Tables(spark, sfDir, "orders")
       .repartitionByRange(8, col("o_orderdate"))
-      .sortWithinPartitions("o_orderdate")
+      // o_orderkey (unique) breaks date ties, so the files are the same
+      // bytes every run instead of tied rows in shuffle-arrival order
+      .sortWithinPartitions("o_orderdate", "o_orderkey")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)
       .filter(col("o_orderdate") >= lit("1996-01-01")
@@ -125,7 +127,7 @@ object Bucketing {
     o.crossJoin(broadcast(bounds))
       .withColumn("z", z)
       .repartitionByRange(8, col("z"))
-      .sortWithinPartitions("z")
+      .sortWithinPartitions("z", "o_orderkey") // unique tie-break, as in sinkSortedRuns
       .drop("z", "ck_min", "ck_max", "tp_min", "tp_max")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)

@@ -277,11 +277,6 @@ object DedupOps {
   val llmDedupNgramJaccard: QFn = (spark, sfDir) =>
     verifiedPairs(spark, sfDir).orderBy("doc_a", "doc_b")
 
-  /** Rounds the last llmDedupCluster invocation ran to convergence —
-    * ScaleCheck records it against the ⌈log2⌉ pointer-doubling bound. */
-  private[graft] val lastClusterRounds =
-    new java.util.concurrent.atomic.AtomicInteger(-1)
-
   /** Near-dup cluster resolution — connected components over the
     * exact-verified near-dup pair graph (LSH candidates → exact Jaccard
     * >= 0.5, [[verifiedPairs]]) via min-label propagation with pointer
@@ -300,20 +295,28 @@ object DedupOps {
     * union-find ground truth. Output: one row per doc with its cluster id;
     * `is_canonical` marks the cluster representative (min doc_id) a dedup
     * pass would keep. */
-  val llmDedupCluster: QFn = (spark, sfDir) =>
-    connectedComponents(
+  val llmDedupCluster: QFn = (spark, sfDir) => clusters(spark, sfDir)._1
+
+  /** [[llmDedupCluster]]'s frame and the rounds its label loop ran —
+    * ScaleCheck records them against the ⌈log2⌉ pointer-doubling bound. */
+  private[graft] def clusters(spark: SparkSession, sfDir: String): (DataFrame, Int) = {
+    val (labels, rounds) = connectedComponents(
       sigIndex(spark, sfDir).select(col("doc_id"), col("doc_id").as("label")),
       verifiedPairs(spark, sfDir).select("doc_a", "doc_b"))
+    (labels
       .select(col("doc_id"), col("label").as("cluster_id"),
         (col("doc_id") === col("label")).as("is_canonical"))
-      .orderBy("doc_id")
+      .orderBy("doc_id"), rounds)
+  }
 
   /** Min-label connected components over (seed: doc_id,label; pairs:
     * doc_a,doc_b one direction) — the pointer-doubling loop shared by
     * [[llmDedupCluster]] (full graph) and [[llmDedupClusterIncremental]]
     * (base generation + contracted delta graph). Returns the converged
-    * (doc_id, label) frame, label = min reachable seed label. */
-  private[graft] def connectedComponents(seed: DataFrame, pairs: DataFrame): DataFrame = {
+    * (doc_id, label) frame, label = min reachable seed label, and the
+    * number of rounds the loop ran. */
+  private[graft] def connectedComponents(seed: DataFrame,
+      pairs: DataFrame): (DataFrame, Int) = {
     // Round 21 (guide §2.4 — remove shuffles outright): SELF-LOOPS ride in
     // the edge list, so "min over self and neighbors" is ONE join + ONE
     // aggregate per round instead of join + aggregate + a second join of
@@ -391,8 +394,7 @@ object DedupOps {
       labels = next
       rounds += 1
     }
-    lastClusterRounds.set(rounds)
-    labels
+    (labels, rounds)
   }
 
   /** Stored cluster state of the BASE generation (even doc_ids — the
@@ -420,15 +422,10 @@ object DedupOps {
         Tables(spark, sfDir, "documents")
           .filter(pmod(col("doc_id"), lit(2)) === 0)
           .select(col("doc_id"), col("doc_id").as("label")),
-        basePairs)
+        basePairs)._1
         .write.mode("overwrite").parquet(s"$dir/labels")
       spark.read.parquet(s"$dir/labels")
     }
-
-  /** Test hook (the containBroadcastDocCapOverride precedent): NearDupSpec
-    * forces the shuffle-fallback side at fixture scale and pins
-    * byte-identity there too. */
-  @volatile private[graft] var clusterBroadcastDocCapOverride: Option[Long] = None
 
   /** Delta-edge ceiling of the incremental-CC broadcast hints (round 21,
     * ADVICE r20 medium): every frame those hints broadcast — touched
@@ -438,7 +435,7 @@ object DedupOps {
     * sized corpus could force-broadcast past driver comfort and OOM
     * instead of degrading). Worst case admitted here: 2 × 6M endpoints ×
     * (doc_id, label) longs ≈ 190 MB framed — same comfort budget as
-    * [[ContainBroadcastDocCap]]'s 200 MB. Above the cap the hints drop
+    * [[BroadcastDocCap]]'s 200 MB. Above the cap the hints drop
     * and AQE converts from actual exchange sizes. */
   private val ClusterBroadcastEdgeCap = 6000000L
 
@@ -452,72 +449,97 @@ object DedupOps {
         .count()
     }
 
-  /** Whether this corpus admits the broadcast hints: the corpus-docCount
-    * proxy (expansion joins' stored-label side stays scan-only) AND the
-    * delta-edge bound of the frames actually broadcast (ADVICE r20 —
-    * docCount alone said nothing about a dense delta). */
-  private def clusterBcast(spark: SparkSession, sfDir: String): Boolean =
-    docCount(spark, sfDir) <=
-      clusterBroadcastDocCapOverride.getOrElse(ContainBroadcastDocCap) &&
-      deltaPairCount(spark, sfDir) <= ClusterBroadcastEdgeCap
+  /** Plan shape of an operator that joins a corpus-sized table against a
+    * candidate- or delta-sized one: [[Flat]] joins the table whole (the
+    * planner and AQE pick the strategy); [[Restricted]] first narrows it
+    * by a semi-join to the rows the small side can reach, with the small
+    * frames under a broadcast hint when `broadcast`. Both shapes produce
+    * identical rows (NearDupSpec pins each side of each gate). */
+  private[graft] sealed trait Shape {
+    /** `df` under a broadcast hint when this shape carries one. */
+    def hinted(df: DataFrame): DataFrame = this match {
+      case Restricted(true) => broadcast(df)
+      case _ => df
+    }
+  }
+  private[graft] case object Flat extends Shape
+  private[graft] final case class Restricted(broadcast: Boolean) extends Shape
 
-  /** Corpus floor below which the incremental op keeps the FLAT plan
-    * (labels join the delta pairs directly, planner/AQE choose the join
-    * strategy) — the [[ContainRestrictFloor]] precedent, found the same
-    * way: the scale shape's extra stages (endpoint distinct, semi-join,
-    * nested broadcast chains — each a sequential driver stage) are pure
-    * orchestration overhead when the label table is already tiny. The
-    * round-20 confirmation capture measured the scale shape at 2-3× the
-    * flat plan on the 5k-doc bench fixture (9.6-11.0 s vs the 4.0 s
-    * band, reproduced in isolation) while the same shape at 320k+ docs
-    * is flat-in-corpus where the old plan grew superlinearly
-    * (BASELINE.md round-20 follow-up). Same floor value as containment:
-    * the two gates key on the same quantity (is the corpus-sized table
-    * big enough that restricting it beats touching it whole?). */
-  private[graft] val ClusterRestrictFloor = 50000L
+  /** Corpus floor below which the corpus-sized table is joined whole, a
+    * plan decision derived from n (the simChunkGeom / projBitsFor
+    * precedent): the restricted shape's extra stages (candidate or
+    * endpoint distinct, broadcast, semi-join — each a sequential driver
+    * stage) are pure orchestration overhead when the table is tiny.
+    * Found twice with the same value: containment measured ~+1 s in the
+    * bench session at 5k docs (round 18), and the incremental-CC scale
+    * shape measured 2-3× the flat plan on the 5k-doc bench fixture
+    * (9.6-11.0 s vs the 4.0 s band, reproduced in isolation) while the
+    * same shape at 320k+ docs is flat-in-corpus where the old plan grew
+    * superlinearly (BASELINE.md round-20 follow-up). */
+  private val RestrictFloor = 50000L
 
-  /** Test hook (the containRestrictFloorOverride precedent): PlanSpec
-    * forces the scale path at fixture scale to pin its shape; NearDupSpec
-    * forces it to pin byte-identity on both gate sides. */
-  @volatile private[graft] var clusterRestrictFloorOverride: Option[Long] = None
+  /** Broadcast ceiling of the restricted shape (ADVICE r18 / VERDICT r18
+    * #2; tightened ADVICE r19): the restricted frames (candidate docs,
+    * touched endpoints) are bounded above by the corpus count — a
+    * deliberately CONSERVATIVE proxy, since counting them would execute
+    * the expensive candidate subtree a second time, while docCount is
+    * already cached. The cost of the proxy is only a missed broadcast on
+    * >cap corpora whose restricted sets happen to be tiny — and AQE still
+    * converts those to broadcast at runtime from actual exchange sizes.
+    * The cap is sized for the worst case the proxy admits: 25M doc_id
+    * longs ≈ 200 MB broadcast — well under executor/driver memory
+    * comfort on any plausible profile, not just under Spark's 8 GB /
+    * 512M-row BroadcastExchange hard caps past which the hint would FAIL
+    * the job (the r18 cap of 100M put the worst case at 800 MB, near
+    * typical comfort limits — ADVICE r19). Above the cap the semi-join
+    * runs unhinted: both sides shuffle on doc_id — linear, exactly the
+    * keyed join any layout pays — so a pathologically collision-heavy
+    * corpus degrades instead of dying. */
+  private val BroadcastDocCap = 25000000L
 
-  private def clusterScalePath(spark: SparkSession, sfDir: String): Boolean =
-    docCount(spark, sfDir) >=
-      clusterRestrictFloorOverride.getOrElse(ClusterRestrictFloor)
+  /** The one corpus-size policy of the containment and incremental-CC
+    * plans, read from the cached docCount: [[Flat]] below
+    * [[RestrictFloor]] docs, else [[Restricted]] with broadcast hints up
+    * to [[BroadcastDocCap]] docs and while `bcastOk` holds — an extra
+    * bound evaluated only on that side, so the flat path runs no job for
+    * it. */
+  private[graft] def corpusShape(spark: SparkSession, sfDir: String,
+      bcastOk: => Boolean = true): Shape = {
+    val n = docCount(spark, sfDir)
+    if (n < RestrictFloor) Flat else Restricted(n <= BroadcastDocCap && bcastOk)
+  }
 
   /** Contraction stage of [[llmDedupClusterIncremental]], split out
     * because the op's FINAL plan cannot show it: the CC loop eagerly
     * materializes its input (localCheckpoint), so the semi-join /
     * broadcast shape of this frame lives in earlier jobs. PlanSpec pins
     * it here by construction instead. */
-  private[graft] def clusterContraction(spark: SparkSession, sfDir: String): DataFrame = {
+  private[graft] def clusterContraction(spark: SparkSession, sfDir: String,
+      shape: Shape): DataFrame = {
     val base = baseClusters(spark, sfDir)
     val newPairs = verifiedPairs(spark, sfDir)
       .filter(pmod(col("doc_a"), lit(2)) === 1 || pmod(col("doc_b"), lit(2)) === 1)
       .select("doc_a", "doc_b")
-    val (lhs, rhs) =
-      if (!clusterScalePath(spark, sfDir)) (base, base) // flat: join labels whole
-      else {
-        def hinted(df: DataFrame): DataFrame =
-          if (clusterBcast(spark, sfDir)) broadcast(df) else df
+    val labels = shape match {
+      case Flat => base // join labels whole
+      case Restricted(_) =>
         // the touched endpoints — bounded by 2× the delta edge count
         val ends = newPairs.select(col("doc_a").as("doc_id"))
           .unionByName(newPairs.select(col("doc_b").as("doc_id")))
           .distinct()
         // corpus-sized stored labels: one SCAN, restricted to rows that
         // can influence contraction before anything joins them
-        val t = base.join(hinted(ends), Seq("doc_id"), "left_semi")
-        (hinted(t), hinted(t))
-      }
+        shape.hinted(base.join(shape.hinted(ends), Seq("doc_id"), "left_semi"))
+    }
     // contract endpoints through the (possibly restricted) stored labels
     // — delta docs are not in base → coalesce to themselves; self-loops
     // drop. The semi-join only removes base rows matching no pair
     // endpoint, which could never match these left joins: both shapes
     // produce identical rows (NearDupSpec pins it).
     newPairs
-      .join(lhs.select(col("doc_id").as("doc_a"), col("label").as("rep_a")),
+      .join(labels.select(col("doc_id").as("doc_a"), col("label").as("rep_a")),
         Seq("doc_a"), "left")
-      .join(rhs.select(col("doc_id").as("doc_b"), col("label").as("rep_b")),
+      .join(labels.select(col("doc_id").as("doc_b"), col("label").as("rep_b")),
         Seq("doc_b"), "left")
       .select(coalesce(col("rep_a"), col("doc_a")).as("doc_a"),
         coalesce(col("rep_b"), col("doc_b")).as("doc_b"))
@@ -556,31 +578,29 @@ object DedupOps {
     * (twice: restriction + expansion), never shuffled. Identical results
     * by construction — the semi-join only drops base rows matching no
     * pair endpoint, which contributed nothing to the left joins anyway
-    * (NearDupSpec pins byte-equality on both gate sides). Two size gates
-    * pick the shape: below [[ClusterRestrictFloor]] docs the flat plan
-    * stays (the scale shape's extra stages are pure overhead on a tiny
-    * label table — measured 2-3× on the bench fixture), and above
-    * [[ContainBroadcastDocCap]] docs the broadcast hints drop so AQE
-    * converts from actual exchange sizes, degrading to keyed shuffles
-    * instead of dying. Both proxies read the cached docCount — zero
-    * extra jobs. */
-  val llmDedupClusterIncremental: QFn = (spark, sfDir) => {
+    * (NearDupSpec pins byte-equality on both gate sides). [[corpusShape]]
+    * picks the shape: below [[RestrictFloor]] docs the flat plan stays
+    * (the scale shape's extra stages are pure overhead on a tiny label
+    * table — measured 2-3× on the bench fixture), and above
+    * [[BroadcastDocCap]] docs or [[ClusterBroadcastEdgeCap]] delta pairs
+    * the broadcast hints drop so AQE converts from actual exchange sizes,
+    * degrading to keyed shuffles instead of dying. */
+  val llmDedupClusterIncremental: QFn = (spark, sfDir) =>
+    clusterIncremental(spark, sfDir,
+      corpusShape(spark, sfDir, deltaPairCount(spark, sfDir) <= ClusterBroadcastEdgeCap))
+
+  /** [[llmDedupClusterIncremental]] under a given plan shape — NearDupSpec
+    * and PlanSpec pass each shape at fixture scale. */
+  private[graft] def clusterIncremental(spark: SparkSession, sfDir: String,
+      shape: Shape): DataFrame = {
     val base = baseClusters(spark, sfDir)
-    // expansion hints ride the same two gates as the contraction: below
-    // the corpus floor the planner/AQE handle a tiny `reduced` fine, and
-    // above the broadcast cap the hint must be absent (AQE converts from
-    // actual sizes instead)
-    def hinted(df: DataFrame): DataFrame =
-      if (clusterScalePath(spark, sfDir) && clusterBcast(spark, sfDir))
-        broadcast(df)
-      else df
     // LAZY checkpoint (round 21): the contracted edge set feeds THREE
     // consumers (the CC seed's endpoint-distinct, the CC loop's edge list,
     // and the loop's convergence pre-sum over the seed) — uncheckpointed,
     // the contraction joins re-ran once per consumer (measured ~0.4 s each
     // at fixture). One delta-edge-bounded frame, materialized by the first
     // consumer's job, read cached by the rest.
-    val contracted = clusterContraction(spark, sfDir).localCheckpoint(eager = false)
+    val contracted = clusterContraction(spark, sfDir, shape).localCheckpoint(eager = false)
     val deltaDocs = Tables(spark, sfDir, "documents")
       .filter(pmod(col("doc_id"), lit(2)) === 1).select("doc_id")
     // CC node set restricted to TOUCHED nodes — the distinct endpoints of
@@ -600,20 +620,23 @@ object DedupOps {
       .unionByName(contracted.select(col("doc_b").as("doc_id")))
       .distinct()
       .select(col("doc_id"), col("doc_id").as("label"))
-    val reduced = connectedComponents(touchedSeed, contracted)
+    val reduced = connectedComponents(touchedSeed, contracted)._1
     // expand: base docs via their representative; delta docs directly.
     // min over the contracted component = min(base reps ∪ delta docs) =
     // min of the merged full component, since each base rep IS its
     // component's min and delta ids are present verbatim. Left joins +
     // coalesce: nodes the delta never touched keep their stored label
     // (base) or themselves (delta) — exactly what the full seed produced.
+    // The expansion hints ride the contraction's shape: flat leaves a tiny
+    // `reduced` to the planner/AQE, and above the broadcast caps the hint
+    // must be absent (AQE converts from actual sizes instead).
     val baseOut = base
-      .join(hinted(reduced
+      .join(shape.hinted(reduced
         .select(col("doc_id").as("label"), col("label").as("cl"))),
         Seq("label"), "left")
       .select(col("doc_id"), coalesce(col("cl"), col("label")).as("cluster_id"))
     val deltaOut = deltaDocs
-      .join(hinted(reduced), Seq("doc_id"), "left")
+      .join(shape.hinted(reduced), Seq("doc_id"), "left")
       .select(col("doc_id"),
         coalesce(col("label"), col("doc_id")).as("cluster_id"))
     baseOut.unionByName(deltaOut)
@@ -704,12 +727,10 @@ object DedupOps {
   private[graft] def simChunkGeom(n: Long): (Int, Int) =
     if (n <= SimWideThreshold) (8, 16) else (4, 32)
 
-  /** Test hook: FingerprintSpec forces the wide geometry on a small
-    * corpus so the >1M-doc branch is exercised, not just derived. */
-  @volatile private[graft] var simGeomOverride: Option[(Int, Int)] = None
-
-  private def simGeom(spark: SparkSession, sfDir: String): (Int, Int) =
-    simGeomOverride.getOrElse(simChunkGeom(docCount(spark, sfDir)))
+  /** This corpus's chunk geometry — FingerprintSpec passes the wide one
+    * to [[simhashCandidates]] directly to exercise the >1M-doc branch. */
+  private[graft] def simGeom(spark: SparkSession, sfDir: String): (Int, Int) =
+    simChunkGeom(docCount(spark, sfDir))
 
   /** The length band of a fingerprint row: length(bin(x)) is the exact
     * integer bit length of the token count = floor(log2)+1. */
@@ -750,12 +771,12 @@ object DedupOps {
     * rate vs 4×16/64-bit.
     *
     * This is the raw (chunk, cval, band)-collision pair stream, pre-dedup —
-    * split out so ScaleCheck can count candidate work directly.
+    * split out so ScaleCheck can count candidate work directly. `geom` is
+    * the (chunks, bits) split, [[simGeom]] for the registered ops.
     * `useBand=false` drops the length-band key so ScaleCheck can measure
     * what the 128-bit chunk geometry alone holds. */
   private[graft] def simhashCandidates(spark: SparkSession, sfDir: String,
-                                       useBand: Boolean = true): DataFrame = {
-    val geom = simGeom(spark, sfDir)
+      geom: (Int, Int), useBand: Boolean = true): DataFrame = {
     val chunked = simChunks(simIndex(spark, sfDir)
       .withColumn("lb", if (useBand) lengthBand else lit(0)), geom)
     val a = chunked.withColumnsRenamed(Map(
@@ -771,7 +792,7 @@ object DedupOps {
 
   /** Top pairs by full 128-bit Hamming distance over any chunk-collision
     * pair stream — the ranking both SimHash twins share. */
-  private def simhashRanked(pairs: DataFrame): DataFrame =
+  private[graft] def simhashRanked(pairs: DataFrame): DataFrame =
     pairs
       .groupBy("doc_a", "doc_b")
       .agg(first(expr("bit_count(sim_a ^ sim_b) + bit_count(sim_a2 ^ sim_b2)")).as("hamming"))
@@ -779,7 +800,7 @@ object DedupOps {
       .limit(VerifyBounds.SimhashPairCap)
 
   val llmDedupSimhash: QFn = (spark, sfDir) =>
-    simhashRanked(simhashCandidates(spark, sfDir))
+    simhashRanked(simhashCandidates(spark, sfDir, simGeom(spark, sfDir)))
 
   // ---- Embedding near-dup: random-hyperplane sign bits -> 2^bits buckets;
   // exact cosine only within buckets. Projections are seeded (42) so the
@@ -1487,44 +1508,6 @@ object DedupOps {
         round(col("n_shared").cast("double") / col("n_b"), 4).as("cont_b"))
       .orderBy("doc_a", "doc_b")
 
-  /** Corpus floor of [[llmDedupContainmentIndexed]]'s candidate-doc
-    * restriction, a plan decision derived from n (the simChunkGeom /
-    * projBitsFor precedent): below
-    * [[ContainRestrictFloor]] docs the full-corpus set aggregate is
-    * trivially cheap and the restriction's extra stages (candidate
-    * union/distinct, broadcast, semi-join) are pure orchestration
-    * overhead (~+1 s in the bench session at 5k docs), so small corpora
-    * keep the flat two-stage plan. */
-  private val ContainRestrictFloor = 50000L
-
-  /** Test hook (the simGeomOverride precedent): PlanSpec forces the
-    * restricted path at fixture scale to pin its plan shape. */
-  @volatile private[graft] var containRestrictFloorOverride: Option[Long] = None
-
-  /** Broadcast ceiling of the candidate-doc restriction (ADVICE r18 /
-    * VERDICT r18 #2; tightened ADVICE r19): candDocs is bounded above by
-    * the corpus count (every candidate doc is a doc) — a deliberately
-    * CONSERVATIVE proxy, since counting candDocs itself would execute
-    * the expensive candidate subtree a second time (it is the pass the
-    * exchange-reuse design shares), while docCount is already cached.
-    * The cost of the proxy is only a missed broadcast on >cap corpora
-    * whose candidate sets happen to be tiny — and AQE still converts
-    * those to broadcast at runtime from actual exchange sizes. The cap
-    * is sized for the worst case the proxy admits: 25M doc_id longs
-    * ≈ 200 MB broadcast — well under executor/driver memory comfort on
-    * any plausible profile, not just under Spark's 8 GB / 512M-row
-    * BroadcastExchange hard caps past which the hint would FAIL the job
-    * (the r18 cap of 100M put the worst case at 800 MB, near typical
-    * comfort limits — ADVICE r19). Above the cap the semi-join runs
-    * unhinted: both sides shuffle on doc_id — linear, exactly the keyed
-    * join any layout pays — so a pathologically collision-heavy corpus
-    * degrades instead of dying. */
-  private[graft] val ContainBroadcastDocCap = 25000000L
-
-  /** Test hook: NearDupSpec/PlanSpec force the shuffle-fallback side at
-    * fixture scale (byte-identity + no-BroadcastExchange pin). */
-  @volatile private[graft] var containBroadcastDocCapOverride: Option[Long] = None
-
   /** Containment dedup over the MATERIALIZED gram index — the scale-path
     * twin of [[llmDedupContainment]], same semantics and same full DuckDB
     * oracle. Candidate generation is ONE exchange-free pass over the
@@ -1560,21 +1543,25 @@ object DedupOps {
     * pair-distinct EXCHANGE, which Spark's exchange reuse shares across
     * all consumers (PlanSpec pins the ReusedExchange) — cheaper than an
     * eager localCheckpoint, whose extra materialization cost the
-    * fixture-scale row ~1.1 s in the bench session. */
-  val llmDedupContainmentIndexed: QFn = (spark, sfDir) => {
+    * fixture-scale row ~1.1 s in the bench session. [[corpusShape]] gates
+    * the restriction: below its floor the full-corpus set aggregate is
+    * trivially cheap and small corpora keep the flat two-stage plan. */
+  val llmDedupContainmentIndexed: QFn = (spark, sfDir) =>
+    containmentIndexed(spark, sfDir, corpusShape(spark, sfDir))
+
+  /** [[llmDedupContainmentIndexed]] under a given plan shape — NearDupSpec
+    * and PlanSpec pass each shape at fixture scale. */
+  private[graft] def containmentIndexed(spark: SparkSession, sfDir: String,
+      shape: Shape): DataFrame = {
     val grams = spark.table(gramTable(spark, sfDir)).select("doc_id", "g")
     val cand = rarePairs(rareGroups(grams, "g")).distinct()
-    val floor = containRestrictFloorOverride.getOrElse(ContainRestrictFloor)
-    val bcastCap = containBroadcastDocCapOverride.getOrElse(ContainBroadcastDocCap)
-    val setSrc =
-      if (docCount(spark, sfDir) < floor) grams
-      else {
+    val setSrc = shape match {
+      case Flat => grams
+      case Restricted(_) =>
         val candDocs = cand.select(col("doc_a").as("doc_id"))
           .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-        val candSide =
-          if (docCount(spark, sfDir) <= bcastCap) broadcast(candDocs) else candDocs
-        grams.join(candSide, Seq("doc_id"), "left_semi")
-      }
+        grams.join(shape.hinted(candDocs), Seq("doc_id"), "left_semi")
+    }
     containmentVerified(
       cand,
       // sorted like gramSets (round 22) so verification runs the native

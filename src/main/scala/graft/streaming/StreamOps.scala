@@ -147,15 +147,11 @@ object StreamOps {
     * executor heap — fine at sf0.1, an OOM at 100 TB state (stream-stream
     * join state, million-user session maps). RocksDB spills to local SSD,
     * keeps a bounded block cache, and checkpoint-uploads SST files
-    * incrementally. StreamingSpec runs the sessionizer under BOTH
-    * providers and asserts identical results, so the twin stays honest. */
+    * incrementally, and it won the provider A/Bs (BASELINE.md rounds 9
+    * and 17). StreamingSpec runs the sessionizer under BOTH providers and
+    * asserts identical results, so the twin stays honest. */
   private[graft] val RocksProvider =
     "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider"
-
-  /** Test hook: StreamingSpec sets this to pin a run to a specific
-    * provider (e.g. the HDFS twin) — None means RocksDB, the winner of
-    * the provider A/Bs (BASELINE.md rounds 9 and 17). */
-  @volatile private[graft] var providerOverride: Option[String] = None
 
   /** Dedicated child session for a stateful stream, with a shuffle-partition
     * count sized to the stream. The partition count of a stateful query is a
@@ -167,16 +163,17 @@ object StreamOps {
     * A child session has its OWN SQLConf over the shared SparkContext, so
     * the shared session's conf is never mutated — a toggle-and-restore on
     * the shared conf could leak 4 partitions into any query planned
-    * concurrently (e.g. parallel test suites). */
-  private[graft] def streamSession(spark: SparkSession): SparkSession = {
+    * concurrently (e.g. parallel test suites). `provider` is the
+    * state-store provider class. */
+  private[graft] def streamSession(spark: SparkSession,
+      provider: String = RocksProvider): SparkSession = {
     val ss = spark.newSession()
     ss.conf.set("spark.sql.shuffle.partitions", "4")
-    val p = providerOverride.getOrElse(RocksProvider)
-    ss.conf.set("spark.sql.streaming.stateStore.providerClass", p)
+    ss.conf.set("spark.sql.streaming.stateStore.providerClass", provider)
     // Checkpoint retention, maintenance cadence and the snapshot threshold
     // stay at Spark's defaults: their A/Bs (BASELINE rounds 18 and 19)
     // moved nothing measurable.
-    if (p == RocksProvider) {
+    if (provider == RocksProvider) {
       // changelog checkpointing: upload per-batch CHANGELOGS instead of
       // SST snapshots — attacks exactly the per-batch commit floor the
       // round-9 A/B priced at ~1.3× vs HDFS (snapshots still happen, in
@@ -541,14 +538,13 @@ object StreamOps {
         round(col("sum_dec").cast("double"), 2).as("sum_value"))
 
   /** Run a session plan over the drop dir `src` (one micro-batch per drop)
-    * into a memory sink checkpointed under `base`. */
-  private def sessions(spark: SparkSession, plan: DataFrame => DataFrame, op: String,
-      schema: StructType, src: String, base: String): DataFrame = {
-    val ss = streamSession(spark)
+    * in the stream session `ss` into a memory sink checkpointed under
+    * `base`. */
+  private def sessions(ss: SparkSession, plan: DataFrame => DataFrame, op: String,
+      schema: StructType, src: String, base: String): DataFrame =
     ss.table(drain(plan(fileStream(ss, schema, src, perDrop = true)), op, base)(
         _.format("memory")))
       .orderBy("user_id", "session_start")
-  }
 
   /** Stage `drops` under `base` and run [[sessionStatePlan]] over them —
     * StreamingSpec's synthetic idle-user case and StateRecoverSpec's
@@ -556,8 +552,8 @@ object StreamOps {
   private[graft] def runSessionState(spark: SparkSession, drops: Seq[DataFrame],
                                      base: String): DataFrame = {
     stageDrops(drops, base)
-    sessions(spark, sessionStatePlan, "stream_session_state", drops.head.schema,
-      s"$base/src", base)
+    sessions(streamSession(spark), sessionStatePlan, "stream_session_state",
+      drops.head.schema, s"$base/src", base)
   }
 
   /** Stage `drops` under `base` and run [[sessionWindowPlan]] over them —
@@ -566,8 +562,8 @@ object StreamOps {
   private[graft] def runSessionWindow(spark: SparkSession, drops: Seq[DataFrame],
                                       base: String): DataFrame = {
     stageDrops(drops, base)
-    sessions(spark, sessionWindowPlan, "stream_session_window", drops.head.schema,
-      s"$base/src", base)
+    sessions(streamSession(spark), sessionWindowPlan, "stream_session_window",
+      drops.head.schema, s"$base/src", base)
   }
 
   /** The per-user event frame both sessionizer fixtures split. */
@@ -596,8 +592,12 @@ object StreamOps {
     * the state carry-over. Sessions emitted = closed by a gap event OR
     * flushed by the watermark timeout; only sessions still alive within
     * the watermark horizon of the last event remain unemitted. */
-  val streamSessionState: QFn = (spark, sfDir) =>
-    sessions(spark, sessionStatePlan, "stream_session_state",
+  val streamSessionState: QFn = sessionState(RocksProvider)
+
+  /** [[streamSessionState]] on the state-store `provider` — StreamingSpec
+    * runs the HDFS-backed twin through it. */
+  private[graft] def sessionState(provider: String): QFn = (spark, sfDir) =>
+    sessions(streamSession(spark, provider), sessionStatePlan, "stream_session_state",
       sessionEv(spark, sfDir).schema, s"${sessionStateFix(spark, sfDir)}/src",
       Scratch.dir("stream_session_state")) // fresh ckpt per run
 
@@ -617,7 +617,7 @@ object StreamOps {
   /** [[sessionWindowPlan]] over the same two time-split drops as
     * [[streamSessionState]]. */
   val streamSessionWindow: QFn = (spark, sfDir) =>
-    sessions(spark, sessionWindowPlan, "stream_session_window",
+    sessions(streamSession(spark), sessionWindowPlan, "stream_session_window",
       sessionWindowEv(spark, sfDir).schema, s"${sessionWindowFix(spark, sfDir)}/src",
       Scratch.dir("stream_session_window")) // fresh ckpt per run
 

@@ -1,5 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
+import scala.jdk.CollectionConverters._
+
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 import org.scalatest.funsuite.AnyFunSuite
@@ -74,6 +78,36 @@ class DeterminismSpec extends AnyFunSuite {
     } finally prev.foreach {
       case (k, Some(v)) => spark.conf.set(k, v)
       case (k, None) => spark.conf.unset(k)
+    }
+  }
+
+  test("sort-on-write sinks write the same bytes every run, part file by part file") {
+    // the layout sinks range-partition and sort within each partition;
+    // a sort key with ties leaves tied rows in shuffle-arrival order, so
+    // the files (and the byte floor ScaleCheck's sink curve records)
+    // would differ from run to run
+    // (part index, bytes) of each part file, in part-index order
+    def parts(dir: String): Seq[(String, Seq[Byte])] = {
+      val ls = Files.list(Paths.get(dir))
+      try ls.iterator().asScala.map(_.getFileName.toString)
+        .filter(_.startsWith("part-")).toSeq.sorted
+        .map(f => f.take(10) -> Files.readAllBytes(Paths.get(dir, f)).toSeq)
+      finally ls.close()
+    }
+    val tag = graft.util.Scratch.pathTag(sfDir)
+    Seq("sorted_runs" -> graft.etl.Bucketing.sinkSortedRuns,
+      "zorder" -> graft.etl.Bucketing.sinkZorderCluster).foreach { case (name, op) =>
+      // keep(), not dir(): dir() would wipe the operator's output
+      def run(): Seq[(String, Seq[Byte])] = {
+        op(spark, sfDir)
+        parts(graft.util.Scratch.keep(s"${name}_$tag"))
+      }
+      val first = run()
+      val second = run()
+      assert(first.nonEmpty && first.map(_._1) == second.map(_._1), s"$name part files")
+      first.zip(second).foreach { case ((part, a), (_, b)) =>
+        assert(a == b, s"$name $part differs between two runs")
+      }
     }
   }
 

@@ -133,13 +133,9 @@ class FingerprintSpec extends AnyFunSuite {
     // a brute force with 32-bit chunks over the same fingerprints.
     assert(graft.llm.DedupOps.simChunkGeom(1000000L) == ((8, 16)))
     assert(graft.llm.DedupOps.simChunkGeom(1000001L) == ((4, 32)))
-    assert(graft.llm.DedupOps.simGeomOverride.isEmpty)
-    val got =
-      try {
-        graft.llm.DedupOps.simGeomOverride = Some((4, 32))
-        graft.llm.DedupOps.llmDedupSimhash(spark, sfDir)
-          .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-      } finally graft.llm.DedupOps.simGeomOverride = None
+    import graft.llm.DedupOps.{simhashCandidates, simhashRanked}
+    val got = simhashRanked(simhashCandidates(spark, sfDir, (4, 32)))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     val sim = graft.llm.DedupOps.simIndex(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).sortBy(_._1)
     def chunks32(lo: Long, hi: Long): Seq[Long] =

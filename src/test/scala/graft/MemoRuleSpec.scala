@@ -33,6 +33,62 @@ class MemoRuleSpec extends AnyFunSuite {
       "keep session-resident state in a graft.util.SessionMemo:\n" + offenders.mkString("\n"))
   }
 
+  /** Each line of a source cut down to the code that sits directly in an
+    * `object` body: comments, string and char literals, and everything
+    * inside a nested block (a method body, a lambda, a class body) drop. */
+  private def objectLevel(lines: Seq[String]): Seq[String] = {
+    val ObjectDecl = """\bobject\s+\w+""".r
+    val CharLit = """'\\?.'""".r
+    var scopes = List.empty[Boolean] // open braces, innermost first; true = object body
+    var inComment = false
+    var literal = "" // the open string delimiter, if any
+    lines.map { line =>
+      val code, out = new StringBuilder
+      var i = 0
+      while (i < line.length) {
+        val rest = line.substring(i)
+        if (inComment) {
+          if (rest.startsWith("*/")) { inComment = false; i += 2 } else i += 1
+        } else if (literal.nonEmpty) {
+          if (literal == "\"" && rest.startsWith("\\")) i += 2
+          else if (rest.startsWith(literal)) { i += literal.length; literal = "" }
+          else i += 1
+        } else if (rest.startsWith("//")) i = line.length
+        else if (rest.startsWith("/*")) { inComment = true; i += 2 }
+        else if (rest.startsWith("\"\"\"")) { literal = "\"\"\""; i += 3 }
+        else if (rest.startsWith("\"")) { literal = "\""; i += 1 }
+        else CharLit.findPrefixOf(rest) match {
+          case Some(lit) => i += lit.length
+          case None =>
+            line(i) match {
+              case '{' => scopes = ObjectDecl.findFirstIn(code).nonEmpty :: scopes
+              case '}' => scopes = scopes.drop(1)
+              case c => if (scopes.headOption.contains(true)) out += c
+            }
+            code += line(i)
+            i += 1
+        }
+      }
+      out.toString
+    }
+  }
+
+  test("operator modules hold no JVM-global mutable state") {
+    // an object-level var, @volatile or atomic field is one value for
+    // every session and thread in the JVM: pass plan choices as arguments
+    // instead. Method-local vars are exempt.
+    val Global = """\bvar\b|@volatile|\batomic\.|\bAtomic[A-Z]""".r
+    val files = Seq("llm", "analytics", "etl", "streaming").map(mainRoot.resolve).flatMap(sources)
+    assert(files.nonEmpty)
+    val offenders = for {
+      f <- files
+      (code, i) <- objectLevel(Files.readAllLines(f).asScala.toSeq).zipWithIndex
+      if Global.findFirstIn(code).nonEmpty
+    } yield s"$f:${i + 1}: ${code.trim}"
+    assert(offenders.isEmpty,
+      "keep operator state out of object-level mutable fields:\n" + offenders.mkString("\n"))
+  }
+
   test("index tables have one bucketed writer") {
     val llm = Paths.get("src/main/scala/graft/llm")
     val sites = for {

@@ -182,29 +182,20 @@ class NearDupSpec extends AnyFunSuite {
   test("containment's candidate-restricted big-corpus path is result-invisible") {
     // the ≥50k-doc plan (candidate-doc semi-join under the set aggregate,
     // round 18) never runs at fixture scale, so the DuckDB oracle cannot
-    // cover it — force it via the test hook and require byte-identical
-    // rows to the default path AND the in-memory twin
+    // cover it — build it with the restricted shape and require
+    // byte-identical rows to the default path AND the in-memory twin
+    import graft.llm.DedupOps.{Restricted, containmentIndexed}
     val default = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
       .collect().map(_.toString).sorted
-    graft.llm.DedupOps.containRestrictFloorOverride = Some(0L)
-    val restricted =
-      try graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
-        .collect().map(_.toString).sorted
-      finally graft.llm.DedupOps.containRestrictFloorOverride = None
+    val restricted = containmentIndexed(spark, sfDir, Restricted(broadcast = true))
+      .collect().map(_.toString).sorted
     assert(restricted.sameElements(default) && default.nonEmpty)
     // round 19 (ADVICE r18): above the broadcast doc cap the candidate
     // semi-join degrades to a shuffled plan instead of a BroadcastExchange
-    // that would hard-fail past Spark's 8 GB/512M-row limits — force BOTH
-    // gates and require the same bytes a third time
-    graft.llm.DedupOps.containRestrictFloorOverride = Some(0L)
-    graft.llm.DedupOps.containBroadcastDocCapOverride = Some(0L)
-    val shuffled =
-      try graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
-        .collect().map(_.toString).sorted
-      finally {
-        graft.llm.DedupOps.containRestrictFloorOverride = None
-        graft.llm.DedupOps.containBroadcastDocCapOverride = None
-      }
+    // that would hard-fail past Spark's 8 GB/512M-row limits — build the
+    // unhinted restricted shape and require the same bytes a third time
+    val shuffled = containmentIndexed(spark, sfDir, Restricted(broadcast = false))
+      .collect().map(_.toString).sorted
     assert(shuffled.sameElements(default))
     val mem = graft.llm.DedupOps.llmDedupContainment(spark, sfDir)
       .collect().map(_.toString).sorted
@@ -246,30 +237,20 @@ class NearDupSpec extends AnyFunSuite {
   }
 
   test("incremental cluster maintenance equals from-scratch on every gate side") {
-    // round 20: the op has two size gates — ClusterRestrictFloor picks
-    // flat vs scale shape, ContainBroadcastDocCap picks hinted vs
-    // AQE-fallback within the scale shape. The default fixture run above
-    // pins the flat side; force the other two combinations and pin
-    // byte-identity for each.
+    // round 20: the op has two size gates — the restrict floor picks flat
+    // vs scale shape, the broadcast caps pick hinted vs AQE-fallback
+    // within the scale shape. The default fixture run above pins the flat
+    // side; build the other two shapes and pin byte-identity for each.
+    import graft.llm.DedupOps.{Restricted, clusterIncremental}
     val full = graft.llm.DedupOps.llmDedupCluster(spark, sfDir)
       .collect().map(_.toString)
     // scale shape, broadcasts hinted
-    graft.llm.DedupOps.clusterRestrictFloorOverride = Some(0L)
-    val scaleB =
-      try graft.llm.DedupOps.llmDedupClusterIncremental(spark, sfDir)
-        .collect().map(_.toString)
-      finally graft.llm.DedupOps.clusterRestrictFloorOverride = None
+    val scaleB = clusterIncremental(spark, sfDir, Restricted(broadcast = true))
+      .collect().map(_.toString)
     assert(scaleB.toSeq == full.toSeq && scaleB.nonEmpty)
     // scale shape, above the broadcast cap (unhinted shuffled joins)
-    graft.llm.DedupOps.clusterRestrictFloorOverride = Some(0L)
-    graft.llm.DedupOps.clusterBroadcastDocCapOverride = Some(0L)
-    val scaleS =
-      try graft.llm.DedupOps.llmDedupClusterIncremental(spark, sfDir)
-        .collect().map(_.toString)
-      finally {
-        graft.llm.DedupOps.clusterRestrictFloorOverride = None
-        graft.llm.DedupOps.clusterBroadcastDocCapOverride = None
-      }
+    val scaleS = clusterIncremental(spark, sfDir, Restricted(broadcast = false))
+      .collect().map(_.toString)
     assert(scaleS.toSeq == full.toSeq && scaleS.nonEmpty)
   }
 
@@ -289,14 +270,14 @@ class NearDupSpec extends AnyFunSuite {
     // it is EMITTED, adopting the min label reachable through seeded
     // neighbors (its own id never acts as a label: no self-loop was seeded)
     val pairs = Seq((20L, 30L)).toDF("doc_a", "doc_b")
-    val out = graft.llm.DedupOps.connectedComponents(seed, pairs)
+    val out = graft.llm.DedupOps.connectedComponents(seed, pairs)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out == Set((10L, 10L), (20L, 20L), (30L, 20L)),
       s"stray-endpoint semantics changed: $out")
     // and with the contract HELD (all endpoints seeded) the node universe
     // is exactly the seed — the premise the shipped callers rely on
     val seeded = Seq((10L, 10L), (20L, 20L), (30L, 30L)).toDF("doc_id", "label")
-    val out2 = graft.llm.DedupOps.connectedComponents(seeded, pairs)
+    val out2 = graft.llm.DedupOps.connectedComponents(seeded, pairs)._1
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     assert(out2 == Set((10L, 10L), (20L, 20L), (30L, 20L)))
   }

@@ -261,36 +261,32 @@ class PlanSpec extends AnyFunSuite {
 
   test("indexed containment's big-corpus path restricts sets and reuses the candidate exchange") {
     // round 18 (candidate-restricted verification sets, gated on corpus
-    // size): force the restricted path at fixture scale via the test
-    // hook. The candidate subtree is referenced three times (pair join +
-    // both branches of the doc-id restriction union) but must be
-    // COMPUTED once — its pair-distinct exchange is the reuse point. A
-    // refactor that breaks canonicalized-subtree equality (e.g.
-    // diverging column aliases between the references) would silently
-    // triple the gram pass at 100 TB.
-    graft.llm.DedupOps.containRestrictFloorOverride = Some(0L)
-    try {
-      val df = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
-      df.collect()
-      val p = plan(df)
-      assert(p.contains("ReusedExchange"),
-        s"candidate exchange must be reused across its consumers:\n$p")
-      assert(p.contains("LeftSemi"),
-        s"set assembly must be restricted by the candidate-doc semi-join:\n$p")
-      assert("""Exchange hashpartitioning\(g#""".r.findFirstIn(p).isEmpty,
-        s"gram-keyed stages must stay exchange-free on the restricted path:\n$p")
-    } finally graft.llm.DedupOps.containRestrictFloorOverride = None
+    // size): build the restricted shape at fixture scale. The candidate
+    // subtree is referenced three times (pair join + both branches of
+    // the doc-id restriction union) but must be COMPUTED once — its
+    // pair-distinct exchange is the reuse point. A refactor that breaks
+    // canonicalized-subtree equality (e.g. diverging column aliases
+    // between the references) would silently triple the gram pass at
+    // 100 TB.
+    import graft.llm.DedupOps.{Restricted, containmentIndexed}
+    val df = containmentIndexed(spark, sfDir, Restricted(broadcast = true))
+    df.collect()
+    val p = plan(df)
+    assert(p.contains("ReusedExchange"),
+      s"candidate exchange must be reused across its consumers:\n$p")
+    assert(p.contains("LeftSemi"),
+      s"set assembly must be restricted by the candidate-doc semi-join:\n$p")
+    assert("""Exchange hashpartitioning\(g#""".r.findFirstIn(p).isEmpty,
+      s"gram-keyed stages must stay exchange-free on the restricted path:\n$p")
   }
 
   test("indexed containment's candidate semi-join degrades to a shuffle above the broadcast cap") {
     // round 19 (ADVICE r18 / VERDICT r18 #2): the candidate-doc set is
     // bounded only by the corpus, and BroadcastExchange hard-fails past
-    // 8 GB / 512M rows — above ContainBroadcastDocCap the hint must be
+    // 8 GB / 512M rows — above the broadcast doc cap the hint must be
     // absent so the semi-join plans as a shuffled join (keyed on doc_id,
-    // linear) instead of killing the job. Force both gates and assert
-    // the doc-id restriction carries no broadcast.
-    graft.llm.DedupOps.containRestrictFloorOverride = Some(0L)
-    graft.llm.DedupOps.containBroadcastDocCapOverride = Some(0L)
+    // linear) instead of killing the job. Build the unhinted restricted
+    // shape and assert the doc-id restriction carries no broadcast.
     // AQE legitimately converts small shuffled joins to broadcast at
     // runtime (size-checked — safe at any scale); the pin is about the
     // FORCED hint, so disable the auto conversions to make any remaining
@@ -300,7 +296,8 @@ class PlanSpec extends AnyFunSuite {
       .map(k => k -> spark.conf.getOption(k))
     saved.foreach { case (k, _) => spark.conf.set(k, "-1") }
     try {
-      val df = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
+      val df = graft.llm.DedupOps.containmentIndexed(spark, sfDir,
+        graft.llm.DedupOps.Restricted(broadcast = false))
       df.collect()
       val p = plan(df)
       assert(p.contains("LeftSemi"),
@@ -310,8 +307,6 @@ class PlanSpec extends AnyFunSuite {
       assert("""Exchange hashpartitioning\(g#""".r.findFirstIn(p).isEmpty,
         s"gram-keyed stages must stay exchange-free on the fallback path:\n$p")
     } finally {
-      graft.llm.DedupOps.containRestrictFloorOverride = None
-      graft.llm.DedupOps.containBroadcastDocCapOverride = None
       saved.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }
     }
@@ -940,33 +935,30 @@ class PlanSpec extends AnyFunSuite {
     // the only shuffles keyed on `label` or landing on the label scan
     // are gone: the stored cluster table crosses no exchange.
     // the scale shape is floor-gated (fixture corpora keep the flat
-    // plan), so force the scale path — the containRestrictFloorOverride
-    // precedent
-    graft.llm.DedupOps.clusterRestrictFloorOverride = Some(0L)
-    try {
-      // (a) the contraction stage — invisible in the op's final plan
-      // because the CC loop eagerly materializes it (localCheckpoint), so
-      // it is pinned on the shared builder the op calls
-      val c = graft.llm.DedupOps.clusterContraction(spark, sfDir)
-      c.collect() // AQE: final plan only exists after execution
-      val pc = plan(c)
-      assert(pc.contains("LeftSemi"),
-        s"stored labels must be restricted to touched endpoints:\n$pc")
-      assert(pc.contains("BroadcastExchange"),
-        s"the delta-sized sides must broadcast under the size gate:\n$pc")
-      assert(!pc.contains("hashpartitioning(label"),
-        s"contraction must not shuffle the stored label table:\n$pc")
-      // (b) the expansion — the op's visible output plan: the label scan
-      // feeds broadcast left joins, never an exchange keyed on label
-      val df = graft.llm.DedupOps.llmDedupClusterIncremental(spark, sfDir)
-      df.collect()
-      val p = plan(df)
-      assert(p.contains("BroadcastExchange"),
-        s"the reduced labels must broadcast into the expansion:\n$p")
-      assert(!p.contains("hashpartitioning(label"),
-        s"the expansion join must not shuffle the stored label table:\n$p")
-      assert(!p.contains("hashpartitioning(rep_"),
-        s"contracted endpoints must never become a shuffle key:\n$p")
-    } finally graft.llm.DedupOps.clusterRestrictFloorOverride = None
+    // plan), so build the scale shape directly
+    import graft.llm.DedupOps.{Restricted, clusterContraction, clusterIncremental}
+    // (a) the contraction stage — invisible in the op's final plan
+    // because the CC loop eagerly materializes it (localCheckpoint), so
+    // it is pinned on the shared builder the op calls
+    val c = clusterContraction(spark, sfDir, Restricted(broadcast = true))
+    c.collect() // AQE: final plan only exists after execution
+    val pc = plan(c)
+    assert(pc.contains("LeftSemi"),
+      s"stored labels must be restricted to touched endpoints:\n$pc")
+    assert(pc.contains("BroadcastExchange"),
+      s"the delta-sized sides must broadcast under the size gate:\n$pc")
+    assert(!pc.contains("hashpartitioning(label"),
+      s"contraction must not shuffle the stored label table:\n$pc")
+    // (b) the expansion — the op's visible output plan: the label scan
+    // feeds broadcast left joins, never an exchange keyed on label
+    val df = clusterIncremental(spark, sfDir, Restricted(broadcast = true))
+    df.collect()
+    val p = plan(df)
+    assert(p.contains("BroadcastExchange"),
+      s"the reduced labels must broadcast into the expansion:\n$p")
+    assert(!p.contains("hashpartitioning(label"),
+      s"the expansion join must not shuffle the stored label table:\n$p")
+    assert(!p.contains("hashpartitioning(rep_"),
+      s"contracted endpoints must never become a shuffle key:\n$p")
   }
 }

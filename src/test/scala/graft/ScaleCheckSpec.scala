@@ -33,10 +33,12 @@ class ScaleCheckSpec extends AnyFunSuite {
     """{"metric":"scale_check_span","scale":2,"docs":1000,"fps_per_doc":32.17,"keep_frac":0.12,"cand_pairs":4175,"cand_per_doc":4.18,"pairs":160,"span_sec":0.83}""",
     """{"metric":"scale_check_window","scale":1,"sessionize_sec":0.67,"zscore_sec":0.22,"asof_sec":0.22,"interval_overlap_sec":1.51,"gaps_islands_sec":0.63,"mode_frequent_sec":0.43,"percent_rank_sec":0.18,"decile_sec":0.48,"snapshot_diff_sec":0.75}""",
     """{"metric":"scale_check_window","scale":2,"sessionize_sec":0.70,"zscore_sec":0.15,"asof_sec":0.46,"interval_overlap_sec":1.34,"gaps_islands_sec":0.72,"mode_frequent_sec":0.65,"percent_rank_sec":0.26,"decile_sec":0.50,"snapshot_diff_sec":0.73}""",
+    """{"metric":"scale_check_cluster","scale":1,"cluster_sec":2.06,"rounds":2,"max_cluster":4,"log2_bound":4,"rounds_ok":true}""",
+    """{"metric":"scale_check_cluster","scale":2,"cluster_sec":1.99,"rounds":2,"max_cluster":4,"log2_bound":4,"rounds_ok":true}""",
     """{"metric":"scale_check_width","scale":1,"docs":500,"minhash_pairs":49,"minhash_per_doc":0.10,"simhash_cands":4908,"simhash_per_doc":9.82,"simhash_nb_cands":5435,"simhash_nb_per_doc":10.87,"vecs":500,"rp_bits":6,"rp_pairs":2095,"rp_per_vec":4.19}""",
     """{"metric":"scale_check_width","scale":2,"docs":1000,"minhash_pairs":462,"minhash_per_doc":0.46,"simhash_cands":8824,"simhash_per_doc":8.82,"simhash_nb_cands":9703,"simhash_nb_per_doc":9.70,"vecs":1000,"rp_bits":7,"rp_pairs":4531,"rp_per_vec":4.53}""")
 
-  test("SCALES=1,2 over four sections: one line per section and scale, recorded keys and counts") {
+  test("SCALES=1,2 over five sections: one line per section and scale, recorded keys and counts") {
     // its own working dir: ScaleCheck writes replicas under `user.dir`
     val work = Files.createTempDirectory("scalecheck-contract")
     try {
@@ -51,7 +53,7 @@ class ScaleCheckSpec extends AnyFunSuite {
       val env = pb.environment()
       env.put("SPARK_GRAFT_SF_DIR", SparkFixture.sfDir)
       env.put("SPARK_GRAFT_CPUS", "2")
-      env.put("SPARK_GRAFT_SECTIONS", "containment,span,width,window")
+      env.put("SPARK_GRAFT_SECTIONS", "containment,span,width,window,cluster")
       env.put("SPARK_GRAFT_SCALES", "1,2")
       val p = pb.start()
       val out = scala.io.Source.fromInputStream(p.getInputStream, "UTF-8").mkString

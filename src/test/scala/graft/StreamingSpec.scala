@@ -132,14 +132,9 @@ class StreamingSpec extends AnyFunSuite {
     def rows(df: org.apache.spark.sql.DataFrame): Set[(Long, java.sql.Timestamp, java.sql.Timestamp, Long, Double)] =
       df.collect().map(r => (r.getLong(0), r.getTimestamp(1), r.getTimestamp(2),
         r.getLong(3), r.getDouble(4))).toSet
-    assert(graft.streaming.StreamOps.providerOverride.isEmpty)
     val rocks = rows(graft.streaming.StreamOps.streamSessionState(spark, sfDir))
-    val hdfs =
-      try {
-        graft.streaming.StreamOps.providerOverride =
-          Some("org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")
-        rows(graft.streaming.StreamOps.streamSessionState(spark, sfDir))
-      } finally graft.streaming.StreamOps.providerOverride = None
+    val hdfs = rows(graft.streaming.StreamOps.sessionState(
+      "org.apache.spark.sql.execution.streaming.state.HDFSBackedStateStoreProvider")(spark, sfDir))
     assert(rocks.nonEmpty && rocks == hdfs,
       s"providers disagree: rocks-only=${(rocks -- hdfs).take(3)} hdfs-only=${(hdfs -- rocks).take(3)}")
   }
