@@ -90,8 +90,8 @@ object Bucketing {
     val dir = Scratch.dir(s"sorted_runs_${graft.util.Scratch.pathTag(sfDir)}")
     Tables(spark, sfDir, "orders")
       .repartitionByRange(8, col("o_orderdate"))
-      // o_orderkey (unique) breaks date ties, so the files are the same
-      // bytes every run instead of tied rows in shuffle-arrival order
+      // o_orderkey (unique) breaks date ties, so a file's row order does
+      // not depend on the order shuffle blocks arrive in
       .sortWithinPartitions("o_orderdate", "o_orderkey")
       .write.mode("overwrite").parquet(dir)
     spark.read.parquet(dir)

@@ -83,9 +83,9 @@ class DeterminismSpec extends AnyFunSuite {
 
   test("sort-on-write sinks write the same bytes every run, part file by part file") {
     // the layout sinks range-partition and sort within each partition;
-    // a sort key with ties leaves tied rows in shuffle-arrival order, so
-    // the files (and the byte floor ScaleCheck's sink curve records)
-    // would differ from run to run
+    // a sort key with ties would leave tied rows in shuffle-arrival
+    // order. At this tier the range exchange samples every row, so its
+    // boundaries repeat too.
     // (part index, bytes) of each part file, in part-index order
     def parts(dir: String): Seq[(String, Seq[Byte])] = {
       val ls = Files.list(Paths.get(dir))
