@@ -193,10 +193,15 @@ object ScaleCheck {
         val nDocs = docCount(dir)
         val groups = DedupOps.rareGroups(DedupOps.gramIndex(spark, dir).select("doc_id", "g"), "g")
         val nRare = groups.count()
-        val nCand = DedupOps.rarePairs(groups).distinct().count()
+        val cand = DedupOps.containmentCandidates(groups)
+        val nCand = cand.count()
         val (nPairs, t) = timed(DedupOps.llmDedupContainment(spark, dir).count())
+        // the candidates that survive the shared-gram bound (read after the
+        // timed call, which builds the gram sets the bound reads)
+        val nKept = DedupOps.containmentKept(cand, DedupOps.gramSets(spark, dir)).count()
         emit("scale_check_containment", "scale" -> scale, "docs" -> nDocs,
           "rare_grams" -> nRare, "cand_pairs" -> nCand, "cand_per_doc" -> nCand.toDouble / nDocs,
+          "kept_pairs" -> nKept, "kept_per_doc" -> nKept.toDouble / nDocs,
           "pairs" -> nPairs, "containment_sec" -> t)
         clearAll()
       }
@@ -490,6 +495,7 @@ object ScaleCheck {
         Thread.sleep(10000)
         emit("scale_check_planshape_build", "scale" -> scale,
           "gram_sec" -> secs(DedupOps.gramTable(spark, ddir)),
+          "gram_sets_sec" -> secs(DedupOps.gramSetTable(spark, ddir)),
           "sig_sec" -> secs(DedupOps.sigTable(spark, ddir)),
           "sim_sec" -> secs(DedupOps.simTable(spark, ddir)),
           "emb_sec" -> secs(DedupOps.embTable(spark, edir)))

@@ -449,12 +449,13 @@ object DedupOps {
         .count()
     }
 
-  /** Plan shape of an operator that joins a corpus-sized table against a
-    * candidate- or delta-sized one: [[Flat]] joins the table whole (the
-    * planner and AQE pick the strategy); [[Restricted]] first narrows it
-    * by a semi-join to the rows the small side can reach, with the small
-    * frames under a broadcast hint when `broadcast`. Both shapes produce
-    * identical rows (NearDupSpec pins each side of each gate). */
+  /** Plan shape of the incremental-CC plans, which join the corpus-sized
+    * stored labels against delta-sized frames: [[Flat]] joins the labels
+    * whole (the planner and AQE pick the strategy); [[Restricted]] first
+    * narrows them by a semi-join to the touched endpoints, with the
+    * delta-sized frames under a broadcast hint when `broadcast`. Both
+    * shapes produce identical rows (NearDupSpec pins each side of each
+    * gate). */
   private[graft] sealed trait Shape {
     /** `df` under a broadcast hint when this shape carries one. */
     def hinted(df: DataFrame): DataFrame = this match {
@@ -470,20 +471,18 @@ object DedupOps {
     * precedent): the restricted shape's extra stages (candidate or
     * endpoint distinct, broadcast, semi-join — each a sequential driver
     * stage) are pure orchestration overhead when the table is tiny.
-    * Found twice with the same value: containment measured ~+1 s in the
-    * bench session at 5k docs (round 18), and the incremental-CC scale
-    * shape measured 2-3× the flat plan on the 5k-doc bench fixture
-    * (9.6-11.0 s vs the 4.0 s band, reproduced in isolation) while the
-    * same shape at 320k+ docs is flat-in-corpus where the old plan grew
-    * superlinearly (BASELINE.md round-20 follow-up). */
+    * The incremental-CC scale shape measured 2-3× the flat plan on the
+    * 5k-doc bench fixture (9.6-11.0 s vs the 4.0 s band, reproduced in
+    * isolation) while the same shape at 320k+ docs is flat-in-corpus
+    * where the old plan grew superlinearly (BASELINE.md round-20
+    * follow-up). */
   private val RestrictFloor = 50000L
 
   /** Broadcast ceiling of the restricted shape (ADVICE r18 / VERDICT r18
-    * #2; tightened ADVICE r19): the restricted frames (candidate docs,
-    * touched endpoints) are bounded above by the corpus count — a
-    * deliberately CONSERVATIVE proxy, since counting them would execute
-    * the expensive candidate subtree a second time, while docCount is
-    * already cached. The cost of the proxy is only a missed broadcast on
+    * #2; tightened ADVICE r19): the touched endpoints are bounded above
+    * by the corpus count — a deliberately CONSERVATIVE proxy, since
+    * counting them would execute the contraction a second time, while
+    * docCount is already cached. The cost of the proxy is only a missed broadcast on
     * >cap corpora whose restricted sets happen to be tiny — and AQE still
     * converts those to broadcast at runtime from actual exchange sizes.
     * The cap is sized for the worst case the proxy admits: 25M doc_id
@@ -493,12 +492,12 @@ object DedupOps {
     * the job (the r18 cap of 100M put the worst case at 800 MB, near
     * typical comfort limits — ADVICE r19). Above the cap the semi-join
     * runs unhinted: both sides shuffle on doc_id — linear, exactly the
-    * keyed join any layout pays — so a pathologically collision-heavy
-    * corpus degrades instead of dying. */
+    * keyed join any layout pays — so a pathologically dense delta
+    * degrades instead of dying. */
   private val BroadcastDocCap = 25000000L
 
-  /** The one corpus-size policy of the containment and incremental-CC
-    * plans, read from the cached docCount: [[Flat]] below
+  /** The corpus-size policy of the incremental-CC plans, read from the
+    * cached docCount: [[Flat]] below
     * [[RestrictFloor]] docs, else [[Restricted]] with broadcast hints up
     * to [[BroadcastDocCap]] docs and while `bcastOk` holds — an extra
     * bound evaluated only on that side, so the flat path runs no job for
@@ -1213,25 +1212,46 @@ object DedupOps {
       .orderBy("doc_new", "doc_old")
   }
 
-  /** Per-doc full gram-hash sets — the exact-verification operand of the
-    * containment family, persisted once per corpus (round 11: rebuilt per
-    * call, this ObjectHashAggregate was the heaviest RECURRING stage in
-    * the bench session and its cost wandered with whatever cache state
-    * the run had accumulated; as a shared frame it is built once in
-    * warmup like verifiedPairs). The indexed containment twin deliberately
-    * does NOT use it — its contract is deriving everything from the
-    * bucketed stored table. */
+  /** Per-doc gram-hash sets — the exact-verification operand of the
+    * in-memory containment op, persisted once per corpus (built in warmup
+    * like verifiedPairs). Rows as [[gramSetPlan]]. */
   private[graft] def gramSets(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "gramSets") {
-      // gs is SORTED at build (round 22): the only consumer is the
-      // containment verification, whose per-pair intersection then runs as
-      // a native two-pointer merge (sorted_intersect_count) instead of
-      // array_intersect's per-row hash set + materialized result array —
-      // the measured ~60% of the containment rows' wall. Sorting ~hundreds
-      // of longs per doc once per corpus is warmup-amortized here.
-      memo.persist(gramIndex(spark, sfDir)
-        .groupBy("doc_id")
-        .agg(sort_array(collect_set(col("g"))).as("gs"), count(lit(1)).as("n")))
+    memo(spark, sfDir, "gramSets")(memo.persist(gramSetPlan(gramIndex(spark, sfDir))))
+
+  /** One row per doc of a (doc_id, g) gram frame: `gs` its distinct gram
+    * hashes, SORTED so the per-pair intersection runs as
+    * sorted_intersect_count's two-pointer merge; `n` their count; `c` how
+    * many of them have document frequency above [[RareDfCap]] — the
+    * per-doc half of [[containmentKept]]'s bound. `c` is `n` minus the
+    * doc's grams of df ≤ RareDfCap, whose capped [[rareGroups]]-style
+    * groups list every doc, so a hot gram never materializes its posting
+    * list. Both aggregates read one doc_id exchange of the gram rows,
+    * which Spark reuses, so a raw gram plan runs once. */
+  private def gramSetPlan(grams: DataFrame): DataFrame = {
+    graft.functions.GraftFunctions.ensure(grams.sparkSession)
+    val byDoc = grams.select("doc_id", "g").repartition(col("doc_id"))
+    val sets = byDoc.groupBy("doc_id")
+      .agg(sort_array(collect_set(col("g"))).as("gs"), count(lit(1)).as("n"))
+    val lowDf = byDoc
+      .groupBy("g").agg(expr(s"collect_upto(doc_id, ${RareDfCap + 1})").as("ds"))
+      .filter(size(col("ds")) <= RareDfCap)
+      .select(explode(col("ds")).as("doc_id"))
+      .groupBy("doc_id").agg(count(lit(1)).as("n_low"))
+    sets.join(lowDf, Seq("doc_id"), "left")
+      .select(col("doc_id"), col("gs"), col("n"),
+        (col("n") - coalesce(col("n_low"), lit(0L))).as("c"))
+  }
+
+  /** [[gramSets]] MATERIALIZED as a parquet table bucketed on doc_id — the
+    * per-doc set index the indexed containment op verifies against, so a
+    * call assembles no sets and shuffles no gram rows. Written from the
+    * gramSets persist when it is warm, else from the raw gram plan
+    * ([[buildSource]]). Candidate pairs stay per-call work. */
+  private[graft] def gramSetTable(spark: SparkSession, sfDir: String): String =
+    memo(spark, sfDir, "gramSetTable") {
+      writeIndex(buildSource(spark, sfDir, "gramSets")(gramSetPlan(
+        buildSource(spark, sfDir, "gramIndex")(gramPlan(spark, sfDir)))),
+        sfDir, "gram_sets_bkt", "gram_set_index", Seq("doc_id"))
     }
 
   /** Upper df bound of rare-key blocking: only keys (gram hashes / winnow
@@ -1268,8 +1288,8 @@ object DedupOps {
   /** Ordered candidate pairs out of [[rareGroups]] output: the ≤
     * C(RareDfCap,2)=10 (doc_a < doc_b) pairs per surviving key explode
     * out of the grouped row — one row per (key, pair) occurrence, so
-    * callers `.distinct()` (containment) or count multiplicity per pair
-    * (span's n_shared_fp). */
+    * callers count multiplicity per pair (containment's m, span's
+    * n_shared_fp). */
   private[graft] def rarePairs(groups: DataFrame): DataFrame =
     groups
       .select(explode(col("ds")).as("doc_a"), col("ds"))
@@ -1463,43 +1483,48 @@ object DedupOps {
     * 13-grams appearing in 2..5 docs generate pairs, so the candidate
     * count is bounded by Σ_rare-grams C(df,2) ≤ rare_grams · C(5,2) —
     * linear in corpus size by construction, where an unblocked
-    * posting-list self-join is quadratic in the head gram's df.
-    * Candidate generation is the shared ONE-SCAN [[rareGroups]] shape
-    * (round 18 — the same re-plan the indexed twin got in round 17,
-    * VERDICT r17 #1): pairs explode out of the persisted bounded-state
-    * groups, replacing the posting self-join that shuffled the rare
-    * posting twice per call. Exact
-    * verification intersects the full per-doc gram-hash sets
-    * (array_intersect on longs, the ngram_jaccard machinery) for
-    * candidates only. Reads the SAME persisted gram index as
-    * decontaminate/passage — one linear gram pass serves all three.
-    * Both containment directions are reported; the ≥0.5 keep-gate is on
-    * the max. */
+    * posting-list self-join is quadratic in the head gram's df. Pairs
+    * explode out of the persisted bounded-state [[rareGroups]] groups
+    * and are verified against the persisted [[gramSets]] by
+    * [[containmentVerified]]. Both containment directions are reported;
+    * the ≥0.5 keep-gate is on the max. */
   val llmDedupContainment: QFn = (spark, sfDir) =>
-    containmentVerified(
-      rarePairs(rareGramGroups(spark, sfDir)).distinct(),
+    containmentVerified(containmentCandidates(rareGramGroups(spark, sfDir)),
       gramSets(spark, sfDir))
 
-  /** Exact-verification stage shared by the containment twins: intersect
-    * the full per-doc gram-hash sets for candidates only, keep pairs
-    * whose max containment direction clears 0.5, report both directions.
-    * The twins differ ONLY in where candidates and sets come from (the
-    * executor-memory persists vs the g-bucketed stored table). */
+  /** Candidate pairs (doc_a, doc_b, m) out of rare-gram groups: `m` is the
+    * number of grams of df in [2, RareDfCap] the two docs share. */
+  private[graft] def containmentCandidates(groups: DataFrame): DataFrame =
+    rarePairs(groups).groupBy("doc_a", "doc_b").agg(count(lit(1)).as("m"))
+
+  /** The candidates that can still reach containment 0.5, with their set
+    * sizes (doc_a, doc_b, n_a, n_b). Every shared gram outside a pair's
+    * `m` has df > RareDfCap, so it is among the `c` hot grams of BOTH docs:
+    * n_shared ≤ m + min(c_a, c_b). A pair with 2·(m + min(c_a, c_b)) <
+    * min(n_a, n_b) therefore has max containment below 0.5 and drops here,
+    * an exact prune that joins only the skinny (doc_id, n, c) columns —
+    * no gram array moves for it. */
+  private[graft] def containmentKept(cand: DataFrame, sets: DataFrame): DataFrame = {
+    def side(s: String) = sets.select(col("doc_id").as(s"doc_$s"),
+      col("n").as(s"n_$s"), col("c").as(s"c_$s"))
+    cand.join(side("a"), Seq("doc_a")).join(side("b"), Seq("doc_b"))
+      .filter(lit(2) * (col("m") + least(col("c_a"), col("c_b")))
+        >= least(col("n_a"), col("n_b")))
+      .select("doc_a", "doc_b", "n_a", "n_b")
+  }
+
+  /** Exact verification shared by the containment twins: the candidates
+    * [[containmentKept]] leaves join their sorted gram sets, the native
+    * two-pointer merge (sorted_intersect_count, which fails loudly on
+    * unsorted input) counts the shared grams, and pairs whose max
+    * containment direction clears 0.5 report both directions. The twins
+    * differ ONLY in where candidates and sets come from (the
+    * executor-memory persists vs the stored tables). */
   private def containmentVerified(cand: DataFrame, sets: DataFrame): DataFrame =
-    cand
-      .join(sets.select(col("doc_id").as("doc_a"), col("gs").as("gs_a"),
-        col("n").as("n_a")), Seq("doc_a"))
-      .join(sets.select(col("doc_id").as("doc_b"), col("gs").as("gs_b"),
-        col("n").as("n_b")), Seq("doc_b"))
-      // native two-pointer merge over the SORTED sets (round 22, VERDICT
-      // r21 #1): same count as size(array_intersect(gs_a, gs_b)) — the
-      // joins-only diagnostic (OPTIMIZATION_r22.md §1) put ~60% of this
-      // op's wall in the per-pair hash-set intersection, not the
-      // array-moving joins.
-      // Both set providers sort at build (gramSets / the indexed twin's
-      // inline agg); the expression fails loudly on unsorted input.
-      .withColumn("n_shared",
-        expr("sorted_intersect_count(gs_a, gs_b)"))
+    containmentKept(cand, sets)
+      .join(sets.select(col("doc_id").as("doc_a"), col("gs").as("gs_a")), Seq("doc_a"))
+      .join(sets.select(col("doc_id").as("doc_b"), col("gs").as("gs_b")), Seq("doc_b"))
+      .withColumn("n_shared", expr("sorted_intersect_count(gs_a, gs_b)"))
       .filter(greatest(col("n_shared") / col("n_a"),
         col("n_shared") / col("n_b")) >= 0.5)
       .select(col("doc_a"), col("doc_b"), col("n_shared"), col("n_a"),
@@ -1508,68 +1533,20 @@ object DedupOps {
         round(col("n_shared").cast("double") / col("n_b"), 4).as("cont_b"))
       .orderBy("doc_a", "doc_b")
 
-  /** Containment dedup over the MATERIALIZED gram index — the scale-path
-    * twin of [[llmDedupContainment]], same semantics and same full DuckDB
-    * oracle. Candidate generation is ONE exchange-free pass over the
-    * g-bucketed table (round 17, VERDICT r16 #6; unified into
-    * [[rareGroups]] round 18): `groupBy(g).collect_upto(doc_id, 6)` runs
-    * partial-per-bucket with no exchange on g, the rare filter keeps
-    * groups with df ∈ [2,5], and the ≤C(5,2)=10 ordered pairs per
-    * surviving gram explode out of the grouped row — replacing the
-    * previous df-aggregate + left_semi + posting-self-join shape that
-    * read the same bucketed files in THREE subtrees (profiled at 4.98 s
-    * warm vs 1.28 s for this plan, identical 254 rows at sf0.1;
-    * BASELINE.md round 17). The only shuffles left are the ones keyed on
-    * doc pairs (candidate distinct, per-doc set assembly), which any
-    * layout pays. This is the build-once/
-    * consume-many shape: at 100 TB the gram pass runs at index-build
-    * time and containment, decontamination, and passage profiling all
-    * ride the same files. The explode is bounded by the rare cap AND —
-    * since round 18's collect_upto — so is the aggregation state itself:
-    * a hot stopword-like gram holds at most 6 doc_ids in its buffer
-    * instead of its whole posting list (ADVICE r17).
-    *
-    * Verification sets are assembled for CANDIDATE DOCS ONLY (round 18,
-    * second re-plan — found by the corrected ×128 curve): the previous
-    * shape ran collect_set over the WHOLE table — a corpus-sized shuffle
-    * on doc_id (1.5B gram rows at ×128) feeding a join that discards
-    * every non-candidate group. The candidates' distinct doc_ids
-    * BROADCAST into a left_semi under the set aggregate, so grams of
-    * non-candidate docs die at the scan and the doc_id shuffle carries
-    * only verification work — set assembly scales with candidates, not
-    * corpus (×128: 130.3 → 100.8 s, BASELINE r18). The candidate
-    * subtree is referenced three times (pair join + both union branches
-    * of the doc restriction) but computed ONCE: it ends in the
-    * pair-distinct EXCHANGE, which Spark's exchange reuse shares across
-    * all consumers (PlanSpec pins the ReusedExchange) — cheaper than an
-    * eager localCheckpoint, whose extra materialization cost the
-    * fixture-scale row ~1.1 s in the bench session. [[corpusShape]] gates
-    * the restriction: below its floor the full-corpus set aggregate is
-    * trivially cheap and small corpora keep the flat two-stage plan. */
+  /** Containment dedup over the MATERIALIZED indexes — the scale-path twin
+    * of [[llmDedupContainment]], same rows and the same DuckDB oracle.
+    * Candidate generation is ONE exchange-free pass over the g-bucketed
+    * [[gramTable]]: `groupBy(g).collect_upto(doc_id, 6)` runs
+    * partial-per-bucket, and a hot stopword-like gram holds at most 6
+    * doc_ids in its buffer. Verification reads the doc_id-bucketed
+    * [[gramSetTable]], so a call assembles no sets: the only exchanges
+    * left are keyed on doc pairs. At 100 TB both tables are built once
+    * at index-build time and every call rides the same files. */
   val llmDedupContainmentIndexed: QFn = (spark, sfDir) =>
-    containmentIndexed(spark, sfDir, corpusShape(spark, sfDir))
-
-  /** [[llmDedupContainmentIndexed]] under a given plan shape — NearDupSpec
-    * and PlanSpec pass each shape at fixture scale. */
-  private[graft] def containmentIndexed(spark: SparkSession, sfDir: String,
-      shape: Shape): DataFrame = {
-    val grams = spark.table(gramTable(spark, sfDir)).select("doc_id", "g")
-    val cand = rarePairs(rareGroups(grams, "g")).distinct()
-    val setSrc = shape match {
-      case Flat => grams
-      case Restricted(_) =>
-        val candDocs = cand.select(col("doc_a").as("doc_id"))
-          .union(cand.select(col("doc_b").as("doc_id"))).distinct()
-        grams.join(shape.hinted(candDocs), Seq("doc_id"), "left_semi")
-    }
     containmentVerified(
-      cand,
-      // sorted like gramSets (round 22) so verification runs the native
-      // merge count — sort cost is per candidate doc, dwarfed by the
-      // intersection saving (see containmentVerified)
-      setSrc.groupBy("doc_id")
-        .agg(sort_array(collect_set(col("g"))).as("gs"), count(lit(1)).as("n")))
-  }
+      containmentCandidates(
+        rareGroups(spark.table(gramTable(spark, sfDir)).select("doc_id", "g"), "g")),
+      spark.table(gramSetTable(spark, sfDir)))
 
   /** Substring-level (span) dedup via WINNOWING fingerprints
     * (Schleimer/Wilkerson/Aiken 2003, the MOSS idiom — and the spirit of

@@ -37,6 +37,7 @@ object Warmup {
     // *_indexed row then times its profile/consume stage, not the
     // once-per-corpus table build
     llm("gramTable")(DedupOps.gramTable),
+    llm("gramSetTable")(DedupOps.gramSetTable),
     llm("embTable")(DedupOps.embTable),
     llm("sigTable")(DedupOps.sigTable),
     llm("simTable")(DedupOps.simTable),

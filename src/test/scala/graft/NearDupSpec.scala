@@ -98,37 +98,101 @@ class NearDupSpec extends AnyFunSuite {
     assert(got == expected)
   }
 
-  test("containment: sound vs brute force; rare-gram blocking recall measured") {
-    // Brute-force truth: all-pairs 13-gram max-containment >= 0.5, driver
-    // side. The operator must be SOUND (every reported pair is a true
-    // pair with the exact shared/size numbers — verification is exact,
-    // so any deviation means the intersect is wrong) and its rare-gram
-    // blocking must RECALL nearly all true pairs (a pair can only be
-    // missed when NO shared gram is corpus-rare; near-dups share many).
-    val texts = docs.select("doc_id", "text").collect()
-      .map(r => r.getLong(0) -> r.getString(1).toLowerCase.trim)
+  /** The fixture corpus plus nine planted docs (ids 9001-9009) at the
+    * edges of containment's shared-gram bound. Each doc is built from
+    * random letter segments: H (40 chars, in six docs, so df 6 > 5), R1 and
+    * Q5 (40 chars; R1 in two docs, Q5 in five) and R3 (13 chars, one gram,
+    * in two docs), joined by fillers that start and end with a digit
+    * unique to the doc, so every gram that crosses a segment edge belongs
+    * to one doc only. A 40-char segment holds 28 grams.
+    *  - 9001/9002 share H and R1: 56 shared grams, 2·56 = 112 = n(9001),
+    *    and the bound m + min(c) = 28 + 28 is tight: kept, and reported;
+    *  - 9003/9004 share H and Q5: 56 shared grams, one short of
+    *    2·n_shared = n(9003) = 114: the bound drops it;
+    *  - 9005/9006 share H and R3: one rare gram, 28 hot ones, 29/56 ≥ 0.5;
+    *  - 9007-9009 hold Q5 only, the other three docs that make its df 5. */
+  private lazy val containmentEdges: (String, Map[String, (Long, Long)]) = {
+    val rnd = new scala.util.Random(20260419)
+    def seg(len: Int) = Seq.fill(len)(('a' + rnd.nextInt(26)).toChar).mkString
+    val (h, r1, q5, r3) = (seg(40), seg(40), seg(40), seg(13))
+    def doc(id: Long, parts: Any*): (Long, String) = {
+      val mark = ('0' + (id - 9000)).toChar
+      id -> parts.map {
+        case len: Int => s"$mark${seg(len - 2)}$mark"
+        case s: String => s
+      }.mkString
+    }
+    val planted = Seq(
+      doc(9001, 15, h, 14, r1, 15), doc(9002, 15, h, 14, r1, 100),
+      doc(9003, 15, h, 16, q5, 15), doc(9004, 15, h, 16, q5, 100),
+      doc(9005, 5, h, 5, r3, 5), doc(9006, 5, h, 5, r3, 80),
+      doc(9007, 10, q5, 150), doc(9008, 10, q5, 150), doc(9009, 10, q5, 150))
+    val dir = graft.util.Scratch.dir("containment_edges")
+    import spark.implicits._
+    docs.select("doc_id", "text", "lang", "source", "n_chars")
+      .unionByName(planted.toDF("doc_id", "text")
+        .select(col("doc_id"), col("text"), lit("en").as("lang"),
+          lit("planted").as("source"), length(col("text")).cast("long").as("n_chars")))
+      .write.parquet(s"$dir/documents.parquet")
+    dir -> Map("edge" -> (9001L, 9002L), "short" -> (9003L, 9004L),
+      "one_rare" -> (9005L, 9006L))
+  }
+
+  test("containment: both twins equal brute force over pairs sharing a df-2..5 gram, at the bound's edges") {
+    // Truth: all-pairs 13-gram max-containment >= 0.5, driver side,
+    // restricted to pairs that share a gram of df in [2,5] — the pairs
+    // rare-gram blocking can see. Both twins must report exactly these
+    // pairs with the exact shared/size numbers.
+    val (dir, planted) = containmentEdges
+    val texts = graft.tables.Tables(spark, dir, "documents").select("doc_id", "text")
+      .collect().map(r => r.getLong(0) -> r.getString(1).toLowerCase.trim)
     def grams(t: String): Set[String] =
       (1 to math.max(t.length - 12, 1)).map(i => t.slice(i - 1, i - 1 + 13)).toSet
     val gsets = texts.map { case (id, t) => id -> grams(t) }.toMap
+    val df = gsets.values.toSeq.flatten.groupBy(identity).map { case (g, o) => g -> o.size }
+    def rare(g: String) = df(g) >= 2 && df(g) <= 5
     val truth = (for {
       (a, ga) <- gsets.toSeq; (b, gb) <- gsets.toSeq if a < b
-      ns = (ga intersect gb).size
-      if ns.toDouble / math.min(ga.size, gb.size) >= 0.5
-    } yield (a, b) -> (ns.toLong, ga.size.toLong, gb.size.toLong)).toMap
-    val got = graft.llm.DedupOps.llmDedupContainment(spark, sfDir)
-      .collect()
-      .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3), r.getLong(4)))
-      .toMap
-    // soundness: exact numbers on every reported pair
-    got.foreach { case (pair, stats) =>
-      assert(truth.get(pair).contains(stats),
-        s"pair $pair reported $stats but truth says ${truth.get(pair)}")
+      shared = ga intersect gb
+      if shared.exists(rare)
+      if shared.size.toDouble / math.min(ga.size, gb.size) >= 0.5
+    } yield (a, b) -> (shared.size.toLong, ga.size.toLong, gb.size.toLong)).toMap
+
+    // the planted pairs sit where the scenario says they do
+    def stats(p: (Long, Long)) = {
+      val (ga, gb) = (gsets(p._1), gsets(p._2))
+      val shared = ga intersect gb
+      def c(gs: Set[String]) = gs.count(df(_) > 5)
+      (shared.size, shared.count(rare), math.min(c(ga), c(gb)), math.min(ga.size, gb.size))
     }
-    // blocking recall: df in [2,5] must keep nearly every true pair
-    val recall =
-      if (truth.isEmpty) 1.0 else got.size.toDouble / truth.size
-    assert(recall >= 0.9,
-      s"rare-gram blocking recall $recall (${got.size}/${truth.size})")
+    val (eNs, eM, eC, eN) = stats(planted("edge"))
+    assert(2 * eNs == eN && eNs == eM + eC, s"edge pair: ${stats(planted("edge"))}")
+    val (sNs, sM, sC, sN) = stats(planted("short"))
+    assert(2 * (sNs + 1) == sN && sNs == sM + sC, s"short pair: ${stats(planted("short"))}")
+    assert((gsets(9003L) intersect gsets(9004L)).filter(rare).forall(df(_) == 5))
+    val (oNs, oM, _, oN) = stats(planted("one_rare"))
+    assert(oM == 1 && 2 * oNs >= oN, s"one-rare pair: ${stats(planted("one_rare"))}")
+    assert(truth.contains(planted("edge")) && truth.contains(planted("one_rare")))
+
+    // the bound keeps the edge and one-rare pairs and drops the short one
+    import graft.llm.DedupOps.{containmentCandidates, containmentKept, gramSets, rareGramGroups}
+    def pairsOf(f: org.apache.spark.sql.DataFrame) =
+      f.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
+    val cand = containmentCandidates(rareGramGroups(spark, dir))
+    val kept = pairsOf(containmentKept(cand, gramSets(spark, dir)))
+    assert(pairsOf(cand).contains(planted("short")))
+    assert(!kept.contains(planted("short")), "the bound must drop the one-short pair")
+    assert(kept.contains(planted("edge")) && kept.contains(planted("one_rare")))
+
+    for ((name, op) <- Seq("in-memory" -> graft.llm.DedupOps.llmDedupContainment,
+        "indexed" -> graft.llm.DedupOps.llmDedupContainmentIndexed)) {
+      val got = op(spark, dir).collect()
+        .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3), r.getLong(4)))
+        .toMap
+      assert(got == truth, s"$name twin: missing ${truth.keySet -- got.keySet}, " +
+        s"extra ${got.keySet -- truth.keySet}, " +
+        s"wrong ${got.filter { case (k, v) => truth.get(k).exists(_ != v) }}")
+    }
   }
 
   test("span dedup finds planted spliced spans and is gram-sound on the corpus") {
@@ -179,27 +243,14 @@ class NearDupSpec extends AnyFunSuite {
     assert((prof.getLong(0), prof.getLong(1)) == (expRows, expDistinct))
   }
 
-  test("containment's candidate-restricted big-corpus path is result-invisible") {
-    // the ≥50k-doc plan (candidate-doc semi-join under the set aggregate,
-    // round 18) never runs at fixture scale, so the DuckDB oracle cannot
-    // cover it — build it with the restricted shape and require
-    // byte-identical rows to the default path AND the in-memory twin
-    import graft.llm.DedupOps.{Restricted, containmentIndexed}
-    val default = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
-      .collect().map(_.toString).sorted
-    val restricted = containmentIndexed(spark, sfDir, Restricted(broadcast = true))
-      .collect().map(_.toString).sorted
-    assert(restricted.sameElements(default) && default.nonEmpty)
-    // round 19 (ADVICE r18): above the broadcast doc cap the candidate
-    // semi-join degrades to a shuffled plan instead of a BroadcastExchange
-    // that would hard-fail past Spark's 8 GB/512M-row limits — build the
-    // unhinted restricted shape and require the same bytes a third time
-    val shuffled = containmentIndexed(spark, sfDir, Restricted(broadcast = false))
-      .collect().map(_.toString).sorted
-    assert(shuffled.sameElements(default))
+  test("indexed containment gives byte-identical rows to the in-memory twin") {
+    // the stored set table and the gramSets persist feed one verifier;
+    // the rows, their order and every value must agree
+    val idx = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
+      .collect().map(_.toString)
     val mem = graft.llm.DedupOps.llmDedupContainment(spark, sfDir)
-      .collect().map(_.toString).sorted
-    assert(default.sameElements(mem))
+      .collect().map(_.toString)
+    assert(idx.toSeq == mem.toSeq && mem.nonEmpty)
   }
 
   test("two-generation gram index serves decontamination byte-identically") {

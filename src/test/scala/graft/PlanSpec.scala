@@ -250,8 +250,8 @@ class PlanSpec extends AnyFunSuite {
     // candidate generation is one groupBy(g).collect_upto pass over the
     // stored g-bucketed files (round 17/18 — replaced the df-profile +
     // semi-join + posting-self-join shape): no gram re-derivation, no
-    // shuffle keyed on g; only the doc-pair-keyed stages (candidate
-    // distinct, per-doc set assembly) may exchange
+    // shuffle keyed on g; only the doc-pair-keyed stages (the candidate
+    // count and the verification joins) may exchange
     assert(p.contains("Bucketed: true"), s"scan must report bucketed reads:\n$p")
     assert(!p.contains("xxhash64"),
       s"grams must come from the stored index, not re-derivation:\n$p")
@@ -259,53 +259,29 @@ class PlanSpec extends AnyFunSuite {
       s"gram-keyed stages must be exchange-free:\n$p")
   }
 
-  test("indexed containment's big-corpus path restricts sets and reuses the candidate exchange") {
-    // round 18 (candidate-restricted verification sets, gated on corpus
-    // size): build the restricted shape at fixture scale. The candidate
-    // subtree is referenced three times (pair join + both branches of
-    // the doc-id restriction union) but must be COMPUTED once — its
-    // pair-distinct exchange is the reuse point. A refactor that breaks
-    // canonicalized-subtree equality (e.g. diverging column aliases
-    // between the references) would silently triple the gram pass at
-    // 100 TB.
-    import graft.llm.DedupOps.{Restricted, containmentIndexed}
-    val df = containmentIndexed(spark, sfDir, Restricted(broadcast = true))
+  test("indexed containment reads stored per-doc sets: no set aggregate over gram rows") {
+    // the per-call plan assembles no sets: no collect_set over gram rows
+    // and no exchange keyed on g. With broadcasts off (the plan of a set
+    // table too big to broadcast) every scan of the set table is a
+    // bucketed read, so its doc_id joins shuffle only the candidate side
+    val df = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
     df.collect()
     val p = plan(df)
-    assert(p.contains("ReusedExchange"),
-      s"candidate exchange must be reused across its consumers:\n$p")
-    assert(p.contains("LeftSemi"),
-      s"set assembly must be restricted by the candidate-doc semi-join:\n$p")
+    assert(!p.contains("collect_set"), s"sets must come from the stored table:\n$p")
     assert("""Exchange hashpartitioning\(g#""".r.findFirstIn(p).isEmpty,
-      s"gram-keyed stages must stay exchange-free on the restricted path:\n$p")
-  }
-
-  test("indexed containment's candidate semi-join degrades to a shuffle above the broadcast cap") {
-    // round 19 (ADVICE r18 / VERDICT r18 #2): the candidate-doc set is
-    // bounded only by the corpus, and BroadcastExchange hard-fails past
-    // 8 GB / 512M rows — above the broadcast doc cap the hint must be
-    // absent so the semi-join plans as a shuffled join (keyed on doc_id,
-    // linear) instead of killing the job. Build the unhinted restricted
-    // shape and assert the doc-id restriction carries no broadcast.
-    // AQE legitimately converts small shuffled joins to broadcast at
-    // runtime (size-checked — safe at any scale); the pin is about the
-    // FORCED hint, so disable the auto conversions to make any remaining
-    // BroadcastExchange attributable to the hint alone
+      s"gram-keyed stages must be exchange-free:\n$p")
     val saved = Seq("spark.sql.autoBroadcastJoinThreshold",
       "spark.sql.adaptive.autoBroadcastJoinThreshold")
       .map(k => k -> spark.conf.getOption(k))
     saved.foreach { case (k, _) => spark.conf.set(k, "-1") }
     try {
-      val df = graft.llm.DedupOps.containmentIndexed(spark, sfDir,
-        graft.llm.DedupOps.Restricted(broadcast = false))
-      df.collect()
-      val p = plan(df)
-      assert(p.contains("LeftSemi"),
-        s"set assembly must still be candidate-restricted:\n$p")
-      assert(!p.contains("BroadcastExchange"),
-        s"above the doc cap the restriction must not carry a broadcast hint:\n$p")
-      assert("""Exchange hashpartitioning\(g#""".r.findFirstIn(p).isEmpty,
-        s"gram-keyed stages must stay exchange-free on the fallback path:\n$p")
+      val big = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
+      big.collect()
+      val q = plan(big)
+      val setScans = q.split("\n").filter(l => l.contains("FileScan") && l.contains("gram_sets_bkt"))
+      assert(setScans.nonEmpty && setScans.forall(_.contains("Bucketed: true")),
+        s"the set table must be read bucketed on doc_id:\n$q")
+      assert(!q.contains("collect_set"), s"sets must come from the stored table:\n$q")
     } finally {
       saved.foreach { case (k, v) =>
         v.fold(spark.conf.unset(k))(spark.conf.set(k, _)) }

@@ -27,8 +27,8 @@ class ScaleCheckSpec extends AnyFunSuite {
     * and key order; every value that is not a `*_sec` timing is a count
     * the run must reproduce byte for byte. */
   private val recorded = Seq(
-    """{"metric":"scale_check_containment","scale":1,"docs":500,"rare_grams":29179,"cand_pairs":21306,"cand_per_doc":42.61,"pairs":28,"containment_sec":2.85}""",
-    """{"metric":"scale_check_containment","scale":2,"docs":1000,"rare_grams":58358,"cand_pairs":42612,"cand_per_doc":42.61,"pairs":56,"containment_sec":3.82}""",
+    """{"metric":"scale_check_containment","scale":1,"docs":500,"rare_grams":29179,"cand_pairs":21306,"cand_per_doc":42.61,"kept_pairs":30,"kept_per_doc":0.06,"pairs":28,"containment_sec":2.18}""",
+    """{"metric":"scale_check_containment","scale":2,"docs":1000,"rare_grams":58358,"cand_pairs":42612,"cand_per_doc":42.61,"kept_pairs":60,"kept_per_doc":0.06,"pairs":56,"containment_sec":2.46}""",
     """{"metric":"scale_check_span","scale":1,"docs":500,"fps_per_doc":31.59,"keep_frac":0.11,"cand_pairs":2060,"cand_per_doc":4.12,"pairs":76,"span_sec":0.23}""",
     """{"metric":"scale_check_span","scale":2,"docs":1000,"fps_per_doc":32.17,"keep_frac":0.12,"cand_pairs":4175,"cand_per_doc":4.18,"pairs":160,"span_sec":0.83}""",
     """{"metric":"scale_check_window","scale":1,"sessionize_sec":0.67,"zscore_sec":0.22,"asof_sec":0.22,"interval_overlap_sec":1.51,"gaps_islands_sec":0.63,"mode_frequent_sec":0.43,"percent_rank_sec":0.18,"decile_sec":0.48,"snapshot_diff_sec":0.75}""",

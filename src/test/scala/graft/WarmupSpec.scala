@@ -21,7 +21,7 @@ class WarmupSpec extends AnyFunSuite {
   }
 
   for (op <- Seq("sink_jdbc_load", "scan_jdbc_export", "agg_sales_by_category_star",
-      "agg_histogram_approx", "agg_median_mad_approx"))
+      "agg_histogram_approx", "agg_median_mad_approx", "llm_dedup_containment_indexed"))
     test(s"warmup for $op builds everything $op reads") {
       val corpus = freshCorpus(op)
       val steps = Warmup.run(spark, corpus, Set(op))
