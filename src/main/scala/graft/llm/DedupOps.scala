@@ -466,11 +466,11 @@ object DedupOps {
   private[graft] case object Flat extends Shape
   private[graft] final case class Restricted(broadcast: Boolean) extends Shape
 
-  /** Corpus floor below which the corpus-sized table is joined whole, a
+  /** Corpus floor below which the stored labels are joined whole, a
     * plan decision derived from n (the simChunkGeom / projBitsFor
-    * precedent): the restricted shape's extra stages (candidate or
-    * endpoint distinct, broadcast, semi-join — each a sequential driver
-    * stage) are pure orchestration overhead when the table is tiny.
+    * precedent): the restricted shape's extra stages (endpoint distinct,
+    * broadcast, semi-join — each a sequential driver stage) are pure
+    * orchestration overhead when the table is tiny.
     * The incremental-CC scale shape measured 2-3× the flat plan on the
     * 5k-doc bench fixture (9.6-11.0 s vs the 4.0 s band, reproduced in
     * isolation) while the same shape at 320k+ docs is flat-in-corpus
@@ -497,11 +497,10 @@ object DedupOps {
   private val BroadcastDocCap = 25000000L
 
   /** The corpus-size policy of the incremental-CC plans, read from the
-    * cached docCount: [[Flat]] below
-    * [[RestrictFloor]] docs, else [[Restricted]] with broadcast hints up
-    * to [[BroadcastDocCap]] docs and while `bcastOk` holds — an extra
-    * bound evaluated only on that side, so the flat path runs no job for
-    * it. */
+    * cached docCount: [[Flat]] below [[RestrictFloor]] docs, else
+    * [[Restricted]] with broadcast hints up to [[BroadcastDocCap]] docs
+    * and while `bcastOk` holds — an extra bound evaluated only on that
+    * side, so the flat path runs no job for it. */
   private[graft] def corpusShape(spark: SparkSession, sfDir: String,
       bcastOk: => Boolean = true): Shape = {
     val n = docCount(spark, sfDir)

@@ -111,7 +111,7 @@ class NearDupSpec extends AnyFunSuite {
     *    2·n_shared = n(9003) = 114: the bound drops it;
     *  - 9005/9006 share H and R3: one rare gram, 28 hot ones, 29/56 ≥ 0.5;
     *  - 9007-9009 hold Q5 only, the other three docs that make its df 5. */
-  private lazy val containmentEdges: (String, Map[String, (Long, Long)]) = {
+  private lazy val containmentEdgesDir: String = {
     val rnd = new scala.util.Random(20260419)
     def seg(len: Int) = Seq.fill(len)(('a' + rnd.nextInt(26)).toChar).mkString
     val (h, r1, q5, r3) = (seg(40), seg(40), seg(40), seg(13))
@@ -134,16 +134,16 @@ class NearDupSpec extends AnyFunSuite {
         .select(col("doc_id"), col("text"), lit("en").as("lang"),
           lit("planted").as("source"), length(col("text")).cast("long").as("n_chars")))
       .write.parquet(s"$dir/documents.parquet")
-    dir -> Map("edge" -> (9001L, 9002L), "short" -> (9003L, 9004L),
-      "one_rare" -> (9005L, 9006L))
+    dir
   }
 
-  test("containment: both twins equal brute force over pairs sharing a df-2..5 gram, at the bound's edges") {
+  test("containment: both twins equal brute force over pairs sharing a df-2..5 gram") {
     // Truth: all-pairs 13-gram max-containment >= 0.5, driver side,
     // restricted to pairs that share a gram of df in [2,5] — the pairs
     // rare-gram blocking can see. Both twins must report exactly these
     // pairs with the exact shared/size numbers.
-    val (dir, planted) = containmentEdges
+    val dir = containmentEdgesDir
+    val (edge, short, oneRare) = ((9001L, 9002L), (9003L, 9004L), (9005L, 9006L))
     val texts = graft.tables.Tables(spark, dir, "documents").select("doc_id", "text")
       .collect().map(r => r.getLong(0) -> r.getString(1).toLowerCase.trim)
     def grams(t: String): Set[String] =
@@ -165,14 +165,14 @@ class NearDupSpec extends AnyFunSuite {
       def c(gs: Set[String]) = gs.count(df(_) > 5)
       (shared.size, shared.count(rare), math.min(c(ga), c(gb)), math.min(ga.size, gb.size))
     }
-    val (eNs, eM, eC, eN) = stats(planted("edge"))
-    assert(2 * eNs == eN && eNs == eM + eC, s"edge pair: ${stats(planted("edge"))}")
-    val (sNs, sM, sC, sN) = stats(planted("short"))
-    assert(2 * (sNs + 1) == sN && sNs == sM + sC, s"short pair: ${stats(planted("short"))}")
-    assert((gsets(9003L) intersect gsets(9004L)).filter(rare).forall(df(_) == 5))
-    val (oNs, oM, _, oN) = stats(planted("one_rare"))
-    assert(oM == 1 && 2 * oNs >= oN, s"one-rare pair: ${stats(planted("one_rare"))}")
-    assert(truth.contains(planted("edge")) && truth.contains(planted("one_rare")))
+    val (eNs, eM, eC, eN) = stats(edge)
+    assert(2 * eNs == eN && eNs == eM + eC, s"edge pair: ${stats(edge)}")
+    val (sNs, sM, sC, sN) = stats(short)
+    assert(2 * (sNs + 1) == sN && sNs == sM + sC, s"short pair: ${stats(short)}")
+    assert((gsets(short._1) intersect gsets(short._2)).filter(rare).forall(df(_) == 5))
+    val (oNs, oM, _, oN) = stats(oneRare)
+    assert(oM == 1 && 2 * oNs >= oN, s"one-rare pair: ${stats(oneRare)}")
+    assert(truth.contains(edge) && truth.contains(oneRare))
 
     // the bound keeps the edge and one-rare pairs and drops the short one
     import graft.llm.DedupOps.{containmentCandidates, containmentKept, gramSets, rareGramGroups}
@@ -180,9 +180,9 @@ class NearDupSpec extends AnyFunSuite {
       f.select("doc_a", "doc_b").collect().map(r => (r.getLong(0), r.getLong(1))).toSet
     val cand = containmentCandidates(rareGramGroups(spark, dir))
     val kept = pairsOf(containmentKept(cand, gramSets(spark, dir)))
-    assert(pairsOf(cand).contains(planted("short")))
-    assert(!kept.contains(planted("short")), "the bound must drop the one-short pair")
-    assert(kept.contains(planted("edge")) && kept.contains(planted("one_rare")))
+    assert(pairsOf(cand).contains(short))
+    assert(!kept.contains(short), "the bound must drop the one-short pair")
+    assert(kept.contains(edge) && kept.contains(oneRare))
 
     for ((name, op) <- Seq("in-memory" -> graft.llm.DedupOps.llmDedupContainment,
         "indexed" -> graft.llm.DedupOps.llmDedupContainmentIndexed)) {
