@@ -132,7 +132,7 @@ object ScaleCheck {
         "minhash" -> DedupOps.llmDedupMinhash,
         "ngram_jaccard" -> DedupOps.llmDedupNgramJaccard,
         "cluster" -> DedupOps.llmDedupCluster,
-        "decontaminate" -> DedupOps.llmDecontaminate,
+        "decontaminate" -> DedupOps.llmDecontaminateIndexed,
         // round 6: the composite funnel — costs its quality scan plus
         // semi/anti joins because the verified-pair index is already built
         // by ngram_jaccard above (the reuse IS the claim under test)
@@ -186,18 +186,20 @@ object ScaleCheck {
       // so candidates are O(n), never the posting-self-join n². The counts
       // run DedupOps' own candidate generator; ngram_hashes returns
       // distinct grams per doc, so a group's size is its doc frequency.
-      DedupOps.llmDedupContainment(spark, base).count()
+      DedupOps.llmDedupContainmentIndexed(spark, base).count()
       clearAll()
       scalesOr(1, 2, 4, 8).foreach { scale =>
         val dir = docsDir(scale, "containment")
         val nDocs = docCount(dir)
-        val groups = DedupOps.rareGroups(DedupOps.gramIndex(spark, dir).select("doc_id", "g"), "g")
+        // the timed call writes the stored gram and gram-set tables it
+        // reads, so containment_sec includes both writes; the counts after
+        // it read those tables
+        val (nPairs, t) = timed(DedupOps.llmDedupContainmentIndexed(spark, dir).count())
+        val groups = DedupOps.rareGramGroups(spark, dir)
         val nRare = groups.count()
         val cand = DedupOps.containmentCandidates(groups)
         val nCand = cand.count()
-        val (nPairs, t) = timed(DedupOps.llmDedupContainment(spark, dir).count())
-        // the candidates that survive the shared-gram bound (read after the
-        // timed call, which builds the gram sets the bound reads)
+        // the candidates that survive the shared-gram bound
         val nKept = DedupOps.containmentKept(cand, DedupOps.gramSets(spark, dir)).count()
         emit("scale_check_containment", "scale" -> scale, "docs" -> nDocs,
           "rare_grams" -> nRare, "cand_pairs" -> nCand, "cand_per_doc" -> nCand.toDouble / nDocs,
@@ -214,20 +216,20 @@ object ScaleCheck {
       // (2) BLOCKING: like containment, only fps with df in [2,5] emit
       //     pairs, so candidates/doc stays flat as replicas multiply
       //     (winnow_fps returns distinct fps per doc).
-      DedupOps.llmDedupSpan(spark, base).count() // warm
+      DedupOps.llmDedupSpanIndexed(spark, base).count() // warm
       clearAll()
       scalesOr(1, 2, 4, 8).foreach { scale =>
         val dir = docsDir(scale, "span")
         val docs = spark.read.parquet(s"$dir/documents.parquet")
         val nDocs = docs.count()
-        val fps = docs
-          .select(col("doc_id"), lower(trim(col("text"))).as("t"))
-          .select(col("doc_id"), explode(expr("winnow_fps(t, 8, 16)")).as("fp"))
+        // the timed call writes the stored winnow table it reads, so
+        // span_sec includes that write; the counts after it read the table
+        val (nPairs, t) = timed(DedupOps.llmDedupSpanIndexed(spark, dir).count())
+        val fps = spark.table(DedupOps.spanTable(spark, dir)).select("doc_id", "fp")
         val nFps = fps.count()
         val nGrams = docs
           .select(explode(expr("ngram_hashes(lower(trim(text)), 8)"))).count()
         val nCand = DedupOps.rarePairs(DedupOps.rareGroups(fps, "fp")).distinct().count()
-        val (nPairs, t) = timed(DedupOps.llmDedupSpan(spark, dir).count())
         emit("scale_check_span", "scale" -> scale, "docs" -> nDocs,
           "fps_per_doc" -> nFps.toDouble / nDocs, "keep_frac" -> nFps.toDouble / nGrams,
           "cand_pairs" -> nCand, "cand_per_doc" -> nCand.toDouble / nDocs,
@@ -478,14 +480,17 @@ object ScaleCheck {
         // Round 18: build every stored table FIRST, then release the
         // executor-memory builder persists before timing — the offline
         // index build of a real pipeline ends with tables on disk and heap
-        // returned, and measuring consumers beside a ×128 gram persist
-        // (~30 GB co-resident in this 48g JVM) inflated the signature
-        // consumers 3-6× via storage/GC pressure (BASELINE r18, minhash
-        // ×128 residual). Table-name caches survive the release, so the
-        // timed consumers read the files they would in production.
-        // Round 19: the builders stream from RAW plans when the in-memory
-        // persists are cold (this path — DedupOps.buildSource), so these
-        // builds leave no executor-storage residue by
+        // returned, and measuring consumers beside the builder persists
+        // (then a ×128 gram persist, ~30 GB co-resident in this 48g JVM)
+        // inflated the signature consumers 3-6× via storage/GC pressure
+        // (BASELINE r18, minhash ×128 residual). Table-name caches survive
+        // the release, so the timed consumers read the files they would in
+        // production. The gram and span families keep no persist at all:
+        // their stored tables are written straight from the raw passes,
+        // and the gram-set table from the gram table's rows. The signature
+        // and embedding builders stream from RAW plans when their
+        // in-memory persists are cold (this path — DedupOps.buildSource),
+        // so these builds leave no executor-storage residue by
         // construction; releaseBuilderPersists below is belt-and-braces.
         // Build TIMES here are io-window-dominated and the corpus was just
         // replicated — sync+settle first, or the first build measures the

@@ -121,18 +121,17 @@ object Upsert {
       .withColumn("o_totalprice", col("o_totalprice") * 2)
       .withColumn("o_year", year(col("o_orderdate")))
       .select("o_orderkey", "o_totalprice", "o_orderstatus", "o_year")
-    val prevMode = spark.conf.get("spark.sql.sources.partitionOverwriteMode")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try {
-      val touched = stg.select("o_year").distinct()
-      val refreshed = spark.read.parquet(dir)
-        .join(broadcast(touched), Seq("o_year")) // partition-prunes the scan
-        .join(stg.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
-        .unionByName(stg)
-        .localCheckpoint()
-      refreshed.repartition(col("o_year"), pmod(col("o_orderkey"), lit(WriteSpread.n)))
-        .write.mode("overwrite").partitionBy("o_year").parquet(dir)
-    } finally spark.conf.set("spark.sql.sources.partitionOverwriteMode", prevMode)
+    val touched = stg.select("o_year").distinct()
+    val refreshed = spark.read.parquet(dir)
+      .join(broadcast(touched), Seq("o_year")) // partition-prunes the scan
+      .join(stg.select("o_orderkey"), Seq("o_orderkey"), "left_anti")
+      .unionByName(stg)
+      .localCheckpoint()
+    // dynamic overwrite as a per-write option: the caller's session conf
+    // stays untouched, so a query planned beside this one never sees it
+    refreshed.repartition(col("o_year"), pmod(col("o_orderkey"), lit(WriteSpread.n)))
+      .write.mode("overwrite").option("partitionOverwriteMode", "dynamic")
+      .partitionBy("o_year").parquet(dir)
     spark.read.parquet(dir)
       .select("o_orderkey", "o_totalprice", "o_orderstatus")
       .orderBy("o_orderkey")

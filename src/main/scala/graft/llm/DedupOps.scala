@@ -100,10 +100,11 @@ object DedupOps {
   private def stored(spark: SparkSession, tbl: String): DataFrame =
     spark.table(tbl).hint("merge")
 
-  /** Build-side source selection (round 19): the table builders read the
-    * in-memory persist `name` when an in-memory consumer already
-    * materialized it (the bench session — one signature pass serves both
-    * families), and the RAW plan when it is cold (the offline-build
+  /** Build-side source selection (round 19) of the signature and
+    * embedding tables, whose persists carry columns or feed consumers the
+    * tables do not: the builders read the in-memory persist `name` when an
+    * in-memory consumer already materialized it (the bench session — one
+    * signature pass serves both families), and the RAW plan when it is cold (the offline-build
     * pipeline — where persisting would stage the whole corpus in executor
     * storage just to write it out once; the r18 curve showed exactly that
     * persist co-resident with later builds inflating them 3-9×). */
@@ -121,10 +122,11 @@ object DedupOps {
     * once, their working frames are dead weight afterwards, and the
     * consumers read the files. Round 18: ScaleCheck's planscale section
     * calls this between building the tables and timing the consumers —
-    * a ×128 gram persist (~30 GB MEMORY_AND_DISK) co-resident in the
-    * measuring JVM inflated the signature consumers 3-6× via storage/GC
-    * pressure (BASELINE.md round 18, minhash ×128 residual: consume
-    * 3.3 s alone vs 19.6-32.5 s beside the persists). In-memory frame
+    * builder persists co-resident in the measuring JVM (then a ×128 gram
+    * persist of ~30 GB MEMORY_AND_DISK, since replaced by the stored gram
+    * table) inflated the signature consumers 3-6× via storage/GC pressure
+    * (BASELINE.md round 18, minhash ×128 residual: consume 3.3 s alone vs
+    * 19.6-32.5 s beside the persists). In-memory frame
     * caches are cleared with their persists so a later in-memory
     * consumer rebuilds instead of silently recomputing per use. */
   def releaseBuilderPersists(): Unit = memo.releasePersists()
@@ -1211,11 +1213,10 @@ object DedupOps {
       .orderBy("doc_new", "doc_old")
   }
 
-  /** Per-doc gram-hash sets — the exact-verification operand of the
-    * in-memory containment op, persisted once per corpus (built in warmup
-    * like verifiedPairs). Rows as [[gramSetPlan]]. */
+  /** The stored per-doc gram sets ([[gramSetTable]]) as a frame, rows as
+    * [[gramSetPlan]]: the exact-verification operand of containment. */
   private[graft] def gramSets(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "gramSets")(memo.persist(gramSetPlan(gramIndex(spark, sfDir))))
+    spark.table(gramSetTable(spark, sfDir))
 
   /** One row per doc of a (doc_id, g) gram frame: `gs` its distinct gram
     * hashes, SORTED so the per-pair intersection runs as
@@ -1241,15 +1242,14 @@ object DedupOps {
         (col("n") - coalesce(col("n_low"), lit(0L))).as("c"))
   }
 
-  /** [[gramSets]] MATERIALIZED as a parquet table bucketed on doc_id — the
-    * per-doc set index the indexed containment op verifies against, so a
-    * call assembles no sets and shuffles no gram rows. Written from the
-    * gramSets persist when it is warm, else from the raw gram plan
-    * ([[buildSource]]). Candidate pairs stay per-call work. */
+  /** The per-doc gram sets MATERIALIZED as a parquet table bucketed on
+    * doc_id — the set index containment verifies against, so a call
+    * assembles no sets and shuffles no gram rows. Written from the stored
+    * [[gramTable]]'s rows, so the corpus's one gram pass serves it too.
+    * Candidate pairs stay per-call work. */
   private[graft] def gramSetTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "gramSetTable") {
-      writeIndex(buildSource(spark, sfDir, "gramSets")(gramSetPlan(
-        buildSource(spark, sfDir, "gramIndex")(gramPlan(spark, sfDir)))),
+      writeIndex(gramSetPlan(grams(spark, sfDir)),
         sfDir, "gram_sets_bkt", "gram_set_index", Seq("doc_id"))
     }
 
@@ -1263,9 +1263,9 @@ object DedupOps {
   /** THE shared one-scan candidate generator of the rare-key blocking
     * family (round 18 — VERDICT r17 #1 unified the four call sites):
     * one `groupBy(key).collect_upto(doc_id, RareDfCap+1)` pass over any
-    * (doc_id, key) source — the raw in-memory posting or a key-bucketed
-    * stored table (where the aggregate runs partial-per-bucket with no
-    * exchange on the key) — keeping groups with df ∈ [2, RareDfCap].
+    * (doc_id, key) source — a key-bucketed stored table (where the
+    * aggregate runs partial-per-bucket with no exchange on the key) or a
+    * raw posting — keeping groups with df ∈ [2, RareDfCap].
     * `collect_upto` (native, graft.functions.CollectUpto) bounds the
     * aggregation state at RareDfCap+1 longs per key, so a hot stopword-
     * like key never materializes its posting list before being discarded
@@ -1295,50 +1295,22 @@ object DedupOps {
       .select(col("doc_a"), explode(col("ds")).as("doc_b"))
       .filter(col("doc_a") < col("doc_b"))
 
-  /** Rare-gram candidate groups (g, ds) of the IN-MEMORY containment,
-    * persisted once per corpus (round 18; successor of the round-11
-    * rarePosting persist — the grouped form is smaller than the posting
-    * rows and the timed op starts directly at the pair explode). */
+  /** Rare-gram candidate groups (g, ds) of containment: one
+    * exchange-free [[rareGroups]] pass over the g-bucketed [[gramTable]],
+    * where `groupBy(g).collect_upto(doc_id, 6)` runs partial-per-bucket
+    * and a hot stopword-like gram holds at most 6 doc_ids in its buffer. */
   private[graft] def rareGramGroups(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "rareGramGroups") {
-      memo.persist(rareGroups(gramIndex(spark, sfDir).select("doc_id", "g"), "g"))
-    }
-
-  /** Raw gram plan — shared by the [[gramIndex]] persist and (round 19)
-    * the stored-table builds when that persist is cold; see [[sigPlan]]
-    * for the build-side rationale. */
-  private def gramPlan(spark: SparkSession, sfDir: String): DataFrame =
-    Tables(spark, sfDir, "documents")
-      .repartition(spark.sparkContext.defaultParallelism)
-      .select(col("doc_id"), lower(trim(col("text"))).as("t"))
-      // native ngram_hashes (round 11) — same distinct-gram-hash set as
-      // the HOF array_distinct∘transform∘xxhash64∘substring spelling,
-      // one tight eval per row instead of ~len interpreted lambdas
-      .select(col("doc_id"), (pmod(col("doc_id"), lit(2)) === 0).as("is_train"),
-        explode(expr("ngram_hashes(t, 13)")).as("g"))
-
-  /** Exploded 13-gram-hash frame (doc_id, is_train, g), persisted: the
-    * decontamination plan consumes it TWICE (distinct train grams + the
-    * eval-side semi-join), and without materialization Spark recomputes the
-    * whole explode for each side — the gram pass is the expensive linear
-    * scan, everything after it shuffles only distinct grams. At 100 TB this
-    * is the once-per-corpus gram index every decontamination run starts
-    * from (materialized to storage instead of executor memory).
-    * The hoisted normalized-text alias keeps lower(trim(text)) evaluated
-    * once per doc before the native gram pass reads its bytes. */
-  private[graft] def gramIndex(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "gramIndex")(memo.persist(gramPlan(spark, sfDir)))
+    rareGroups(grams(spark, sfDir).select("doc_id", "g"), "g")
 
   /** Train/eval decontamination — the benchmark-leakage check every
     * training corpus runs: split the corpus (even doc_id = train, odd =
     * eval), hash each doc's distinct 13-grams, and flag eval docs sharing
     * any 13-gram with the train side. The collision test is a semi-join on
     * the gram hash — shuffle scales with distinct grams, never pairs.
-    * Brute-force-verified in NearDupSpec. `grams` is the in-memory
-    * [[gramIndex]] or a g-bucketed stored table, where both sides of the
-    * semi-join are bucketed scans with no exchange on g anywhere in the
-    * plan (PlanSpec asserts) — the only shuffle left is the final per-doc
-    * aggregate. */
+    * Brute-force-verified in NearDupSpec. `grams` is a g-bucketed stored
+    * table, so both sides of the semi-join are bucketed scans with no
+    * exchange on g anywhere in the plan (PlanSpec asserts) — the only
+    * shuffle left is the final per-doc aggregate. */
   private def decontam(grams: DataFrame): DataFrame = {
     val trainGrams = grams.filter(col("is_train")).select("g").distinct()
     grams.filter(!col("is_train"))
@@ -1348,8 +1320,6 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  val llmDecontaminate: QFn = (spark, sfDir) => decontam(gramIndex(spark, sfDir))
-
   /** Decontamination behind an EXPLICIT bloom prefilter — the engine-
     * native runtime filter (join_runtime_bloom) made into a reusable
     * artifact: the train-side distinct grams aggregate into one bloom
@@ -1358,22 +1328,26 @@ object DedupOps {
     * scalar subquery — the expression refuses anything non-constant, so
     * the bloom is evaluated once and shipped with the plan), and only
     * the surviving grams enter the exact semi-join that kills the false
-    * positives. Result is therefore IDENTICAL to [[llmDecontaminate]]
-    * (blooms never false-negative) and shares its full DuckDB oracle.
+    * positives. Result is therefore IDENTICAL to
+    * [[llmDecontaminateIndexed]] (blooms never false-negative) and shares
+    * its full DuckDB oracle. The SQL reads the stored [[gramTable]] by its
+    * catalog name; the bloom's view carries the corpus tag, so two corpora
+    * on one session never read each other's bloom.
     * At 100 TB the bloom is the shipping format of a decontamination
     * list: the eval-set gram bloom is built once, broadcast to every
     * ingest job, and cuts the semi-join's shuffle to the ~matching
     * fraction + FPP instead of every gram of every new document —
     * PlanSpec asserts the probe sits under the join, not above it. */
   val llmDecontaminateBloom: QFn = (spark, sfDir) => {
-    gramIndex(spark, sfDir).createOrReplaceTempView("grams_bloom_v")
-    trainBloom(spark, sfDir).createOrReplaceTempView("train_bloom_v")
+    val grams = gramTable(spark, sfDir)
+    val bloom = s"train_bloom_${graft.util.Scratch.pathTag(sfDir)}"
+    trainBloom(spark, sfDir).createOrReplaceTempView(bloom)
     spark.sql(
-      """WITH tr AS (SELECT DISTINCT g FROM grams_bloom_v WHERE is_train)
+      s"""WITH tr AS (SELECT DISTINCT g FROM $grams WHERE is_train)
         |SELECT doc_id, count(*) AS n_shared_grams
-        |FROM grams_bloom_v t
+        |FROM $grams t
         |WHERE NOT t.is_train
-        |  AND bloom_might_contain((SELECT b FROM train_bloom_v), t.g)
+        |  AND bloom_might_contain((SELECT b FROM $bloom), t.g)
         |  AND t.g IN (SELECT g FROM tr)
         |GROUP BY doc_id ORDER BY doc_id""".stripMargin)
   }
@@ -1386,28 +1360,40 @@ object DedupOps {
     * is its steady state once the list is shipped). */
   private[graft] def trainBloom(spark: SparkSession, sfDir: String): DataFrame =
     memo(spark, sfDir, "trainBloom") {
-      memo.persist(gramIndex(spark, sfDir)
+      memo.persist(grams(spark, sfDir)
         .filter(col("is_train")).select("g").distinct()
         .agg(expr("bloom_filter_agg(g)").as("b")))
     }
 
-  /** The gram index MATERIALIZED to disk as a parquet table hash-bucketed
-    * on the gram hash — the durable form of [[gramIndex]]'s executor-memory
-    * persist, and the artifact a 100 TB pipeline actually builds: the gram
-    * pass over the corpus runs ONCE at index-build time, and every
-    * downstream consumer (decontamination, passage profiling, future eval
-    * sets) scans the bucketed files with NO exchange on g — the bucketed
-    * scan already reports HashPartitioning(g, N), so gram-keyed distincts
-    * and joins are co-located for free (the Bucketing.sinkBucketedColocated
-    * pattern applied to an index instead of a fact table). Built once per
+  /** The exploded 13-gram-hash rows (doc_id, is_train, g) MATERIALIZED as
+    * a parquet table hash-bucketed on the gram hash — the gram family's
+    * only materialization, and the artifact a 100 TB pipeline actually
+    * builds: the gram pass over the corpus runs ONCE at index-build time,
+    * and every consumer (decontamination, passage profiling, containment,
+    * the set and two-generation tables) scans the bucketed files with NO
+    * exchange on g — the bucketed scan already reports HashPartitioning(g,
+    * N), so gram-keyed distincts and joins are co-located for free (the
+    * Bucketing.sinkBucketedColocated pattern applied to an index instead
+    * of a fact table). Native ngram_hashes (round 11) gives the same
+    * distinct-gram-hash set as the HOF array_distinct∘transform∘xxhash64∘
+    * substring spelling, one tight eval per row; the hoisted normalized
+    * text keeps lower(trim(text)) evaluated once per doc. Built once per
     * (session, sfDir); consumers call this idempotently. */
   private[graft] def gramTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "gramTable") {
-      writeIndex(buildSource(spark, sfDir, "gramIndex")(gramPlan(spark, sfDir)),
+      writeIndex(Tables(spark, sfDir, "documents")
+        .repartition(spark.sparkContext.defaultParallelism)
+        .select(col("doc_id"), lower(trim(col("text"))).as("t"))
+        .select(col("doc_id"), (pmod(col("doc_id"), lit(2)) === 0).as("is_train"),
+          explode(expr("ngram_hashes(t, 13)")).as("g")),
         sfDir, "grams_bkt", "gram_index", GramKeys)
     }
 
   private val GramKeys = Seq("g")
+
+  /** The stored [[gramTable]]'s rows. */
+  private def grams(spark: SparkSession, sfDir: String): DataFrame =
+    spark.table(gramTable(spark, sfDir))
 
   /** Index build + profile: write the bucketed gram table (no-op if this
     * session already built it) and report the per-split row/distinct-gram
@@ -1417,7 +1403,7 @@ object DedupOps {
     * Distinct-of-hashes equals distinct-of-grams (the 64-bit collision
     * argument the decontaminate oracle already rests on). */
   val llmGramIndexBuild: QFn = (spark, sfDir) =>
-    spark.table(gramTable(spark, sfDir))
+    grams(spark, sfDir)
       .groupBy("is_train")
       .agg(count(lit(1)).as("n_gram_rows"),
         countDistinct(col("g")).as("n_distinct_grams"))
@@ -1432,8 +1418,8 @@ object DedupOps {
     * BASELINE.md round 19). */
   private[graft] def gramAppendTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "gramAppendTable") {
-      twoGenIndex(buildSource(spark, sfDir, "gramIndex")(gramPlan(spark, sfDir)),
-        sfDir, "grams_app", "gram_append", "doc_id", GramKeys)(appendIndex(_, _, GramKeys))
+      twoGenIndex(grams(spark, sfDir), sfDir, "grams_app", "gram_append", "doc_id",
+        GramKeys)(appendIndex(_, _, GramKeys))
     }
 
   /** Decontamination served from the APPENDED two-generation gram index:
@@ -1442,7 +1428,8 @@ object DedupOps {
   val llmGramIndexAppend: QFn = (spark, sfDir) =>
     decontam(stored(spark, gramAppendTable(spark, sfDir)))
 
-  /** Decontamination re-expressed over the MATERIALIZED index. */
+  /** Decontamination over the stored gram index; registered as both
+    * llm_decontaminate and llm_decontaminate_indexed. */
   val llmDecontaminateIndexed: QFn = (spark, sfDir) =>
     decontam(stored(spark, gramTable(spark, sfDir)))
 
@@ -1451,18 +1438,18 @@ object DedupOps {
     * dedup): for every doc, what fraction of its distinct 13-grams also
     * appears in at least one OTHER document. Boilerplate, licence headers,
     * and templated spam score high; unique prose scores ~0. Reads the
-    * same persisted gram index as llm_decontaminate (one linear gram pass
+    * same stored gram index as llm_decontaminate (one linear gram pass
     * per corpus, shared by both operators); cross-doc repetition is a
     * count-distinct-docs aggregate per gram plus one semi-join back —
     * shuffles carry distinct grams, never doc pairs. The per-doc fraction
     * is integer-ratio arithmetic, so the rounded score is engine-exact. */
   val llmDedupPassage: QFn = (spark, sfDir) => {
-    val grams = gramIndex(spark, sfDir).select("doc_id", "g")
-    val shared = grams.groupBy("g")
+    val gs = grams(spark, sfDir).select("doc_id", "g")
+    val shared = gs.groupBy("g")
       .agg(countDistinct(col("doc_id")).as("nd"))
       .filter(col("nd") >= 2).select("g")
-    val perDoc = grams.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
-    val rep = grams.join(shared, Seq("g"), "left_semi")
+    val perDoc = gs.groupBy("doc_id").agg(count(lit(1)).as("n_grams"))
+    val rep = gs.join(shared, Seq("g"), "left_semi")
       .groupBy("doc_id").agg(count(lit(1)).as("n_repeated"))
     perDoc.join(rep, Seq("doc_id"), "left")
       .select(col("doc_id"), col("n_grams"),
@@ -1483,11 +1470,15 @@ object DedupOps {
     * count is bounded by Σ_rare-grams C(df,2) ≤ rare_grams · C(5,2) —
     * linear in corpus size by construction, where an unblocked
     * posting-list self-join is quadratic in the head gram's df. Pairs
-    * explode out of the persisted bounded-state [[rareGroups]] groups
-    * and are verified against the persisted [[gramSets]] by
-    * [[containmentVerified]]. Both containment directions are reported;
-    * the ≥0.5 keep-gate is on the max. */
-  val llmDedupContainment: QFn = (spark, sfDir) =>
+    * explode out of the bounded-state [[rareGramGroups]] pass over the
+    * g-bucketed [[gramTable]] and are verified against the doc_id-bucketed
+    * [[gramSetTable]] by [[containmentVerified]], so a call assembles no
+    * sets: the only exchanges left are keyed on doc pairs. At 100 TB both
+    * tables are built once at index-build time and every call rides the
+    * same files. Both containment directions are reported; the ≥0.5
+    * keep-gate is on the max. Registered as both llm_dedup_containment and
+    * llm_dedup_containment_indexed. */
+  val llmDedupContainmentIndexed: QFn = (spark, sfDir) =>
     containmentVerified(containmentCandidates(rareGramGroups(spark, sfDir)),
       gramSets(spark, sfDir))
 
@@ -1512,13 +1503,11 @@ object DedupOps {
       .select("doc_a", "doc_b", "n_a", "n_b")
   }
 
-  /** Exact verification shared by the containment twins: the candidates
-    * [[containmentKept]] leaves join their sorted gram sets, the native
-    * two-pointer merge (sorted_intersect_count, which fails loudly on
-    * unsorted input) counts the shared grams, and pairs whose max
-    * containment direction clears 0.5 report both directions. The twins
-    * differ ONLY in where candidates and sets come from (the
-    * executor-memory persists vs the stored tables). */
+  /** Exact containment verification: the candidates [[containmentKept]]
+    * leaves join their sorted gram sets, the native two-pointer merge
+    * (sorted_intersect_count, which fails loudly on unsorted input) counts
+    * the shared grams, and pairs whose max containment direction clears
+    * 0.5 report both directions. */
   private def containmentVerified(cand: DataFrame, sets: DataFrame): DataFrame =
     containmentKept(cand, sets)
       .join(sets.select(col("doc_id").as("doc_a"), col("gs").as("gs_a")), Seq("doc_a"))
@@ -1531,21 +1520,6 @@ object DedupOps {
         round(col("n_shared").cast("double") / col("n_a"), 4).as("cont_a"),
         round(col("n_shared").cast("double") / col("n_b"), 4).as("cont_b"))
       .orderBy("doc_a", "doc_b")
-
-  /** Containment dedup over the MATERIALIZED indexes — the scale-path twin
-    * of [[llmDedupContainment]], same rows and the same DuckDB oracle.
-    * Candidate generation is ONE exchange-free pass over the g-bucketed
-    * [[gramTable]]: `groupBy(g).collect_upto(doc_id, 6)` runs
-    * partial-per-bucket, and a hot stopword-like gram holds at most 6
-    * doc_ids in its buffer. Verification reads the doc_id-bucketed
-    * [[gramSetTable]], so a call assembles no sets: the only exchanges
-    * left are keyed on doc pairs. At 100 TB both tables are built once
-    * at index-build time and every call rides the same files. */
-  val llmDedupContainmentIndexed: QFn = (spark, sfDir) =>
-    containmentVerified(
-      containmentCandidates(
-        rareGroups(spark.table(gramTable(spark, sfDir)).select("doc_id", "g"), "g")),
-      spark.table(gramSetTable(spark, sfDir)))
 
   /** Substring-level (span) dedup via WINNOWING fingerprints
     * (Schleimer/Wilkerson/Aiken 2003, the MOSS idiom — and the spirit of
@@ -1565,31 +1539,31 @@ object DedupOps {
     * estimated shared-span chars (n_fp·(w+1)/2 — the winnow density
     * inverted). no_oracle (xxhash64 winnowing not expressible in
     * DuckDB); NearDupSpec plants spliced spans and brute-checks
-    * soundness. */
-  val llmDedupSpan: QFn = (spark, sfDir) =>
-    spanPairsFromGroups(spanGroups(spark, sfDir))
-
-  /** Rare-fp candidate groups (fp, ds), persisted once per corpus — the
-    * span twin of [[rareGramGroups]] (round 18; successor of the
-    * round-11 rare-posting persist): the winnow explode + the bounded
-    * [[rareGroups]] aggregate run once at warmup, and the timed op
-    * starts directly at the pair explode — replacing the posting
-    * self-join that shuffled the persisted posting twice per call. */
-  private[graft] def spanGroups(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "spanGroups") {
-      memo.persist(rareGroups(spanFps(
-        Tables(spark, sfDir, "documents").select("doc_id", "text")), "fp"))
-    }
+    * soundness.
+    *
+    * Candidate pairs come from ONE exchange-free pass over the
+    * fp-bucketed [[spanTable]] (round 17; unified into [[rareGroups]]
+    * round 18): `groupBy(fp).collect_upto(doc_id, 6)` runs
+    * partial-per-bucket with no exchange on fp AND with bounded per-fp
+    * aggregate state (ADVICE r17 — a hot boilerplate fingerprint holds ≤6
+    * doc_ids, never its posting list), the rare gate keeps fps in 2..5
+    * docs, and the ≤C(5,2)=10 ordered pairs per surviving fp explode out
+    * of the grouped row. Only the doc-pair aggregate shuffles (PlanSpec
+    * asserts bucketed scans + zero fp-keyed exchanges). Registered as both
+    * llm_dedup_span and llm_dedup_span_indexed. */
+  val llmDedupSpanIndexed: QFn = (spark, sfDir) =>
+    spanPairsFromGroups(
+      rareGroups(spark.table(spanTable(spark, sfDir)).select("doc_id", "fp"), "fp"))
 
   /** (doc_id, fp) winnow-fingerprint rows of a (doc_id, text) frame —
-    * the linear scan both the in-memory persist and the bucketed
-    * [[spanTable]] build start from. */
+    * the linear scan the bucketed [[spanTable]] build runs once per
+    * corpus. */
   private def spanFps(docs: DataFrame): DataFrame =
     docs
       .select(col("doc_id"), lower(trim(col("text"))).as("t"))
       .select(col("doc_id"), explode(expr("winnow_fps(t, 8, 16)")).as("fp"))
 
-  /** Pair scoring shared by the span twins: multiplicity per ordered pair
+  /** Span pair scoring: multiplicity per ordered pair
     * = shared-rare-fp count, ≥2 to report, with the estimated shared-span
     * chars (n_fp·(w+1)/2 — the winnow density inverted). */
   private def spanPairsFromGroups(groups: DataFrame): DataFrame =
@@ -1600,7 +1574,7 @@ object DedupOps {
       .withColumn("est_span_chars", expr("n_shared_fp * 17 div 2"))
       .orderBy("doc_a", "doc_b")
 
-  /** Core of [[llmDedupSpan]] over any (doc_id, text) frame — NearDupSpec
+  /** Core of [[llmDedupSpanIndexed]] over any (doc_id, text) frame — NearDupSpec
     * replays it on corpora with planted spliced spans (uncached; spec
     * corpora are synthetic one-shots). */
   private[graft] def spanPairs(docs: DataFrame): DataFrame =
@@ -1621,29 +1595,12 @@ object DedupOps {
     * gram positions is the winnow selectivity claim, measured per corpus
     * by ScaleCheck's span section). The distinct count runs
     * partial-per-bucket with no exchange on fp. xxhash64-based →
-    * no DuckDB oracle; NearDupSpec asserts profile equality with the
-    * in-memory winnow pass. */
+    * no DuckDB oracle; NearDupSpec asserts profile equality with a
+    * direct winnow pass over the corpus. */
   val llmSpanIndexBuild: QFn = (spark, sfDir) =>
     spark.table(spanTable(spark, sfDir))
       .agg(count(lit(1)).as("n_fp_rows"),
         countDistinct(col("fp")).as("n_distinct_fps"))
-
-  /** Span dedup over the MATERIALIZED winnow index — byte-identical
-    * results to [[llmDedupSpan]] (NearDupSpec asserts). Candidate pairs
-    * come from ONE exchange-free pass over the fp-bucketed table (round
-    * 17; unified into [[rareGroups]] round 18): `groupBy(fp).
-    * collect_upto(doc_id, 6)` runs partial-per-bucket with no exchange
-    * on fp AND with bounded per-fp aggregate state (ADVICE r17 — a hot
-    * boilerplate fingerprint holds ≤6 doc_ids, never its posting list),
-    * the rare gate keeps fps in 2..5 docs, and the ≤C(5,2)=10 ordered
-    * pairs per surviving fp explode out of the grouped row — replacing
-    * the df-profile + left_semi + posting-self-join shape that read the
-    * same bucketed files in three subtrees. Only the doc-pair aggregate
-    * shuffles (PlanSpec asserts bucketed scans + zero fp-keyed
-    * exchanges). */
-  val llmDedupSpanIndexed: QFn = (spark, sfDir) =>
-    spanPairsFromGroups(
-      rareGroups(spark.table(spanTable(spark, sfDir)).select("doc_id", "fp"), "fp"))
 
   /** End-to-end corpus-cleaning pipeline — the composition a real
     * training-data build runs, as ONE operator with per-stage survivor
@@ -1736,12 +1693,12 @@ object DedupOps {
     "llm_dedup_simhash_indexed" -> llmDedupSimhashIndexed,
     "llm_dedup_incremental_batch" -> llmDedupIncrementalBatch,
     "llm_dedup_passage" -> llmDedupPassage,
-    "llm_dedup_containment" -> llmDedupContainment,
+    "llm_dedup_containment" -> llmDedupContainmentIndexed,
     "llm_dedup_containment_indexed" -> llmDedupContainmentIndexed,
-    "llm_dedup_span" -> llmDedupSpan,
+    "llm_dedup_span" -> llmDedupSpanIndexed,
     "llm_span_index_build" -> llmSpanIndexBuild,
     "llm_dedup_span_indexed" -> llmDedupSpanIndexed,
-    "llm_decontaminate" -> llmDecontaminate,
+    "llm_decontaminate" -> llmDecontaminateIndexed,
     "llm_decontaminate_bloom" -> llmDecontaminateBloom,
     "llm_dedup_exact" -> llmDedupExact,
     "llm_dedup_exact_normalized" -> llmDedupExactNormalized,
@@ -1841,8 +1798,8 @@ object DedupOps {
         (col("mh") <= VerifyBounds.SimhashHamBound).as("ham_bound_ok"))
   }
 
-  /** Span-dedup verification frame (shared by the in-memory and indexed
-    * twins): rare-fp blocking makes the detected pair SET df-dependent at
+  /** Span-dedup verification frame (shared by llm_dedup_span and
+    * llm_dedup_span_indexed): rare-fp blocking makes the detected pair SET df-dependent at
     * the fingerprint level (not DuckDB-expressible — a long shared run of
     * COMMON vocabulary is invisible once its winnowed fps exceed df 5),
     * so the frame asserts the operator's sound half: every reported pair
@@ -1930,7 +1887,7 @@ object DedupOps {
     "llm_sig_index_append" -> minhashVerifyFrame(llmSigIndexAppend),
     "llm_dedup_simhash" -> simhashVerifyFrame(llmDedupSimhash),
     "llm_dedup_simhash_indexed" -> simhashVerifyFrame(llmDedupSimhashIndexed),
-    "llm_dedup_span" -> spanVerifyFrame(llmDedupSpan),
+    "llm_dedup_span" -> spanVerifyFrame(llmDedupSpanIndexed),
     "llm_dedup_span_indexed" -> spanVerifyFrame(llmDedupSpanIndexed),
     "llm_sig_index_build" -> sigIndexVerifyFrame,
     "llm_sim_index_build" -> simIndexVerifyFrame,
@@ -1983,7 +1940,7 @@ object DedupOps {
     ("SELECT CAST(count(*) AS BIGINT) AS n_docs, " +
       "TRUE AS precision_ok, TRUE AS nonempty_ok FROM documents")
 
-  // shared by the in-memory and indexed containment twins (see map below)
+  // shared by llm_dedup_containment and llm_dedup_containment_indexed
   private val containmentOracleSql: String =
     ("WITH d AS (SELECT doc_id, lower(trim(text)) AS t FROM documents), " +
       "g AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS BIGINT), 13) AS gram " +

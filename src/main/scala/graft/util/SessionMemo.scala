@@ -19,8 +19,8 @@ import org.apache.spark.storage.StorageLevel
   * sessions of one context race on it. That matters because builders
   * delete scratch dirs and drop catalog tables: a second concurrent build
   * would wipe the first one's output. A build that throws caches nothing
-  * and the next call retries. Builds may nest on OTHER keys (gramSets
-  * reads gramIndex, SimilarityOps.ivfIndex reads DedupOps.embIndex) —
+  * and the next call retries. Builds may nest on OTHER keys (gramSetTable
+  * reads gramTable, SimilarityOps.ivfIndex reads DedupOps.embIndex) —
   * which is why the build does not run inside
   * `ConcurrentHashMap.computeIfAbsent`, whose nested inserts throw
   * "Recursive update". */

@@ -89,6 +89,28 @@ class MemoRuleSpec extends AnyFunSuite {
       "keep operator state out of object-level mutable fields:\n" + offenders.mkString("\n"))
   }
 
+  test("operator modules never set conf on the session they are handed") {
+    // a conf set on the caller's session reaches every query planned on
+    // it meanwhile; a newSession() clone has its own SQLConf, and a write
+    // takes a per-write option instead
+    val ConfWrite = """\b(\w+)\.conf\.(set|unset)\(""".r
+    val Clone = """\bval\s+(\w+)\s*=\s*\w+\.newSession\(\)""".r
+    val files = Seq("llm", "analytics", "etl", "streaming").map(mainRoot.resolve).flatMap(sources)
+    assert(files.nonEmpty)
+    val offenders = for {
+      f <- files
+      lines = Files.readAllLines(f).asScala.toSeq
+      clones = lines.flatMap(l => Clone.findAllMatchIn(l).map(_.group(1))).toSet
+      (line, i) <- lines.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      m <- ConfWrite.findAllMatchIn(code)
+      if !clones(m.group(1))
+    } yield s"$f:${i + 1}: $code"
+    assert(offenders.isEmpty,
+      "set conf on a newSession() clone, or pass a per-write option:\n" + offenders.mkString("\n"))
+  }
+
   test("index tables have one bucketed writer") {
     val llm = Paths.get("src/main/scala/graft/llm")
     val sites = for {

@@ -83,7 +83,7 @@ class NearDupSpec extends AnyFunSuite {
   }
 
   test("decontamination equals brute-force 13-gram overlap") {
-    val got = graft.llm.DedupOps.llmDecontaminate(spark, sfDir)
+    val got = SparkEntry.queries("llm_decontaminate")(spark, sfDir)
       .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
     // brute force: per doc, its distinct 13-gram string set; eval doc is
     // contaminated iff it shares a gram with the union of train grams
@@ -184,12 +184,11 @@ class NearDupSpec extends AnyFunSuite {
     assert(!kept.contains(short), "the bound must drop the one-short pair")
     assert(kept.contains(edge) && kept.contains(oneRare))
 
-    for ((name, op) <- Seq("in-memory" -> graft.llm.DedupOps.llmDedupContainment,
-        "indexed" -> graft.llm.DedupOps.llmDedupContainmentIndexed)) {
-      val got = op(spark, dir).collect()
+    for (name <- Seq("llm_dedup_containment", "llm_dedup_containment_indexed")) {
+      val got = SparkEntry.queries(name)(spark, dir).collect()
         .map(r => (r.getLong(0), r.getLong(1)) -> (r.getLong(2), r.getLong(3), r.getLong(4)))
         .toMap
-      assert(got == truth, s"$name twin: missing ${truth.keySet -- got.keySet}, " +
+      assert(got == truth, s"$name: missing ${truth.keySet -- got.keySet}, " +
         s"extra ${got.keySet -- truth.keySet}, " +
         s"wrong ${got.filter { case (k, v) => truth.get(k).exists(_ != v) }}")
     }
@@ -228,7 +227,8 @@ class NearDupSpec extends AnyFunSuite {
   }
 
   test("materialized span index reproduces the in-memory span pairs and fp profile") {
-    val mem = graft.llm.DedupOps.llmDedupSpan(spark, sfDir)
+    // the stored winnow table against a direct winnow pass over the corpus
+    val mem = graft.llm.DedupOps.spanPairs(docs.select("doc_id", "text"))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
     val idx = graft.llm.DedupOps.llmDedupSpanIndexed(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getLong(3)))
@@ -243,27 +243,15 @@ class NearDupSpec extends AnyFunSuite {
     assert((prof.getLong(0), prof.getLong(1)) == (expRows, expDistinct))
   }
 
-  test("indexed containment gives byte-identical rows to the in-memory twin") {
-    // the stored set table and the gramSets persist feed one verifier;
-    // the rows, their order and every value must agree
-    val idx = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
-      .collect().map(_.toString)
-    val mem = graft.llm.DedupOps.llmDedupContainment(spark, sfDir)
-      .collect().map(_.toString)
-    assert(idx.toSeq == mem.toSeq && mem.nonEmpty)
-  }
-
   test("two-generation gram index serves decontamination byte-identically") {
     // round 19 (VERDICT r18 #3): generation-append for the gram family —
-    // the appended layout must be invisible to results vs BOTH the
-    // single-generation table and the in-memory op
+    // the appended layout must be invisible to results vs the
+    // single-generation table
     val app = graft.llm.DedupOps.llmGramIndexAppend(spark, sfDir)
       .collect().map(_.toString)
     val idx = graft.llm.DedupOps.llmDecontaminateIndexed(spark, sfDir)
       .collect().map(_.toString)
-    val mem = graft.llm.DedupOps.llmDecontaminate(spark, sfDir)
-      .collect().map(_.toString)
-    assert(app.toSeq == idx.toSeq && idx.toSeq == mem.toSeq && app.nonEmpty)
+    assert(app.toSeq == idx.toSeq && app.nonEmpty)
   }
 
   test("two-generation emb index reproduces the indexed embedding pairs byte-identically") {

@@ -886,7 +886,7 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("span dedup posting self-join is an equi-join on the fingerprint") {
-    val df = graft.llm.DedupOps.llmDedupSpan(spark, sfDir)
+    val df = SparkEntry.queries("llm_dedup_span")(spark, sfDir)
     df.collect()
     val p = plan(df)
     assert(!p.contains("CartesianProduct") && !p.contains("BroadcastNestedLoopJoin"),

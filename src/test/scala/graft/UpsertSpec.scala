@@ -59,6 +59,25 @@ class UpsertSpec extends AnyFunSuite {
     assert(twice.collect().toSet == once.collect().toSet)
   }
 
+  test("partition-overwrite upsert overwrites only touched partitions; session conf stays static") {
+    val key = "spark.sql.sources.partitionOverwriteMode"
+    val saved = spark.conf.getOption(key)
+    spark.conf.set(key, "static")
+    try {
+      val got = Upsert.upsertPartitionOverwrite(spark, SparkFixture.sfDir)
+        .collect().toSeq
+      // every order survives; those from 2001 on carry the doubled price
+      val orders = graft.tables.Tables(spark, SparkFixture.sfDir, "orders")
+      val expected = orders.select(col("o_orderkey"),
+          when(col("o_orderdate") >= lit("2001-01-01"), col("o_totalprice") * 2)
+            .otherwise(col("o_totalprice")).as("o_totalprice"),
+          col("o_orderstatus"))
+        .orderBy("o_orderkey").collect().toSeq
+      assert(got == expected)
+      assert(spark.conf.get(key) == "static")
+    } finally saved.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+  }
+
   test("upsert on testdata preserves row count (orders)") {
     val orders = graft.tables.Tables(spark, SparkFixture.sfDir, "orders")
     val stg = orders.filter(col("o_orderkey") % 7 === 0)
