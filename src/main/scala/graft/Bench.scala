@@ -439,13 +439,14 @@ object Bench {
     // minhash 0.26-0.35 s vs a 0.12 s cache read).
     // ASCII only: println encodes with the JVM default charset, and a
     // non-UTF8 locale would turn an em-dash into '?' inside the JSON.
-    // The four actual twin PAIRS are named (review finding r9: the first
-    // draft listed ops with no *_indexed twin and omitted decontaminate);
-    // ngram_jaccard/cluster are persisted-frame consumers without twins.
+    // Only the three actual twin PAIRS are named; ngram_jaccard/cluster
+    // are persisted-frame consumers without twins.
     val twinNote = "twin pairs (llm_dedup_minhash, llm_dedup_simhash, " +
-      "llm_dedup_embedding, llm_decontaminate vs their *_indexed forms) are " +
+      "llm_dedup_embedding vs their *_indexed forms) are " +
       "not like-for-like: the in-memory side reads warmup-persisted frames, " +
       "the *_indexed side re-runs its stored-table join per call; " +
+      "llm_decontaminate, llm_dedup_containment and llm_dedup_span run the " +
+      "same function as their *_indexed names; " +
       "llm_dedup_ngram_jaccard/llm_dedup_cluster also ride persisted frames " +
       "(no indexed twin); see BASELINE.md r8 profile"
     // Streaming work-vs-commit split (VERDICT r9 #6): Spark's own

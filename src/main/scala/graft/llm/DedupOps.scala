@@ -104,10 +104,11 @@ object DedupOps {
     * embedding tables, whose persists carry columns or feed consumers the
     * tables do not: the builders read the in-memory persist `name` when an
     * in-memory consumer already materialized it (the bench session — one
-    * signature pass serves both families), and the RAW plan when it is cold (the offline-build
-    * pipeline — where persisting would stage the whole corpus in executor
-    * storage just to write it out once; the r18 curve showed exactly that
-    * persist co-resident with later builds inflating them 3-9×). */
+    * signature pass serves both families), and the RAW plan when it is
+    * cold (the offline-build pipeline — where persisting would stage the
+    * whole corpus in executor storage just to write it out once; the r18
+    * curve showed exactly that persist co-resident with later builds
+    * inflating them 3-9×). */
   private def buildSource(spark: SparkSession, sfDir: String, name: String)(
       plan: => DataFrame): DataFrame =
     memo.peek[DataFrame](spark, sfDir, name).getOrElse(plan)
@@ -1339,13 +1340,13 @@ object DedupOps {
     * fraction + FPP instead of every gram of every new document —
     * PlanSpec asserts the probe sits under the join, not above it. */
   val llmDecontaminateBloom: QFn = (spark, sfDir) => {
-    val grams = gramTable(spark, sfDir)
+    val tbl = gramTable(spark, sfDir)
     val bloom = s"train_bloom_${graft.util.Scratch.pathTag(sfDir)}"
     trainBloom(spark, sfDir).createOrReplaceTempView(bloom)
     spark.sql(
-      s"""WITH tr AS (SELECT DISTINCT g FROM $grams WHERE is_train)
+      s"""WITH tr AS (SELECT DISTINCT g FROM $tbl WHERE is_train)
         |SELECT doc_id, count(*) AS n_shared_grams
-        |FROM $grams t
+        |FROM $tbl t
         |WHERE NOT t.is_train
         |  AND bloom_might_contain((SELECT b FROM $bloom), t.g)
         |  AND t.g IN (SELECT g FROM tr)
