@@ -191,9 +191,9 @@ object ScaleCheck {
       scalesOr(1, 2, 4, 8).foreach { scale =>
         val dir = docsDir(scale, "containment")
         val nDocs = docCount(dir)
-        // the timed call writes the stored gram and gram-set tables it
-        // reads, so containment_sec includes both writes; the counts after
-        // it read those tables
+        // the timed call writes the stored gram, rare-gram and gram-set
+        // tables it reads, so containment_sec includes those writes; the
+        // counts after it read those tables
         val (nPairs, t) = timed(DedupOps.llmDedupContainmentIndexed(spark, dir).count())
         val groups = DedupOps.rareGramGroups(spark, dir)
         val nRare = groups.count()
@@ -222,14 +222,16 @@ object ScaleCheck {
         val dir = docsDir(scale, "span")
         val docs = spark.read.parquet(s"$dir/documents.parquet")
         val nDocs = docs.count()
-        // the timed call writes the stored winnow table it reads, so
-        // span_sec includes that write; the counts after it read the table
+        // the timed call writes the stored winnow and rare-fp tables it
+        // reads, so span_sec includes both writes; the counts after it read
+        // those tables
         val (nPairs, t) = timed(DedupOps.llmDedupSpanIndexed(spark, dir).count())
         val fps = spark.table(DedupOps.spanTable(spark, dir)).select("doc_id", "fp")
         val nFps = fps.count()
         val nGrams = docs
           .select(explode(expr("ngram_hashes(lower(trim(text)), 8)"))).count()
-        val nCand = DedupOps.rarePairs(DedupOps.rareGroups(fps, "fp")).distinct().count()
+        val nCand = DedupOps.rarePairs(spark.table(DedupOps.spanRareTable(spark, dir)))
+          .distinct().count()
         emit("scale_check_span", "scale" -> scale, "docs" -> nDocs,
           "fps_per_doc" -> nFps.toDouble / nDocs, "keep_frac" -> nFps.toDouble / nGrams,
           "cand_pairs" -> nCand, "cand_per_doc" -> nCand.toDouble / nDocs,
@@ -485,9 +487,10 @@ object ScaleCheck {
         // inflated the signature consumers 3-6× via storage/GC pressure
         // (BASELINE r18, minhash ×128 residual). Table-name caches survive
         // the release, so the timed consumers read the files they would in
-        // production. The gram and span families keep no persist at all:
-        // their stored tables are written straight from the raw passes,
-        // and the gram-set table from the gram table's rows. The signature
+        // production. The gram and span families keep no persist: their
+        // stored tables are written straight from the raw passes, and the
+        // gram-set and rare-gram tables from the gram table's rows (one
+        // aggregate, held only while both are written). The signature
         // and embedding builders stream from RAW plans when their
         // in-memory persists are cold (this path — DedupOps.buildSource),
         // so these builds leave no executor-storage residue by

@@ -206,14 +206,14 @@ object Advanced {
     * provably equals the plain join (the oracle replays it); PlanSpec
     * asserts `skew=true` on the final adaptive SortMergeJoin. */
   val joinSkewAqe: QFn = (spark, sfDir) => {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.adaptive.enabled", "true")
-    s.conf.set("spark.sql.adaptive.forceOptimizeSkewedJoin", "true")
-    s.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionFactor", "2.0")
-    s.conf.set("spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes", "8KB")
-    s.conf.set("spark.sql.adaptive.advisoryPartitionSizeInBytes", "4KB")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = graft.util.ChildSession(spark,
+      "spark.sql.adaptive.enabled" -> "true",
+      "spark.sql.adaptive.forceOptimizeSkewedJoin" -> "true",
+      "spark.sql.adaptive.skewJoin.enabled" -> "true",
+      "spark.sql.adaptive.skewJoin.skewedPartitionFactor" -> "2.0",
+      "spark.sql.adaptive.skewJoin.skewedPartitionThresholdInBytes" -> "8KB",
+      "spark.sql.adaptive.advisoryPartitionSizeInBytes" -> "4KB",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     // plant the hot key: 3 of 4 replicated events land on key 0, the rest
     // spread over 96 keys; ×40 replication makes the hot shuffle partition
     // big enough to trip the (lowered) threshold deterministically. The
@@ -259,11 +259,11 @@ object Advanced {
     * join (the oracle replays it); PlanSpec asserts might_contain sits in
     * the probe-side scan's filters. */
   val joinRuntimeBloom: QFn = (spark, sfDir) => {
-    val s = spark.newSession()
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold", "100MB")
-    s.conf.set("spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold", "0")
-    s.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+    val s = graft.util.ChildSession(spark,
+      "spark.sql.optimizer.runtime.bloomFilter.enabled" -> "true",
+      "spark.sql.optimizer.runtime.bloomFilter.creationSideThreshold" -> "100MB",
+      "spark.sql.optimizer.runtime.bloomFilter.applicationSideScanSizeThreshold" -> "0",
+      "spark.sql.autoBroadcastJoinThreshold" -> "-1")
     val fact = Tables(s, sfDir, "lineitem")
       .select(col("l_orderkey"), col("l_returnflag"), col("l_quantity"))
     val dim = Tables(s, sfDir, "orders")

@@ -173,18 +173,17 @@ object Queries {
     * choices. The SQL deliberately leads with the two dimension tables in
     * the worst order (customer⋈part would be a cross join) — a syntactic
     * planner would die on it; the reorder pulls the fact table in first.
-    * CBO confs live on a child session (newSession: same catalog and
-    * SparkContext, private conf) so the cost-model switch cannot leak into
-    * other queries' plans mid-session. At 100 TB this is the difference
-    * between hand-tuning every dashboard query and letting ANALYZE-time
-    * stats pick the order as dimensions grow. */
+    * CBO confs live on a child session (graft.util.ChildSession: same
+    * catalog and SparkContext, private conf) so the cost-model switch
+    * cannot leak into other queries' plans mid-session. At 100 TB this is
+    * the difference between hand-tuning every dashboard query and letting
+    * ANALYZE-time stats pick the order as dimensions grow. */
   val aggSalesByCategoryStar: QFn = (spark, sfDir) => {
     val tag = starStatsTag(spark, sfDir)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.cbo.enabled", "true")
-    s2.conf.set("spark.sql.cbo.joinReorder.enabled", "true")
-    s2.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("spark.sql.shuffle.partitions"))
+    val s2 = graft.util.ChildSession(spark,
+      "spark.sql.cbo.enabled" -> "true",
+      "spark.sql.cbo.joinReorder.enabled" -> "true",
+      "spark.sql.shuffle.partitions" -> spark.conf.get("spark.sql.shuffle.partitions"))
     s2.sql(
       s"""SELECT p.p_type, c.c_mktsegment, CAST(year(o.o_orderdate) AS INT) AS o_year,
          |       count(*) AS sold_cnt,
@@ -442,11 +441,11 @@ object Queries {
     * layer never sees tables, it connects to a NAMED VIEW the warehouse
     * team maintains. Here: external parquet tables + a persistent
     * catalog view over the star join, then a SECOND SparkSession
-    * (`newSession()` — own SessionState, shared external catalog, the
-    * scan_catalog_second_session boundary) runs the dashboard slice by
-    * view name alone. The view body expands at plan time, so the
-    * consumer's WHERE composes with the view's aggregate and Catalyst
-    * optimizes the WHOLE tree — a view is free abstraction, not a
+    * (a [[graft.util.ChildSession]] — own SessionState, shared external
+    * catalog, the scan_catalog_second_session boundary) runs the
+    * dashboard slice by view name alone. The view body expands at plan
+    * time, so the consumer's WHERE composes with the view's aggregate and
+    * Catalyst optimizes the WHOLE tree — a view is free abstraction, not a
     * materialization boundary (at 100 TB that means dashboards inherit
     * every pushdown/pruning win without knowing the physical layout).
     * View + tables are created once per (session, corpus); the oracle
@@ -467,9 +466,8 @@ object Queries {
            |GROUP BY p.p_type, year(o.o_orderdate)""".stripMargin)
       v
     }
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("spark.sql.shuffle.partitions"))
+    val s2 = graft.util.ChildSession(spark,
+      "spark.sql.shuffle.partitions" -> spark.conf.get("spark.sql.shuffle.partitions"))
     s2.sql(s"SELECT p_type, o_year, sold_cnt FROM $view " +
       "WHERE o_year >= 1996 ORDER BY p_type, o_year")
   }

@@ -299,9 +299,12 @@ object Ingest {
       .withColumn("o_year", year(col("o_orderdate")))
       .withColumn("o_month", month(col("o_orderdate")))
       // avoid the tasks × partitions small-file explosion (see
-      // scan_parquet_partitioned); at 100 TB add a salt column to this
-      // repartition when single partitions exceed one task's write budget
-      .repartition(col("o_year"), col("o_month"))
+      // scan_parquet_partitioned): one file per (o_year, o_month) dir. The
+      // explicit count keeps AQE from coalescing the ~84 dirs into one
+      // writer task; at 100 TB add a salt column to this repartition when
+      // single partitions exceed one task's write budget
+      .repartition(spark.conf.get("spark.sql.shuffle.partitions").toInt,
+        col("o_year"), col("o_month"))
       .write.mode("overwrite")
       .partitionBy("o_year", "o_month")
       .option("compression", "zstd")
@@ -600,7 +603,8 @@ object Ingest {
     * re-registration. Spark's split is the same: temp views die with
     * their session, catalog tables live in the shared external catalog.
     * Here the registering session creates the external table once
-    * (memoized above), then a SECOND SparkSession — `newSession()`: its
+    * (memoized above), then a SECOND SparkSession — a child session
+    * ([[graft.util.ChildSession]], reused across calls): its
     * own SessionState, analyzer and EMPTY temp-view namespace, sharing
     * only the SparkContext and the external catalog, which is exactly
     * the boundary a persistent metastore spans — runs the consumer
@@ -615,9 +619,8 @@ object Ingest {
     * CatalogPersistSpec runs both as real child processes. */
   val scanCatalogSecondSession: QFn = (spark, sfDir) => {
     val tag = catalogTag(spark, sfDir)
-    val s2 = spark.newSession()
-    s2.conf.set("spark.sql.shuffle.partitions",
-      spark.conf.get("spark.sql.shuffle.partitions"))
+    val s2 = graft.util.ChildSession(spark,
+      "spark.sql.shuffle.partitions" -> spark.conf.get("spark.sql.shuffle.partitions"))
     s2.sql(
       s"""SELECT o_orderstatus, count(*) AS n_orders,
          |       round(cast(sum(cast(o_totalprice AS decimal(18,4))) AS double), 2) AS revenue,

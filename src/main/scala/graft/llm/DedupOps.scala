@@ -1224,34 +1224,49 @@ object DedupOps {
     * sorted_intersect_count's two-pointer merge; `n` their count; `c` how
     * many of them have document frequency above [[RareDfCap]] — the
     * per-doc half of [[containmentKept]]'s bound. `c` is `n` minus the
-    * doc's grams of df ≤ RareDfCap, whose capped [[rareGroups]]-style
-    * groups list every doc, so a hot gram never materializes its posting
-    * list. Both aggregates read one doc_id exchange of the gram rows,
-    * which Spark reuses, so a raw gram plan runs once. */
-  private def gramSetPlan(grams: DataFrame): DataFrame = {
-    graft.functions.GraftFunctions.ensure(grams.sparkSession)
-    val byDoc = grams.select("doc_id", "g").repartition(col("doc_id"))
-    val sets = byDoc.groupBy("doc_id")
+    * doc's grams in `lowDf`, the (g, ds) groups of every gram of df ≤
+    * RareDfCap, so no gram-keyed aggregate runs here. */
+  private def gramSetPlan(grams: DataFrame, lowDf: DataFrame): DataFrame = {
+    val sets = grams.select("doc_id", "g").groupBy("doc_id")
       .agg(sort_array(collect_set(col("g"))).as("gs"), count(lit(1)).as("n"))
-    val lowDf = byDoc
-      .groupBy("g").agg(expr(s"collect_upto(doc_id, ${RareDfCap + 1})").as("ds"))
-      .filter(size(col("ds")) <= RareDfCap)
-      .select(explode(col("ds")).as("doc_id"))
+    val nLow = lowDf.select(explode(col("ds")).as("doc_id"))
       .groupBy("doc_id").agg(count(lit(1)).as("n_low"))
-    sets.join(lowDf, Seq("doc_id"), "left")
+    sets.join(nLow, Seq("doc_id"), "left")
       .select(col("doc_id"), col("gs"), col("n"),
         (col("n") - coalesce(col("n_low"), lit(0L))).as("c"))
   }
 
   /** The per-doc gram sets MATERIALIZED as a parquet table bucketed on
     * doc_id — the set index containment verifies against, so a call
-    * assembles no sets and shuffles no gram rows. Written from the stored
-    * [[gramTable]]'s rows, so the corpus's one gram pass serves it too.
-    * Candidate pairs stay per-call work. */
+    * assembles no sets and shuffles no gram rows. Written with
+    * [[gramRareTable]] from one capped aggregate over the stored
+    * [[gramTable]]'s rows. */
   private[graft] def gramSetTable(spark: SparkSession, sfDir: String): String =
-    memo(spark, sfDir, "gramSetTable") {
-      writeIndex(gramSetPlan(grams(spark, sfDir)),
-        sfDir, "gram_sets_bkt", "gram_set_index", Seq("doc_id"))
+    gramDerivedTables(spark, sfDir)._2
+
+  /** The stored rare-gram groups (g, ds) — exactly
+    * `rareGroups(grams_bkt, "g")` — bucketed on g: the blocking input of
+    * containment, read instead of re-aggregating every gram row per call. */
+  private[graft] def gramRareTable(spark: SparkSession, sfDir: String): String =
+    gramDerivedTables(spark, sfDir)._1
+
+  /** (rare-gram table, gram-set table), written from ONE capped
+    * `groupBy(g).collect_upto` pass over the g-bucketed gram table (no
+    * exchange on g). Its df ≤ RareDfCap groups are held for the two writes
+    * and released: the rare table keeps the df ≥ 2 ones, and the set
+    * table's `c` needs the df = 1 ones too, which the rare table drops. */
+  private def gramDerivedTables(spark: SparkSession, sfDir: String): (String, String) =
+    memo(spark, sfDir, "gramDerivedTables") {
+      val gs = grams(spark, sfDir)
+      val lowDf = cappedGroups(gs.select("doc_id", "g"), "g")
+        .filter(size(col("ds")) <= RareDfCap)
+        .persist()
+      try {
+        (writeIndex(lowDf.filter(size(col("ds")) >= 2),
+            sfDir, "gram_rare_bkt", "gram_rare_index", GramKeys),
+          writeIndex(gramSetPlan(gs, lowDf),
+            sfDir, "gram_sets_bkt", "gram_set_index", Seq("doc_id")))
+      } finally lowDf.unpersist()
     }
 
   /** Upper df bound of rare-key blocking: only keys (gram hashes / winnow
@@ -1273,7 +1288,12 @@ object DedupOps {
     * (ADVICE r17 — plain collect_list held O(df) state per hot key);
     * capped groups read as size RareDfCap+1 and fail the BETWEEN, which
     * is exactly the old count-then-semi-join semantics in one scan. */
-  private[graft] def rareGroups(src: DataFrame, key: String): DataFrame = {
+  private[graft] def rareGroups(src: DataFrame, key: String): DataFrame =
+    cappedGroups(src, key).filter(size(col("ds")).between(2, RareDfCap))
+
+  /** (key, ds) for every key of (doc_id, key) `src`: its doc_ids, capped
+    * at RareDfCap+1 (a capped group is hot). */
+  private def cappedGroups(src: DataFrame, key: String): DataFrame = {
     // the collected value column is doc_id by contract (ADVICE r18: a
     // caller with a differently named id column would hit an opaque
     // AnalysisException — or silently collect a stray doc_id column)
@@ -1282,7 +1302,6 @@ object DedupOps {
     graft.functions.GraftFunctions.ensure(src.sparkSession)
     src.groupBy(key)
       .agg(expr(s"collect_upto(doc_id, ${RareDfCap + 1})").as("ds"))
-      .filter(size(col("ds")).between(2, RareDfCap))
   }
 
   /** Ordered candidate pairs out of [[rareGroups]] output: the ≤
@@ -1296,12 +1315,10 @@ object DedupOps {
       .select(col("doc_a"), explode(col("ds")).as("doc_b"))
       .filter(col("doc_a") < col("doc_b"))
 
-  /** Rare-gram candidate groups (g, ds) of containment: one
-    * exchange-free [[rareGroups]] pass over the g-bucketed [[gramTable]],
-    * where `groupBy(g).collect_upto(doc_id, 6)` runs partial-per-bucket
-    * and a hot stopword-like gram holds at most 6 doc_ids in its buffer. */
+  /** Rare-gram candidate groups (g, ds) of containment, read from the
+    * stored [[gramRareTable]]. */
   private[graft] def rareGramGroups(spark: SparkSession, sfDir: String): DataFrame =
-    rareGroups(grams(spark, sfDir).select("doc_id", "g"), "g")
+    spark.table(gramRareTable(spark, sfDir))
 
   /** Train/eval decontamination — the benchmark-leakage check every
     * training corpus runs: split the corpus (even doc_id = train, odd =
@@ -1471,14 +1488,14 @@ object DedupOps {
     * count is bounded by Σ_rare-grams C(df,2) ≤ rare_grams · C(5,2) —
     * linear in corpus size by construction, where an unblocked
     * posting-list self-join is quadratic in the head gram's df. Pairs
-    * explode out of the bounded-state [[rareGramGroups]] pass over the
-    * g-bucketed [[gramTable]] and are verified against the doc_id-bucketed
-    * [[gramSetTable]] by [[containmentVerified]], so a call assembles no
-    * sets: the only exchanges left are keyed on doc pairs. At 100 TB both
-    * tables are built once at index-build time and every call rides the
-    * same files. Both containment directions are reported; the ≥0.5
-    * keep-gate is on the max. Registered as both llm_dedup_containment and
-    * llm_dedup_containment_indexed. */
+    * explode out of the stored rare-gram groups ([[gramRareTable]]) and
+    * are verified against the doc_id-bucketed [[gramSetTable]] by
+    * [[containmentVerified]], so a call aggregates no gram rows and
+    * assembles no sets: the only exchanges left are keyed on doc pairs.
+    * At 100 TB both tables are built once at index-build time and every
+    * call rides the same files. Both containment directions are
+    * reported; the ≥0.5 keep-gate is on the max. Registered as both
+    * llm_dedup_containment and llm_dedup_containment_indexed. */
   val llmDedupContainmentIndexed: QFn = (spark, sfDir) =>
     containmentVerified(containmentCandidates(rareGramGroups(spark, sfDir)),
       gramSets(spark, sfDir))
@@ -1542,19 +1559,13 @@ object DedupOps {
     * DuckDB); NearDupSpec plants spliced spans and brute-checks
     * soundness.
     *
-    * Candidate pairs come from ONE exchange-free pass over the
-    * fp-bucketed [[spanTable]] (round 17; unified into [[rareGroups]]
-    * round 18): `groupBy(fp).collect_upto(doc_id, 6)` runs
-    * partial-per-bucket with no exchange on fp AND with bounded per-fp
-    * aggregate state (ADVICE r17 — a hot boilerplate fingerprint holds ≤6
-    * doc_ids, never its posting list), the rare gate keeps fps in 2..5
-    * docs, and the ≤C(5,2)=10 ordered pairs per surviving fp explode out
-    * of the grouped row. Only the doc-pair aggregate shuffles (PlanSpec
-    * asserts bucketed scans + zero fp-keyed exchanges). Registered as both
-    * llm_dedup_span and llm_dedup_span_indexed. */
+    * Candidate pairs explode out of the stored rare-fp groups
+    * ([[spanRareTable]]): the ≤C(5,2)=10 ordered pairs per fp of df 2..5,
+    * so a call aggregates no fingerprint rows and only the doc-pair
+    * aggregate shuffles (PlanSpec asserts zero fp-keyed exchanges).
+    * Registered as both llm_dedup_span and llm_dedup_span_indexed. */
   val llmDedupSpanIndexed: QFn = (spark, sfDir) =>
-    spanPairsFromGroups(
-      rareGroups(spark.table(spanTable(spark, sfDir)).select("doc_id", "fp"), "fp"))
+    spanPairsFromGroups(spark.table(spanRareTable(spark, sfDir)))
 
   /** (doc_id, fp) winnow-fingerprint rows of a (doc_id, text) frame —
     * the linear scan the bucketed [[spanTable]] build runs once per
@@ -1589,6 +1600,17 @@ object DedupOps {
     memo(spark, sfDir, "spanTable") {
       writeIndex(spanFps(Tables(spark, sfDir, "documents").select("doc_id", "text")),
         sfDir, "span_bkt", "span_index", Seq("fp"))
+    }
+
+  /** The stored rare-fp groups (fp, ds) — exactly
+    * `rareGroups(span_bkt, "fp")` — bucketed on fp: one exchange-free
+    * `groupBy(fp).collect_upto(doc_id, 6)` pass over the fp-bucketed
+    * [[spanTable]] per corpus (a hot boilerplate fingerprint holds ≤6
+    * doc_ids in its buffer, never its posting list). */
+  private[graft] def spanRareTable(spark: SparkSession, sfDir: String): String =
+    memo(spark, sfDir, "spanRareTable") {
+      writeIndex(rareGroups(spark.table(spanTable(spark, sfDir)).select("doc_id", "fp"), "fp"),
+        sfDir, "span_rare_bkt", "span_rare_index", Seq("fp"))
     }
 
   /** Span-index build + profile: posting rows and distinct fingerprints —

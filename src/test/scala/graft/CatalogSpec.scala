@@ -43,4 +43,22 @@ class CatalogSpec extends AnyFunSuite {
     assert(viaCatalog.nonEmpty && viaCatalog == direct,
       s"catalog-path result diverged:\ncatalog=$viaCatalog\ndirect=$direct")
   }
+
+  test("a repeated second-session query reuses its child session and compiles nothing") {
+    // Spark keys its codegen cache on the session's classloader: a fresh
+    // newSession() per call would recompile every generated class
+    import org.apache.spark.metrics.source.CodegenMetrics
+    def run(): Unit = graft.analytics.Queries.sqlViewSalesByCategory(spark, sfDir).collect()
+    run()
+    val before = CodegenMetrics.METRIC_COMPILATION_TIME.getCount
+    run()
+    val compiled = CodegenMetrics.METRIC_COMPILATION_TIME.getCount - before
+    assert(compiled == 0, s"the second call compiled $compiled generated classes")
+    // the reused child still sees none of the handing session's temp views
+    graft.tables.Tables.registerAll(spark, sfDir)
+    val child = graft.util.ChildSession(spark,
+      "spark.sql.shuffle.partitions" -> spark.conf.get("spark.sql.shuffle.partitions"))
+    assert(!child.catalog.tableExists("orders"),
+      "temp views must not leak into the child session")
+  }
 }

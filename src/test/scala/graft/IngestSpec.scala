@@ -113,4 +113,22 @@ class IngestSpec extends AnyFunSuite {
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     assert(got.map(r => r.getString(0) -> r.getLong(1)).toMap == want)
   }
+
+  test("partitioned compressed sink: one file per partition dir, several writer tasks") {
+    graft.etl.Ingest.sinkParquetPartitionedCompressed(spark, SparkFixture.sfDir).count()
+    val root = java.nio.file.Paths.get(graft.util.Scratch.rootDir,
+      "sink_parquet_partitioned_compressed")
+    val walk = java.nio.file.Files.walk(root)
+    val files = try walk.iterator().asScala
+      .filter(p => p.getFileName.toString.endsWith(".parquet")).toList
+    finally walk.close()
+    val perDir = files.groupBy(_.getParent)
+    assert(perDir.size > 1 && perDir.values.forall(_.size == 1),
+      s"expected one file in each of several partition dirs: ${perDir.map {
+        case (d, fs) => s"${root.relativize(d)}: ${fs.size}" }.mkString(", ")}")
+    // a part file's name carries the index of the task that wrote it
+    val Part = """part-(\d+)-.*""".r
+    val writers = files.map(_.getFileName.toString).collect { case Part(i) => i }.toSet
+    assert(writers.size > 1, s"all ${files.size} files came from writer task(s) $writers")
+  }
 }

@@ -111,6 +111,27 @@ class MemoRuleSpec extends AnyFunSuite {
       "set conf on a newSession() clone, or pass a per-write option:\n" + offenders.mkString("\n"))
   }
 
+  test("operator modules reuse child sessions: newSession() only in streamSession") {
+    // a newSession() per call gets a fresh classloader, so every call
+    // recompiles its generated classes; graft.util.ChildSession reuses one
+    // child per conf set. A stream's child dies with its per-query views
+    val Member = """^  (?:private(?:\[\w+\])?\s+)?(?:lazy\s+)?(?:def|val)\s+(\w+)""".r.unanchored
+    val files = Seq("llm", "analytics", "etl", "streaming").map(mainRoot.resolve).flatMap(sources)
+    assert(files.nonEmpty)
+    val offenders = for {
+      f <- files
+      lines = Files.readAllLines(f).asScala.toSeq
+      (line, i) <- lines.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if code.contains("newSession()")
+      member = lines.take(i + 1).reverse.collectFirst { case Member(n) => n }
+      if !member.contains("streamSession")
+    } yield s"$f:${i + 1}: $code"
+    assert(offenders.isEmpty,
+      "build child sessions with graft.util.ChildSession:\n" + offenders.mkString("\n"))
+  }
+
   test("index tables have one bucketed writer") {
     val llm = Paths.get("src/main/scala/graft/llm")
     val sites = for {

@@ -412,4 +412,27 @@ class NearDupSpec extends AnyFunSuite {
       assert(partners.nonEmpty, s"vec ${d._1} dropped without a near-dup partner")
     }
   }
+
+  test("the stored rare-key tables hold exactly the rare groups of their posting tables") {
+    import graft.llm.DedupOps
+    // ds order inside a group is the aggregate's arrival order, which the
+    // consumers never read: compare each group's doc set
+    def rows(df: org.apache.spark.sql.DataFrame, key: String) =
+      df.select(col(key), sort_array(col("ds"))).collect().map(_.toString).sorted.toSeq
+    val grams = spark.table(DedupOps.gramTable(spark, sfDir)).select("doc_id", "g")
+    val rareGrams = rows(spark.table(DedupOps.gramRareTable(spark, sfDir)), "g")
+    assert(rareGrams.nonEmpty && rareGrams == rows(DedupOps.rareGroups(grams, "g"), "g"))
+    val fps = spark.table(DedupOps.spanTable(spark, sfDir)).select("doc_id", "fp")
+    val rareFps = rows(spark.table(DedupOps.spanRareTable(spark, sfDir)), "fp")
+    assert(rareFps.nonEmpty && rareFps == rows(DedupOps.rareGroups(fps, "fp"), "fp"))
+    // and each stored set's c counts exactly the doc's grams of df > 5
+    val hot = grams.groupBy("g").agg(countDistinct(col("doc_id")).as("df"))
+      .filter(col("df") > DedupOps.RareDfCap).select("g")
+    val want = grams.join(hot, Seq("g"), "left_semi")
+      .groupBy("doc_id").agg(count(lit(1)).as("c"))
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    val got = DedupOps.gramSets(spark, sfDir).select("doc_id", "c")
+      .collect().map(r => r.getLong(0) -> r.getLong(1)).toMap
+    assert(got.nonEmpty && got == got.keys.map(d => d -> want.getOrElse(d, 0L)).toMap)
+  }
 }

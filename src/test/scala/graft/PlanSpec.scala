@@ -244,19 +244,41 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("indexed containment consumes the bucketed gram table with no exchange on g") {
-    val df = graft.llm.DedupOps.llmDedupContainmentIndexed(spark, sfDir)
-    df.collect() // AQE: final plan only exists after execution
-    val p = plan(df)
     // candidate generation is one groupBy(g).collect_upto pass over the
     // stored g-bucketed files (round 17/18 — replaced the df-profile +
-    // semi-join + posting-self-join shape): no gram re-derivation, no
-    // shuffle keyed on g; only the doc-pair-keyed stages (the candidate
-    // count and the verification joins) may exchange
-    assert(p.contains("Bucketed: true"), s"scan must report bucketed reads:\n$p")
-    assert(!p.contains("xxhash64"),
-      s"grams must come from the stored index, not re-derivation:\n$p")
-    assert("""Exchange hashpartitioning\(g#""".r.findFirstIn(p).isEmpty,
-      s"gram-keyed stages must be exchange-free:\n$p")
+    // semi-join + posting-self-join shape), run once per corpus when the
+    // rare-gram table is written: no gram re-derivation, no shuffle keyed
+    // on g; the call explodes the stored groups, and only its doc-pair-
+    // keyed stages (the candidate count and the verification joins) may
+    // exchange
+    import graft.llm.DedupOps
+    val build = DedupOps.rareGroups(
+      spark.table(DedupOps.gramTable(spark, sfDir)).select("doc_id", "g"), "g")
+    build.collect()
+    val b = plan(build)
+    assert(b.contains("Bucketed: true"), s"the build must read the gram table bucketed:\n$b")
+    val df = DedupOps.llmDedupContainmentIndexed(spark, sfDir)
+    df.collect() // AQE: final plan only exists after execution
+    for (p <- Seq(b, plan(df))) {
+      assert(!p.contains("xxhash64"),
+        s"grams must come from the stored index, not re-derivation:\n$p")
+      assert("""Exchange hashpartitioning\(g#""".r.findFirstIn(p).isEmpty,
+        s"gram-keyed stages must be exchange-free:\n$p")
+    }
+  }
+
+  test("containment and span calls explode stored rare-key groups: no collect_upto") {
+    // the capped per-key aggregate runs once per corpus, when the rare-key
+    // tables are written; a call only explodes their groups into pairs
+    for ((op, table) <- Seq("llm_dedup_containment_indexed" -> "gram_rare_bkt",
+        "llm_dedup_span_indexed" -> "span_rare_bkt")) {
+      val df = SparkEntry.queries(op)(spark, sfDir)
+      df.collect()
+      val p = plan(df)
+      assert(!p.contains("collect_upto"), s"$op re-aggregates its posting rows:\n$p")
+      assert(p.split("\n").exists(l => l.contains("FileScan") && l.contains(table)),
+        s"$op must read $table:\n$p")
+    }
   }
 
   test("indexed containment reads stored per-doc sets: no set aggregate over gram rows") {
@@ -894,12 +916,20 @@ class PlanSpec extends AnyFunSuite {
   }
 
   test("indexed span dedup consumes the bucketed fp table with no exchange on fp") {
-    val df = graft.llm.DedupOps.llmDedupSpanIndexed(spark, sfDir)
+    // the rare-fp groups are one exchange-free groupBy(fp) pass over the
+    // fp-bucketed files, run once per corpus when the rare-fp table is
+    // written; the call explodes the stored groups
+    import graft.llm.DedupOps
+    val build = DedupOps.rareGroups(
+      spark.table(DedupOps.spanTable(spark, sfDir)).select("doc_id", "fp"), "fp")
+    build.collect()
+    val b = plan(build)
+    assert(b.contains("Bucketed: true"), s"expected bucketed scans:\n$b")
+    val df = DedupOps.llmDedupSpanIndexed(spark, sfDir)
     df.collect()
-    val p = plan(df)
-    assert(p.contains("Bucketed: true"), s"expected bucketed scans:\n$p")
-    assert(!p.contains("hashpartitioning(fp"),
-      s"no exchange may be keyed on fp — bucketing must co-locate:\n$p")
+    for (p <- Seq(b, plan(df)))
+      assert(!p.contains("hashpartitioning(fp"),
+        s"no exchange may be keyed on fp — bucketing must co-locate:\n$p")
   }
 
   test("incremental CC scans the stored labels, never shuffles them (round 20)") {

@@ -6,13 +6,15 @@ import java.util.concurrent.ConcurrentLinkedQueue
 import scala.jdk.CollectionConverters._
 
 import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
-import org.apache.spark.sql.execution.{CommandResultExec, QueryExecution, SparkPlan}
+import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution,
+  SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+import org.apache.spark.sql.execution.exchange.ReusedExchangeExec
 import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{NgramHashes, WinnowFps}
+import graft.functions.{CollectUpto, NgramHashes, WinnowFps}
 import graft.llm.Warmup
 import graft.util.{Scratch, SessionMemo}
 
@@ -56,22 +58,45 @@ class WarmupSpec extends AnyFunSuite {
   }
   private def winnowPass(e: Expression): Boolean = e.isInstanceOf[WinnowFps]
 
-  /** Whether executing `plan` evaluates an expression `hit` accepts. A
-    * cached frame's plan counts once, on the first scan of it in `seen`
-    * (the scan that fills the cache); later scans read the cached rows. */
-  private def evaluates(plan: SparkPlan, hit: Expression => Boolean,
-      seen: java.util.Set[AnyRef]): Boolean = {
-    val below = plan match {
+  /** The plans `plan` runs directly: through adaptive and query-stage
+    * wrappers and into a cached frame's plan when `fill` says its scan
+    * fills the cache. */
+  private def below(plan: SparkPlan, fill: InMemoryTableScanExec => Boolean): Seq[SparkPlan] =
+    plan match {
       case a: AdaptiveSparkPlanExec => Seq(a.executedPlan)
       case q: QueryStageExec => Seq(q.plan)
       case c: CommandResultExec => Seq(c.commandPhysicalPlan)
-      case m: InMemoryTableScanExec =>
-        if (seen.add(m.relation.cacheBuilder)) Seq(m.relation.cachedPlan) else Nil
+      case r: ReusedExchangeExec => Seq(r.child)
+      case m: InMemoryTableScanExec => if (fill(m)) Seq(m.relation.cachedPlan) else Nil
       case p => p.children ++ p.subqueries
     }
-    val inBelow = below.map(evaluates(_, hit, seen)).contains(true)
-    inBelow || plan.expressions.exists(_.find(hit).isDefined)
-  }
+
+  /** Whether executing `plan` runs a node `hit` accepts. A cached frame's
+    * plan counts once, on the first scan of it in `seen` (the scan that
+    * fills the cache); later scans read the cached rows. */
+  private def runs(plan: SparkPlan, hit: SparkPlan => Boolean,
+      seen: java.util.Set[AnyRef]): Boolean =
+    below(plan, m => seen.add(m.relation.cacheBuilder)).exists(runs(_, hit, seen)) ||
+      hit(plan)
+
+  /** Whether executing `plan` evaluates an expression `hit` accepts. */
+  private def evaluates(plan: SparkPlan, hit: Expression => Boolean,
+      seen: java.util.Set[AnyRef]): Boolean =
+    runs(plan, _.expressions.exists(_.find(hit).isDefined), seen)
+
+  /** Whether `plan`'s input, through every wrapper and cache, includes
+    * a node `hit` accepts. */
+  private def reads(plan: SparkPlan, hit: SparkPlan => Boolean): Boolean =
+    hit(plan) || below(plan, _ => true).exists(reads(_, hit))
+
+  /** A capped `collect_upto` aggregate over the stored gram rows. */
+  private def cappedGramAgg(p: SparkPlan): Boolean =
+    p.expressions.exists(_.find(_.isInstanceOf[CollectUpto]).isDefined) &&
+      reads(p, {
+        case f: FileSourceScanExec =>
+          f.tableIdentifier.exists(_.table.startsWith("grams_bkt_"))
+        case _ => false
+      })
 
   /** The plans executed on `spark` while `body` runs, one per reported
     * execution (a saveAsTable reports its nested insert on its own). */
@@ -103,6 +128,13 @@ class WarmupSpec extends AnyFunSuite {
     plans.count(evaluates(_, hit, seen))
   }
 
+  /** How many of `plans` run a capped aggregate over the gram rows. */
+  private def gramAggs(plans: Seq[SparkPlan]): Int = {
+    val seen = java.util.Collections.newSetFromMap(
+      new java.util.IdentityHashMap[AnyRef, java.lang.Boolean]())
+    plans.count(runs(_, cappedGramAgg, seen))
+  }
+
   test("warmup for the gram and span ops runs one gram pass and one winnow pass") {
     val corpus = freshCorpus("rare_key_passes")
     val plans = executedPlans {
@@ -128,8 +160,31 @@ class WarmupSpec extends AnyFunSuite {
       graft.llm.DedupOps.gramTable(spark, corpus)
       graft.llm.DedupOps.gramSets(spark, corpus).count()
     }
-    assert(passes(plans, gramPass) == 1,
-      s"expected one gram pass:\n${plans.mkString("\n----\n")}")
+    assert(passes(plans, gramPass) == 1 && gramAggs(plans) == 1,
+      s"expected one gram pass and one capped gram aggregate:\n${plans.mkString("\n----\n")}")
+  }
+
+  test("one capped aggregate over the gram rows per corpus: the warmup's") {
+    // the containment calls after the warmup read the stored rare-gram
+    // groups and the stored sets; neither re-aggregates the gram rows
+    val corpus = freshCorpus("gram_aggregates")
+    val plans = executedPlans {
+      val steps = Warmup.run(spark, corpus, rareKeyOps)
+      assert(steps.forall(_._2 >= 0), s"a warmup step failed: $steps")
+      for (_ <- 1 to 2; op <- Seq("llm_dedup_containment", "llm_dedup_containment_indexed"))
+        SparkEntry.queries(op)(spark, corpus).collect()
+    }
+    assert(gramAggs(plans) == 1,
+      s"expected one capped gram aggregate, got ${gramAggs(plans)}:\n${plans.mkString("\n----\n")}")
+  }
+
+  test("the gram and span ops select only the gram and span steps") {
+    val selected = Warmup.steps.filter(st => rareKeyOps.exists(st.serves)).map(_.name)
+    assert(selected == Seq("gramTable", "gramRareTable", "trainBloom", "spanTable",
+      "spanRareTable", "gramAppendTable", "catalog"), selected)
+    // and every step serves some registered operator
+    val idle = Warmup.steps.filterNot(st => SparkEntry.queries.keys.exists(st.serves))
+    assert(idle.isEmpty, s"steps no registered operator selects: ${idle.map(_.name)}")
   }
 
   test("a failed warmup step does not skip the steps after it") {
