@@ -429,26 +429,22 @@ object Bench {
     })
     // Twin-comparison footnote (VERDICT r8 #6), emitted with the data so a
     // reader of BENCH_rN alone cannot misread the indexed-vs-in-memory
-    // rows: the in-memory dedup twins consume frames PERSISTED during the
-    // untimed warmup (their steady-state at test scale — a luxury 100 TB
-    // removes), while their *_indexed twins re-run the consume join from
-    // the stored bucketed table on every call (their steady-state at any
-    // scale). The rows are each honest for their own architecture but are
-    // NOT a like-for-like pair; BASELINE.md's round-8 profile records the
-    // leveled comparison (indexed simhash beats its twin outright; indexed
-    // minhash 0.26-0.35 s vs a 0.12 s cache read).
+    // rows: llm_dedup_embedding consumes the embedding frame PERSISTED
+    // during the untimed warmup, while llm_dedup_embedding_indexed re-runs
+    // its consume join from the stored bucketed table on every call. The
+    // rows are each honest for their own architecture but are NOT a
+    // like-for-like pair. Every other merged name runs its *_indexed
+    // function, and the verified-pair consumers read a stored table.
     // ASCII only: println encodes with the JVM default charset, and a
     // non-UTF8 locale would turn an em-dash into '?' inside the JSON.
-    // Only the three actual twin PAIRS are named; ngram_jaccard/cluster
-    // are persisted-frame consumers without twins.
-    val twinNote = "twin pairs (llm_dedup_minhash, llm_dedup_simhash, " +
-      "llm_dedup_embedding vs their *_indexed forms) are " +
-      "not like-for-like: the in-memory side reads warmup-persisted frames, " +
+    val twinNote = "twin pair (llm_dedup_embedding vs llm_dedup_embedding_indexed) is " +
+      "not like-for-like: the in-memory side reads a warmup-persisted frame, " +
       "the *_indexed side re-runs its stored-table join per call; " +
-      "llm_decontaminate, llm_dedup_containment and llm_dedup_span run the " +
+      "llm_decontaminate, llm_decontaminate_bloom, llm_dedup_containment, " +
+      "llm_dedup_span, llm_dedup_minhash and llm_dedup_simhash run the " +
       "same function as their *_indexed names; " +
-      "llm_dedup_ngram_jaccard/llm_dedup_cluster also ride persisted frames " +
-      "(no indexed twin); see BASELINE.md r8 profile"
+      "llm_dedup_ngram_jaccard/llm_dedup_cluster read the stored verified-pair " +
+      "table (no indexed twin); see BASELINE.md r8 profile"
     // Streaming work-vs-commit split (VERDICT r9 #6): Spark's own
     // per-batch durations, summed per op by StreamMetrics. trigger_sec
     // covers only micro-batch execution — the per-query wall-clock above

@@ -129,7 +129,7 @@ object ScaleCheck {
 
     if (sections("dedup"))
       curve(spark, base, "scale_check", scalesOr(1, 2, 4, 8), docsDir(_, "dedup"), Seq(
-        "minhash" -> DedupOps.llmDedupMinhash,
+        "minhash" -> DedupOps.llmDedupMinhashIndexed,
         "ngram_jaccard" -> DedupOps.llmDedupNgramJaccard,
         "cluster" -> DedupOps.llmDedupCluster,
         "decontaminate" -> DedupOps.llmDecontaminateIndexed,
@@ -137,10 +137,7 @@ object ScaleCheck {
         // semi/anti joins because the verified-pair index is already built
         // by ngram_jaccard above (the reuse IS the claim under test)
         "pipeline" -> DedupOps.llmPipelineCleanCorpus),
-        index = Some { dir =>
-          DedupOps.sigIndex(spark, dir).count()
-          DedupOps.minhashCandidates(spark, dir).count()
-        })
+        index = Some(DedupOps.sigTable(spark, _)))
 
     if (sections("pipeline64")) {
       // ---- round 13 (VERDICT r11 #9): the END-TO-END corpus funnel one
@@ -158,17 +155,18 @@ object ScaleCheck {
         val dir = docsDir(scale, "pipeline")
         val nDocs = docCount(dir)
         // the one expensive shared index the funnel rides (stage 3
-        // consumes the exact-verified near-dup pair set)
-        val tIndex = secs(DedupOps.verifiedPairs(spark, dir).count())
+        // consumes the exact-verified near-dup pair set): the signature
+        // tables and the verified-pair table
+        val tIndex = secs(DedupOps.verifiedPairTable(spark, dir))
         val (stages, t) = timed(DedupOps.llmPipelineCleanCorpus(spark, dir)
           .collect().map(r => (r.getInt(0), r.getString(1), r.getLong(2))))
-        // attribution counters, AFTER the timed blocks (sigIndex is
-        // already cached, so these re-run only the banding join / read
-        // the persisted pair frame): candidate and verified pair counts
+        // attribution counters, AFTER the timed blocks (these re-run only
+        // the stored banding join / read the stored pair table): candidate
+        // and verified pair counts
         // decompose any index_sec growth into "more pairs" (banding
         // collisions — a design problem) vs "same pairs, slower"
         // (constant-factor/memory pressure — a capacity problem)
-        val nCand = DedupOps.minhashCandidates(spark, dir).count()
+        val nCand = DedupOps.sigCandidates(spark, dir).count()
         val nVerified = DedupOps.llmDedupNgramJaccard(spark, dir).count()
         emit("scale_check_pipeline", "scale" -> scale, "docs" -> nDocs,
           "index_sec" -> tIndex, "pipeline_sec" -> t, "cand_pairs" -> nCand,
@@ -421,14 +419,14 @@ object ScaleCheck {
       scalesOr(8, 32, 64).foreach { scale =>
         val ddir = docsDir(scale, "width_docs")
         val nDocs = docCount(ddir)
-        val mh = DedupOps.minhashCandidates(spark, ddir).count()
+        val mh = DedupOps.sigCandidates(spark, ddir).count()
         val geom = DedupOps.simGeom(spark, ddir)
         val sh = DedupOps.simhashCandidates(spark, ddir, geom).count()
         val shNb = DedupOps.simhashCandidates(spark, ddir, geom, useBand = false).count()
         clearAll()
         val edir = embDir(scale, "width_emb")
         val nVecs = DedupOps.embCount(spark, edir)
-        val rp = DedupOps.embIndex(spark, edir)
+        val rp = spark.table(DedupOps.embTable(spark, edir))
           .groupBy("bucket").count()
           .agg(sum(col("count") * (col("count") - 1) / 2).cast("long").as("p"))
           .head.getLong(0)
@@ -487,14 +485,13 @@ object ScaleCheck {
         // inflated the signature consumers 3-6× via storage/GC pressure
         // (BASELINE r18, minhash ×128 residual). Table-name caches survive
         // the release, so the timed consumers read the files they would in
-        // production. The gram and span families keep no persist: their
-        // stored tables are written straight from the raw passes, and the
-        // gram-set and rare-gram tables from the gram table's rows (one
-        // aggregate, held only while both are written). The signature
-        // and embedding builders stream from RAW plans when their
-        // in-memory persists are cold (this path — DedupOps.buildSource),
-        // so these builds leave no executor-storage residue by
-        // construction; releaseBuilderPersists below is belt-and-braces.
+        // production. No builder here keeps a persist: the gram, signature-
+        // set, SimHash and embedding tables are written straight from their
+        // raw passes, and the gram-set, rare-gram and banded signature
+        // tables from stored rows (the SimHash bitsums barrier and the
+        // gram aggregate are held only while their writes run), so these
+        // builds leave no executor-storage residue by construction;
+        // releaseBuilderPersists below is belt-and-braces.
         // Build TIMES here are io-window-dominated and the corpus was just
         // replicated — sync+settle first, or the first build measures the
         // replica flush (BASELINE r19 build-side decomposition:

@@ -1,6 +1,6 @@
 package graft.llm
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{Column, DataFrame, DataFrameWriter, Row, SparkSession}
 import org.apache.spark.sql.functions._
 import graft.QFn
 import graft.tables.Tables
@@ -59,17 +59,27 @@ object DedupOps {
       .bucketBy(indexBuckets, keys.head, keys.tail: _*)
       .sortBy(keys.head, keys.tail: _*)
 
-  /** Writes `df` as the bucketed catalog table `<table>_<tag>` under the
+  /** Saves `writer`'s rows as the catalog table `<table>_<tag>` under the
     * fresh scratch dir `<dir>_<tag>` (tag = Scratch.pathTag(sfDir)),
     * replacing any previous build; returns the table name. */
-  private def writeIndex(df: DataFrame, sfDir: String, table: String, dir: String,
-      keys: Seq[String]): String = {
+  private def saveTable(writer: DataFrameWriter[Row], sfDir: String, table: String,
+      dir: String): String = {
     val tag = graft.util.Scratch.pathTag(sfDir)
     val tbl = s"${table}_$tag"
     val path = s"${graft.util.Scratch.dir(s"${dir}_$tag")}/$tbl"
-    bucketedWriter(df, keys).mode("overwrite").option("path", path).saveAsTable(tbl)
+    writer.mode("overwrite").option("path", path).saveAsTable(tbl)
     tbl
   }
+
+  /** Writes `df` as a bucketed index table ([[saveTable]]). */
+  private def writeIndex(df: DataFrame, sfDir: String, table: String, dir: String,
+      keys: Seq[String]): String =
+    saveTable(bucketedWriter(df, keys), sfDir, table, dir)
+
+  /** Writes `df` as a plain parquet table ([[saveTable]]): for tables whose
+    * consumers join on no key the bucketing would co-locate. */
+  private def writeTable(df: DataFrame, sfDir: String, table: String, dir: String): String =
+    saveTable(df.write.format("parquet"), sfDir, table, dir)
 
   /** Appends `delta` to the index table `tbl` under the same layout. */
   private def appendIndex(delta: DataFrame, tbl: String, keys: Seq[String]): Unit =
@@ -100,70 +110,48 @@ object DedupOps {
   private def stored(spark: SparkSession, tbl: String): DataFrame =
     spark.table(tbl).hint("merge")
 
-  /** Build-side source selection (round 19) of the signature and
-    * embedding tables, whose persists carry columns or feed consumers the
-    * tables do not: the builders read the in-memory persist `name` when an
-    * in-memory consumer already materialized it (the bench session — one
-    * signature pass serves both families), and the RAW plan when it is
-    * cold (the offline-build pipeline — where persisting would stage the
-    * whole corpus in executor storage just to write it out once; the r18
-    * curve showed exactly that persist co-resident with later builds
-    * inflating them 3-9×). */
-  private def buildSource(spark: SparkSession, sfDir: String, name: String)(
-      plan: => DataFrame): DataFrame =
-    memo.peek[DataFrame](spark, sfDir, name).getOrElse(plan)
-
   /** Unpersist every index frame and forget the per-session caches. Safe to
     * call between corpora; the next operator call rebuilds lazily. */
   def clearCaches(): Unit = memo.clear()
 
-  /** Release the executor-memory BUILDER persists but KEEP the stored
-    * tables (names + files) — the post-index-build state of a real
-    * pipeline: the linear passes that assembled the bucketed tables ran
-    * once, their working frames are dead weight afterwards, and the
-    * consumers read the files. Round 18: ScaleCheck's planscale section
-    * calls this between building the tables and timing the consumers —
-    * builder persists co-resident in the measuring JVM (then a ×128 gram
-    * persist of ~30 GB MEMORY_AND_DISK, since replaced by the stored gram
-    * table) inflated the signature consumers 3-6× via storage/GC pressure
-    * (BASELINE.md round 18, minhash ×128 residual: consume 3.3 s alone vs
-    * 19.6-32.5 s beside the persists). In-memory frame
-    * caches are cleared with their persists so a later in-memory
-    * consumer rebuilds instead of silently recomputing per use. */
+  /** Release the executor-memory persists (the embedding index) but KEEP
+    * the stored tables (names + files): the
+    * post-index-build state of a pipeline, whose consumers read the files.
+    * ScaleCheck's planscale section calls this between building the tables
+    * and timing the consumers. */
   def releaseBuilderPersists(): Unit = memo.releasePersists()
 
-  /** Raw signature plan (doc_id, hsh, sig) — the linear pass behind both
-    * the executor-memory [[sigIndex]] persist AND (round 19) the stored
-    * table builds when that persist is cold: an offline index build pipes
-    * this straight into the bucketed write instead of staging a
-    * corpus-sized persist it will never read again (the ×128 build
-    * decomposition, BASELINE r19 — co-resident builder persists were the
-    * dominant superlinear term of the build curve). */
-  private def sigPlan(spark: SparkSession, sfDir: String): DataFrame =
+  /** One row per doc: `hsh` its distinct hashed 5-gram shingles (64-bit,
+    * collision-negligible: exact Jaccard verification intersects longs,
+    * never strings), SORTED so a pair's intersection runs as
+    * sorted_intersect_count's two-pointer merge; `n` their count; `sig`
+    * the K-permutation MinHash signature. The signature family's one
+    * linear pass over the corpus. */
+  private[graft] def sigPlan(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "documents")
       // single-parquet-file input = one split; spread the hash-heavy
       // signature compute across all cores before the linear pass (at
       // 100 TB the file splits already provide this parallelism)
       .repartition(spark.sparkContext.defaultParallelism)
-      // hsh: hashed 5-gram shingle set (64-bit, collision-negligible) —
-      // exact Jaccard verification intersects longs, never strings. The
-      // round-11 native ngram_hashes/minhash_sig expressions replace the
-      // HOF spelling (array_distinct∘transform∘substring∘xxhash64 and
-      // the K×|hsh| permutation lambdas): HOFs are interpreted per
-      // element, these run one tight loop per row over the original
-      // UTF8 bytes — element-exact equivalence pinned by TextHashSpec.
+      // native ngram_hashes/minhash_sig run one tight loop per row over
+      // the original UTF8 bytes (element-exact equivalence with the HOF
+      // spelling pinned by TextHashSpec); the minimum per permutation
+      // does not depend on the order of `hsh`
       .select(col("doc_id"), lower(trim(col("text"))).as("t"))
-      .select(col("doc_id"), expr("ngram_hashes(t, 5)").as("hsh"))
-      .withColumn("sig", expr(s"minhash_sig(hsh, $K)"))
+      .select(col("doc_id"), expr("sort_array(ngram_hashes(t, 5))").as("hsh"))
+      .select(col("doc_id"), col("hsh"), size(col("hsh")).as("n"),
+        expr(s"minhash_sig(hsh, $K)").as("sig"))
 
-  /** Shingles + minhash signature per doc, computed ONCE per (session,
-    * sfDir) and persisted: the banded self-join and the exact-Jaccard
-    * verification would otherwise each re-derive the whole signature
-    * subtree (Spark self-joins recompute, they don't share). At 100 TB this
-    * is the materialized signature index every LSH system builds before
-    * pair generation — one linear pass, then all candidate work reads it. */
-  private[graft] def sigIndex(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "sigIndex")(memo.persist(sigPlan(spark, sfDir)))
+  /** The per-doc shingle sets and signatures ([[sigPlan]]) MATERIALIZED
+    * as a parquet table bucketed on doc_id — the signature family's only
+    * pass over the text: the banded tables ([[sigTable]],
+    * [[sigAppendTable]]) are written from its rows, and exact Jaccard
+    * verification reads its sets. */
+  private[graft] def sigSetTable(spark: SparkSession, sfDir: String): String =
+    memo(spark, sfDir, "sigSetTable") {
+      writeIndex(sigPlan(spark, sfDir), sfDir, "sig_sets_bkt", "sig_set_index",
+        Seq("doc_id"))
+    }
 
   /** Banding projection over any signature source. */
   private[graft] def banded(src: DataFrame): DataFrame =
@@ -172,18 +160,12 @@ object DedupOps {
         s"b -> xxhash64(${(1 to R).map(i => s"element_at(sig, $R * b + $i)").mkString(", ")}, b))"))
         .as(Seq("band", "bhash")))
 
-  /** (doc_id, sig, band, band_hash) — the LSH index: docs agreeing on all R
-    * rows of a band collide. sig rides along so pair rows already carry both
-    * signatures (no extra join back). */
-  private[graft] def bandedIndex(spark: SparkSession, sfDir: String): DataFrame =
-    banded(sigIndex(spark, sfDir))
-
   /** Candidate pairs (a < b) of a banded index sharing >= 1 LSH band, with
     * the signature-estimated Jaccard. The join key is (band, bhash) — an
-    * equi-join that scales with data, not with n². `idx` is the in-memory
-    * [[bandedIndex]] or a (band, bhash)-bucketed stored table, whose
-    * co-located scans leave no exchange on the band hash. */
-  private def minhashPairs(idx: DataFrame): DataFrame = {
+    * equi-join that scales with data, not with n². `idx` is a (band,
+    * bhash)-bucketed stored table, whose co-located scans leave no
+    * exchange on the band hash. */
+  private[graft] def minhashPairs(idx: DataFrame): DataFrame = {
     val a = idx.withColumnsRenamed(Map("doc_id" -> "doc_a", "sig" -> "sig_a"))
     val b = idx.withColumnsRenamed(Map("doc_id" -> "doc_b", "sig" -> "sig_b"))
     a.join(b, Seq("band", "bhash"))
@@ -195,12 +177,10 @@ object DedupOps {
         round(first(col("est")), 4).as("est_jaccard"))
   }
 
-  /** [[minhashPairs]] over the in-memory banded index, cached: the pair
-    * frame is small (collisions only) but the self-join producing it is
-    * the most expensive dedup stage, and three operators (minhash,
-    * ngram-jaccard, cluster) consume it. */
-  private[graft] def minhashCandidates(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "minhashCandidates")(memo.persist(minhashPairs(bandedIndex(spark, sfDir))))
+  /** [[minhashPairs]] over the stored [[sigTable]]: the LSH candidates of
+    * this corpus. */
+  private[graft] def sigCandidates(spark: SparkSession, sfDir: String): DataFrame =
+    minhashPairs(stored(spark, sigTable(spark, sfDir)))
 
   /** Exact dedup keyed on the CANONICALIZED text (TextOps.normalizedText
     * — NFC + lowercase + control-strip + whitespace collapse, one shared
@@ -231,43 +211,45 @@ object DedupOps {
   /** MinHash+LSH near-dup pairs: signature-estimated Jaccard >= 0.5
     * (captures the planted >= 0.9 near-dups; background ~0.25 pairs are
     * rejected). xxhash64-based — no DuckDB oracle; NearDupSpec asserts the
-    * planted pairs are found. One cut over any [[minhashPairs]] frame: the
-    * in-memory op reads the cached candidates, its stored-index twins
-    * ([[llmDedupMinhashIndexed]], [[llmSigIndexAppend]]) the bucketed
-    * tables. */
-  private def minhashNearDups(pairs: DataFrame): DataFrame =
+    * planted pairs are found. One cut over any [[minhashPairs]] frame:
+    * [[llmDedupMinhashIndexed]] reads the stored table,
+    * [[llmSigIndexAppend]] its two-generation twin. */
+  private[graft] def minhashNearDups(pairs: DataFrame): DataFrame =
     pairs
       .filter(col("est_jaccard") >= VerifyBounds.JaccardThreshold)
       .select("doc_a", "doc_b", "n_shared_bands", "est_jaccard")
       .orderBy("doc_a", "doc_b")
 
-  val llmDedupMinhash: QFn = (spark, sfDir) =>
-    minhashNearDups(minhashCandidates(spark, sfDir))
-
-  /** LSH candidates verified by exact hashed-shingle Jaccard >= 0.5 — the
-    * verification stage shared by ngram_jaccard (which reports it) and
-    * cluster (which builds its edge set from it); cached and persisted like
-    * the candidate frame so the second consumer reads the (tiny) verified
-    * pair set instead of re-running the intersect joins. Exact Jaccard over
-    * HASHED shingles: intersect long arrays (cheap) and derive
-    * |union| = |A| + |B| - |A∩B| arithmetically — no string-array
-    * concat/distinct per pair. The distinct-shingle sets make |A|,|B| exact. */
+  /** LSH candidates verified by exact hashed-shingle Jaccard >= 0.5, as
+    * (doc_a, doc_b, jaccard) — the pair graph ngram_jaccard reports and
+    * cluster, incremental cluster, the cleaning funnel, source overlap and
+    * the decontaminated split build on. Written once per corpus as a plain
+    * parquet table (its consumers join it on no stored key); the memo holds
+    * the table name, so [[releaseBuilderPersists]] keeps it. */
   private[graft] def verifiedPairs(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "verifiedPairs") {
-      memo.persist(jaccardVerified(spark, sfDir,
-        minhashCandidates(spark, sfDir).select("doc_a", "doc_b"), "doc_a", "doc_b"))
+    spark.table(verifiedPairTable(spark, sfDir))
+
+  /** The stored [[verifiedPairs]] table's name. */
+  private[graft] def verifiedPairTable(spark: SparkSession, sfDir: String): String =
+    memo(spark, sfDir, "verifiedPairTable") {
+      writeTable(jaccardVerified(spark, sfDir,
+        sigCandidates(spark, sfDir).select("doc_a", "doc_b"), "doc_a", "doc_b"),
+        sfDir, "verified_pairs", "verified_pairs")
     }
 
   /** Candidate pairs (columns `a`, `b`) kept where their exact hashed-
-    * shingle Jaccard (from [[sigIndex]]) is >= 0.5, as (a, b, jaccard). */
+    * shingle Jaccard is >= 0.5, as (a, b, jaccard). The sets come from the
+    * stored [[sigSetTable]]: the native merge counts |A∩B| and
+    * |A∪B| = |A| + |B| - |A∩B| follows arithmetically. */
   private def jaccardVerified(spark: SparkSession, sfDir: String, cands: DataFrame,
       a: String, b: String): DataFrame = {
-    val sh = sigIndex(spark, sfDir)
-      .select(col("doc_id"), col("hsh"), size(col("hsh")).as("n_sh"))
+    val sets = spark.table(sigSetTable(spark, sfDir))
+    def side(id: String, s: String) =
+      sets.select(col("doc_id").as(id), col("hsh").as(s"h_$s"), col("n").as(s"n_$s"))
     cands
-      .join(sh.withColumnsRenamed(Map("doc_id" -> a, "hsh" -> "h_a", "n_sh" -> "n_a")), Seq(a))
-      .join(sh.withColumnsRenamed(Map("doc_id" -> b, "hsh" -> "h_b", "n_sh" -> "n_b")), Seq(b))
-      .withColumn("i", size(array_intersect(col("h_a"), col("h_b"))))
+      .join(side(a, "a"), Seq(a))
+      .join(side(b, "b"), Seq(b))
+      .withColumn("i", expr("sorted_intersect_count(h_a, h_b)"))
       .withColumn("jaccard", round(
         col("i").cast("double") / (col("n_a") + col("n_b") - col("i")), 4))
       .filter(col("jaccard") >= VerifyBounds.JaccardThreshold)
@@ -304,7 +286,7 @@ object DedupOps {
     * ScaleCheck records them against the ⌈log2⌉ pointer-doubling bound. */
   private[graft] def clusters(spark: SparkSession, sfDir: String): (DataFrame, Int) = {
     val (labels, rounds) = connectedComponents(
-      sigIndex(spark, sfDir).select(col("doc_id"), col("doc_id").as("label")),
+      Tables(spark, sfDir, "documents").select(col("doc_id"), col("doc_id").as("label")),
       verifiedPairs(spark, sfDir).select("doc_a", "doc_b"))
     (labels
       .select(col("doc_id"), col("label").as("cluster_id"),
@@ -442,8 +424,8 @@ object DedupOps {
     * and AQE converts from actual exchange sizes. */
   private val ClusterBroadcastEdgeCap = 6000000L
 
-  /** Delta pair count, one cheap count over the persisted verified-pair
-    * frame per (session, sfDir) — the actual-broadcast-side bound the
+  /** Delta pair count, one cheap count over the stored verified-pair
+    * table per (session, sfDir) — the actual-broadcast-side bound the
     * hints gate on (the docCount precedent; ADVICE r20). */
   private def deltaPairCount(spark: SparkSession, sfDir: String): Long =
     memo(spark, sfDir, "deltaPairCount") {
@@ -587,8 +569,13 @@ object DedupOps {
     * the broadcast hints drop so AQE converts from actual exchange sizes,
     * degrading to keyed shuffles instead of dying. */
   val llmDedupClusterIncremental: QFn = (spark, sfDir) =>
-    clusterIncremental(spark, sfDir,
-      corpusShape(spark, sfDir, deltaPairCount(spark, sfDir) <= ClusterBroadcastEdgeCap))
+    clusterIncremental(spark, sfDir, clusterShape(spark, sfDir))
+
+  /** [[llmDedupClusterIncremental]]'s plan shape for this corpus, from the
+    * cached counts it is derived from ([[corpusShape]] gated on the delta
+    * pair count) — Warmup derives it untimed. */
+  private[graft] def clusterShape(spark: SparkSession, sfDir: String): Shape =
+    corpusShape(spark, sfDir, deltaPairCount(spark, sfDir) <= ClusterBroadcastEdgeCap)
 
   /** [[llmDedupClusterIncremental]] under a given plan shape — NearDupSpec
     * and PlanSpec pass each shape at fixture scale. */
@@ -650,7 +637,11 @@ object DedupOps {
     * build. MUST be materialized (persist) before the 128-way fold reads
     * it: the persist is a hard barrier, without which CollapseProject
     * re-inlines the token aggregate into every bit (64× blowup measured
-    * at 276 s vs 3 s on sf0.1). */
+    * at 276 s vs 3 s on sf0.1). The two fingerprint halves come from
+    * decorrelated token hashes — xxhash64(t) and xxhash64(t, 1L) (Spark
+    * chains the second arg into the hash state, so the streams are
+    * independent); each token's pair is computed ONCE via the struct
+    * transform, not once per bit. */
   private def bitsumsPlan(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "documents")
       .repartition(spark.sparkContext.defaultParallelism)
@@ -685,23 +676,11 @@ object DedupOps {
     * random-collision rate AND double the bucket count vs the round-5
     * 4 x 16 layout, pushing the per-band saturation bound from ~65536·4 to
     * ~65536·8 colliding docs with a strictly stronger Hamming<=7 retention
-    * guarantee.
-    *
-    * The index: 128-bit SimHash per doc as two 64-bit halves, persisted: (a) the
-    * persist is a hard barrier, so the 128-way bit fold reads the
-    * materialized bitsums column instead of CollapseProject re-inlining the
-    * token aggregate into every bit (64× blowup measured at 276 s vs 3 s on
-    * sf0.1); (b) the chunked self-join reuses it instead of recomputing
-    * both sides. The two halves come from decorrelated token hashes —
-    * xxhash64(t) and xxhash64(t, 1L) (Spark chains the second arg into the
-    * hash state, so the streams are independent); each token's pair is
-    * computed ONCE via the struct transform, not once per bit. The
-    * intermediate bitsums frame is persisted through the memo too, so
-    * clearCaches can actually release it. */
-  private[graft] def simIndex(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "simIndex") {
-      memo.persist(simFoldPlan(memo.persist(bitsumsPlan(spark, sfDir))))
-    }
+    * guarantee. The fingerprints live in the stored [[simTable]]; this is
+    * one row per doc of it: (doc_id, simhash, simhash2, lb). */
+  private[graft] def simFingerprints(spark: SparkSession, sfDir: String): DataFrame =
+    spark.table(simTable(spark, sfDir)).filter(col("chunk") === 0)
+      .select("doc_id", "simhash", "simhash2", "lb")
 
   /** Documents-corpus row count — the n the simhash chunk geometry derives
     * from. One Spark count job per (session, sfDir), then cached (Catalyst
@@ -739,7 +718,7 @@ object DedupOps {
 
   /** One row per (doc, chunk) of a fingerprint frame carrying `lb`: the
     * `geom` = (chunks, bits) split of the two 64-bit halves — the chunk
-    * projection the in-memory candidate join and [[simTable]] share. */
+    * projection of [[simTable]] and of [[simhashCandidates]]. */
   private def simChunks(sim: DataFrame, geom: (Int, Int)): DataFrame = {
     val (nChunks, w) = geom
     val perHalf = nChunks / 2
@@ -751,57 +730,47 @@ object DedupOps {
         .as(Seq("chunk", "cval")))
   }
 
-  /** Candidate generation joins on (chunk, cval, length band): the chunk
-    * split over the 128-bit fingerprint ([[simChunkGeom]]: 8×16-bit below
-    * 1M docs, 4×32-bit above) guarantees any pair within the pigeonhole
-    * radius (Hamming<=7 / <=3 respectively) collides on >=1 chunk, and
-    * the SECOND band key bounds the random-collision
-    * growth the fixed 65536-value chunk space alone cannot. The band is
-    * bitlen(n_tok) — one full octave, exact integer arithmetic, no float
-    * log2 — and the probe side emits band±1, so retention is GUARANTEED
-    * for every pair with token-count ratio <= 2 (ratio < 2 implies bitlen
-    * differs by at most 1; ratio exactly 2 shifts bitlen by exactly 1 —
-    * both inside the ±1 probe; this includes a doc vs its own 2×
-    * repetition, whose simhash is identical). Worst-case retained ratio is
-    * just under 4 (bitlen diff 1 spans at most min 2^(b-1) vs max
-    * 2^(b+1)-1); every ratio >= 4 pair is dropped — far beyond any
-    * near-dup. Within-band chunk collisions are O(n_band²·8/65536);
-    * corpora grow mostly by adding docs across the length spectrum, so
-    * bands multiply the constant the way more buckets do for the RP
-    * index, while the 8-chunk geometry halves the per-chunk collision
-    * rate vs 4×16/64-bit.
-    *
-    * This is the raw (chunk, cval, band)-collision pair stream, pre-dedup —
-    * split out so ScaleCheck can count candidate work directly. `geom` is
-    * the (chunks, bits) split, [[simGeom]] for the registered ops.
-    * `useBand=false` drops the length-band key so ScaleCheck can measure
-    * what the 128-bit chunk geometry alone holds. */
-  private[graft] def simhashCandidates(spark: SparkSession, sfDir: String,
-      geom: (Int, Int), useBand: Boolean = true): DataFrame = {
-    val chunked = simChunks(simIndex(spark, sfDir)
-      .withColumn("lb", if (useBand) lengthBand else lit(0)), geom)
-    val a = chunked.withColumnsRenamed(Map(
-      "doc_id" -> "doc_a", "simhash" -> "sim_a", "simhash2" -> "sim_a2"))
-    val b = chunked.withColumnsRenamed(Map(
-      "doc_id" -> "doc_b", "simhash" -> "sim_b", "simhash2" -> "sim_b2"))
-    val probed =
-      if (useBand) b.withColumn("lb", explode(array(col("lb") - 1, col("lb"), col("lb") + 1)))
-      else b
-    a.join(probed, Seq("chunk", "cval", "lb"))
-      .filter(col("doc_a") < col("doc_b"))
+  /** Candidate pairs of a chunk frame: the chunk split over the 128-bit
+    * fingerprint ([[simChunkGeom]]: 8×16-bit below 1M docs, 4×32-bit
+    * above) guarantees any pair within the pigeonhole radius (Hamming<=7 /
+    * <=3 respectively) collides on >=1 (chunk, cval), and the length band
+    * bounds the random-collision growth the fixed 65536-value chunk space
+    * alone cannot. The band is bitlen(n_tok) — one full octave, exact
+    * integer arithmetic, no float log2 — and pairs whose bands differ by
+    * at most 1 are kept, so retention is GUARANTEED for every pair with
+    * token-count ratio <= 2 (ratio < 2 implies bitlen differs by at most
+    * 1; ratio exactly 2 shifts bitlen by exactly 1; this includes a doc vs
+    * its own 2× repetition, whose simhash is identical). Worst-case
+    * retained ratio is just under 4; every ratio >= 4 pair is dropped —
+    * far beyond any near-dup. The band is a post-join filter, not a join
+    * key: band values grow with document length and cannot be bucket
+    * keys, while (chunk, cval) is the stored table's full bucket key set.
+    * One row per colliding (chunk, pair), pre-dedup; `useBand = false`
+    * drops the band filter. */
+  private def simPairs(chunked: DataFrame, useBand: Boolean = true): DataFrame = {
+    def side(s: String) = chunked.withColumnsRenamed(Map("doc_id" -> s"doc_$s",
+      "simhash" -> s"sim_$s", "simhash2" -> s"sim_${s}2", "lb" -> s"lb_$s"))
+    val pairs = side("a").join(side("b"), Seq("chunk", "cval"))
+    pairs.filter(col("doc_a") < col("doc_b") &&
+      (if (useBand) abs(col("lb_a") - col("lb_b")) <= 1 else lit(true)))
   }
 
+  /** The raw chunk-collision pair stream ([[simPairs]]) of this corpus's
+    * stored fingerprints, re-chunked under `geom` — split out so
+    * ScaleCheck can count candidate work directly and FingerprintSpec can
+    * force the wide geometry. */
+  private[graft] def simhashCandidates(spark: SparkSession, sfDir: String,
+      geom: (Int, Int), useBand: Boolean = true): DataFrame =
+    simPairs(simChunks(simFingerprints(spark, sfDir), geom), useBand)
+
   /** Top pairs by full 128-bit Hamming distance over any chunk-collision
-    * pair stream — the ranking both SimHash twins share. */
+    * pair stream. */
   private[graft] def simhashRanked(pairs: DataFrame): DataFrame =
     pairs
       .groupBy("doc_a", "doc_b")
       .agg(first(expr("bit_count(sim_a ^ sim_b) + bit_count(sim_a2 ^ sim_b2)")).as("hamming"))
       .orderBy(col("hamming"), col("doc_a"), col("doc_b"))
       .limit(VerifyBounds.SimhashPairCap)
-
-  val llmDedupSimhash: QFn = (spark, sfDir) =>
-    simhashRanked(simhashCandidates(spark, sfDir, simGeom(spark, sfDir)))
 
   // ---- Embedding near-dup: random-hyperplane sign bits -> 2^bits buckets;
   // exact cosine only within buckets. Projections are seeded (42) so the
@@ -899,7 +868,8 @@ object DedupOps {
   private[graft] def dotExpr(a: String, b: String): Column =
     expr(s"vector_dot($a, $b)")
 
-  /** Raw embedding-index plan — see [[sigPlan]] for the build-side split. */
+  /** Raw embedding-index plan: the rows of the [[embIndex]] persist and of
+    * the stored [[embTable]] / [[embAppendTable]] builds. */
   private[graft] def embPlan(spark: SparkSession, sfDir: String): DataFrame =
     Tables(spark, sfDir, "embeddings")
       .repartition(spark.sparkContext.defaultParallelism)
@@ -912,7 +882,10 @@ object DedupOps {
     * double-cast vector, L2 norm, and RP bucket. Every similarity/near-dup
     * op reads this instead of re-deriving the 384-term bucket expression
     * and per-side norms inside self-joins. At 100 TB this is the vector
-    * index build pass every ANN system runs before querying. */
+    * index build pass every ANN system runs before querying. It stays an
+    * executor-memory persist, not a read of [[embTable]]: the IVF fit
+    * (SimilarityOps.ivfIndex) samples it, and that sample depends on how
+    * the input is partitioned. */
   private[graft] def embIndex(spark: SparkSession, sfDir: String): DataFrame =
     memo(spark, sfDir, "embIndex")(memo.persist(embPlan(spark, sfDir)))
 
@@ -1003,8 +976,7 @@ object DedupOps {
     * arrive pre-hashed on the join key. */
   private[graft] def embTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "embTable") {
-      writeIndex(buildSource(spark, sfDir, "embIndex")(embPlan(spark, sfDir)),
-        sfDir, "emb_bkt", "emb_index", EmbKeys)
+      writeIndex(embPlan(spark, sfDir), sfDir, "emb_bkt", "emb_index", EmbKeys)
     }
 
   private val EmbKeys = Seq("bucket")
@@ -1059,8 +1031,8 @@ object DedupOps {
   private[graft] def embAppendTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "embAppendTable") {
       val bits = embBits(spark, sfDir)
-      twoGenIndex(buildSource(spark, sfDir, "embIndex")(embPlan(spark, sfDir)),
-        sfDir, "emb_app", "emb_append", "vec_id", EmbKeys) { (delta, tbl) =>
+      twoGenIndex(embPlan(spark, sfDir), sfDir, "emb_app", "emb_append", "vec_id",
+          EmbKeys) { (delta, tbl) =>
         // stamp the width the base generation was bucketed under; the
         // append leg re-derives and guards on ITS OWN path
         spark.sql(s"ALTER TABLE $tbl SET TBLPROPERTIES " +
@@ -1086,17 +1058,16 @@ object DedupOps {
     embPairs(stored(spark, embAppendTable(spark, sfDir)))
 
   /** The banded MinHash signature index MATERIALIZED as a parquet table
-    * bucketed on the LSH band hash (the join key of candidate generation).
-    * The in-memory [[sigIndex]]/[[bandedIndex]] path recomputes shingles +
-    * K permutations every session and shuffles both sides of the banded
-    * self-join; the stored table pays the signature pass once and joins
-    * co-located. Bucketed on BOTH join columns (band, bhash): co-partition
+    * bucketed on the LSH band hash (the join key of candidate generation),
+    * written by banding the stored [[sigSetTable]]'s rows: the signature
+    * pass runs once, and both sides of the banded self-join read
+    * co-located files. Bucketed on BOTH join columns (band, bhash): co-partition
     * elimination requires the bucket columns to cover every join key
     * (requireAllClusterKeysForCoPartition) — a bhash-only layout would be
     * hash-equivalent in principle but the planner rightly refuses it. */
   private[graft] def sigTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "sigTable") {
-      writeIndex(banded(buildSource(spark, sfDir, "sigIndex")(sigPlan(spark, sfDir))),
+      writeIndex(banded(spark.table(sigSetTable(spark, sfDir))),
         sfDir, "sig_bkt", "sig_index", SigKeys)
     }
 
@@ -1105,7 +1076,7 @@ object DedupOps {
   /** Signature-index build + band profile: per band, row count and
     * distinct band-hash count (≈ distinct buckets LSH can route to).
     * xxhash64-based → no DuckDB oracle; NearDupSpec asserts equality with
-    * the in-memory banded index. */
+    * a banding of the raw signature plan. */
   val llmSigIndexBuild: QFn = (spark, sfDir) =>
     spark.table(sigTable(spark, sfDir))
       .groupBy("band")
@@ -1113,18 +1084,19 @@ object DedupOps {
       .orderBy("band")
 
   /** Two-generation signature index ([[twoGenIndex]] over even/odd
-    * doc_ids). */
+    * doc_ids), banded from the stored [[sigSetTable]]. */
   private[graft] def sigAppendTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "sigAppendTable") {
-      twoGenIndex(banded(buildSource(spark, sfDir, "sigIndex")(sigPlan(spark, sfDir))),
+      twoGenIndex(banded(spark.table(sigSetTable(spark, sfDir))),
         sfDir, "sig_app", "sig_append", "doc_id", SigKeys)(appendIndex(_, _, SigKeys))
     }
 
   /** MinHash near-dup pairs over the MATERIALIZED signature index, with
     * both sides of the candidate join reading the bucketed table: no
-    * signature recompute, no exchange on the band hash. */
+    * signature recompute, no exchange on the band hash. Registered as both
+    * llm_dedup_minhash and llm_dedup_minhash_indexed. */
   val llmDedupMinhashIndexed: QFn = (spark, sfDir) =>
-    minhashNearDups(minhashPairs(stored(spark, sigTable(spark, sfDir))))
+    minhashNearDups(sigCandidates(spark, sfDir))
 
   /** Minhash near-dup pairs from the APPENDED two-generation index. no_oracle
     * (xxhash64 signatures), same waiver as the other sig-index ops. */
@@ -1134,61 +1106,39 @@ object DedupOps {
   /** The chunked SimHash index MATERIALIZED as a parquet table bucketed on
     * (chunk, cval) — the candidate join's full key set, so both sides of
     * the self-join read co-located files with no exchange (same
-    * requireAllClusterKeysForCoPartition contract as [[sigTable]]). The
-    * length band moves OUT of the join key and into a post-join filter
-    * (abs(lb_a − lb_b) <= 1 — identical retention semantics to the
-    * in-memory ±1 band probe, since colliding on the same (chunk, cval)
-    * plus band distance <= 1 is exactly the banded-join predicate), which
-    * is what makes a fixed 16-bucket layout possible: band values grow
-    * with document length and cannot be bucket keys. Chunk geometry at
-    * build time follows [[simChunkGeom]]; the stored rows carry the
-    * fingerprint halves so consumers rank by full 128-bit Hamming without
-    * touching the documents table. */
+    * requireAllClusterKeysForCoPartition contract as [[sigTable]]). Chunk
+    * geometry at build time follows [[simChunkGeom]]; the stored rows carry
+    * the fingerprint halves and the length band, so consumers rank by full
+    * 128-bit Hamming without touching the documents table. The SimHash
+    * family's only materialization: the bitsums barrier ([[bitsumsPlan]])
+    * is a build-local persist, released the moment the files are written. */
   private[graft] def simTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "simTable") {
       val geom = simGeom(spark, sfDir)
-      // Build source (round 19): the in-memory fingerprint persist when a
-      // consumer already built it, else a BUILD-LOCAL bitsums persist
-      // (the fold's semantic barrier — see bitsumsPlan) released the
-      // moment the files are written, instead of living co-resident with
-      // the next builder (the r18/r19 neighbor effect).
-      val (src, release) = memo.peek[DataFrame](spark, sfDir, "simIndex") match {
-        case Some(df) => (df, () => ())
-        case None =>
-          val bs = bitsumsPlan(spark, sfDir)
-            .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-          (simFoldPlan(bs), () => { bs.unpersist(); () })
-      }
-      try writeIndex(simChunks(src.withColumn("lb", lengthBand), geom),
+      val bs = bitsumsPlan(spark, sfDir)
+        .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      try writeIndex(simChunks(simFoldPlan(bs).withColumn("lb", lengthBand), geom),
         sfDir, "sim_bkt", "sim_index", Seq("chunk", "cval"))
-      finally release()
+      finally bs.unpersist()
     }
 
   /** SimHash-index build + chunk profile: per chunk position, row count
     * and distinct chunk values (how full the 2^w value space runs).
-    * xxhash64-based → no DuckDB oracle; FingerprintSpec asserts the
-    * indexed consumer equals the in-memory operator byte-for-byte. */
+    * xxhash64-based → no DuckDB oracle; FingerprintSpec checks the stored
+    * fingerprints against a driver-side fold. */
   val llmSimIndexBuild: QFn = (spark, sfDir) =>
     spark.table(simTable(spark, sfDir))
       .groupBy("chunk")
       .agg(count(lit(1)).as("n_rows"), countDistinct(col("cval")).as("n_cvals"))
       .orderBy("chunk")
 
-  /** SimHash near-dup pairs over the MATERIALIZED chunk index —
-    * byte-identical results to [[llmDedupSimhash]] (FingerprintSpec
-    * asserts), with both sides of the candidate join reading the bucketed
-    * table: no fingerprint recompute, no exchange on (chunk, cval); the
-    * band check runs as a post-join filter. */
-  val llmDedupSimhashIndexed: QFn = (spark, sfDir) => {
-    val idx = stored(spark, simTable(spark, sfDir))
-    val a = idx.withColumnsRenamed(Map(
-      "doc_id" -> "doc_a", "simhash" -> "sim_a", "simhash2" -> "sim_a2", "lb" -> "lb_a"))
-    val b = idx.withColumnsRenamed(Map(
-      "doc_id" -> "doc_b", "simhash" -> "sim_b", "simhash2" -> "sim_b2", "lb" -> "lb_b"))
-    simhashRanked(a.join(b, Seq("chunk", "cval"))
-      .filter(col("doc_a") < col("doc_b") &&
-        abs(col("lb_a") - col("lb_b")) <= 1))
-  }
+  /** SimHash near-dup pairs over the MATERIALIZED chunk index, with both
+    * sides of the candidate join reading the bucketed table: no
+    * fingerprint recompute, no exchange on (chunk, cval); the band check
+    * runs as a post-join filter. Registered as both llm_dedup_simhash and
+    * llm_dedup_simhash_indexed. */
+  val llmDedupSimhashIndexed: QFn = (spark, sfDir) =>
+    simhashRanked(simPairs(stored(spark, simTable(spark, sfDir))))
 
   /** Incremental dedup — the production ingest shape: a DELTA BATCH (odd
     * doc_ids, the driver-stable stand-in for "today's crawl") deduped
@@ -1196,7 +1146,7 @@ object DedupOps {
     * signature index — batch×corpus, never corpus×corpus. Candidates come
     * from the bucketed sig table (the parity predicates push into both
     * bucketed scans); verification is exact hashed-shingle Jaccard >= 0.5
-    * from the signature index. Output (doc_new, doc_old, jaccard) — the
+    * over the stored shingle sets. Output (doc_new, doc_old, jaccard) — the
     * pairs an ingest pipeline drops or links before appending. The DuckDB
     * oracle replays the exact cross-side gram join, so — like
     * llm_dedup_ngram_jaccard — it doubles as an LSH recall gate: a banding
@@ -1245,8 +1195,9 @@ object DedupOps {
     gramDerivedTables(spark, sfDir)._2
 
   /** The stored rare-gram groups (g, ds) — exactly
-    * `rareGroups(grams_bkt, "g")` — bucketed on g: the blocking input of
-    * containment, read instead of re-aggregating every gram row per call. */
+    * `rareGroups(grams_bkt, "g")` — as a plain table (its consumer reads
+    * only `ds`): the blocking input of containment, read instead of
+    * re-aggregating every gram row per call. */
   private[graft] def gramRareTable(spark: SparkSession, sfDir: String): String =
     gramDerivedTables(spark, sfDir)._1
 
@@ -1262,8 +1213,8 @@ object DedupOps {
         .filter(size(col("ds")) <= RareDfCap)
         .persist()
       try {
-        (writeIndex(lowDf.filter(size(col("ds")) >= 2),
-            sfDir, "gram_rare_bkt", "gram_rare_index", GramKeys),
+        (writeTable(lowDf.filter(size(col("ds")) >= 2),
+            sfDir, "gram_rare_bkt", "gram_rare_index"),
           writeIndex(gramSetPlan(gs, lowDf),
             sfDir, "gram_sets_bkt", "gram_set_index", Seq("doc_id")))
       } finally lowDf.unpersist()
@@ -1338,51 +1289,6 @@ object DedupOps {
       .orderBy("doc_id")
   }
 
-  /** Decontamination behind an EXPLICIT bloom prefilter — the engine-
-    * native runtime filter (join_runtime_bloom) made into a reusable
-    * artifact: the train-side distinct grams aggregate into one bloom
-    * (`bloom_filter_agg`, ~1 MB of bits for ~1M grams at ~2% FPP), the
-    * test side probes it via the registered `bloom_might_contain` (a
-    * scalar subquery — the expression refuses anything non-constant, so
-    * the bloom is evaluated once and shipped with the plan), and only
-    * the surviving grams enter the exact semi-join that kills the false
-    * positives. Result is therefore IDENTICAL to
-    * [[llmDecontaminateIndexed]] (blooms never false-negative) and shares
-    * its full DuckDB oracle. The SQL reads the stored [[gramTable]] by its
-    * catalog name; the bloom's view carries the corpus tag, so two corpora
-    * on one session never read each other's bloom.
-    * At 100 TB the bloom is the shipping format of a decontamination
-    * list: the eval-set gram bloom is built once, broadcast to every
-    * ingest job, and cuts the semi-join's shuffle to the ~matching
-    * fraction + FPP instead of every gram of every new document —
-    * PlanSpec asserts the probe sits under the join, not above it. */
-  val llmDecontaminateBloom: QFn = (spark, sfDir) => {
-    val tbl = gramTable(spark, sfDir)
-    val bloom = s"train_bloom_${graft.util.Scratch.pathTag(sfDir)}"
-    trainBloom(spark, sfDir).createOrReplaceTempView(bloom)
-    spark.sql(
-      s"""WITH tr AS (SELECT DISTINCT g FROM $tbl WHERE is_train)
-        |SELECT doc_id, count(*) AS n_shared_grams
-        |FROM $tbl t
-        |WHERE NOT t.is_train
-        |  AND bloom_might_contain((SELECT b FROM $bloom), t.g)
-        |  AND t.g IN (SELECT g FROM tr)
-        |GROUP BY doc_id ORDER BY doc_id""".stripMargin)
-  }
-
-  /** The train-gram bloom, built ONCE per (session, sfDir) and persisted
-    * — the decontamination-list artifact the bloom op exists for: ~1 MB
-    * of bits, aggregated in one pass over the train grams, then reused
-    * by every probe (Warmup builds it untimed next to the other
-    * indexes, so the op's bench row measures the probe+confirm, which
-    * is its steady state once the list is shipped). */
-  private[graft] def trainBloom(spark: SparkSession, sfDir: String): DataFrame =
-    memo(spark, sfDir, "trainBloom") {
-      memo.persist(grams(spark, sfDir)
-        .filter(col("is_train")).select("g").distinct()
-        .agg(expr("bloom_filter_agg(g)").as("b")))
-    }
-
   /** The exploded 13-gram-hash rows (doc_id, is_train, g) MATERIALIZED as
     * a parquet table hash-bucketed on the gram hash — the gram family's
     * only materialization, and the artifact a 100 TB pipeline actually
@@ -1446,8 +1352,11 @@ object DedupOps {
   val llmGramIndexAppend: QFn = (spark, sfDir) =>
     decontam(stored(spark, gramAppendTable(spark, sfDir)))
 
-  /** Decontamination over the stored gram index; registered as both
-    * llm_decontaminate and llm_decontaminate_indexed. */
+  /** Decontamination over the stored gram index; registered as
+    * llm_decontaminate, llm_decontaminate_bloom and
+    * llm_decontaminate_indexed. An explicit train-gram bloom ahead of the
+    * semi-join was never faster than this exact join over the bucketed
+    * table (BASELINE.md, "Signature and SimHash families"). */
   val llmDecontaminateIndexed: QFn = (spark, sfDir) =>
     decontam(stored(spark, gramTable(spark, sfDir)))
 
@@ -1603,14 +1512,14 @@ object DedupOps {
     }
 
   /** The stored rare-fp groups (fp, ds) — exactly
-    * `rareGroups(span_bkt, "fp")` — bucketed on fp: one exchange-free
-    * `groupBy(fp).collect_upto(doc_id, 6)` pass over the fp-bucketed
-    * [[spanTable]] per corpus (a hot boilerplate fingerprint holds ≤6
-    * doc_ids in its buffer, never its posting list). */
+    * `rareGroups(span_bkt, "fp")` — as a plain table (its consumer reads
+    * only `ds`): one exchange-free `groupBy(fp).collect_upto(doc_id, 6)`
+    * pass over the fp-bucketed [[spanTable]] per corpus (a hot boilerplate
+    * fingerprint holds ≤6 doc_ids in its buffer, never its posting list). */
   private[graft] def spanRareTable(spark: SparkSession, sfDir: String): String =
     memo(spark, sfDir, "spanRareTable") {
-      writeIndex(rareGroups(spark.table(spanTable(spark, sfDir)).select("doc_id", "fp"), "fp"),
-        sfDir, "span_rare_bkt", "span_rare_index", Seq("fp"))
+      writeTable(rareGroups(spark.table(spanTable(spark, sfDir)).select("doc_id", "fp"), "fp"),
+        sfDir, "span_rare_bkt", "span_rare_index")
     }
 
   /** Span-index build + profile: posting rows and distinct fingerprints —
@@ -1667,7 +1576,7 @@ object DedupOps {
     * the count and fraction of source A's docs that have an exact-verified
     * Jaccard≥0.5 near-dup partner in source B ("which crawls duplicate
     * each other", including the A=B diagonal — a source's internal dup
-    * rate). Pure composition over the persisted verified-pair graph
+    * rate). Pure composition over the stored verified-pair graph
     * ([[verifiedPairs]] — exact hashed-shingle Jaccard over LSH
     * candidates, the llm_dedup_ngram_jaccard argument, so the matrix is
     * FULLY DuckDB-replayable from raw text) symmetrized and labeled by
@@ -1722,12 +1631,12 @@ object DedupOps {
     "llm_span_index_build" -> llmSpanIndexBuild,
     "llm_dedup_span_indexed" -> llmDedupSpanIndexed,
     "llm_decontaminate" -> llmDecontaminateIndexed,
-    "llm_decontaminate_bloom" -> llmDecontaminateBloom,
+    "llm_decontaminate_bloom" -> llmDecontaminateIndexed,
     "llm_dedup_exact" -> llmDedupExact,
     "llm_dedup_exact_normalized" -> llmDedupExactNormalized,
-    "llm_dedup_minhash" -> llmDedupMinhash,
+    "llm_dedup_minhash" -> llmDedupMinhashIndexed,
     "llm_dedup_ngram_jaccard" -> llmDedupNgramJaccard,
-    "llm_dedup_simhash" -> llmDedupSimhash,
+    "llm_dedup_simhash" -> llmDedupSimhashIndexed,
     "llm_dedup_embedding" -> llmDedupEmbedding,
     "llm_dedup_semantic" -> llmDedupSemantic,
     "llm_dedup_cluster" -> llmDedupCluster,
@@ -1741,9 +1650,9 @@ object DedupOps {
   // pins TRUE. Consumed ONLY by Verify — Bench times the production plans.
   // -----------------------------------------------------------------------
 
-  /** MinHash recall/accuracy frame, shared by the three signature-pair
-    * producers (in-memory, indexed, two-generation append — byte-identical
-    * outputs, each frame exercising ITS OWN path): one row per TRUE
+  /** MinHash recall/accuracy frame, shared by the signature-pair
+    * producers (llm_dedup_minhash[_indexed] and the two-generation append
+    * — byte-identical outputs, each frame exercising ITS OWN path): one row per TRUE
     * Jaccard≥0.5 pair (exact hashed-shingle Jaccard via [[verifiedPairs]],
     * whose pair SET DuckDB replays from raw 5-gram substrings — the
     * llm_dedup_ngram_jaccard argument, so a banding regression that drops
@@ -1785,8 +1694,8 @@ object DedupOps {
       .orderBy("doc_a", "doc_b")
   }
 
-  /** SimHash verification frame (shared by the in-memory and indexed
-    * twins): the top-200 ranking itself is sketch-valued, but three
+  /** SimHash verification frame (shared by llm_dedup_simhash and
+    * llm_dedup_simhash_indexed): the top-200 ranking itself is sketch-valued, but three
     * engine-independent claims about it are checkable — the panel is
     * non-empty and never exceeds its 200-pair cap (`pairs_bounded`; the
     * candidate count itself is corpus-dependent chunk-collision structure,
@@ -1905,10 +1814,10 @@ object DedupOps {
   /** Verification-frame overrides consumed by Verify (SparkEntry wires
     * them next to Advanced.verifyQueries). */
   val verifyQueries: Map[String, QFn] = Map(
-    "llm_dedup_minhash" -> minhashVerifyFrame(llmDedupMinhash),
+    "llm_dedup_minhash" -> minhashVerifyFrame(llmDedupMinhashIndexed),
     "llm_dedup_minhash_indexed" -> minhashVerifyFrame(llmDedupMinhashIndexed),
     "llm_sig_index_append" -> minhashVerifyFrame(llmSigIndexAppend),
-    "llm_dedup_simhash" -> simhashVerifyFrame(llmDedupSimhash),
+    "llm_dedup_simhash" -> simhashVerifyFrame(llmDedupSimhashIndexed),
     "llm_dedup_simhash_indexed" -> simhashVerifyFrame(llmDedupSimhashIndexed),
     "llm_dedup_span" -> spanVerifyFrame(llmDedupSpanIndexed),
     "llm_dedup_span_indexed" -> spanVerifyFrame(llmDedupSpanIndexed),
@@ -1920,12 +1829,13 @@ object DedupOps {
     * evidence (companion to Advanced.approxDeltas): MinHash signature
     * estimates against exact hashed-shingle Jaccard, one row per true
     * pair — report-sized (≤256 pairs at sf0.1). Only the base operator
-    * reports (the indexed/append twins are byte-identical by NearDupSpec,
-    * so their deltas would be copies). */
+    * reports (llm_dedup_minhash_indexed runs the same function, and the
+    * append twin is byte-identical by NearDupSpec, so their deltas would be
+    * copies). */
   def approxDeltas(spark: SparkSession, sfDir: String,
       ops: Set[String]): Seq[(String, String, String, Double, Double)] =
     if (!ops("llm_dedup_minhash")) Nil
-    else llmDedupMinhash(spark, sfDir)
+    else llmDedupMinhashIndexed(spark, sfDir)
       .join(verifiedPairs(spark, sfDir), Seq("doc_a", "doc_b"))
       .select("doc_a", "doc_b", "est_jaccard", "jaccard")
       .collect().toSeq.map { r =>
@@ -1937,8 +1847,9 @@ object DedupOps {
   // Weak-form oracle SQL for the sketch verification frames above. The
   // MinHash frame's row set is the exact-Jaccard≥0.5 pair set — the same
   // raw-substring replay as the ngram_jaccard oracle — with the sketch
-  // claims as TRUE-pinned booleans; shared verbatim by the three
-  // signature-pair producers (byte-identical outputs by NearDupSpec).
+  // claims as TRUE-pinned booleans; shared verbatim by the signature-pair
+  // producers (one function under two names, and the append twin,
+  // byte-identical by NearDupSpec).
   private val minhashVerifyOracleSql: String =
     ("WITH d AS (SELECT doc_id, lower(trim(text)) AS t FROM documents), " +
       "g AS (SELECT DISTINCT doc_id, substr(t, CAST(i AS BIGINT), 5) AS gram " +
@@ -1986,10 +1897,9 @@ object DedupOps {
       "WHERE greatest(CAST(ns AS DOUBLE) / na.n_g, CAST(ns AS DOUBLE) / nb.n_g) >= 0.5 " +
       "ORDER BY s.doc_a, s.doc_b")
 
-  // shared verbatim by llm_decontaminate, its bloom/indexed twins, and the
-  // two-generation append consumer — all four are result-identical by
-  // construction (blooms never false-negative; bucketing/generations are
-  // layout events)
+  // shared verbatim by llm_decontaminate, llm_decontaminate_bloom,
+  // llm_decontaminate_indexed (one function) and the two-generation append
+  // consumer (generations are a layout event)
   private val decontaminateOracleSql: String =
     ("WITH d AS (SELECT doc_id, lower(trim(text)) AS t FROM documents), " +
       "g AS (SELECT DISTINCT doc_id, doc_id % 2 = 0 AS is_train, " +
@@ -2216,8 +2126,6 @@ object DedupOps {
     // Replayable without xxhash64: gram IDENTITY doesn't matter, only
     // equality — DuckDB intersects the raw 13-char substrings the Spark
     // side hashes (64-bit collisions over ~1M grams: P ≈ 1e-8, ignorable).
-    // The bloom twin is also identical (the prefilter only removes rows
-    // the exact semi-join would drop anyway).
     "llm_decontaminate_indexed" -> decontaminateOracleSql,
     "llm_decontaminate_bloom" -> decontaminateOracleSql,
     "llm_decontaminate" -> decontaminateOracleSql,

@@ -20,9 +20,11 @@ object Warmup {
     Step(name, readers, (s, d) => { build(s, d); () })
 
   // the operators that read each shared build, directly or through another
-  private val minhashOps = Set("llm_dedup_cluster", "llm_dedup_cluster_incremental",
-    "llm_dedup_minhash", "llm_dedup_ngram_jaccard", "llm_pipeline_clean_corpus",
-    "llm_source_overlap", "llm_split_decontaminated")
+  private val verifiedPairOps = Set("llm_dedup_cluster", "llm_dedup_cluster_incremental",
+    "llm_dedup_ngram_jaccard", "llm_pipeline_clean_corpus", "llm_source_overlap",
+    "llm_split_decontaminated")
+  private val sigOps = verifiedPairOps ++ Set("llm_dedup_incremental_batch",
+    "llm_dedup_minhash", "llm_dedup_minhash_indexed", "llm_sig_index_build")
   private val embOps = Set("llm_cluster_kmeans", "llm_dedup_embedding",
     "llm_embedding_centroid", "llm_knn_classify", "llm_similarity_ann", "llm_similarity_ivf",
     "llm_similarity_knn_join", "llm_similarity_knn_join_ann", "llm_similarity_topk")
@@ -35,40 +37,40 @@ object Warmup {
 
   /** Every step, in run order. */
   val steps: Seq[Step] = Seq(
-    // the persisted per-session indexes (MinHash signatures, LSH
-    // candidates, SimHash, embeddings, IVF cells) and text models
-    llm("sigIndex", minhashOps + "llm_dedup_incremental_batch")(
-      DedupOps.sigIndex(_, _).count()),
-    llm("minhashCandidates", minhashOps)(DedupOps.minhashCandidates(_, _).count()),
-    llm("simIndex", Set("llm_dedup_simhash"))(DedupOps.simIndex(_, _).count()),
+    // the persisted per-session indexes (embeddings, IVF cells) and text
+    // models
     llm("embIndex", embOps)(DedupOps.embIndex(_, _).count()),
     llm("ivfIndex", Set("llm_similarity_ivf"))(SimilarityOps.ivfIndex(_, _)._1.count()),
     llm("unigramModel", perplexityOps + "llm_unigram_logprob")(
       TextOps.unigramModel(_, _).count()),
     llm("perplexityScored", perplexityOps)(TextOps.perplexityScored(_, _).count()),
-    // the stored bucketed index tables: every llm_*_index_build and
-    // *_indexed row then times its profile/consume stage, not the
-    // once-per-corpus table build. The gram and span tables are their
+    // the stored index tables: every llm_*_index_build and *_indexed row
+    // then times its profile/consume stage, not the once-per-corpus table
+    // build. The gram, span, signature-set and SimHash tables are their
     // families' only materialization; the rare-key tables (with the
-    // gram-set table, from the same aggregate), the gram-append table and
-    // the train-gram bloom are built from their rows
+    // gram-set table, from the same aggregate), the banded signature
+    // tables, the verified-pair table and the gram append table are
+    // built from their rows
     llm("gramTable", gramOps)(DedupOps.gramTable),
     llm("gramRareTable", containmentOps)(DedupOps.gramRareTable),
-    llm("trainBloom", Set("llm_decontaminate_bloom"))(DedupOps.trainBloom(_, _).count()),
     llm("embTable", Set("llm_dedup_embedding_indexed", "llm_dedup_semantic",
       "llm_emb_index_build"))(DedupOps.embTable),
-    llm("sigTable", Set("llm_dedup_incremental_batch", "llm_dedup_minhash_indexed",
-      "llm_sig_index_build"))(DedupOps.sigTable),
-    llm("simTable", Set("llm_dedup_simhash_indexed", "llm_sim_index_build"))(
-      DedupOps.simTable),
+    llm("sigSetTable", sigOps + "llm_sig_index_append")(DedupOps.sigSetTable),
+    llm("sigTable", sigOps)(DedupOps.sigTable),
+    llm("verifiedPairs", verifiedPairOps)(DedupOps.verifiedPairTable),
+    llm("simTable", Set("llm_dedup_simhash", "llm_dedup_simhash_indexed",
+      "llm_sim_index_build"))(DedupOps.simTable),
     llm("spanTable", spanPairOps + "llm_span_index_build")(DedupOps.spanTable),
     llm("spanRareTable", spanPairOps)(DedupOps.spanRareTable),
     llm("sigAppendTable", Set("llm_sig_index_append"))(DedupOps.sigAppendTable),
     llm("gramAppendTable", Set("llm_gram_index_append"))(DedupOps.gramAppendTable),
     llm("embAppendTable", Set("llm_emb_index_append"))(DedupOps.embAppendTable),
-    // the stored cluster state the incremental-CC op folds its delta into
-    llm("baseClusters", Set("llm_dedup_cluster_incremental"))(
-      DedupOps.baseClusters(_, _).count()),
+    // the stored cluster state the incremental-CC op folds its delta
+    // into, and the counts its plan shape derives from
+    llm("baseClusters", Set("llm_dedup_cluster_incremental")) { (s, d) =>
+      DedupOps.baseClusters(s, d).count()
+      DedupOps.clusterShape(s, d)
+    },
     // the BPE merge table is a trained model shared by llm_bpe_train
     // (emits it) and llm_bpe_apply (encodes with it): train once per
     // corpus, both rows time their consume stage

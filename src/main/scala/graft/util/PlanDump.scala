@@ -9,7 +9,8 @@ object PlanDump {
     spark.sparkContext.setLogLevel("ERROR")
     val picks = Seq(
       "agg_sales_by_category_year", "incremental_upsert", "scan_parquet",
-      "filter_last_3_months", "llm_dedup_minhash", "llm_similarity_topk",
+      "filter_last_3_months", "llm_dedup_minhash", "llm_dedup_simhash",
+      "llm_similarity_topk",
       "agg_skew_salted",
       // round 3
       "sink_bucketed_colocated", "join_skew_salted", "agg_grouping_sets",
@@ -22,7 +23,7 @@ object PlanDump {
       "join_dpp_prune",
       // round 11
       "agg_histogram_approx", "agg_heavy_hitters_cms",
-      "llm_decontaminate_bloom", "window_topn_per_group",
+      "window_topn_per_group",
       "upsert_positional_delete", "join_fuzzy_levenshtein",
       "llm_sample_per_group_k",
       // round 11, second wave

@@ -46,15 +46,14 @@ final class SessionMemo {
     * on the session (Tables' parquet schemas). */
   def once[T](key: String)(build: => T): T = get(key, (_: T) => true, build)
 
-  /** The entry if it is already built — never builds, never waits. For
-    * build sources that read a persist when it is hot and the raw plan
-    * when it is cold. */
+  /** The entry if it is already built — never builds, never waits. */
   def peek[T](spark: SparkSession, sfDir: String, name: String): Option[T] =
     Option(cells.get(key(spark, sfDir, name))).flatMap(_.value).map(_.asInstanceOf[T])
 
   /** Persist `df` (MEMORY_AND_DISK) and track it, so [[clear]] and
-    * [[releasePersists]] can release it — including intermediates that are
-    * not themselves entries (simIndex's bitsums barrier). */
+    * [[releasePersists]] can release it — including frames that are not
+    * themselves entries (SimilarityOps.ivfIndex's assignments, held in a
+    * tuple). */
   def persist(df: DataFrame): DataFrame = {
     val p = df.persist(StorageLevel.MEMORY_AND_DISK)
     persisted.synchronized { persisted += p }

@@ -73,14 +73,23 @@ class FingerprintSpec extends AnyFunSuite {
   private def tokens(t: String): Seq[String] =
     t.trim.toLowerCase.split("\\s+").toSeq
 
+  /** Length band of a token count: its bit length, 1 for zero. */
+  private def band(nTok: Int): Int =
+    if (nTok == 0) 1 else 64 - java.lang.Long.numberOfLeadingZeros(nTok.toLong)
+
+  /** The stored fingerprints, one row per doc: (doc_id, lo, hi, band). */
+  private def fingerprints(dir: String): Array[(Long, Long, Long, Int)] =
+    graft.llm.DedupOps.simFingerprints(spark, dir)
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).sortBy(_._1)
+
   test("simhash index equals a driver-side 128-bit bitsum-fold recompute") {
     val toks = texts.toSeq.flatMap(d => tokens(d._2))
     val h1 = hashOf(toks); val h2 = hash2Of(toks)
     val expected = texts.map { case (id, t) =>
-      id -> simhash128(tokens(t), h1, h2)
+      val (lo, hi) = simhash128(tokens(t), h1, h2)
+      id -> ((lo, hi, band(tokens(t).size)))
     }.toMap
-    val got = graft.llm.DedupOps.simIndex(spark, sfDir)
-      .collect().map(r => r.getLong(0) -> ((r.getLong(1), r.getLong(2)))).toMap
+    val got = fingerprints(sfDir).map { case (id, lo, hi, lb) => id -> ((lo, hi, lb)) }.toMap
     assert(got == expected)
   }
 
@@ -88,32 +97,30 @@ class FingerprintSpec extends AnyFunSuite {
     // mirror the operator's candidate rule: >=1 equal 16-bit chunk (out of
     // 8 across the two halves) AND token-count full-octave bands within
     // +-1 (band = bit length of n_tok, exactly length(bin(n_tok)))
-    val sim = graft.llm.DedupOps.simIndex(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).sortBy(_._1)
+    val sim = fingerprints(sfDir)
     def chunks(lo: Long, hi: Long): Seq[Long] =
       (0 to 3).map(c => (lo >> (16 * c)) & 0xFFFFL) ++
         (0 to 3).map(c => (hi >> (16 * c)) & 0xFFFFL)
-    def band(nTok: Int): Int =
-      if (nTok == 0) 1 else 64 - java.lang.Long.numberOfLeadingZeros(nTok.toLong)
     val expected = (for {
       i <- sim.indices.iterator
       j <- (i + 1) until sim.length
-      (ida, la, ha, ta) = sim(i); (idb, lb, hb, tb) = sim(j)
-      if math.abs(band(ta) - band(tb)) <= 1 &&
+      (ida, la, ha, ba) = sim(i); (idb, lb, hb, bb) = sim(j)
+      if math.abs(ba - bb) <= 1 &&
         chunks(la, ha).zip(chunks(lb, hb)).exists { case (x, y) => x == y }
     } yield (ida, idb,
       java.lang.Long.bitCount(la ^ lb) + java.lang.Long.bitCount(ha ^ hb)))
       .toSeq.sortBy { case (a, b, ham) => (ham, a, b) }.take(200)
-    val got = graft.llm.DedupOps.llmDedupSimhash(spark, sfDir)
+    val got = SparkEntry.queries("llm_dedup_simhash")(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     assert(got == expected)
   }
 
   test("materialized simhash index reproduces the in-memory pairs exactly; profile matches the fold") {
-    // the bucketed (chunk, cval) table + band-as-post-filter must be
-    // byte-identical to the in-memory banded join (the ±1 probe and the
-    // |lb_a - lb_b| <= 1 filter are the same predicate)
-    val mem = graft.llm.DedupOps.llmDedupSimhash(spark, sfDir)
+    // the bucketed (chunk, cval) table must rank byte-identically to an
+    // in-memory re-chunking of the stored fingerprints under the same
+    // geometry
+    import graft.llm.DedupOps.{simGeom, simhashCandidates, simhashRanked}
+    val mem = simhashRanked(simhashCandidates(spark, sfDir, simGeom(spark, sfDir)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
     val idx = graft.llm.DedupOps.llmDedupSimhashIndexed(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
@@ -136,18 +143,15 @@ class FingerprintSpec extends AnyFunSuite {
     import graft.llm.DedupOps.{simhashCandidates, simhashRanked}
     val got = simhashRanked(simhashCandidates(spark, sfDir, (4, 32)))
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getInt(2))).toSeq
-    val sim = graft.llm.DedupOps.simIndex(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getInt(3))).sortBy(_._1)
+    val sim = fingerprints(sfDir)
     def chunks32(lo: Long, hi: Long): Seq[Long] =
       Seq(lo & 0xFFFFFFFFL, (lo >>> 32) & 0xFFFFFFFFL,
         hi & 0xFFFFFFFFL, (hi >>> 32) & 0xFFFFFFFFL)
-    def band(nTok: Int): Int =
-      if (nTok == 0) 1 else 64 - java.lang.Long.numberOfLeadingZeros(nTok.toLong)
     val expected = (for {
       i <- sim.indices.iterator
       j <- (i + 1) until sim.length
-      (ida, la, ha, ta) = sim(i); (idb, lb, hb, tb) = sim(j)
-      if math.abs(band(ta) - band(tb)) <= 1 &&
+      (ida, la, ha, ba) = sim(i); (idb, lb, hb, bb) = sim(j)
+      if math.abs(ba - bb) <= 1 &&
         chunks32(la, ha).zip(chunks32(lb, hb)).exists { case (x, y) => x == y }
     } yield (ida, idb,
       java.lang.Long.bitCount(la ^ lb) + java.lang.Long.bitCount(ha ^ hb)))
@@ -171,7 +175,7 @@ class FingerprintSpec extends AnyFunSuite {
     ).toDF("doc_id", "text")
       .write.mode("overwrite").parquet(s"$dir/documents.parquet")
     try {
-      val top = graft.llm.DedupOps.llmDedupSimhash(spark, dir).collect()
+      val top = SparkEntry.queries("llm_dedup_simhash")(spark, dir).collect()
       assert(top.nonEmpty, "repetition pair was dropped by the band key")
       val head = top.head
       assert((head.getLong(0), head.getLong(1), head.getInt(2)) == ((1L, 2L, 0)),

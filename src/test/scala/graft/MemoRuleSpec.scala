@@ -145,6 +145,27 @@ class MemoRuleSpec extends AnyFunSuite {
       "write every index table through DedupOps' one bucketed writer:\n" + sites.mkString("\n"))
   }
 
+  test("DedupOps persists in executor memory only where a stated reason holds") {
+    // every other dedup family reads one stored table; each persist left
+    // names why a stored table does not replace it yet
+    val reasons = Map(
+      "embIndex" -> ("the IVF fit samples it, and that sample depends on how " +
+        "its input is partitioned"))
+    val src = Files.readAllLines(mainRoot.resolve("llm/DedupOps.scala")).asScala.toSeq
+    val Def = """\bdef\s+(\w+)""".r
+    val sites = for {
+      (line, i) <- src.zipWithIndex
+      code = line.trim
+      if !code.startsWith("//") && !code.startsWith("*") && !code.startsWith("/*")
+      if code.contains("memo.persist(")
+    } yield src.take(i + 1).reverseIterator.flatMap(l => Def.findFirstMatchIn(l))
+      .next().group(1) -> s"DedupOps.scala:${i + 1}: $code"
+    val unexplained = sites.filterNot { case (owner, _) => reasons.contains(owner) }
+    assert(unexplained.isEmpty && sites.map(_._1).sorted == reasons.keys.toSeq.sorted,
+      "a new executor-memory persist in DedupOps needs a stated reason here:\n" +
+        sites.map(_._2).mkString("\n"))
+  }
+
   test("streams run through StreamOps' one runner") {
     def codeSites(token: String): Seq[String] = for {
       f <- sources(mainRoot)

@@ -27,8 +27,16 @@ class NearDupSpec extends AnyFunSuite {
       .map(r => (r.getLong(0), r.getLong(1))).toSet
   }
 
+  /** MinHash near-dup pairs from an in-memory banding of the raw
+    * signature plan, as (doc_a, doc_b, n_shared_bands, est_jaccard). */
+  private def inMemoryMinhash: Seq[(Long, Long, Long, Double)] = {
+    import graft.llm.DedupOps.{banded, minhashNearDups, minhashPairs, sigPlan}
+    minhashNearDups(minhashPairs(banded(sigPlan(spark, sfDir))))
+      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3))).toSeq
+  }
+
   test("minhash LSH finds every exact-Jaccard>=0.8 pair") {
-    val found = graft.llm.DedupOps.llmDedupMinhash(spark, sfDir)
+    val found = SparkEntry.queries("llm_dedup_minhash")(spark, sfDir)
       .select("doc_a", "doc_b").collect()
       .map(r => (r.getLong(0), r.getLong(1))).toSet
     val missed = exactPairs -- found
@@ -323,12 +331,10 @@ class NearDupSpec extends AnyFunSuite {
 
   test("materialized signature index reproduces the in-memory minhash pairs exactly") {
     // the bucketed sig table is a LAYOUT decision — results must be
-    // byte-identical to the in-memory banded-index path
-    val mem = graft.llm.DedupOps.llmDedupMinhash(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
+    // byte-identical to banding the raw signature plan in memory
     val idx = graft.llm.DedupOps.llmDedupMinhashIndexed(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(idx.toSeq == mem.toSeq)
+    assert(idx.toSeq == inMemoryMinhash && idx.nonEmpty)
   }
 
   test("two-generation appended index reproduces the in-memory minhash pairs") {
@@ -336,15 +342,14 @@ class NearDupSpec extends AnyFunSuite {
     // bucket spec) is a LAYOUT event — pair results must stay
     // byte-identical to the in-memory path, or index maintenance
     // silently changed semantics
-    val mem = graft.llm.DedupOps.llmDedupMinhash(spark, sfDir)
-      .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
     val app = graft.llm.DedupOps.llmSigIndexAppend(spark, sfDir)
       .collect().map(r => (r.getLong(0), r.getLong(1), r.getLong(2), r.getDouble(3)))
-    assert(app.toSeq == mem.toSeq && app.nonEmpty)
+    assert(app.toSeq == inMemoryMinhash && app.nonEmpty)
   }
 
   test("signature index build profile matches the in-memory banded index") {
-    val mem = graft.llm.DedupOps.bandedIndex(spark, sfDir)
+    import graft.llm.DedupOps.{banded, sigPlan}
+    val mem = banded(sigPlan(spark, sfDir))
       .groupBy("band")
       .agg(count(lit(1)).as("n_rows"), countDistinct(col("bhash")).as("n_buckets"))
       .orderBy("band")

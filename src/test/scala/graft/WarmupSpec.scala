@@ -5,7 +5,7 @@ import java.util.concurrent.ConcurrentLinkedQueue
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
+import org.apache.spark.sql.catalyst.expressions.{Alias, Expression, Literal}
 import org.apache.spark.sql.execution.{CommandResultExec, FileSourceScanExec, QueryExecution,
   SparkPlan}
 import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
@@ -14,7 +14,7 @@ import org.apache.spark.sql.execution.columnar.InMemoryTableScanExec
 import org.apache.spark.sql.util.QueryExecutionListener
 import org.scalatest.funsuite.AnyFunSuite
 
-import graft.functions.{CollectUpto, NgramHashes, WinnowFps}
+import graft.functions.{CollectUpto, MinhashSig, NgramHashes, WinnowFps}
 import graft.llm.Warmup
 import graft.util.{Scratch, SessionMemo}
 
@@ -34,7 +34,10 @@ class WarmupSpec extends AnyFunSuite {
   for (op <- Seq("sink_jdbc_load", "scan_jdbc_export", "agg_sales_by_category_star",
       "agg_histogram_approx", "agg_median_mad_approx", "llm_dedup_containment_indexed",
       "llm_decontaminate", "llm_decontaminate_bloom", "llm_dedup_passage", "llm_dedup_span",
-      "llm_dedup_containment", "llm_gram_index_append"))
+      "llm_dedup_containment", "llm_gram_index_append", "llm_dedup_ngram_jaccard",
+      "llm_dedup_cluster", "llm_dedup_cluster_incremental", "llm_pipeline_clean_corpus",
+      "llm_source_overlap", "llm_split_decontaminated", "llm_dedup_minhash",
+      "llm_dedup_simhash", "llm_dedup_incremental_batch"))
     test(s"warmup for $op builds everything $op reads") {
       val corpus = freshCorpus(op)
       val steps = Warmup.run(spark, corpus, Set(op))
@@ -152,6 +155,38 @@ class WarmupSpec extends AnyFunSuite {
         (if (counts == (1, 1)) "" else s"\nexecuted plans:\n${plans.mkString("\n----\n")}"))
   }
 
+  /** The operators of the signature and SimHash families. */
+  private val sigSimOps = Seq("llm_dedup_minhash", "llm_dedup_minhash_indexed",
+    "llm_sig_index_build", "llm_sig_index_append", "llm_dedup_incremental_batch",
+    "llm_dedup_ngram_jaccard", "llm_dedup_cluster", "llm_dedup_cluster_incremental",
+    "llm_pipeline_clean_corpus", "llm_source_overlap", "llm_split_decontaminated",
+    "llm_dedup_simhash", "llm_dedup_simhash_indexed", "llm_sim_index_build")
+
+  private def sigPass(e: Expression): Boolean = e.isInstanceOf[MinhashSig]
+  private def bitsumsPass(e: Expression): Boolean = e match {
+    case a: Alias => a.name == "bitsums"
+    case _ => false
+  }
+
+  test("warmup for the signature and SimHash ops runs one minhash_sig pass and one bitsums pass") {
+    val corpus = freshCorpus("sig_sim_passes")
+    val plans = executedPlans {
+      val steps = Warmup.run(spark, corpus, sigSimOps)
+      assert(steps.forall(_._2 >= 0), s"a warmup step failed: $steps")
+    }
+    val counts = (passes(plans, sigPass), passes(plans, bitsumsPass))
+    // and no signature, candidate-pair, verified-pair or fingerprint rows
+    // stay in executor storage
+    val Resident =
+      """minhash_sig\(|\bsig#|\bhsh#|n_shared_bands#|jaccard#|\bsimhash#|\bbitsums#""".r
+    val resident = spark.sparkContext.getRDDStorageInfo.map(_.name)
+      .filter(n => Resident.findFirstIn(n).nonEmpty)
+    assert(counts == (1, 1) && resident.isEmpty,
+      s"(minhash_sig, bitsums) passes $counts, expected (1, 1); persisted rows:\n" +
+        resident.mkString("\n----\n") +
+        (if (counts == (1, 1)) "" else s"\nexecuted plans:\n${plans.mkString("\n----\n")}"))
+  }
+
   test("the gram table, then the gram sets: one gram pass") {
     // the call order of a set-up that builds the gram table first and
     // then reads the per-doc sets
@@ -180,7 +215,7 @@ class WarmupSpec extends AnyFunSuite {
 
   test("the gram and span ops select only the gram and span steps") {
     val selected = Warmup.steps.filter(st => rareKeyOps.exists(st.serves)).map(_.name)
-    assert(selected == Seq("gramTable", "gramRareTable", "trainBloom", "spanTable",
+    assert(selected == Seq("gramTable", "gramRareTable", "spanTable",
       "spanRareTable", "gramAppendTable", "catalog"), selected)
     // and every step serves some registered operator
     val idle = Warmup.steps.filterNot(st => SparkEntry.queries.keys.exists(st.serves))
